@@ -6,12 +6,14 @@ operand has zero norm the result is the sentinel ``-1.0`` (not NaN or
 null — reference src/app.py:57-58). That sentinel is preserved here
 exactly (pinned by tests/test_vector.py).
 
-Everything in this module is a pure Catalyst column expression built
-from higher-order functions (``zip_with`` / ``aggregate``) — no Python
-UDFs, so the hot path stays inside whole-stage codegen on the JVM and
-vectorizes over Parquet scans. At 100 TB this matters: a per-row Python
-cosine would serialize every 64-float array across the Arrow boundary;
-these expressions never leave the executor JVM.
+The column expressions here are built from higher-order functions
+(``zip_with`` / ``aggregate``) and stay on the JVM: they score rows
+against a literal target (``score_against_target``, the search and
+dedup operators) and define the evaluation order every scorer must
+reproduce. Batch kNN (queries x corpus) does NOT run these folds per
+pair: ``operators/knn.py`` scores Arrow batches in numpy with the same
+left fold over dims, so its scores are bit-identical to
+:func:`unit_cosine` / :func:`l2_distance`.
 
 All math is done in DOUBLE precision regardless of the storage type
 (testdata stores ``array<float>``) so results are reproducible and
@@ -71,11 +73,6 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     return F.when((na == F.lit(0.0)) | (nb == F.lit(0.0)), F.lit(-1.0)).otherwise(
         dot(a, b) / (na * nb)
     )
-
-
-def cosine_distance(a: Column | str, b: Column | str) -> Column:
-    """1 - cosine similarity (zero-norm operands → 2.0, consistent with sentinel)."""
-    return F.lit(1.0) - cosine(a, b)
 
 
 def l2_distance(a: Column | str, b: Column | str) -> Column:
@@ -149,16 +146,22 @@ def unit_cosine(
     )
 
 
-def normalize_py(values) -> list[float]:
-    """Driver-side unit-normalize with a sequential left-to-right fold —
-    bit-identical to the SQL/Spark fold order (numpy pairwise summation
-    would differ in the last bits)."""
+def norm_py(values) -> float:
+    """Driver-side L2 norm with a sequential left-to-right fold —
+    bit-identical to :func:`norm` (numpy pairwise summation would
+    differ in the last bits)."""
     import math
 
     acc = 0.0
     for x in values:
         acc += float(x) * float(x)
-    n = math.sqrt(acc)
+    return math.sqrt(acc)
+
+
+def normalize_py(values) -> list[float]:
+    """Driver-side unit-normalize over :func:`norm_py` — bit-identical
+    to :func:`with_unit_vectors`; zero vectors pass through unchanged."""
+    n = norm_py(values)
     if n == 0.0:
         return [float(x) for x in values]
     return [float(x) / n for x in values]

@@ -9,7 +9,7 @@ less training machinery than PQ (no codebooks, just a per-dimension
 range), and a much tighter approximation than PQ at the same scan
 cost, which makes it the default "fits-in-half-the-IO" index choice.
 
-Spark shape (everything JVM-side, no UDF anywhere):
+Spark shape (train, encode and single-query search are JVM-side, no UDF):
 
 - train:  per-dimension min/max — ``posexplode`` + groupBy(dim) with
           map-side partial agg, so the shuffle carries O(partitions x
@@ -40,8 +40,9 @@ At 100 TB: the approximate pass reads ONLY the codes column (columnar
 pruning; 64 B/row at dim=64 vs 256 B float32), the full-precision
 column is touched for just ``oversample*k`` rows per query, and the
 bounds ride along as literals — no join, no shuffle before the final
-top-k. Batch variant scores all queries in one corpus pass via the
-same broadcast-queries plan as knn.knn_join.
+top-k. Batch variant scores all queries in one corpus pass through
+knn.knn_join's Arrow kernel (queries in its closure, k candidates per
+query per partition ranked by one window).
 
 No counterpart in the reference (it delegates ANN to ChromaDB's HNSW,
 src/chromadb_store.py:1); public design per FAISS's ScalarQuantizer.
@@ -207,9 +208,9 @@ def sq8_batch_search(
     query_vec_col: str = "qvec",
 ) -> DataFrame:
     """All queries in ONE corpus pass: decode codes to the approximate
-    unit vector once per row (a codegen projection, amortized across
-    every broadcast query), take per-query ``oversample*k`` by
-    approximate cosine via the generic broadcast-kNN plan, then
+    unit vector once per row (a codegen projection), take per-query
+    ``oversample*k`` by approximate cosine via knn.knn_join's scoring
+    kernel, then
     re-rank the candidate union exact. Corpus never shuffles; the only
     window is over candidates.
 

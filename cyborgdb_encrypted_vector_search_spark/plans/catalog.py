@@ -250,7 +250,9 @@ _BUCOS = V.sql_unit_cosine("c.unit", "q.unit", "c.nrm", "q.nrm")
 def knn_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """General kNN join: 10 query vectors x corpus, top-3 each
     (reference src/cod.py:124-129 generalized to a query batch).
-    Broadcast the query side; WindowGroupLimit keeps the rank partial."""
+    Queries ride in the scoring kernel's closure (no join); only k
+    candidates per query per partition reach the WindowGroupLimit'd
+    rank window."""
     from cyborgdb_encrypted_vector_search_spark.sources.registry import unit_embeddings
 
     emb = unit_embeddings(spark, sf_dir)
@@ -3617,7 +3619,7 @@ def _ann_recall_gate(
     builds the method once (codebooks, centroid assignment) and returns
     a per-query searcher. The gate runs ``num_q`` deterministic queries
     spread across the corpus, takes exact cosine top-k (knn.knn_join,
-    ONE broadcast-queries plan) as ground truth, and emits a single
+    ONE corpus pass) as ground truth, and emits a single
     row: (method, k, n_queries, truth_checksum, recall_ok). The
     checksum proves the exact side against DuckDB's independent
     brute-force; recall_ok is only TRUE when measured recall ≥ floor —
@@ -6930,7 +6932,7 @@ def ann_sq8_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_sq8_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch SQ8: all recall-gate queries in ONE corpus pass
     (operators/quant.sq8_batch_search — decode-once projection +
-    broadcast-kNN approximate pass, exact re-rank of the candidate
+    kernel-kNN approximate pass, exact re-rank of the candidate
     union). Gated on recall@10 ≥ 0.7 vs exact kNN, ground truth
     checksummed against DuckDB."""
     p = _sq8_parts(spark, sf_dir)
@@ -8236,7 +8238,8 @@ def collection_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings table — point-get the stored vector for id 42, query
     with it, expect (rank, id, cosine distance) to match DuckDB's
     independent brute force on the original table. This is the gate
-    for the user-facing end of J2/J3 (Collection.query → knn_join),
+    for the user-facing end of J2/J3 (Collection.query → the knn
+    scoring kernel),
     complementing the operator-level knn gates."""
     emb = load(spark, "embeddings", sf_dir)
     coll = _gate_collection(spark, sf_dir, encrypted=False)
@@ -9204,7 +9207,7 @@ def knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus vectors (queries: vec_id < 20; corpus: the rest) — the
     embedding-space weak labeler / quality-tier propagator. Ties break
     more-votes, then nearest witness, then smaller label. Same
-    broadcast-kNN plan as knn_batch_topk plus one map-side-combinable
+    kernel-kNN plan as knn_batch_topk plus one map-side-combinable
     vote aggregate; nothing grows with corpus size."""
     from cyborgdb_encrypted_vector_search_spark.sources.registry import (
         unit_embeddings,

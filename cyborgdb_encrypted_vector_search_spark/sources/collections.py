@@ -24,6 +24,8 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -132,6 +134,17 @@ class Collection:
             .collect()
         )
 
+    def _id_frame(self, ids: list[str]) -> DataFrame:
+        """A caller's id list as a local frame (an Arrow LocalRelation:
+        reading it back costs no Spark job)."""
+        return self.spark.createDataFrame(pa.table({"id": pa.array(ids, pa.string())}))
+
+    def _buckets_of_ids(self, ids_df: DataFrame) -> list[int]:
+        """:meth:`_buckets_of` for an :meth:`_id_frame`: the optimizer
+        constant-folds Spark's own ``pmod(xxhash64(id), N)`` over the
+        local rows, so the collect runs no job; dedup is in Python."""
+        return sorted({r[0] for r in ids_df.select(self._bucket_expr()).collect()})
+
     # -- writes ---------------------------------------------------------
     def _project_rows(
         self,
@@ -202,17 +215,15 @@ class Collection:
         return df.drop("id_bucket") if "id_bucket" in df.columns else df
 
     def _scan_raw(self) -> DataFrame:
+        # the declared schema, never an inferred one: inference costs a
+        # Spark job per call and fails on a bucketed table with no
+        # partition dirs yet (fresh create, or every bucket deleted)
+        schema = COLLECTION_SCHEMA
         if self.bucket_count:
-            import glob as _glob
-
-            # an empty bucketed table has no partition dirs to infer a
-            # schema from (fresh create, or every bucket deleted) —
-            # return the declared empty frame instead of failing
-            if not _glob.glob(os.path.join(self.path, "id_bucket=*")):
-                return self.spark.createDataFrame(
-                    [], COLLECTION_SCHEMA
-                ).withColumn("id_bucket", F.lit(0).cast("int"))
-        return self.spark.read.parquet(self.path)
+            schema = T.StructType(
+                [*schema.fields, T.StructField("id_bucket", T.IntegerType())]
+            )
+        return self.spark.read.schema(schema).parquet(self.path)
 
     def extract_embeddings(self) -> DataFrame:
         """The 'leak': full scan of all vectors (reference
@@ -262,12 +273,8 @@ class Collection:
             # prune to the buckets the requested ids hash into: the
             # id_bucket IN (...) predicate is a PartitionFilter, so the
             # point-get reads only those buckets' files
-            ids_df = self.spark.createDataFrame(
-                [(i,) for i in ids], "id string"
-            )
-            src = self._scan_raw().filter(
-                F.col("id_bucket").isin(self._buckets_of(ids_df))
-            )
+            buckets = self._buckets_of_ids(self._id_frame(ids))
+            src = self._scan_raw().filter(F.col("id_bucket").isin(buckets))
             return src.select(*cols).filter(F.col("id").isin(ids))
         return self.scan().select(*cols).filter(F.col("id").isin(ids))
 
@@ -282,13 +289,16 @@ class Collection:
     ) -> DataFrame:
         """Similarity query — the reference's one serving call
         (``collection.query(query_embeddings=..., n_results=...)``,
-        src/cod.py:124-129), re-expressed as ONE Spark plan for the
-        whole query batch.
+        src/cod.py:124-129), answered with ONE Spark job for the whole
+        query batch.
 
-        Exact cosine kNN via the broadcast query-side join
-        (operators/knn.knn_join): the collection never shuffles, each
-        partition keeps a per-query top-k heap (WindowGroupLimit), so
-        the plan is the same at 40 rows or 100 TB. Returns one row per
+        Exact cosine kNN through the Arrow scoring kernel
+        (operators/knn.topk_candidates): the collection is scanned
+        once, never shuffled, and each partition sends back at most
+        ``n_results`` candidates per query; the driver merges them with
+        the (score desc, id asc) tie-break. The call runs that job
+        eagerly and returns a LOCAL frame (an Arrow LocalRelation), so
+        collecting it costs no further job. One row per
         (query_idx, rank) with ``id``, ``distance`` (cosine distance,
         1 − cosine similarity) and, when included, ``document`` —
         the relational shape of Chroma's parallel-lists payload.
@@ -304,6 +314,11 @@ class Collection:
         cosine work — and with a metadata-partitioned layout it prunes
         files, the filtered-search shape vector stores implement with
         per-segment metadata indexes.
+
+        Bad input fails before any job: neither or both query inputs,
+        no queries, ``n_results < 1``, or query vectors whose length
+        differs from the collection's ``dim`` (or, without a declared
+        ``dim``, from each other).
         """
         cols = include or ["documents", "distances"]
         corpus = self.scan()
@@ -330,15 +345,12 @@ class Collection:
     ) -> DataFrame:
         """Similarity query against an AES-GCM-encrypted collection —
         the reference's core thesis (encrypted store + retrieval,
-        src/cyborgdb_store.py + src/cod.py:124-129) as ONE dataflow:
-        scan → aes_decrypt → from_json → cosine → per-query top-k, all
-        inside a single Spark plan. The ciphertext never leaves the
-        JVM, no decrypted intermediate is ever materialized to storage,
-        and the plan shape is identical to :meth:`query` (broadcast
-        queries, corpus never shuffles) with one extra scan-side
-        project for the decrypt — at 100 TB the decrypt cost is a
-        per-row column expression inside whole-stage codegen, not an
-        extra pass."""
+        src/cyborgdb_store.py + src/cod.py:124-129) as ONE Spark job:
+        scan → aes_decrypt → from_json on the JVM, then the same Arrow
+        scoring kernel and driver merge as :meth:`query`. No decrypted
+        intermediate is ever materialized to storage; like
+        :meth:`query`, the call runs its job eagerly and returns a
+        local frame of the hits."""
         cols = include or ["documents", "distances"]
         plain = self.decrypt(key)
         corpus = plain.select(
@@ -364,36 +376,36 @@ class Collection:
             raise ValueError(
                 "pass exactly one of query_embeddings / query_texts"
             )
+        if n_results < 1:
+            raise ValueError(f"n_results must be >= 1, got {n_results}")
         if query_texts is not None:
             dim = self.dim or E.DEFAULT_DIM
             enc = embedder or (lambda ts: E.embed_texts(ts, dim))
             query_embeddings = [list(map(float, v)) for v in enc(query_texts)]
+        if not query_embeddings:
+            raise ValueError("no queries: query_embeddings is empty")
         if self.dim is not None:
             for i, v in enumerate(query_embeddings):
                 if len(v) != self.dim:
                     raise ValueError(
                         f"query {i} has dim {len(v)}, collection dim {self.dim}"
                     )
-        queries = self.spark.createDataFrame(
-            [(i, [float(x) for x in v]) for i, v in enumerate(query_embeddings)],
-            "query_idx long, query_vec array<double>",
-        )
-        hits = knn.knn_join(
-            queries,
+        cands = knn.topk_candidates(
             corpus,
-            k=n_results,
-            query_id_col="query_idx",
-            query_vec_col="query_vec",
+            range(len(query_embeddings)),
+            query_embeddings,
+            n_results,
             corpus_id_col="id",
             corpus_vec_col="embedding",
-            rank_col="rank",
-        )
-        out = [F.col("query_idx"), F.col("rank"), F.col("id")]
+            query_id_col="query_idx",
+        ).drop("embedding")
+        hits = knn.merge_topk(cands.toArrow(), n_results, "query_idx", "id")
+        out = {c: hits.column(c) for c in ("query_idx", "rank", "id")}
         if "documents" in cols:
-            out.append(F.col("document"))
+            out["document"] = hits.column("document")
         if "distances" in cols:
-            out.append((F.lit(1.0) - F.col("score")).alias("distance"))
-        return hits.select(*out)
+            out["distance"] = pc.subtract(pa.scalar(1.0), hits.column("score"))
+        return self.spark.createDataFrame(pa.table(out))
 
     # -- batch maintenance (append/compact model; online CRUD is an
     #    explicit non-goal — SURVEY.md §7 hard parts (d)) ---------------
@@ -442,7 +454,12 @@ class Collection:
         shutil.rmtree(old)
         return n
 
-    def _rewrite_buckets(self, ids_df: DataFrame, new_rows: DataFrame | None) -> int:
+    def _rewrite_buckets(
+        self,
+        ids_df: DataFrame,
+        new_rows: DataFrame | None,
+        affected: list[int] | None = None,
+    ) -> int:
         """Partition-pruned CRUD core for the bucketed layout: read
         ONLY the buckets the incoming ids hash into (id_bucket IN (...)
         is a PartitionFilter), anti-join the ids out, optionally union
@@ -450,10 +467,12 @@ class Collection:
         the touched bucket dirs. Untouched buckets are never read,
         never rewritten — the 100 TB CRUD contract. A bucket left empty
         by a pure delete is removed (staging has no dir for it).
+        ``affected`` is the bucket set when the caller already has it.
         Returns the number of touched buckets."""
         import shutil
 
-        affected = self._buckets_of(ids_df)
+        if affected is None:
+            affected = self._buckets_of(ids_df)
         if not affected:
             return 0
         incoming = ids_df.select(F.col("id").cast("string").alias("id")).distinct()
@@ -497,8 +516,8 @@ class Collection:
         write-then-swap. Returns rows remaining (flat) or touched
         buckets (bucketed)."""
         if self.bucket_count:
-            ids_df = self.spark.createDataFrame([(i,) for i in ids], "id string")
-            return self._rewrite_buckets(ids_df, None)
+            ids_df = self._id_frame(ids)
+            return self._rewrite_buckets(ids_df, None, self._buckets_of_ids(ids_df))
         keep = self.scan().filter(~F.col("id").isin(ids))
         return self._swap_in(keep, ".deleting")
 

@@ -35,6 +35,13 @@ def test_batch_knn_rank_limit_is_partial(spark, sf_dir, cat):
     assert partial > 0
 
 
+def test_batch_knn_has_no_cross_join(spark, sf_dir, cat):
+    # queries ride in the scoring kernel's closure: no pairwise join
+    plan = X.physical_plan(cat["knn_batch_topk"].fn(spark, sf_dir))
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+
+
 def test_point_get_pushes_filter_to_scan(spark, sf_dir):
     emb = load(spark, "embeddings", sf_dir)
     df = emb.filter(F.col("vec_id") == 42).select("vec_id")

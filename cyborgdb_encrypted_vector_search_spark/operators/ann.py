@@ -16,10 +16,16 @@ fraction of it" are:
   probes the ``nprobe`` nearest centroids and ranks exactly within
   them — partition pruning does the index work (SURVEY.md §4).
   Centroids come from MLlib k-means (seeded) or any fixed vector set.
+  Assignment and batch search run on the exact Arrow kernel of
+  ``operators/knn.py`` with the (small) centroid matrix in its closure:
+  assignment is one narrow stage, and a batch search picks every
+  query's probes on the driver, scores the probed lists in one kernel
+  stage (k candidates per query per partition) and merges them there.
 
 Both turn O(corpus) per query into O(corpus/buckets · probes) and are
-embarrassingly scalable: build is one pass, search is pruned scan +
-TakeOrderedAndProject.
+embarrassingly scalable: build is one pass, search is a pruned scan
+plus a top-k (TakeOrderedAndProject for one target, the kernel's
+per-partition candidates and one driver merge for a batch).
 """
 
 from __future__ import annotations
@@ -27,10 +33,12 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cyborgdb_encrypted_vector_search_spark.functions import vector as V
+from cyborgdb_encrypted_vector_search_spark.operators import knn
 
 
 # --- random-hyperplane LSH ---------------------------------------------
@@ -181,6 +189,21 @@ def lsh_search_batch(
 
 # --- IVF ----------------------------------------------------------------
 
+def _centroid_matrix(
+    centroids: DataFrame,
+    id_col: str = "centroid_id",
+    vec_col: str = "centroid",
+) -> tuple[list, list]:
+    """The centroid table on the driver as (ids, vectors), ascending
+    by id. A local (Arrow) centroid frame such as
+    :func:`kmeans_centroids`' costs no Spark job here. Raises
+    ``ValueError`` on an empty table."""
+    rows = sorted(centroids.select(id_col, vec_col).collect(), key=lambda r: r[0])
+    if not rows:
+        raise ValueError("the centroid table is empty")
+    return [r[0] for r in rows], [r[1] for r in rows]
+
+
 def assign_centroids(
     df: DataFrame,
     centroids: DataFrame,
@@ -188,30 +211,19 @@ def assign_centroids(
     centroid_id_col: str = "centroid_id",
     centroid_vec_col: str = "centroid",
 ) -> DataFrame:
-    """Nearest-centroid assignment (coarse quantization).
+    """Nearest-centroid assignment (coarse quantization): every row of
+    ``df`` exactly once, plus ``centroid_id_col``.
 
-    centroids is small (k rows) → broadcast; per row we argmin L2 over
-    the k candidates with a min_by aggregation — one narrow shuffle-free
-    projection plus a broadcast join, linear in corpus size.
-    """
-    cent = F.broadcast(
-        centroids.select(
-            F.col(centroid_id_col).alias("__cid"),
-            F.col(centroid_vec_col).alias("__cvec"),
-        )
-    )
-    joined = df.crossJoin(cent).withColumn(
-        "__dist", V.l2_distance(vec_col, "__cvec")
-    )
-    # min_by with deterministic tie-break on centroid id
-    other_cols = [c for c in df.columns]
-    return (
-        joined.groupBy(*other_cols)
-        .agg(
-            F.min_by(
-                F.col("__cid"), F.struct(F.col("__dist"), F.col("__cid"))
-            ).alias(centroid_id_col)
-        )
+    The centroid matrix rides in the closure of one narrow
+    ``mapInArrow`` stage (:func:`knn.nearest`): no join, no shuffle,
+    linear in corpus size. Distances are :func:`V.l2_distance`'s fold
+    bit for bit; ties go to the smaller centroid id, and a null, empty
+    or wrong-length vector goes to the smallest id (what ``min_by``
+    over the null distances of a cross join gives)."""
+    ids, vecs = _centroid_matrix(centroids, centroid_id_col, centroid_vec_col)
+    return knn.nearest(
+        df, ids, vecs, vec_col, centroid_id_col,
+        centroids.schema[centroid_id_col].dataType,
     )
 
 
@@ -219,20 +231,25 @@ def kmeans_centroids(
     df: DataFrame, k: int = 16, vec_col: str = "embedding", seed: int = 42,
     max_iter: int = 10,
 ) -> DataFrame:
-    """Seeded MLlib k-means centroids as (centroid_id, centroid) rows.
+    """Seeded MLlib k-means centroids as (centroid_id int, centroid
+    array<double>) rows.
 
-    Build-time only; the resulting centroid table is tiny and reusable.
+    Build-time only; the centroid table is tiny and reusable. It comes
+    back as a local frame (an Arrow LocalRelation), so reading it —
+    which assignment and every search do — runs no Spark job.
     """
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    from pyspark.ml.functions import array_to_vector
 
     feat = df.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
     model = KMeans(k=k, seed=seed, maxIter=max_iter).fit(feat)
-    spark = df.sparkSession
-    rows = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    return spark.createDataFrame(rows, "centroid_id int, centroid array<double>")
+    centers = model.clusterCenters()
+    return df.sparkSession.createDataFrame(pa.table({
+        "centroid_id": pa.array(range(len(centers)), pa.int32()),
+        "centroid": pa.array(
+            [[float(x) for x in c] for c in centers], pa.list_(pa.float64())
+        ),
+    }))
 
 
 def build_ivf_layout(
@@ -360,6 +377,73 @@ def ivf_search_adaptive(
     )
 
 
+def ivf_candidates(
+    queries: DataFrame,
+    corpus_with_centroids: DataFrame,
+    centroids: DataFrame,
+    k: int = 3,
+    nprobe: int = 2,
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_vec",
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """The kernel stage of :func:`ivf_search_batch`, lazy: at most k
+    candidate rows (id, centroid_id, vector, query_id, score) per query
+    per partition.
+
+    1. On the driver, each query's ``nprobe`` nearest lists by the
+       ``l2`` fold, ties to the smaller centroid id.
+    2. The corpus is filtered to the union of the probed lists
+       (partition pruning on a centroid-partitioned layout).
+    3. One ``mapInArrow`` stage (:func:`knn.topk_candidates`) scores
+       each row only against the queries that probed its list, in
+       :func:`V.cosine`'s order (``cosine_ratio``), and keeps k rows
+       per query per partition by (score desc, id asc).
+
+    Collecting the queries is the one job run here (none for a local
+    frame; a local centroid table costs none either). Raises
+    ``ValueError`` before it on ``k < 1`` or ``nprobe < 1``, and before
+    the kernel on an empty centroid table or a query vector that is
+    null or not as long as the centroids. A stored vector that is null,
+    empty or of another length keeps its :func:`V.cosine` score (null,
+    or -1.0 when its norm is 0).
+    """
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    if nprobe < 1:
+        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
+    cids, cvecs = _centroid_matrix(centroids)
+    cmat, _ = knn.query_matrix(cvecs, "l2")
+    rows = queries.select(query_id_col, query_vec_col).collect()
+    qvecs = [r[1] for r in rows]
+    bad = sorted({-1 if v is None else len(v) for v in qvecs} - {cmat.shape[1]})
+    if bad:
+        raise ValueError(
+            f"query vectors must be {cmat.shape[1]} long like the centroids,"
+            f" got lengths {bad} (-1: null)"
+        )
+    qmat, _ = knn.query_matrix(qvecs, "l2")
+    lists = [
+        [cids[c] for c in np.argsort(dq, kind="stable")[:nprobe]]
+        for dq in knn.l2_distances(qmat, cmat)
+    ]
+    probed = sorted({c for ls in lists for c in ls})
+    corpus = corpus_with_centroids.filter(F.col("centroid_id").isin(probed))
+    return knn.topk_candidates(
+        corpus.select(id_col, "centroid_id", vec_col),
+        [r[0] for r in rows],
+        qvecs,
+        k,
+        corpus_id_col=id_col,
+        corpus_vec_col=vec_col,
+        metric="cosine_ratio",
+        query_id_col=query_id_col,
+        query_id_type=queries.schema[query_id_col].dataType,
+        probes=("centroid_id", lists),
+    )
+
+
 def ivf_search_batch(
     queries: DataFrame,
     corpus_with_centroids: DataFrame,
@@ -371,52 +455,26 @@ def ivf_search_batch(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Batch IVF: EVERY query's probe + rank as ONE declarative plan.
+    """Batch IVF: every query's probe + exact rank in ONE kernel job.
 
-    ``ivf_search`` collects probe ids to the driver per target — fine
-    interactively, but N queries means N jobs and a driver round-trip
-    each. The batch shape a 100 TB serving job wants instead:
-
-    1. queries × centroids (broadcast — centroids are small by
-       construction) → per-query nprobe nearest lists via a
-       row_number window (WindowGroupLimit keeps it partial);
-    2. the (query, centroid) probe list — Q × nprobe rows — broadcasts
-       and hash-joins the corpus on ``centroid_id``: a corpus row is
-       scored ONLY against queries that probed its list, so work is
-       candidate-bounded exactly like the single-query pruned scan;
-    3. exact cosine on survivors + per-query top-k window.
-
-    No driver loop, no collect; one broadcast join + one shuffle (the
-    final per-query window on __qid).
+    Returns a local frame of (query_id, id, score): each query's k best
+    by (cosine desc, id asc, null scores last) among the rows of its
+    ``nprobe`` nearest lists — the rows and scores :func:`ivf_search`
+    gives per query. :func:`ivf_candidates` builds the kernel stage;
+    its candidates are collected and merged on the driver
+    (:func:`knn.merge_topk`), the distributed top-k shape of REPOSE
+    (ICDE 2021). Jobs: the query collect (none for a local frame) and
+    the kernel; a local centroid table such as
+    :func:`kmeans_centroids`' costs none. Bad input raises as in
+    :func:`ivf_candidates`.
     """
-    from pyspark.sql import Window
-
-    q = queries.select(
-        F.col(query_id_col).alias("__qid"),
-        F.col(query_vec_col).alias("__qvec"),
+    cands = ivf_candidates(
+        queries, corpus_with_centroids, centroids, k, nprobe,
+        query_id_col, query_vec_col, id_col, vec_col,
     )
-    cent = centroids.select("centroid_id", "centroid")
-    wp = Window.partitionBy("__qid").orderBy(
-        F.asc("__cd"), F.asc("centroid_id")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn("__cd", V.l2_distance("__qvec", "centroid"))
-        .withColumn("__rn", F.row_number().over(wp))
-        .filter(F.col("__rn") <= nprobe)
-        .select("__qid", "__qvec", "centroid_id")
-    )
-    cand = corpus_with_centroids.join(F.broadcast(probes), "centroid_id")
-    wk = Window.partitionBy("__qid").orderBy(
-        F.desc("score"), F.asc(id_col)
-    )
-    return (
-        cand.withColumn("score", V.cosine(vec_col, "__qvec"))
-        .withColumn("__rank", F.row_number().over(wk))
-        .filter(F.col("__rank") <= k)
-        .select(
-            F.col("__qid").alias(query_id_col), F.col(id_col), F.col("score")
-        )
+    hits = knn.merge_topk(cands.toArrow(), k, query_id_col, id_col)
+    return queries.sparkSession.createDataFrame(
+        hits.select([query_id_col, id_col, "score"])
     )
 
 

@@ -27,6 +27,7 @@ log = logging.getLogger(__name__)
 
 from cyborgdb_encrypted_vector_search_spark.caching import (
     snap_plan as _snap_plan,
+    track,
 )
 from cyborgdb_encrypted_vector_search_spark.functions import hashing as H
 from cyborgdb_encrypted_vector_search_spark.functions import vector as V
@@ -117,7 +118,8 @@ def lsh_candidate_pairs(
     # recomputed for BOTH join sides. The banded frame is tiny relative
     # to the corpus (id + band key per band), so materializing it is the
     # cluster-scale move too (a signature table you'd checkpoint).
-    banded = banded.persist()
+    # Tracked, so caching.release_all() frees it between queries.
+    banded = track(banded.persist())
     left = banded.alias("l")
     right = banded.alias("r")
     return (
@@ -678,7 +680,8 @@ def lsh_candidate_pairs_xxhash(
         F.explode(
             H.minhash_bands_xxhash(F.col("signature"), num_bands, rows_per_band)
         ).alias("band"),
-    ).persist()
+    )
+    banded = track(banded.persist())
     left = banded.alias("l")
     right = banded.alias("r")
     return (
@@ -1335,7 +1338,6 @@ def resolve_entities(
         stats["dropped_blocks"] = 0
     if not passes:
         raise ValueError("resolve_entities requires at least one pass")
-    from cyborgdb_encrypted_vector_search_spark.caching import track
 
     # Persist the record frame once (r13, guide §5/§7.3): every pass
     # scans it three times (the oversized-block probe + both self-join
@@ -1484,7 +1486,6 @@ def resolve_entities_incremental(
         raise ValueError(
             "resolve_entities_incremental requires at least one pass"
         )
-    from cyborgdb_encrypted_vector_search_spark.caching import track
 
     # same per-pass multi-scan shape as the rebuild: cache both record
     # frames once (r13 — see resolve_entities' persist note)

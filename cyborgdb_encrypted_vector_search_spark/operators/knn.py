@@ -16,19 +16,30 @@ Re-creates the reference's two query shapes:
   the distributed top-k shape of REPOSE (ICDE 2021): by a rank window
   over the candidates only (:func:`knn_join`, lazy) or on the driver
   (:func:`merge_topk`, the Collection serving path: one Spark job).
+- IVF (``operators/ann.py``) runs on the same kernel: a probed search
+  passes a per-query probe mask, so a row is scored only against the
+  queries that probed its inverted list, and assignment
+  (:func:`nearest`) keeps each row's nearest centroid by the ``l2``
+  fold — one narrow stage, every input row out exactly once.
 
 Scores are bit-identical to the JVM folds (``functions/vector.py``) and
 so to the DuckDB oracle: dims are accumulated one by one
 (``acc += u[:, j] * q[j]``, vectorized over rows, sequential over dims),
 the left-fold order of ``aggregate(zip_with(...))``; no BLAS ``@``,
-whose blocked summation would move the last bits.
+whose blocked summation would move the last bits. The metrics:
+
+- ``cosine``: unit vectors dotted, :func:`V.unit_cosine`'s order;
+- ``cosine_ratio``: ``dot / (|x| |q|)``, :func:`V.cosine`'s order;
+- ``l2``: :func:`V.l2_distance`.
 
 Row semantics match the folds: a zero-norm corpus or query vector
 scores the reference's ``-1.0`` cosine sentinel; a stored vector that
 is null, empty or of another length than the queries scores null, and
-null scores rank after every scored row. Determinism: ties broken by
-ascending neighbor id everywhere so results are reproducible and
-oracle-comparable.
+null scores rank after every scored row. ``cosine_ratio`` keeps
+:func:`V.cosine`'s one difference: a non-null stored vector of zero
+norm scores ``-1.0`` whatever its length (so an empty one does too).
+Determinism: ties broken by ascending neighbor id everywhere so results
+are reproducible and oracle-comparable.
 """
 
 from __future__ import annotations
@@ -47,7 +58,7 @@ from pyspark.sql import types as T
 
 from cyborgdb_encrypted_vector_search_spark.functions import vector as V
 
-METRICS = ("cosine", "l2")
+METRICS = ("cosine", "cosine_ratio", "l2")
 
 # the kernel ships by value, so Python workers need not import this package
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
@@ -97,10 +108,12 @@ def _check(k: int, metric: str) -> None:
         raise ValueError(f"unknown metric {metric!r}")
 
 
-def _query_matrix(vecs: Sequence, metric: str) -> tuple[np.ndarray, np.ndarray]:
+def query_matrix(vecs: Sequence, metric: str) -> tuple[np.ndarray, np.ndarray]:
     """(queries x d matrix, zero-norm mask). Cosine queries are
     unit-normalized here with :func:`V.normalize_py`'s sequential fold,
-    so they equal the JVM's ``with_unit_vectors`` bit for bit."""
+    so they equal the JVM's ``with_unit_vectors`` bit for bit; the
+    other metrics keep the raw vectors. Raises ``ValueError`` on null,
+    empty or unequal-length vectors."""
     if any(v is None for v in vecs):
         raise ValueError("query vectors must not be null")
     vecs = [[float(x) for x in v] for v in vecs]
@@ -111,11 +124,9 @@ def _query_matrix(vecs: Sequence, metric: str) -> tuple[np.ndarray, np.ndarray]:
         )
     if vecs and d == 0:
         raise ValueError("query vectors must not be empty")
+    zero = np.array([V.norm_py(v) == 0.0 for v in vecs], dtype=bool)
     if metric == "cosine":
-        zero = np.array([V.norm_py(v) == 0.0 for v in vecs], dtype=bool)
         vecs = [V.normalize_py(v) for v in vecs]
-    else:
-        zero = np.zeros(len(vecs), dtype=bool)
     return np.array(vecs, dtype=np.float64).reshape(len(vecs), d), zero
 
 
@@ -141,6 +152,43 @@ def _rowsum(p: np.ndarray) -> np.ndarray:
     return acc
 
 
+def _dots(qmat: np.ndarray, x: np.ndarray) -> np.ndarray:
+    """Queries x rows dot products, the left fold over dims."""
+    xt = np.ascontiguousarray(x.T)
+    acc = np.zeros((len(qmat), len(x)))
+    for j in range(qmat.shape[1]):
+        acc += qmat[:, j, None] * xt[j]
+    return acc
+
+
+def l2_distances(qmat: np.ndarray, x: np.ndarray) -> np.ndarray:
+    """Queries x rows L2 distances, :func:`V.l2_distance`'s left fold
+    over dims (bit-identical to it)."""
+    xt = np.ascontiguousarray(x.T)
+    acc = np.zeros((len(qmat), len(x)))
+    for j in range(qmat.shape[1]):
+        diff = xt[j] - qmat[:, j, None]
+        acc += diff * diff
+    return np.sqrt(acc)
+
+
+def _zero_norm_other_rows(col, ok: np.ndarray) -> np.ndarray:
+    """Mask of the rows outside ``ok`` (another length, empty included)
+    that are non-null, have no null element and fold to a zero norm:
+    :func:`V.cosine` gives them its -1.0 sentinel. Such rows are rare,
+    so a Python fold is fine."""
+    out = np.zeros(len(ok), dtype=bool)
+    for i in np.flatnonzero(~ok):
+        v = col[int(i)].as_py()
+        if v is None or None in v:
+            continue
+        acc = 0.0
+        for e in v:
+            acc += e * e
+        out[i] = acc == 0.0
+    return out
+
+
 def _scores(
     t: pa.Table,
     qmat: np.ndarray,
@@ -160,41 +208,79 @@ def _scores(
             x, ok = _vectors(t.column(vec_col), d)
             cn = np.sqrt(_rowsum(x * x))
             u = x / np.where(cn == 0.0, 1.0, cn)[:, None]
-        ut = np.ascontiguousarray(u.T)
-        acc = np.zeros((n_q, len(u)))
-        for j in range(d):
-            acc += qmat[:, j, None] * ut[j]
+        acc = _dots(qmat, u)
         acc[:, cn == 0.0] = -1.0
         acc[qzero] = -1.0
+    elif metric == "cosine_ratio":
+        col = t.column(vec_col).combine_chunks()
+        x, ok = _vectors(col, d)
+        cn = np.sqrt(_rowsum(x * x))
+        qn = np.sqrt(_rowsum(qmat * qmat))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            acc = _dots(qmat, x) / (cn * qn[:, None])
+        acc[:, cn == 0.0] = -1.0
+        out[:, _zero_norm_other_rows(col, ok)] = -1.0
     else:
         x, ok = _vectors(t.column(vec_col), d)
-        xt = np.ascontiguousarray(x.T)
-        acc = np.zeros((n_q, len(x)))
-        for j in range(d):
-            diff = xt[j] - qmat[:, j, None]
-            acc += diff * diff
-        acc = np.sqrt(acc)
+        acc = l2_distances(qmat, x)
     out[:, ok] = acc
+    if metric == "cosine_ratio":
+        out[qzero] = -1.0  # V.cosine: a zero-norm query wins over a null row
     return out
 
 
-def _best(scores: np.ndarray, ids: np.ndarray, k: int, desc: bool) -> list:
+def _best(
+    scores: np.ndarray,
+    ids: np.ndarray,
+    k: int,
+    desc: bool,
+    live: np.ndarray | None = None,
+) -> list:
     """For each query (row of ``scores``), the positions of its k best
     rows by (score, id asc), null scores last. Exact: every row tied
-    with the k-th score is a candidate before the id tie-break."""
+    with the k-th score is a candidate before the id tie-break. A
+    ``live`` mask (queries x rows) limits each query to its own rows."""
     key = -scores if desc else scores
     null = np.isnan(key)
     out = []
-    for kq, nq in zip(key, null):
-        cand = np.flatnonzero(~nq)
+    for i, (kq, nq) in enumerate(zip(key, null)):
+        lq = True if live is None else live[i]
+        cand = np.flatnonzero(~nq & lq)
         if len(cand) > k:
             kth = np.partition(kq[cand], k - 1)[k - 1]
             cand = cand[kq[cand] <= kth]
         elif len(cand) < k:
-            cand = np.concatenate([cand, np.flatnonzero(nq)])
+            cand = np.concatenate([cand, np.flatnonzero(nq & lq)])
         order = np.lexsort((ids[cand], np.where(nq[cand], 0.0, kq[cand]), nq[cand]))
         out.append(cand[order[:k]])
     return out
+
+
+def _probed_scores(
+    t: pa.Table,
+    probe: tuple[str, dict],
+    qmat: np.ndarray,
+    qzero: np.ndarray,
+    metric: str,
+    vec_col: str,
+    use_unit: bool,
+) -> tuple[np.ndarray, np.ndarray]:
+    """(scores, live) for a probed search: each row is scored only
+    against the queries that probed its list; ``live`` marks those
+    (query, row) pairs, every other entry is no candidate at all."""
+    list_col, probed_by = probe
+    lists = np.array(t.column(list_col).to_pylist(), dtype=object)
+    s = np.full((len(qmat), t.num_rows), np.nan)
+    live = np.zeros(s.shape, dtype=bool)
+    for c in set(lists.tolist()):
+        qs = probed_by.get(c)
+        if qs is None:
+            continue
+        rows = np.flatnonzero(lists == c)
+        cell = np.ix_(qs, rows)
+        s[cell] = _scores(t.take(rows), qmat[qs], qzero[qs], metric, vec_col, use_unit)
+        live[cell] = True
+    return s, live
 
 
 def _topk_partition(
@@ -209,6 +295,7 @@ def _topk_partition(
     use_unit: bool,
     keep: list[str],
     names: list[str],
+    probe: tuple[str, dict] | None,
 ):
     """mapInArrow body: fold a partition's batches into the union of
     every query's running top-k (rows and their scores, so no row is
@@ -216,18 +303,25 @@ def _topk_partition(
     query's final k."""
     if not len(qids):
         return
-    desc = metric == "cosine"
-    kept = kept_s = None
+    desc = metric != "l2"
+    kept = kept_s = kept_live = live = None
     for b in batches:
         t = pa.Table.from_batches([b])
-        s = _scores(t, qmat, qzero, metric, vec_col, use_unit)
+        if probe is None:
+            s = _scores(t, qmat, qzero, metric, vec_col, use_unit)
+        else:
+            s, live = _probed_scores(t, probe, qmat, qzero, metric, vec_col, use_unit)
         if kept is not None:
             t, s = pa.concat_tables([kept, t]), np.hstack([kept_s, s])
-        union = np.unique(np.concatenate(_best(s, t.column(id_col).to_numpy(), k, desc)))
+            if live is not None:
+                live = np.hstack([kept_live, live])
+        ids = t.column(id_col).to_numpy()
+        union = np.unique(np.concatenate(_best(s, ids, k, desc, live)))
         kept, kept_s = t.take(union), s[:, union]
+        kept_live = None if live is None else live[:, union]
     if kept is None or not kept.num_rows:
         return
-    sel = _best(kept_s, kept.column(id_col).to_numpy(), k, desc)
+    sel = _best(kept_s, kept.column(id_col).to_numpy(), k, desc, kept_live)
     rows = np.concatenate(sel)
     qpos = np.repeat(np.arange(len(sel)), [len(x) for x in sel])
     score = kept_s[qpos, rows]
@@ -247,6 +341,7 @@ def topk_candidates(
     query_id_col: str = "query_id",
     query_id_type: T.DataType = T.LongType(),
     score_col: str = "score",
+    probes: tuple[str, Sequence[Sequence]] | None = None,
 ) -> DataFrame:
     """Exact per-partition kNN candidates: for every query and every
     corpus partition, that partition's k best rows by (score, id asc),
@@ -257,14 +352,25 @@ def topk_candidates(
     corpus's ``unit``/``vnorm`` columns when present (the materialized
     projection of ``registry.unit_embeddings``; dropped from the
     output) and normalizes ``corpus_vec_col`` per batch otherwise.
-    Callers finish with a rank over the candidates (:func:`knn_join`)
-    or a driver merge (:func:`merge_topk`)."""
+    ``probes = (list_col, lists)`` restricts query ``i`` to the rows
+    whose ``list_col`` is in ``lists[i]`` (the IVF probe mask): other
+    rows are never scored against it. Callers finish with a rank over
+    the candidates (:func:`knn_join`) or a driver merge
+    (:func:`merge_topk`)."""
     from pyspark.sql.pandas.types import to_arrow_type
 
     _check(k, metric)
-    qmat, qzero = _query_matrix(query_vecs, metric)
+    qmat, qzero = query_matrix(query_vecs, metric)
     use_unit = metric == "cosine" and {"unit", "vnorm"} <= set(corpus.columns)
     keep = [c for c in corpus.columns if not (use_unit and c in ("unit", "vnorm"))]
+    probe = None
+    if probes is not None:
+        list_col, lists = probes
+        probed_by: dict = {}
+        for i, ls in enumerate(lists):
+            for c in ls:
+                probed_by.setdefault(c, []).append(i)
+        probe = (list_col, {c: np.array(q) for c, q in probed_by.items()})
     schema = T.StructType(
         [corpus.schema[c] for c in keep]
         + [
@@ -284,8 +390,53 @@ def topk_candidates(
         use_unit=use_unit,
         keep=keep,
         names=schema.names,
+        probe=probe,
     )
     return corpus.mapInArrow(kernel, schema)
+
+
+def _nearest_partition(batches, ids: pa.Array, cmat: np.ndarray, vec_col: str, name: str):
+    """mapInArrow body of :func:`nearest`: every row once, plus the id
+    of its nearest vector; ``ids`` ascend, so ``argmin`` (first
+    minimum) breaks distance ties by the smaller id, and a row with no
+    distance (null, empty, other length) takes the smallest id."""
+    zero = np.zeros(len(cmat), dtype=bool)
+    for b in batches:
+        s = _scores(pa.Table.from_batches([b]), cmat, zero, "l2", vec_col, False)
+        best = np.argmin(np.where(np.isnan(s), np.inf, s), axis=0)
+        yield pa.RecordBatch.from_arrays(
+            [*b.columns, ids.take(best)], names=[*b.schema.names, name]
+        )
+
+
+def nearest(
+    df: DataFrame,
+    ids: Sequence,
+    vecs: Sequence[Sequence[float]],
+    vec_col: str = "embedding",
+    out_col: str = "centroid_id",
+    out_type: T.DataType = T.IntegerType(),
+) -> DataFrame:
+    """Every row of ``df`` plus ``out_col``: the id of its nearest
+    vector in ``vecs`` by L2, ties to the smaller id (the
+    ``min_by(id, struct(dist, id))`` of a cross join, which IVF
+    assignment used to run). Lazy; one narrow ``mapInArrow`` stage,
+    the vectors in the closure, no join and no exchange."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    if not len(ids):
+        raise ValueError("nearest: no vectors to assign to")
+    order = sorted(range(len(ids)), key=lambda i: ids[i])
+    cmat, _ = query_matrix([vecs[i] for i in order], "l2")
+    kernel = functools.partial(
+        _nearest_partition,
+        ids=pa.array([ids[i] for i in order], to_arrow_type(out_type)),
+        cmat=cmat,
+        vec_col=vec_col,
+        name=out_col,
+    )
+    schema = T.StructType(df.schema.fields + [T.StructField(out_col, out_type)])
+    return df.mapInArrow(kernel, schema)
 
 
 def merge_topk(

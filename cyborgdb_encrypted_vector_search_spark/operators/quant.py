@@ -367,8 +367,9 @@ def ivfsq_search_batch(
     query_vec_col: str = "qvec",
 ) -> DataFrame:
     """Batch IVF+SQ8: every query's probe + quantized scan + re-rank as
-    ONE declarative plan (no per-query driver jobs — the batch shape of
-    ann.ivf_search_batch applied to the compressed layout):
+    ONE declarative plan over the compressed layout (no per-query
+    driver jobs; broadcast probe joins and rank windows, where
+    ann.ivf_search_batch runs the knn.py kernel and a driver merge):
 
     1. queries x centroids (broadcast) -> per-query nprobe lists;
     2. the probe list broadcasts and hash-joins the layout on

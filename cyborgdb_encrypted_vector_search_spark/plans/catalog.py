@@ -1860,9 +1860,11 @@ def ann_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF coarse quantization with a fixed coarse quantizer (the
     vectors of ids 0..7 as centroids — deterministic, so the oracle can
     replicate it; production build uses seeded MLlib k-means via
-    operators.ann.kmeans_centroids). Assignment = broadcast argmin —
-    linear, shuffle-free. Partitioning the table by centroid_id turns
-    every probe into partition pruning."""
+    operators.ann.kmeans_centroids). Assignment = one narrow kernel
+    stage (operators/knn.nearest: centroid matrix in the closure, L2
+    argmin, ties to the smaller id) — linear, no join, no shuffle.
+    Partitioning the table by centroid_id turns every probe into
+    partition pruning."""
     from cyborgdb_encrypted_vector_search_spark.sources.registry import ivf_index
 
     assigned = ivf_index(spark, sf_dir)
@@ -5652,13 +5654,15 @@ _SQL_L2_QC = (
 )
 def ann_ivf_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch IVF search: 10 query vectors probed and ranked in ONE
-    declarative plan (operators/ann.ivf_search_batch) — no per-query
-    driver loop, no collect. Probe lists come from a broadcast
-    queries×centroids window; candidates from one broadcast hash join
-    on centroid_id (partition pruning at a materialized layout); final
-    per-query top-k via WindowGroupLimit. IVF probing is deterministic
-    (L2 + id tie-breaks), so unlike the PQ family this batch result is
-    fully SQL-expressible and value-hashed against DuckDB."""
+    kernel job (operators/ann.ivf_search_batch) — no per-query driver
+    loop. Probe lists are picked on the driver (L2 fold, centroid-id
+    tie-break); the index is filtered to the probed lists (partition
+    pruning at a materialized layout) and one mapInArrow stage scores
+    each row only against the queries that probed its list, keeping k
+    candidates per query per partition; the driver merges them into a
+    local frame. IVF probing is deterministic (L2 + id tie-breaks), so
+    unlike the PQ family this batch result is fully SQL-expressible and
+    value-hashed against DuckDB."""
     from cyborgdb_encrypted_vector_search_spark.operators import ann as A
     from cyborgdb_encrypted_vector_search_spark.sources.registry import ivf_index
 

@@ -213,6 +213,33 @@ def test_fastpath_xxhash_minhash_and_bands(spark):
     assert banded.schema["band"].dataType.typeName() == "long"
 
 
+def test_lsh_band_cache_released(spark):
+    """Both MinHash banding paths persist their banded frame for the
+    self-join; release_all() must free it once the pairs are collected,
+    so repeated calls do not pin one cached relation each."""
+    from cyborgdb_encrypted_vector_search_spark import caching
+
+    df = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog"),
+         (2, "the quick brown fox jumps over the lazy cat"),
+         (3, "lorem ipsum dolor sit amet consectetur")],
+        "doc_id long, text string",
+    )
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    storage = spark.sparkContext._jsc.sc().getRDDStorageInfo
+    for fn in (dedup.lsh_candidate_pairs, dedup.lsh_candidate_pairs_xxhash):
+        caching.release_all()  # frames other tests left tracked
+        cached_before = len(storage())
+        pairs = fn(df)
+        banded = list(caching._LIVE)
+        assert len(banded) == 1, fn.__name__
+        assert (1, 2) in {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
+        assert cm.lookupCachedData(banded[0]._jdf).nonEmpty()
+        assert caching.release_all() == 1
+        assert cm.lookupCachedData(banded[0]._jdf).isEmpty(), fn.__name__
+        assert len(storage()) == cached_before, fn.__name__
+
+
 def test_fastpath_simhash_xxhash_near_and_far(spark):
     # Near-identical token bags -> small Hamming distance; disjoint
     # vocabularies -> large. Deterministic across runs (seedless

@@ -4,6 +4,8 @@ so a change that silently de-optimizes a plan fails here."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -200,15 +202,45 @@ def test_decontaminate_broadcasts_benchmark_shingles(spark, sf_dir, cat):
 
 
 def test_batch_ann_serving_plans_broadcast_probes(spark, sf_dir, cat):
-    """The batch ANN serving paths must keep the corpus un-shuffled:
-    probe lists broadcast onto the index (one BroadcastHashJoin), the
-    only hash exchanges carry per-query window partials, and no
-    SortMergeJoin appears anywhere in the serving plan."""
-    for name in ("ann_lsh_batch_topk", "ann_ivf_batch_topk"):
-        plan = X.physical_plan(cat[name].fn(spark, sf_dir))
-        assert "BroadcastHashJoin" in plan, name
-        assert "SortMergeJoin" not in plan, name
-        assert "WindowGroupLimit" in plan, name
+    """The batch ANN serving paths must keep the corpus un-shuffled.
+    LSH: probe lists broadcast onto the index (one BroadcastHashJoin),
+    the only hash exchanges carry per-query window partials, and no
+    SortMergeJoin appears anywhere in the serving plan. IVF: the
+    gate's result is a local frame merged on the driver, so its kernel
+    stage is checked instead — the index is filtered to the probed
+    lists and scored in one mapInArrow stage, with no exchange and no
+    join of any kind."""
+    from cyborgdb_encrypted_vector_search_spark.operators import ann as A
+    from cyborgdb_encrypted_vector_search_spark.plans.catalog import (
+        _fixed_centroids,
+    )
+    from cyborgdb_encrypted_vector_search_spark.sources.registry import (
+        ivf_index,
+    )
+
+    plan = X.physical_plan(cat["ann_lsh_batch_topk"].fn(spark, sf_dir))
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
+    assert "WindowGroupLimit" in plan
+
+    emb = load(spark, "embeddings", sf_dir)
+    queries = emb.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
+    )
+    kernel = A.ivf_candidates(
+        queries, ivf_index(spark, sf_dir), _fixed_centroids(emb), k=3, nprobe=2
+    )
+    plan = X.physical_plan(kernel)
+    assert re.search(r"centroid_id#\d+ IN \(", plan), plan
+    assert "MapInArrow" in plan, plan
+    for node in (
+        "Exchange",
+        "SortMergeJoin",
+        "CartesianProduct",
+        "BroadcastNestedLoopJoin",
+    ):
+        assert node not in plan, (node, plan)
 
 
 def test_sketch_gate_predicates_recomputed_from_raw_frame(spark, sf_dir):

@@ -15,7 +15,9 @@ fraction of it" are:
   centroid; lay the table out partitioned by ``centroid_id``. A query
   probes the ``nprobe`` nearest centroids and ranks exactly within
   them — partition pruning does the index work (SURVEY.md §4).
-  Centroids come from MLlib k-means (seeded) or any fixed vector set.
+  Centroids come from seeded k-means (:func:`kmeans_centroids`: one
+  job to sample, k-means++ and Lloyd on the driver) or any fixed
+  vector set.
   Assignment and batch search run on the exact Arrow kernel of
   ``operators/knn.py`` with the (small) centroid matrix in its closure:
   assignment is one narrow stage, and a batch search picks every
@@ -227,29 +229,111 @@ def assign_centroids(
     )
 
 
+# FAISS's per-centroid training cap: k-means trains on at most this
+# many sampled rows per centroid
+KMEANS_ROWS_PER_CENTROID = 256
+# MLlib's k-means|| runs this many local iterations before its passes
+_KMEANS_INIT_ITERS = 30
+_KMEANS_CHUNK = 4096
+
+
 def kmeans_centroids(
     df: DataFrame, k: int = 16, vec_col: str = "embedding", seed: int = 42,
     max_iter: int = 10,
 ) -> DataFrame:
-    """Seeded MLlib k-means centroids as (centroid_id int, centroid
-    array<double>) rows.
+    """Seeded k-means centroids as (centroid_id int, centroid
+    array<double>) rows, exactly k of them.
 
-    Build-time only; the centroid table is tiny and reusable. It comes
-    back as a local frame (an Arrow LocalRelation), so reading it —
-    which assignment and every search do — runs no Spark job.
+    One Spark job collects a seeded, deterministic sample of at most
+    ``KMEANS_ROWS_PER_CENTROID * k`` rows (:func:`_kmeans_sample`); the
+    driver seeds k-means++ on it and refines with Lloyd iterations
+    (:func:`_kmeans_train`). Build-time only; the centroid table is
+    tiny and reusable. It comes back as a local frame (an Arrow
+    LocalRelation), so reading it — which assignment and every search
+    do — runs no Spark job. Raises ``ValueError`` on ``k`` or
+    ``max_iter`` below 1 (before any job) and on fewer than k rows.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feat = df.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
-    model = KMeans(k=k, seed=seed, maxIter=max_iter).fit(feat)
-    centers = model.clusterCenters()
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
+    centers = _kmeans_train(_kmeans_sample(df, k, vec_col, seed), k, seed, max_iter)
     return df.sparkSession.createDataFrame(pa.table({
-        "centroid_id": pa.array(range(len(centers)), pa.int32()),
-        "centroid": pa.array(
-            [[float(x) for x in c] for c in centers], pa.list_(pa.float64())
-        ),
+        "centroid_id": pa.array(range(k), pa.int32()),
+        "centroid": pa.array(centers.tolist(), pa.list_(pa.float64())),
     }))
+
+
+def _kmeans_sample(df: DataFrame, k: int, vec_col: str, seed: int) -> np.ndarray:
+    """The training rows as a float64 matrix: the first
+    ``KMEANS_ROWS_PER_CENTROID * k`` by a seeded ``xxhash64`` of the
+    vector, then by the vector itself, so equal hashes order the same
+    way every run (one TakeOrderedAndProject job). Raises
+    ``ValueError`` on fewer than k rows, or on vectors that are null,
+    empty or of unequal lengths."""
+    v = F.col(vec_col).cast("array<double>")
+    rows = (
+        df.select(F.xxhash64(F.lit(seed), v).alias("h"), v.alias("v"))
+        .orderBy("h", "v")
+        .limit(KMEANS_ROWS_PER_CENTROID * k)
+        .collect()
+    )
+    if len(rows) < k:
+        raise ValueError(f"k-means needs at least k = {k} rows, got {len(rows)}")
+    lengths = {-1 if r[1] is None else len(r[1]) for r in rows}
+    if len(lengths) > 1 or lengths & {-1, 0}:
+        raise ValueError(
+            f"k-means vectors must be non-empty and of one length, got lengths"
+            f" {sorted(lengths)} (-1: null)"
+        )
+    return np.array([r[1] for r in rows], dtype=np.float64)
+
+
+def _nearest_rows(x: np.ndarray, c: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Per row of ``x``: the index of its nearest row of ``c`` (ties to
+    the smaller index, as :func:`assign_centroids`) and the distance,
+    by :func:`knn.l2_distances`' fold, in chunks of rows so memory
+    stays O(chunk x len(c))."""
+    idx, dist = [], []
+    for s in range(0, len(x), _KMEANS_CHUNK):
+        d = knn.l2_distances(x[s:s + _KMEANS_CHUNK], c)
+        a = np.argmin(d, axis=1)
+        idx.append(a)
+        dist.append(d[np.arange(len(a)), a])
+    return np.concatenate(idx), np.concatenate(dist)
+
+
+def _kmeans_train(x: np.ndarray, k: int, seed: int, max_iter: int) -> np.ndarray:
+    """k centroids of the rows of ``x``: k-means++ seeding, then Lloyd
+    iterations — at most ``_KMEANS_INIT_ITERS + max_iter`` (MLlib's
+    k-means|| budget), stopping once no assignment changes. A cluster
+    that empties keeps its centroid."""
+    rng = np.random.default_rng(seed % 2**64)
+    n = len(x)
+    picks = [int(rng.integers(n))]
+    d2 = _nearest_rows(x, x[picks])[1] ** 2
+    for _ in range(1, k):
+        total = float(d2.sum())
+        if total > 0:  # D^2 sampling; a row at distance 0 is never picked
+            i = int(np.searchsorted(np.cumsum(d2), rng.random() * total, side="right"))
+            i = min(i, n - 1)
+        else:  # every row sits on a picked one
+            i = int(rng.integers(n))
+        picks.append(i)
+        d2 = np.minimum(d2, _nearest_rows(x, x[[i]])[1] ** 2)
+    c = x[picks].copy()
+    assign = None
+    for _ in range(_KMEANS_INIT_ITERS + max_iter):
+        a, _ = _nearest_rows(x, c)
+        if assign is not None and np.array_equal(a, assign):
+            break
+        assign = a
+        counts = np.bincount(a, minlength=k)
+        sums = np.zeros_like(c)
+        np.add.at(sums, a, x)
+        full = counts > 0
+        c[full] = sums[full] / counts[full, None]
+    return c
 
 
 def build_ivf_layout(

@@ -1345,9 +1345,11 @@ def resolve_entities(
     # be a derived multi-branch plan, and the UNPERSISTED form nested
     # that whole derivation into every consumer's plan (the gate's
     # executed plan was ~15k lines, with driver planning time to
-    # match). One cache, InMemoryTableScan leaves everywhere.
+    # match). One cache, InMemoryTableScan leaves everywhere. The cache
+    # is of a derived select("*") — same columns, same attributes — so
+    # the caller's own frame is never marked cached or left pinned.
     if not records.is_cached:
-        records = track(records.persist())
+        records = track(records.select("*").persist())
     rec = records.select(
         F.col(id_col).alias("_rid"), F.struct(*records.columns).alias("_row")
     )
@@ -1488,11 +1490,12 @@ def resolve_entities_incremental(
         )
 
     # same per-pass multi-scan shape as the rebuild: cache both record
-    # frames once (r13 — see resolve_entities' persist note)
+    # frames once (r13 — see resolve_entities' persist note), as
+    # derived selects so the caller's frames stay uncached
     if not old_records.is_cached:
-        old_records = track(old_records.persist())
+        old_records = track(old_records.select("*").persist())
     if not new_records.is_cached:
-        new_records = track(new_records.persist())
+        new_records = track(new_records.select("*").persist())
     ko_l = [_er_keyed(old_records, id_col, bx) for bx, _ in passes]
     kn_l = [_er_keyed(new_records, id_col, bx) for bx, _ in passes]
     over_l = [

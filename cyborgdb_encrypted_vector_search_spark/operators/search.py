@@ -6,32 +6,34 @@ toward it by embed → score → rank → mutate:
 
 - **I1 evolutionary** (reference src/app.py:100-171): population of 60,
   <=120 generations, 20% elitism, crossover p=0.12, early-stop at
-  cosine > 0.995. Here each generation is one declarative batch:
-  candidates DataFrame → Arrow-batched embed UDF → cosine column expr →
-  TakeOrderedAndProject for elites; children are generated
-  distributedly (explode over elites + seeded mutation UDF). The driver
-  only collects one max-score scalar per generation for the early-stop
-  check.
+  cosine > 0.995. Each generation is ONE Spark job: the population (an
+  Arrow local frame) → Arrow-batched embed UDF → cosine column expr,
+  every (text, score) row collected. The loop state stays on the
+  driver, which picks the elites, breeds the children and keeps the
+  running best — the per-generation state is ~60 short strings, far
+  below what a Spark job's fixed cost is worth.
 - **I2 greedy** (reference src/app.py:174-202): 12 restarts x 200
   sequential accept-if-better iterations with 1% random-jump teleports.
-  The inner loop is inherently sequential, so it runs inside
-  ``applyInPandas`` — one group per restart, restarts parallel across
-  executors (the Spark-correct shape for "embarrassingly parallel
-  sequential loops").
+  The inner loop is inherently sequential, so each restart climbs
+  inside one ``mapInPandas`` task, restarts spread over the tasks of
+  ONE job, and the one row per restart is merged on the driver.
 - **I4 merge** (reference src/app.py:246-255): union both strategies'
   outputs → keep max score per distinct text → global top-30.
 
-Determinism: every mutation draws from ``random.Random(f"{seed}:...")``
-keyed on (run seed, generation, slot, parent text), so runs replay
-exactly — the discipline SURVEY.md §5.5 prescribes for the
-reference's unseeded RNG.
+Both searches return an Arrow local frame, so collecting the result
+runs no Spark job. Determinism: every mutation draws from
+``random.Random(f"{seed}:...")`` keyed on (run seed, generation, slot,
+parent text), so runs replay exactly — the discipline SURVEY.md §5.5
+prescribes for the reference's unseeded RNG.
 """
 
 from __future__ import annotations
 
+import itertools
 import random
 from collections.abc import Sequence
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -147,26 +149,47 @@ def _generation_scored(
 ) -> DataFrame:
     """One generation's population scored against the target: embed
     (Arrow-batched UDF) + cosine fold + projection, planned as a single
-    narrow stage over ``_generation_width`` partitions. Split out of
-    the generation loop so the stage's plan shape is test-pinnable
-    (VERDICT r10 task 6 — the generation-loop analogue of the greedy
-    restart-parallelism pin). The width is planted with an explicit
-    ``parallelize(rows, width)`` — exact and shuffle-free at any
-    session parallelism (the old ``coalesce`` could only NARROW, so a
-    low-defaultParallelism session silently ran generations at fewer
-    partitions than the target width), and with no exchange there is
-    nothing for AQE to coalesce onto one core."""
-    pop_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(t,) for t in pop], _generation_width(len(pop))
-        ),
-        "text string",
-    )
+    narrow stage. Split out of the generation loop so the stage's plan
+    shape is test-pinnable. The population is an Arrow local frame —
+    building it runs no Python job, unlike a Python-list frame or
+    ``parallelize`` — coalesced to ``_generation_width``: its scan has
+    min(rows, defaultParallelism) slices, so the stage runs
+    min(width, defaultParallelism) tasks, with no exchange for AQE to
+    collapse onto one core."""
+    pop_df = spark.createDataFrame(pa.table({"text": pa.array(pop, pa.string())}))
     return (
-        pop_df.withColumn("embedding", embed_udf("text"))
+        pop_df.coalesce(_generation_width(len(pop)))
+        .withColumn("embedding", embed_udf("text"))
         .withColumn("score", _score_col(unit_target))
         .select("text", "score")
     )
+
+
+def _ranked(rows, n: int) -> list[tuple[str, float]]:
+    """The first ``n`` (text, score) rows by (score desc, text asc) —
+    the order of every elite pick and result."""
+    return sorted(rows, key=lambda r: (-r[1], r[0]))[:n]
+
+
+def _keep_max_local(spark: SparkSession, rows, top_n: int) -> DataFrame:
+    """I4 on the driver: max score per distinct text, the ``top_n``
+    best, as an Arrow local frame (collecting it runs no Spark job)."""
+    best: dict[str, float] = {}
+    for text, score in rows:
+        if text not in best or score > best[text]:
+            best[text] = score
+    top = _ranked(best.items(), top_n)
+    return spark.createDataFrame(pa.table({
+        "text": pa.array([t for t, _ in top], pa.string()),
+        "score": pa.array([s for _, s in top], pa.float64()),
+    }))
+
+
+def _check_seeds_and_top(seed_candidates: Sequence[str], top_n: int) -> None:
+    if not len(seed_candidates):
+        raise ValueError("seed_candidates must not be empty")
+    if top_n < 1:
+        raise ValueError(f"top_n must be >= 1, got {top_n}")
 
 
 def evolutionary_search(
@@ -181,7 +204,21 @@ def evolutionary_search(
     dim: int = E.DEFAULT_DIM,
     top_n: int = 30,
 ) -> DataFrame:
-    """I1: returns (text, score) of the final top_n candidates."""
+    """I1: returns (text, score) of the final top_n candidates, as a
+    local frame.
+
+    One Spark job per generation run (the scoring stage of
+    :func:`_generation_scored`); elite selection, breeding and the
+    final keep-max run on the driver. Raises ``ValueError`` before any
+    job on empty ``seed_candidates``, ``pop_size``, ``generations`` or
+    ``top_n`` below 1, or ``elite_frac`` outside (0, 1]."""
+    _check_seeds_and_top(seed_candidates, top_n)
+    if pop_size < 1:
+        raise ValueError(f"pop_size must be >= 1, got {pop_size}")
+    if generations < 1:
+        raise ValueError(f"generations must be >= 1, got {generations}")
+    if not 0 < elite_frac <= 1:
+        raise ValueError(f"elite_frac must be in (0, 1], got {elite_frac}")
     unit_target = V.normalize_py(list(target_emb))
     embed_udf = E.make_embed_udf(dim)
     n_elite = max(1, int(pop_size * elite_frac))
@@ -198,52 +235,28 @@ def evolutionary_search(
     pop = pop[:pop_size]
 
     best_rows: list[tuple[str, float]] = []
-    mutate_udf = F.udf(_mutate_child, T.StringType())
-
     for gen in range(generations):
-        scored = _generation_scored(spark, pop, embed_udf, unit_target)
-        elites = scored.orderBy(F.desc("score"), F.asc("text")).limit(n_elite).collect()
-        best_rows.extend((r["text"], r["score"]) for r in elites)
-        if elites and elites[0]["score"] > early_stop:
-            break
-        if gen == generations - 1:
+        scored = _generation_scored(spark, pop, embed_udf, unit_target).collect()
+        elites = _ranked([(r["text"], r["score"]) for r in scored], n_elite)
+        best_rows.extend(elites)
+        if elites[0][1] > early_stop or gen == generations - 1:
             break
         # regenerate: keep elites, fill with mutated/crossed children —
-        # distributable shape: explode children slots over elite rows
-        elite_texts = [r["text"] for r in elites]
-        elites_df = spark.createDataFrame(
-            [(t, elite_texts[(i + 1) % len(elite_texts)]) for i, t in enumerate(elite_texts)],
-            "text string, mate string",
-        )
+        # elite i's slots 1..per_parent in turn, mate = the next elite
+        elite_texts = [t for t, _ in elites]
         n_children = pop_size - len(elite_texts)
         per_parent = (n_children + len(elite_texts) - 1) // len(elite_texts)
         children = (
-            elites_df.select(
-                "text",
-                "mate",
-                F.explode(F.sequence(F.lit(1), F.lit(per_parent))).alias("slot"),
+            _mutate_child(
+                t, elite_texts[(i + 1) % len(elite_texts)], f"{seed}:{gen}:{slot}:{t}"
             )
-            .withColumn(
-                "child",
-                mutate_udf(
-                    "text",
-                    "mate",
-                    F.concat_ws(":", F.lit(seed), F.lit(gen), F.col("slot"), F.col("text")),
-                ),
-            )
-            .select("child")
-            .limit(n_children)
+            for i, t in enumerate(elite_texts)
+            for slot in range(1, per_parent + 1)
         )
-        pop = elite_texts + [r["child"] for r in children.collect()]
+        pop = elite_texts + list(itertools.islice(children, n_children))
 
     # I4-style dedup-max over everything seen, final top-n
-    out = spark.createDataFrame(best_rows, "text string, score double")
-    return (
-        out.groupBy("text")
-        .agg(F.max("score").alias("score"))
-        .orderBy(F.desc("score"), F.asc("text"))
-        .limit(top_n)
-    )
+    return _keep_max_local(spark, best_rows, top_n)
 
 
 GREEDY_SCHEMA = T.StructType(
@@ -267,10 +280,14 @@ def greedy_search(
     top_n: int = 30,
     batch_size: int = 1,
 ) -> DataFrame:
-    """I2: restarts fan out as groups; each group runs its sequential
-    accept-if-better climb inside applyInPandas (reference
-    src/app.py:174-202 — single-candidate embed per iteration, 1%
-    teleport probability).
+    """I2: each restart runs its sequential accept-if-better climb in a
+    ``mapInPandas`` task (reference src/app.py:174-202 — single-candidate
+    embed per iteration, 1% teleport probability). The restarts are an
+    Arrow local frame, spread over min(restarts, defaultParallelism)
+    tasks of ONE Spark job; their one row each is merged on the driver
+    into a local frame of (text, score). Raises ``ValueError`` before
+    any job on empty ``seed_candidates``, ``restarts`` or ``top_n``
+    below 1, or ``iters`` below 0.
 
     ``batch_size=1`` reproduces the reference exactly (one embed call
     per iteration — its stated anti-pattern, src/app.py:192).
@@ -282,13 +299,17 @@ def greedy_search(
     import numpy as np
     import pandas as pd
 
+    _check_seeds_and_top(seed_candidates, top_n)
+    if restarts < 1:
+        raise ValueError(f"restarts must be >= 1, got {restarts}")
+    if iters < 0:
+        raise ValueError(f"iters must be >= 0, got {iters}")
     unit_target = np.array(V.normalize_py(list(target_emb)))
-    seeds_b = spark.sparkContext.broadcast(list(seed_candidates))
+    seeds = list(seed_candidates)
 
     def climb(pdf: pd.DataFrame) -> pd.DataFrame:
         r = int(pdf["restart"].iloc[0])
         rng = random.Random(f"{seed}:restart:{r}")
-        seeds = seeds_b.value
         cur = seeds[r % len(seeds)]
 
         def score_of(text: str) -> float:
@@ -327,16 +348,16 @@ def greedy_search(
                     cur, cur_score = cands[j], float(scores[j])
         return pd.DataFrame({"restart": [r], "text": [cur], "score": [cur_score]})
 
+    def climb_each(batches):
+        for pdf in batches:
+            for i in range(len(pdf)):
+                yield climb(pdf.iloc[[i]])
+
     restarts_df = spark.createDataFrame(
-        [(r,) for r in range(restarts)], "restart int"
-    ).repartition(restarts, "restart")
-    results = restarts_df.groupBy("restart").applyInPandas(climb, GREEDY_SCHEMA)
-    return (
-        results.groupBy("text")
-        .agg(F.max("score").alias("score"))
-        .orderBy(F.desc("score"), F.asc("text"))
-        .limit(top_n)
+        pa.table({"restart": pa.array(range(restarts), pa.int32())})
     )
+    rows = restarts_df.mapInPandas(climb_each, GREEDY_SCHEMA).collect()
+    return _keep_max_local(spark, [(r["text"], r["score"]) for r in rows], top_n)
 
 
 def merge_results(evo: DataFrame, greedy: DataFrame, top_n: int = 30) -> DataFrame:

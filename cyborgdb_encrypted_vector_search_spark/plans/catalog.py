@@ -1859,7 +1859,7 @@ _SQL_L2 = (
 def ann_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF coarse quantization with a fixed coarse quantizer (the
     vectors of ids 0..7 as centroids — deterministic, so the oracle can
-    replicate it; production build uses seeded MLlib k-means via
+    replicate it; production build uses seeded k-means via
     operators.ann.kmeans_centroids). Assignment = one narrow kernel
     stage (operators/knn.nearest: centroid matrix in the closure, L2
     argmin, ties to the smaller id) — linear, no join, no shuffle.
@@ -2024,7 +2024,9 @@ def search_evolutionary(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeded run produces at the gate budget with the reference-verbatim
     WORD_SEEDS (re-pinned in r3 when the seed list was aligned, and in
     r6 when mutate_charwise/wordwise were matched to the reference's
-    at-most-one-edit semantics)."""
+    at-most-one-edit semantics). One Spark job per generation scores
+    the population; elites, children and the final keep-max are picked
+    on the driver, and the result is a local frame."""
     from cyborgdb_encrypted_vector_search_spark.operators import search as S
 
     target, seeds = _search_target(spark, sf_dir)
@@ -2038,8 +2040,9 @@ def search_evolutionary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("search_greedy", _search_property_sql("greedy", 4))
 def search_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """I2 greedy hill-climb with parallel restarts via applyInPandas
-    (reference src/app.py:174-202), reduced budget for the gate.
+    """I2 greedy hill-climb (reference src/app.py:174-202), reduced
+    budget for the gate: the restarts climb in parallel mapInPandas
+    tasks of ONE Spark job and are merged on the driver.
     Property-gated: see _search_property_gate. n_results is the 4
     distinct climbed texts (one per restart after keep-max merge)."""
     from cyborgdb_encrypted_vector_search_spark.operators import search as S
@@ -3558,7 +3561,7 @@ def _recall_oracle_sql(method: str, k: int = 10, num_q: int = 5) -> str:
     (LSH/IVF/PQ) vs its own floor. Both engines' approximations must
     independently meet a genuinely-computed recall contract for the
     hash to match — no trivially-true boolean on either side. (The
-    methods differ by necessity: MLlib k-means/PQ codebooks aren't
+    methods differ by necessity: k-means/PQ codebooks aren't
     SQL-expressible, so DuckDB checks the CONTRACT SHAPE with its own
     method, exactly as it does for HLL/t-digest in q_approx_sketches.)
     """
@@ -3626,7 +3629,7 @@ def _ann_recall_gate(
     checksum proves the exact side against DuckDB's independent
     brute-force; recall_ok is only TRUE when measured recall ≥ floor —
     floors sit well under the measured values (pq .76, ivfpq .68,
-    ivfadc .62, ivf_kmeans .90 at sf0.01) so the gate is stable but a
+    ivfadc .62, ivf_kmeans .84 at sf0.01) so the gate is stable but a
     broken index/scorer still trips it."""
     emb = load(spark, "embeddings", sf_dir).select("vec_id", "embedding")
     n = emb.count()
@@ -3687,11 +3690,12 @@ def _recall_result(
 
 @query("ann_ivf_kmeans_build", _recall_oracle_sql("ivf_kmeans_nprobe4"))
 def ann_ivf_kmeans_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production IVF build path: seeded MLlib k-means centroids +
-    corpus assignment, gated on recall@10 ≥ 0.7 vs exact kNN (measured
-    0.90 at sf0.01) with the exact side checksummed against DuckDB's
-    independent brute force. The assignment histogram itself is pinned
-    in tests/test_ann_collections.py."""
+    """Production IVF build path: seeded k-means centroids (one sample
+    job, k-means++ and Lloyd on the driver) + corpus assignment, gated
+    on recall@10 ≥ 0.7 vs exact kNN (measured 0.84 at sf0.01) with the
+    exact side checksummed against DuckDB's independent brute force.
+    IVF recall on the k-means layout is pinned in
+    tests/test_ann_collections.py."""
     from cyborgdb_encrypted_vector_search_spark.operators import ann as A
 
     def make_search(emb):

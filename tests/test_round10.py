@@ -393,25 +393,22 @@ def test_skew_curve_twin_equals_gate_fixture_at_1x(spark):
 
 
 def test_greedy_restarts_actually_parallelize(spark):
-    """VERDICT r9 #6: pin that the restart fan-out stage keeps one
-    partition per restart — the explicit repartition plants a
-    REPARTITION_BY_NUM exchange that AQE must NOT coalesce before the
-    FlatMapGroupsInPandas stage (the same byte-based-coalesce failure
-    that serialized the graph wedge stages pre-r9 would otherwise run
-    all restarts on one core)."""
+    """Pin that the restarts fan out: one job whose single stage (no
+    exchange) runs min(restarts, defaultParallelism) tasks, so the
+    sequential climbs run side by side on the cores instead of one
+    after another in one task."""
     from cyborgdb_encrypted_vector_search_spark.functions import embed as E
     from cyborgdb_encrypted_vector_search_spark.operators import search as S
 
+    sc = spark.sparkContext
     target = E.embed_text("hello world", E.DEFAULT_DIM)
-    df = S.greedy_search(
-        spark, target, ["alpha", "beta", "gamma"], restarts=8, iters=1
-    )
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "FlatMapGroupsInPandas" in final
-    restart_ex = final.index(", 8), REPARTITION_BY_NUM")
-    fmap = final.index("FlatMapGroupsInPandas")
-    assert fmap < restart_ex  # exchange feeds the pandas stage
-    between = final[fmap:restart_ex]
-    assert "AQEShuffleRead" not in between
+    sc.setJobGroup("greedy_fanout", "greedy_fanout")
+    try:
+        S.greedy_search(spark, target, ["alpha", "beta", "gamma"], restarts=8, iters=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    (job,) = tracker.getJobIdsForGroup("greedy_fanout")
+    (stage,) = tracker.getJobInfo(job).stageIds  # one stage: no exchange
+    tasks = tracker.getStageInfo(stage).numTasks
+    assert tasks == min(8, sc.defaultParallelism) > 1

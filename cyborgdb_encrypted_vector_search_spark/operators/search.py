@@ -18,13 +18,14 @@ toward it by embed → score → rank → mutate:
   inside one ``mapInPandas`` task, restarts spread over the tasks of
   ONE job, and the one row per restart is merged on the driver.
 - **I4 merge** (reference src/app.py:246-255): union both strategies'
-  outputs → keep max score per distinct text → global top-30.
+  outputs → keep max score per distinct text → global top-30, on the
+  driver.
 
-Both searches return an Arrow local frame, so collecting the result
-runs no Spark job. Determinism: every mutation draws from
-``random.Random(f"{seed}:...")`` keyed on (run seed, generation, slot,
-parent text), so runs replay exactly — the discipline SURVEY.md §5.5
-prescribes for the reference's unseeded RNG.
+Both searches and their merge return an Arrow local frame, so
+collecting the result runs no Spark job. Determinism: every mutation
+draws from ``random.Random(f"{seed}:...")`` keyed on (run seed,
+generation, slot, parent text), so runs replay exactly — the
+discipline SURVEY.md §5.5 prescribes for the reference's unseeded RNG.
 """
 
 from __future__ import annotations
@@ -361,14 +362,11 @@ def greedy_search(
 
 
 def merge_results(evo: DataFrame, greedy: DataFrame, top_n: int = 30) -> DataFrame:
-    """I4: union -> dedup-keep-max -> top-n (reference src/app.py:246-255)."""
-    return (
-        evo.unionByName(greedy)
-        .groupBy("text")
-        .agg(F.max("score").alias("score"))
-        .orderBy(F.desc("score"), F.asc("text"))
-        .limit(top_n)
-    )
+    """I4: union -> dedup-keep-max -> top-n (reference src/app.py:246-255),
+    merged on the driver: each search returns at most ``top_n`` rows as
+    an Arrow local frame, so collecting both runs no Spark job."""
+    rows = [(r["text"], r["score"]) for df in (evo, greedy) for r in df.collect()]
+    return _keep_max_local(evo.sparkSession, rows, top_n)
 
 
 def invert_embedding(

@@ -712,12 +712,12 @@ class Collection:
         the rotation untouched (decrypt exposes them; add_encrypted
         merges them back beside the fresh ciphertext). Returns the
         rotated collection."""
+        plain = self.decrypt(old_key)
+        crypto.check_key(new_key)  # both keys before create's write job
         rotated = Collection.create(
             self.spark, self.name, dest_base_dir, dim=self.dim
         )
-        rotated.add_encrypted(
-            self.decrypt(old_key), new_key, id_col="id", metadata_col="metadata"
-        )
+        rotated.add_encrypted(plain, new_key, id_col="id", metadata_col="metadata")
         return rotated
 
 

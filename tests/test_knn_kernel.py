@@ -10,6 +10,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from cyborgdb_encrypted_vector_search_spark.functions import crypto
 from cyborgdb_encrypted_vector_search_spark.functions import vector as V
 from cyborgdb_encrypted_vector_search_spark.operators import knn
 from cyborgdb_encrypted_vector_search_spark.sources.collections import Collection
@@ -199,6 +200,36 @@ def test_query_input_validated_before_any_job(spark, tmp_path):
         with pytest.raises(ValueError):
             _jobs(spark, "validate", lambda: coll.query(**kwargs))
         assert spark.sparkContext.statusTracker().getJobIdsForGroup("validate") == []
+
+
+@pytest.mark.parametrize("key", ["k" * 15, "k" * 33])
+def test_bad_aes_key_length_raises_before_any_job(spark, tmp_path, key):
+    df = spark.createDataFrame(
+        [("a", [1.0, 0.0, 0.0], "doc")], "id string, embedding array<float>, document string"
+    )
+    enc = Collection.create(spark, "badkey", str(tmp_path), dim=3)
+    enc.add_encrypted(df, KEY, id_col="id")
+    dest = tmp_path / "rotated"
+    calls = {
+        "add_encrypted": lambda: enc.add_encrypted(df, key, id_col="id"),
+        "query_encrypted": lambda: enc.query_encrypted(key, query_embeddings=[[1.0, 0.0, 0.0]]),
+        "decrypt": lambda: enc.decrypt(key),
+        "rotate_old": lambda: enc.rotate_key(key, KEY, str(dest)),
+        "rotate_new": lambda: enc.rotate_key(KEY, key, str(dest)),
+    }
+    for name, call in calls.items():
+        group = f"badkey_{name}_{len(key)}"
+        with pytest.raises(ValueError, match=f"got {len(key)}") as err:
+            _jobs(spark, group, call)
+        assert key not in str(err.value)
+        assert spark.sparkContext.statusTracker().getJobIdsForGroup(group) == []
+    assert not dest.exists()
+    for helper in (crypto.encrypt_vector, crypto.decrypt_vector,
+                   crypto.encrypt_text, crypto.decrypt_text):
+        with pytest.raises(ValueError):
+            helper("v", key)
+    for good in ("k" * 16, "k" * 24, "k" * 32, "é" * 8):
+        crypto.check_key(good)
 
 
 def test_one_job_per_serving_call(spark, tmp_path):

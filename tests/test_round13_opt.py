@@ -234,3 +234,31 @@ def test_packed_key_boundary_ids_roundtrip(spark):
     from cyborgdb_encrypted_vector_search_spark.caching import release_all
 
     release_all()
+
+
+def test_dropped_hub_id_outside_packable_range_keeps_two_column_key(spark):
+    """A hub dropped by max_apex_degree is no apex, but it is still a
+    neighbor of the apexes that survive: its id (>= 2^32 here) must
+    keep the packed key off, or (7, hub) would unpack as (7, 7)."""
+    hub = 2**32 + 7
+    edges = [(i, hub) for i in range(1, 7)]
+    edges += [(7, 100), (100, hub), (7, 101), (101, hub)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = {
+        (r["u"], r["v"]): (r["cn"], r["ra_fp"], r["aa_fp"])
+        for r in G.weighted_link_scores(
+            df, min_common=1, max_apex_degree=5
+        ).collect()
+    }
+    h = G.LINKPRED_SCALE // 2  # every surviving apex here has degree 2
+    assert got == {(7, hub): (2, 2 * h, 2 * h), (100, 101): (1, h, h)}
+    cn = {
+        (r["u"], r["v"]): r["cn"]
+        for r in G.common_neighbor_candidates(
+            df, min_common=1, max_apex_degree=5
+        ).collect()
+    }
+    assert cn == {(7, hub): 2, (100, 101): 1}
+    from cyborgdb_encrypted_vector_search_spark.caching import release_all
+
+    release_all()

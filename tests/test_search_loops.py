@@ -196,6 +196,16 @@ def _old_greedy_search(
     )
 
 
+def _old_merge_results(evo, greedy, top_n=30):
+    return (
+        evo.unionByName(greedy)
+        .groupBy("text")
+        .agg(F.max("score").alias("score"))
+        .orderBy(F.desc("score"), F.asc("text"))
+        .limit(top_n)
+    )
+
+
 # --- fixtures ------------------------------------------------------------
 
 @pytest.fixture(scope="module")
@@ -271,7 +281,22 @@ def test_invert_both_equals_distributed_plans(spark, attack):
     )
     old_evo = _old_evolutionary_search(spark, target, seeds, seed=5, top_n=10, **evo_kw)
     old_gr = _old_greedy_search(spark, target, seeds, seed=5, top_n=10, **gr_kw)
-    assert _rows(got) == _rows(S.merge_results(old_evo, old_gr, 10))
+    assert _rows(got) == _rows(_old_merge_results(old_evo, old_gr, 10))
+    assert _jobs(spark, got.collect)[1] == 0
+
+
+@pytest.mark.parametrize("top_n", [1, 3, 30])
+def test_merge_equals_distributed_plan(spark, top_n):
+    """A text in both inputs keeps its max score; a score tie across
+    texts orders by ascending text; the cut at top_n keeps the same rows."""
+    schema = "text string, score double"
+    evo = spark.createDataFrame(
+        [("dup", 0.4), ("b", 0.7), ("a", 0.7), ("solo", 0.1)], schema)
+    gr = spark.createDataFrame([("dup", 0.9), ("c", 0.7), ("dup", 0.2)], schema)
+    got = S.merge_results(evo, gr, top_n)
+    assert _rows(got) == _rows(_old_merge_results(evo, gr, top_n))
+    assert _rows(S.merge_results(evo, gr))[:4] == [
+        ("dup", 0.9), ("a", 0.7), ("b", 0.7), ("c", 0.7)]
 
 
 def test_score_ties_break_by_text(spark, attack):

@@ -1,9 +1,11 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+A caller runs ``entry(spark)`` as a smoke check, runs each
+``queries()[name]`` at sf=0.01 and compares it against the matching
+``oracle_sql()[name]`` via DuckDB (row count + schema +
+order-insensitive values). ``tests/test_spark_entry.py`` does exactly
+that for all 206 entries; ``tools/parity.py`` is the same check as a
+script.
 
 All real logic lives in ``cyborgdb_encrypted_vector_search_spark/``; this module just
 adapts the query catalog (plans/catalog.py) to the driver's API.
@@ -47,8 +49,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     correctness device (see cyborgdb_encrypted_vector_search_spark/caching.py);
     call ``caching.release_all()`` AFTER materializing each query's
     result (never between a query's build and its action) to keep a
-    multi-query sweep from accumulating caches — bench.py,
-    tools/parity.py and tools/smoke_plain.py all do this.
+    multi-query sweep from accumulating caches — tools/parity.py,
+    tools/smoke_plain.py and tests/test_spark_entry.py all do this.
     """
     return {name: e.fn for name, e in _catalog().items()}
 

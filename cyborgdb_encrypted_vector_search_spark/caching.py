@@ -12,8 +12,8 @@ many catalog queries the InMemoryRelations would accumulate for the
 session lifetime.
 
 This module is the release valve: operators register such frames with
-``track``; query drivers (bench.py, tools/parity.py, the round driver's
-correctness loop) call ``release_all()`` AFTER materializing each
+``track``; query runners (tools/parity.py, tools/smoke_plain.py, the
+parity test) call ``release_all()`` AFTER materializing each
 query's result. Releasing between queries is always safe — results are
 already collected; re-collecting a released ranking frame would
 recompute with a fresh boundary sample, which is why release happens at
@@ -30,8 +30,8 @@ log = logging.getLogger(__name__)
 
 # Process-global, NOT thread-safe by design: the tracking list models
 # "the persists of the query being built right now", which is only
-# well-defined for a serial build-then-materialize driver (bench.py,
-# tools/parity.py, the round driver's correctness loop all are).
+# well-defined for a serial build-then-materialize runner (tools/parity.py,
+# tools/smoke_plain.py and the parity test all are).
 # Drivers that overlap queries across threads must scope their own
 # tracking — calling release_all() between one thread's build and
 # another's action would unpersist a correctness persist mid-plan and

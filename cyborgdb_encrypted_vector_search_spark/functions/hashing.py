@@ -218,41 +218,3 @@ def minhash_bands_xxhash(signature: Column, num_bands: int, rows_per_band: int) 
             for b in range(num_bands)
         ]
     )
-
-
-def simhash64_xxhash(tokens: Column) -> Column:
-    """Fast-path 64-bit SimHash: ONE xxhash64 per token (vs an md5 hex
-    string + 32 nibble extractions in :func:`simhash32`).
-
-    Single fold with an array<int> accumulator: per token, add ±1 to all
-    64 bit-counters via zip_with; then collapse sign bits into a bigint.
-    Hamming distance via :func:`hamming32` (bit_count(xor) works on any
-    width). Not oracle-portable (DuckDB has no xxhash64) — statistically
-    equivalent grouping behavior to the md5 variant, double the bits.
-    """
-    def _contrib(h):
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(63)),
-            lambda j: (
-                F.shiftright(h, j).bitwiseAND(F.lit(1)).cast("int") * 2 - 1
-            ),
-        )
-
-    zeros = F.array_repeat(F.lit(0), 64)
-    counts = F.aggregate(
-        tokens,
-        zeros,
-        lambda acc, t: F.zip_with(
-            acc, _contrib(F.xxhash64(t)), lambda a, c: a + c
-        ),
-    )
-    return F.aggregate(
-        F.zip_with(
-            counts,
-            F.sequence(F.lit(0), F.lit(63)),
-            lambda c, j: F.when(c > 0, F.shiftleft(F.lit(1).cast("bigint"), j))
-            .otherwise(F.lit(0).cast("bigint")),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )

@@ -216,10 +216,3 @@ def sql_unit_cosine(unit_a: str, unit_b: str, norm_a: str, norm_b: str) -> str:
         f"CASE WHEN {norm_a} = 0 OR {norm_b} = 0 THEN -1.0 "
         f"ELSE list_dot_product({unit_a}, {unit_b}) END"
     )
-
-
-def sql_l2(a: str, b: str) -> str:
-    return (
-        "sqrt(list_sum(list_transform(list_zip(({a})::DOUBLE[], ({b})::DOUBLE[]),"
-        " p -> (p[1]-p[2])*(p[1]-p[2]))))"
-    ).format(a=a, b=b)

@@ -30,7 +30,6 @@ from cyborgdb_encrypted_vector_search_spark.caching import (
     track,
 )
 from cyborgdb_encrypted_vector_search_spark.functions import hashing as H
-from cyborgdb_encrypted_vector_search_spark.functions import vector as V
 
 
 def dedup_keep_best(
@@ -845,44 +844,6 @@ def embedding_near_duplicates_blocked(
         embeddings.select(id_col, block_col, vec_col)
         .groupBy(block_col)
         .applyInPandas(block_pairs, out_schema)
-    )
-
-
-def embedding_near_duplicates(
-    embeddings: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Pairs of vectors with cosine similarity >= threshold.
-
-    Vectors are unit-normalized once per row BEFORE the self-join, so
-    each pair costs one dot-product fold (not five). Test-scale
-    implementation is the exact self-join; at cluster scale route
-    candidates through LSH/IVF bucketing first (operators.ann) and
-    verify with this same expression.
-    """
-    un = V.with_unit_vectors(
-        embeddings.select(id_col, vec_col), vec_col, "__unit", "__nrm"
-    )
-    a = un.select(
-        F.col(id_col).alias("id_a"),
-        F.col("__unit").alias("__ua"),
-        F.col("__nrm").alias("__na"),
-    )
-    b = un.select(
-        F.col(id_col).alias("id_b"),
-        F.col("__unit").alias("__ub"),
-        F.col("__nrm").alias("__nb"),
-    )
-    return (
-        a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cos", F.round(V.unit_cosine("__ua", "__ub", "__na", "__nb"), 7)
-        )
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
     )
 
 

@@ -49,19 +49,6 @@ def profile(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     )
 
 
-def quality_filter(
-    df: DataFrame,
-    text_col: str = "text",
-    min_tokens: int = 5,
-    max_punct_ratio: float = 0.3,
-) -> DataFrame:
-    """Keep documents passing basic pretraining-quality gates."""
-    t = F.col(text_col)
-    return df.filter(
-        (X.token_count(t) >= min_tokens) & (X.punct_ratio(t) <= max_punct_ratio)
-    )
-
-
 def lang_distribution(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Corpus language histogram from the heuristic classifier."""
     return (

@@ -6954,7 +6954,7 @@ def ann_sq8_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sq8_batch_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serving twin of ann_sq8_batch_topk (bench-only): the
+    """The serving plan of ann_sq8_batch_topk, which gates it: the
     approximate-pass + re-rank plan alone over the cached pre-built
     byte-code table."""
     from cyborgdb_encrypted_vector_search_spark.operators import quant as _q
@@ -7104,8 +7104,8 @@ def ann_ivfsq_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ivfsq_batch_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serving twin of ann_ivfsq_batch_topk (bench-only): the one-plan
-    probe + quantized scan + re-rank over the cached layout."""
+    """The serving plan of ann_ivfsq_batch_topk, which gates it: the
+    one-plan probe + quantized scan + re-rank over the cached layout."""
     from cyborgdb_encrypted_vector_search_spark.operators import quant as _q
 
     p = _sq8_parts(spark, sf_dir)
@@ -7123,13 +7123,11 @@ def ivfsq_batch_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Batch-PQ SERVING paths (bench-only, not gated): the recall gates above
-# deliberately pay for exact-kNN ground truth + checksum on top of the
-# serving plan, which inflates their bench numbers ~2-3x. These twins
-# time what a user actually runs — probe → ADC → shortlist → re-rank —
-# against a pre-built index (codebooks/codes/assignment are build-time
-# artifacts at 100 TB, not per-query work), so BENCH reports the
-# serving cost and the gate cost separately.
+# Batch-PQ SERVING paths: what a user actually runs — probe → ADC →
+# shortlist → re-rank — against a pre-built index (codebooks/codes/
+# assignment are build-time artifacts, not per-query work). The recall
+# gates ann_ivfpq_batch_topk / ann_ivfadc_batch_topk call these and add
+# the exact-kNN ground truth + checksum on top.
 # ----------------------------------------------------------------------
 
 _PQ_SERVE_PARTS: dict[tuple[str, str, str], dict] = {}
@@ -7212,44 +7210,6 @@ def ivfadc_batch_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         p["index"], p["cent"], p["books"], p["queries"], k=10, nprobe=4,
         rerank_df=p["emb"], rerank_factor=8,
     )
-
-
-def simhash_wide_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serving twin of dedup_simhash_wide (bench/scale-curve only, not
-    gated): 64-bit xxhash fingerprints → 4×16-bit pigeonhole blocks →
-    banded candidate join → Hamming≤3 verify — the pipeline a 100 TB
-    near-dup pass actually runs. The GATE additionally pays an O(n²)
-    brute-force ground truth plus a second block-width candidate count
-    (its exact-recall property), which is the right correctness check
-    at sf0.01 but would drown the scale curve; this twin times the
-    production path alone."""
-    from cyborgdb_encrypted_vector_search_spark.operators import dedup as _d
-
-    corpus = _corpus2x(spark, sf_dir, near=True)
-    fps = _d.simhash_fingerprints_xxhash(corpus, num_bits=64)
-    wide = _d.simhash_block_candidates(
-        fps, num_blocks=4, bits_per_block=16, max_hamming=3
-    )
-    return wide.agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
-
-
-def minhash_xxhash_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serving twin of dedup_minhash_pairs (bench/scale-curve only,
-    not gated — r13, VERDICT r12 #7): the xxhash64 MinHash+LSH
-    candidate pipeline a 100 TB near-dup pass actually runs (array
-    <long> signatures, 8-byte band keys; no md5 hex materialization).
-    The GATED md5 pipeline is the cross-engine parity contract and
-    stays value-hashed in dedup_minhash_pairs; this twin puts a
-    headline number on the fast path so the dedup story is not
-    md5-bound. Same shingling, banding math, and distinct-pair join —
-    only the hash family differs (not oracle-portable by design)."""
-    from cyborgdb_encrypted_vector_search_spark.operators import dedup as _d
-
-    corpus = _corpus2x(spark, sf_dir, near=True)
-    pairs = _d.lsh_candidate_pairs_xxhash(
-        corpus, "doc_id", "text", shingle_len=3, num_hashes=8, num_bands=4
-    )
-    return pairs.agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
 
 
 @query(
@@ -8530,8 +8490,7 @@ def collection_upsert_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     `copytree` of it, mutating only the copy; copies are retired one
     generation deferred (the grandparent is deleted at each new
     invocation) so a still-held previous result stays collectable
-    while /tmp stays bounded at two copies across a 3-run bench
-    sweep. A mutation gate still never reuses a MUTATED artifact —
+    while /tmp stays bounded at two copies across repeated runs. A mutation gate still never reuses a MUTATED artifact —
     only the immutable pre-mutation base is cached."""
     import hashlib as _hl
     import os as _os
@@ -10612,390 +10571,6 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -- Scale-curve twins (not gates) -------------------------------------
-#
-# The curve blowup replicates IDENTICAL text and timestamps (only ids
-# are offset), so operators that join on content-derived contexts
-# DENSIFY instead of replicating: 4x events put 4x users into the SAME
-# hour (co-occurrence pairs grow 16x, and the 4x triangle join
-# overwhelms a local JVM), and 4x documents give every doc 4 identical
-# copies (the edit-distance pair set grows quadratically in replicas).
-# That measures the blowup's cross-products, not the operator — the
-# same reason the curve offsets user_id for user-keyed self-joins.
-# These twins fold the replica id (id div 10^9) into the context /
-# text so replicas stay DISJOINT; at 1x the fold is a constant and the
-# workload is exactly the gate's.
-
-
-def _graph_curve_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    pur = (
-        load(spark, "events", sf_dir)
-        .filter(
-            (F.col("event_type") == "purchase")
-            & F.col("user_id").isNotNull()
-        )
-        .select(
-            F.concat_ws(
-                "#",
-                F.date_trunc("hour", "ts").cast("string"),
-                F.expr("user_id div 1000000000").cast("string"),
-            ).alias("hour_ctx"),
-            "user_id",
-        )
-    )
-    return G.cooccurrence_edges(pur, "user_id", "hour_ctx")
-
-
-def graph_triangles_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Replica-disjoint scale-curve twin of q_graph_triangles."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    return G.triangle_count(_graph_curve_edges(spark, sf_dir))
-
-
-def graph_pagerank_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Replica-disjoint scale-curve twin of q_graph_pagerank."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    ranks = G.pagerank_fixedpoint(
-        _graph_curve_edges(spark, sf_dir), iterations=3, damping_pct=85
-    )
-    return ranks.orderBy(F.desc("rank_fp"), F.asc("v")).limit(10)
-
-
-def graph_ktruss_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Replica-disjoint scale-curve twin of q_graph_ktruss (3 peel
-    rounds at k=8; per-round cost tracks the surviving wedge work)."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    kept = G.ktruss_edges(
-        _graph_curve_edges(spark, sf_dir), k=_KTRUSS_K, rounds=_KTRUSS_ROUNDS
-    )
-    return kept.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges"))
-
-
-def graph_scan_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Replica-disjoint scale-curve twin of q_graph_scan_clusters (one
-    support pass + strong-edge filter + min-label rounds over the
-    core subgraph)."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    members = G.scan_clusters(
-        _graph_curve_edges(spark, sf_dir),
-        eps_num=_SCAN_EPS_NUM,
-        eps_den=_SCAN_EPS_DEN,
-        mu=_SCAN_MU,
-    )
-    return members.groupBy("is_core").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n")
-    )
-
-
-def graph_kcore_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Replica-disjoint scale-curve twin of q_graph_kcore (3 bounded
-    degree-peeling rounds; per-round cost is one degree aggregate +
-    two semi-joins over the surviving edges)."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    kept = G.kcore_edges(
-        _graph_curve_edges(spark, sf_dir), k=_KCORE_K, rounds=_KCORE_ROUNDS
-    )
-    return kept.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges"))
-
-
-def graph_linkpred_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Replica-disjoint scale-curve twin of q_graph_link_prediction
-    (apex-keyed wedge join + (u,v) count + anti-join; work tracks
-    Σ d² of the replica-disjoint graph)."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    cand = G.common_neighbor_candidates(
-        _graph_curve_edges(spark, sf_dir), min_common=_LINKPRED_MIN_CN
-    )
-    return cand.orderBy(F.desc("cn"), F.asc("u"), F.asc("v")).limit(
-        _LINKPRED_TOPK
-    )
-
-
-def graph_adamic_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Replica-disjoint scale-curve twin of q_graph_adamic_adar (the
-    same wedge join carrying fixed-point RA/AA contributions per apex;
-    work tracks Σ d², output tracks distinct non-adjacent pairs)."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    scored = G.weighted_link_scores(
-        _graph_curve_edges(spark, sf_dir), min_common=_LINKPRED_MIN_CN
-    )
-    return scored.orderBy(F.desc("aa_fp"), F.asc("u"), F.asc("v")).limit(
-        _LINKPRED_TOPK
-    )
-
-
-def _er_orders_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The curve twins' variant corpus, derived from the blown-up
-    `orders` keys (shared by the rebuild and incremental curves)."""
-    o = load(spark, "orders", sf_dir)
-    b0 = o.select(
-        F.col("o_orderkey").cast("bigint").alias("ck"),
-        F.concat(
-            F.lit("ORDER#"), F.lpad(F.col("o_orderkey").cast("string"), 13, "0")
-        ).alias("name"),
-        F.concat(
-            F.lit("P"), (F.col("o_orderkey") * 7919).cast("string")
-        ).alias("phone"),
-        (F.col("o_orderkey") % 25).alias("nation"),
-    )
-    base = b0.select(F.col("ck").alias("id"), "name", "phone", "nation")
-    v1 = b0.select(
-        (F.col("ck") + 100_000_000_000).alias("id"),
-        F.lower("name").alias("name"),
-        "phone",
-        "nation",
-    )
-    v2 = b0.filter(F.col("ck") % 7 == 0).select(
-        (F.col("ck") + 200_000_000_000).alias("id"),
-        F.concat("name", F.lit("X")).alias("name"),
-        F.concat(
-            F.expr("substr(phone, 1, length(phone) - 1)"), F.lit("9")
-        ).alias("phone"),
-        "nation",
-    )
-    return base.unionByName(v1).unionByName(v2)
-
-
-def _er_orders_passes():
-    """The curve twins' two blocking passes: exact phone; (nation,
-    13-digit key segment at offset 7 of the fixed-width 'ORDER#' name)
-    with levenshtein <= 2 verified in-block."""
-    return [
-        (["phone"], lambda a, b: F.lit(True)),
-        (
-            [F.col("nation"), F.substring("name", 7, 13)],
-            lambda a, b: F.levenshtein(a["name"], b["name"]) <= 2,
-        ),
-    ]
-
-
-def _er_curve_histogram(resolved: DataFrame) -> DataFrame:
-    clusters = resolved.groupBy("entity").agg(F.count(F.lit(1)).alias("sz"))
-    return clusters.groupBy("sz").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_clusters"),
-        # cast BEFORE summing: id-offset entity labels reach ~2*10^11
-        # and a BIGINT sum over millions of them can wrap silently
-        F.sum(F.col("entity").cast("decimal(38,0)")).alias("checksum"),
-    )
-
-
-def entity_resolution_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale-curve twin of pipeline_entity_resolution (r11). The gate
-    rides `customer`, which the blowup COPIES rather than replicates,
-    so the twin derives the same variant corpus from the blown-up
-    `orders` keys instead (1x is therefore a ~10x-sized cousin of the
-    gate fixture, not byte-identical — documented deviation). Names
-    are fixed-width ('ORDER#' || lpad(key, 13, '0')) so the digit-
-    segment blocking key is invariant across the case/append variants
-    at any key width, and the id-offset blocks keep every replica's
-    blocks disjoint (both blocking keys embed the full offset key).
-    Same two passes, same per-size histogram reduction."""
-    from cyborgdb_encrypted_vector_search_spark.operators.dedup import (
-        resolve_entities,
-    )
-
-    recs = _er_orders_corpus(spark, sf_dir)
-    resolved = resolve_entities(recs, "id", passes=_er_orders_passes())
-    return _er_curve_histogram(resolved)
-
-
-def entity_resolution_incremental_curve(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Scale-curve twin of pipeline_entity_resolution_incremental
-    (r12): a FIXED batch absorbed into a GROWING resolved corpus — the
-    100 TB maintenance claim stated measurably. The batch is the
-    replica-0 base variant of every 31st key (size-invariant across
-    the blowup); the old corpus is everything else, and its labels are
-    resolved ONCE into a content-tagged /tmp parquet (the same
-    build-then-reuse protocol as the IVF incremental-append curve), so
-    the timed work is the absorb alone: per pass, one scan of the old
-    key index probed by the broadcast batch, then closure on the
-    O(batch) contracted graph. A scalable absorb shows t ≈ fixed +
-    scan-slope * corpus rows — NOT the rebuild curve's closure term.
-    Each batch record is a base row whose v1/v2 variants sit in the
-    old corpus as two SEPARATE entities (case-mangle kills the name
-    edge between v1 and v2), so every absorb merges two old entities
-    through a new record and relabels both DOWN to the batch id —
-    the adversarial shapes at full scale, not a no-op append."""
-    import hashlib as _hl
-    import os as _os
-    import tempfile as _tf
-
-    from cyborgdb_encrypted_vector_search_spark.operators.dedup import (
-        resolve_entities,
-        resolve_entities_incremental,
-    )
-
-    recs = _er_orders_corpus(spark, sf_dir)
-    is_batch = (F.col("id") < 1_000_000_000) & (F.col("id") % 31 == 0)
-    old = recs.filter(~is_batch)
-    new = recs.filter(is_batch)
-    ctag = _content_tag(spark, sf_dir, "orders", "o_orderkey")
-    tag = _hl.md5(f"{sf_dir}:er_inc_v1:{ctag}".encode()).hexdigest()[:10]
-    path = _os.path.join(_tf.gettempdir(), f"er_inc_labels_{tag}")
-    if not _os.path.isdir(path):
-        tmp = f"{path}.tmp{_os.getpid()}"
-        resolve_entities(
-            old, "id", passes=_er_orders_passes()
-        ).write.parquet(tmp)
-        _publish_dir(tmp, path)
-    old_labels = spark.read.schema("id bigint, entity bigint").parquet(path)
-    merged = resolve_entities_incremental(
-        old, old_labels, new, "id", passes=_er_orders_passes()
-    )
-    return _er_curve_histogram(merged)
-
-
-def graph_bfs_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Replica-disjoint scale-curve twin of q_graph_bfs_levels (r11):
-    the gate's seed rule (the 5 smallest vertex ids) is applied PER
-    id-offset block — one row_number window over `v div 10^9` — so
-    every replica contributes a full frontier expansion and the
-    traversal's work term grows linearly in replicas. Seeds anchored
-    only in block 0 would explore one replica and measure nothing
-    (the blowup's other N-1 components are unreachable from it). At
-    1x there is a single block and the workload is exactly the
-    gate's. Reduced to a bounded per-hop histogram."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    edges = track(_graph_curve_edges(spark, sf_dir).persist())
-    verts = (
-        edges.select(F.col("src").alias("v"))
-        .unionAll(edges.select(F.col("dst").alias("v")))
-        .distinct()
-    )
-    w = Window.partitionBy(F.expr("v div 1000000000")).orderBy(F.asc("v"))
-    seeds = (
-        verts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _BFS_N_SEEDS)
-        .select("v")
-    )
-    res = G.bfs_levels(edges, seeds, max_hops=_BFS_MAX_HOPS)
-    # cast BEFORE summing: the accumulator must be decimal(38,0) — a
-    # BIGINT sum of id-offset vertex ids (~N²·10^12 at an N-replica
-    # blowup) can silently wrap in non-ANSI mode before the cast
-    return res.groupBy("hops").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_vertices"),
-        F.sum(F.col("v").cast("decimal(38,0)")).alias("v_sum"),
-    )
-
-
-def _skew_curve_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Replica-disjoint twin of the hub-dominated skew fixture
-    (_skew_edges): one hub + chain + skip strip + K32 completion PER
-    REPLICA, where the replica is the scale_curve id-offset block
-    (k div 10^9). At 1x this is exactly the gate's fixture (every key
-    is in block 0, hub id 0); a blown-up orders table yields N
-    structurally identical DISJOINT hub graphs — the honest linear
-    workload for the ORIENTED kernel's growth curve (the gate fixture
-    raw would fuse all replicas' spokes onto ONE hub, measuring
-    cross-replica densification instead of the operator). The cost
-    probe stays on the oriented route at every measured scale:
-    Σd² grows ~N·h² while the fulladj threshold 8·m^1.5 grows N^1.5 —
-    ratio ~9.4 at 1x, ~2.3 at 16x (flips only past ~64x, beyond the
-    measured curve)."""
-    o = load(spark, "orders", sf_dir).select(F.col("o_orderkey").alias("k"))
-    rep = (F.col("k") - F.col("k") % F.lit(1_000_000_000)).cast("long")
-    pos = o.filter(F.col("k") % F.lit(1_000_000_000) >= 1)
-    nxt = o.select(F.col("k").alias("k2"))
-    spokes = pos.select(rep.alias("src"), F.col("k").alias("dst"))
-    chain = pos.join(nxt, F.col("k2") == F.col("k") + 1).select(
-        F.col("k").alias("src"), F.col("k2").alias("dst")
-    )
-    skip = pos.join(nxt, F.col("k2") == F.col("k") + 2).select(
-        F.col("k").alias("src"), F.col("k2").alias("dst")
-    )
-    clique = (
-        pos.filter(F.col("k") % F.lit(1_000_000_000) < 32)
-        .join(
-            nxt.filter(F.col("k2") % F.lit(1_000_000_000) < 32),
-            (F.col("k2") > F.col("k") + 2)
-            & (
-                F.col("k2") - F.col("k2") % F.lit(1_000_000_000)
-                == F.col("k") - F.col("k") % F.lit(1_000_000_000)
-            ),
-        )
-        .select(F.col("k").alias("src"), F.col("k2").alias("dst"))
-    )
-    return spokes.unionAll(chain).unionAll(skip).unionAll(clique)
-
-
-def graph_skew_triangles_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oriented-route scale-curve twin of q_graph_skew_triangles: one
-    degree-oriented enumeration (no explode) over the replica-disjoint
-    hub fixture — the O(m^1.5) wedge bound measured, not argued."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    return G.triangle_count(_skew_curve_edges(spark, sf_dir))
-
-
-def graph_skew_support_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oriented-route scale-curve twin of q_graph_skew_support
-    (enumerate-then-explode + one (src,dst) groupBy, reduced to the
-    same bounded support histogram)."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    sup = G.edge_triangle_support(_skew_curve_edges(spark, sf_dir))
-    return sup.groupBy("support").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_edges")
-    )
-
-
-def graph_skew_ktruss_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oriented-route scale-curve twin of q_graph_skew_ktruss (k=5,
-    4 peel rounds over the pruned round-1 triangle list) — the curve
-    the r9 verdict demanded to defend the per-round stage floor: cost
-    per round must track the surviving triangle list ~linearly in
-    replicas."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    kept = G.ktruss_edges(
-        _skew_curve_edges(spark, sf_dir),
-        k=_SKEW_KTRUSS_K,
-        rounds=_SKEW_KTRUSS_ROUNDS,
-    )
-    return kept.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges"))
-
-
-def graph_skew_scan_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oriented-route scale-curve twin of q_graph_skew_scan (r11) —
-    the FULL SCAN chain above the support kernel: ε-strong-edge
-    filter → strong-degree cores → star-contraction components over
-    core-core edges → border attach, on the replica-disjoint hub
-    fixture. The r10 verdict graded the gate `weak` because only the
-    support kernel underneath it had a growth measurement; this twin
-    measures the chain itself at 1x/4x/16x replicas. Work per stage
-    is linear in replicas (each replica contributes one disjoint
-    clique community and its borders); the gate-scale cost is
-    dominated by the chain's fixed stage floor (localCheckpoint +
-    CC rounds + the border pass), so the curve's job is to show the
-    wall tracking that fixed term, not the data term. Reduced to a
-    bounded per-role summary (count + Σcluster per is_core) so the
-    collect is O(1) while every member row is still computed."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    members = G.scan_clusters(
-        _skew_curve_edges(spark, sf_dir),
-        eps_num=_SKEW_SCAN_EPS_NUM,
-        eps_den=_SKEW_SCAN_EPS_DEN,
-        mu=_SKEW_SCAN_MU,
-    )
-    return members.groupBy("is_core").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_members"),
-        F.sum(F.col("cluster").cast("decimal(38,0)")).alias("cluster_sum"),
-    )
-
-
 @query(
     "q_events_gapfill_hourly",
     """
@@ -11359,15 +10934,6 @@ def q_events_ema_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T.ema_fixedpoint(
         ev, "user_id", ["ts", "event_id"], "x", decay_pct=85
     )
-
-
-# NOTE: dedup_editdist_pairs has no replica-disjoint curve twin — text
-# replication can't be neutralized by tagging (a short prefix leaves
-# cross-replica copies within the edit threshold; anything longer
-# still shares every interior window, so the inverted index densifies
-# either way). The raw gate IS the adversarial duplicate-dense case,
-# measured and documented like dedup_substring_pairs in docs/COSTS.md;
-# max_df is the production guard for that corpus shape.
 
 
 # ----------------------------------------------------------------------
@@ -12564,125 +12130,6 @@ def q_quantile_bounds_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ----------------------------------------------------------------------
-# Gate rotation: the round driver independently verifies the FIRST 50
-# entries of queries() against DuckDB each round. Round 1 covered the
-# first 50 of the (insertion-ordered) catalog; this list puts the
-# queries with no CORRECTNESS row yet — plus every query whose
-# semantics changed this round — into the gated window, so the union
-# of CORRECTNESS_r*.json converges on the full catalog. Rotate per
-# round; keep deferred names in the comment so nothing is dropped.
-# ----------------------------------------------------------------------
-
-# Round 12 window — the staleness invariant RE-DERIVED (r11 verdict
-# "what's missing" #1: 204/50 had outgrown the r7-adopted 4-round
-# ceiling). The honest arithmetic, now enforced by
-# tools/rotation_schedule.py (run per round; simulates the rule 12
-# rounds forward from the committed CORRECTNESS_r*.json artifacts):
-#
-#   N = 206 catalog queries, W = 50 driver slots,
-#   k = 8 slots/round reserved for new + touched entries
-#   ceiling = ceil(N / (W - k)) = ceil(206 / 42) = 5 rounds
-#   growth budget = (5*50 - 206) / 5 = 8.8 net additions/round
-#
-# Window rule (unchanged in form): (a) every NEW query, (b) every
-# query whose body, oracle, or call-graph changed since its last
-# driver row, (c) the at-ceiling cohort (age reaches 5 this round),
-# then oldest-first backfill. Catalog growth is now BUDGETED: any
-# round adding more than the budget must consolidate or displace
-# (rotation_schedule.py exits 1 when the derived ceiling drifts from
-# the documented one).
-#
-# r13 construction (optimization round — no new queries, no feature
-# work; the window leads with the round's touched operators and the
-# at-ceiling cohort per the rule above):
-# (a) 0 new.
-# (b) 7 touched: pipeline_entity_resolution +
-#     pipeline_entity_resolution_incremental (records persist, guarded
-#     broadcasts, bounded driver closure), q_graph_adamic_adar +
-#     q_graph_link_prediction (packed (u<<32|v) group key; narrowed
-#     dw/bl wedge payload; broadcast degree attach under probe),
-#     q_graph_trussness_hist + q_graph_ktruss + q_graph_skew_ktruss
-#     (the peeler's decrement-delta broadcast now bounded by
-#     3·Σ support(dropped) — same results, plan guard).
-# (c) the 13 r8-age entries (age 5 at r13 — the whole cohort the r12
-#     window deferred, mandatory) + 30 oldest-first backfill = the
-#     (last-gated, name)-first 30 of the 42 r9-age entries. Deferred
-#     (r9-age, due r14): q_graph_triangles, q_supplier_nation,
-#     q_time_partitioned_events, q_window_running_total,
-#     streaming_collection_ingest, streaming_hourly_counts,
-#     streaming_interval_join, streaming_ivf_ingest,
-#     streaming_stateful_user_counts, text_profile,
-#     text_winnow_profile, vector_dim_stats (12 — inside r14's 42
-#     non-reserved slots; see the simulator's transient table).
-GATE_PRIORITY: tuple[str, ...] = (
-    # (b) body/call-graph touched since their last driver row
-    "pipeline_entity_resolution_incremental",
-    "pipeline_entity_resolution",
-    "q_graph_adamic_adar",
-    "q_graph_link_prediction",
-    "q_graph_trussness_hist",
-    "q_graph_ktruss",
-    "q_graph_skew_ktruss",
-    # (c) the 13 r8-age entries (at the 5-round ceiling this round)
-    "q_cube_lineitem",
-    "q_events_asof_signup",
-    "q_events_user_gaps",
-    "q_like_regex_filter",
-    "q_part_brand_stats",
-    "q_percentiles",
-    "q_semi_join_active",
-    "q_skew_salted_join",
-    "q_window_top_orders_per_cust",
-    "source_text_lines",
-    "streaming_incremental_dedup",
-    "text_lang_distribution",
-    "text_quality_filter",
-    # (c) oldest-first backfill: 30 (last, name)-first r9-age entries
-    "ann_ivfsq_batch_topk",
-    "ann_ivfsq_incremental_append",
-    "ann_ivfsq_search_topk",
-    "ann_sq8_batch_topk",
-    "ann_sq8_search_topk",
-    "collection_snapshot_diff",
-    "crypto_roundtrip",
-    "dedup_components_star",
-    "dedup_containment_pairs",
-    "dedup_incremental_substring",
-    "dedup_semantic_clusters",
-    "dedup_substring_pairs",
-    "eval_retrieval_metrics",
-    "knn_label_vote",
-    "multimodal_payload_dedup",
-    "pipeline_hybrid_rrf",
-    "pipeline_rag_ingest",
-    "pipeline_rag_rerank",
-    "q21_sole_late_shipper",
-    "q_data_quality_audit",
-    "q_events_attribution",
-    "q_events_funnel",
-    "q_events_json_agg",
-    "q_graph_edge_support",
-    "q_graph_kcore",
-    "q_graph_scan_clusters",
-    "q_graph_scan_roles",
-    "q_graph_skew_support",
-    "q_graph_skew_triangles",
-    "q_graph_structural_similarity",
-)
-
-
 def entries() -> dict[str, CatalogEntry]:
-    missing = [n for n in GATE_PRIORITY if n not in CATALOG]
-    if missing:
-        raise AssertionError(
-            f"GATE_PRIORITY names drifted from the catalog: {missing}. "
-            "Rewrite the rotation window after renaming catalog entries."
-        )
-    ordered: dict[str, CatalogEntry] = {}
-    for name in GATE_PRIORITY:
-        ordered[name] = CATALOG[name]
-    for name, e in CATALOG.items():
-        if name not in ordered:
-            ordered[name] = e
-    return ordered
+    """Every catalog entry, in definition order."""
+    return dict(CATALOG)

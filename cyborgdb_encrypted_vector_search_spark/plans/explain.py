@@ -16,10 +16,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def assert_in_plan(df: DataFrame, *fragments: str) -> None:
     plan = physical_plan(df)
     missing = [f for f in fragments if f not in plan]

@@ -92,8 +92,8 @@ def get_spark(
         # Small local driver UIs are useless in CI and cost startup time.
         .config("spark.ui.enabled", "false")
         # Console progress bars write carriage-return frames that can
-        # interleave with (and corrupt) machine-read stdout — see
-        # BENCH_r06.json "parsed": null. Progress belongs in the UI/logs.
+        # interleave with (and corrupt) machine-read stdout (a JSON result
+        # line then fails to parse). Progress belongs in the UI/logs.
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

@@ -77,16 +77,6 @@ def load(spark: SparkSession, table: str, sf_dir: str | None = None) -> DataFram
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
-    return {t: load(spark, t, sf_dir) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register every table as a temp view for spark.sql() use."""
-    for t, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(t)
-
-
 def _cached_view(spark: SparkSession, name: str, build) -> DataFrame:
     """Session-scoped materialized view: build once, cache, reuse."""
     existing = [t.name for t in spark.catalog.listTables() if t.name == name]

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import importlib.util
 import sys
 from pathlib import Path
 
@@ -12,6 +13,16 @@ if str(REPO) not in sys.path:
 from cyborgdb_encrypted_vector_search_spark.session import get_spark  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
+
+
+def load_tool(name: str):
+    """Import ``tools/<name>.py`` (a script directory, not a package)."""
+    spec = importlib.util.spec_from_file_location(
+        name, REPO / "tools" / f"{name}.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
 @pytest.fixture(scope="session")

@@ -369,29 +369,6 @@ def test_scan_members_oriented_branch_matches_fulladj(spark):
     release_all()
 
 
-def test_skew_curve_twin_equals_gate_fixture_at_1x(spark):
-    """Curve honesty: at 1x (every key in id-offset block 0) the
-    replica-disjoint curve fixture must be EXACTLY the gate's skew
-    fixture — same edges, same counts — so the measured curve's 1x
-    point prices the gate's own workload."""
-    from cyborgdb_encrypted_vector_search_spark.plans.catalog import (
-        _skew_curve_edges,
-        _skew_edges,
-    )
-
-    from conftest import SF_SMOKE
-
-    gate = {
-        (r["src"], r["dst"])
-        for r in _skew_edges(spark, SF_SMOKE).collect()
-    }
-    twin = {
-        (r["src"], r["dst"])
-        for r in _skew_curve_edges(spark, SF_SMOKE).collect()
-    }
-    assert gate == twin and len(gate) > 0
-
-
 def test_greedy_restarts_actually_parallelize(spark):
     """Pin that the restarts fan out: one job whose single stage (no
     exchange) runs min(restarts, defaultParallelism) tasks, so the

@@ -1,7 +1,6 @@
 """Round-11 pins: the evolutionary generation-batch plan (VERDICT r10
 task 6), the stabilized collection_upsert_delete disk-state protocol
-(task 4), the compare_bench warm-spread + idle-anchor rules (task 3 +
-ADVICE), and encode_avi input validation (ADVICE)."""
+(task 4), and encode_avi input validation (ADVICE)."""
 
 from __future__ import annotations
 
@@ -176,80 +175,6 @@ def test_encode_avi_rejects_zero_fps():
         M.encode_avi(2, 1, [frame], fps=0)
     with pytest.raises(ValueError, match="fps"):
         M.encode_avi(2, 1, [frame], fps=-5)
-
-
-def test_compare_bench_spread_uses_warm_runs():
-    """ADVICE r10: the warm noise band is runs[1:] (run 0 is the cold
-    run by protocol) — NOT sorted()[:-1], which keeps the cold run's
-    codegen cost in the band whenever a warm run hiccups above it."""
-    import importlib.util
-    from pathlib import Path
-
-    spec = importlib.util.spec_from_file_location(
-        "compare_bench",
-        Path(__file__).resolve().parent.parent / "tools" / "compare_bench.py",
-    )
-    cb = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(cb)
-
-    # cold 5.0, warm hiccup 6.0, warm 1.0: band must be warm-only (5.0)
-    assert cb.spread([5.0, 6.0, 1.0]) == pytest.approx(5.0)
-    # the old sorted()[:-1] would have given 4.0 here (cold kept in)
-    assert cb.spread([5.0, 1.0, 1.2]) == pytest.approx(0.2)
-    assert cb.spread([3.0]) == 0.0
-    assert cb.spread(None) == 0.0
-
-
-def test_compare_bench_hot_window_rule(tmp_path, capsys, monkeypatch):
-    """VERDICT r10 task 3: a moved min whose canary shows a contended
-    window is reported [HOT-WINDOW] (exit 2, re-run demanded), not
-    [REGRESSION] (exit 1); the same moved min with a quiet canary
-    stays a genuine regression."""
-    import importlib.util
-    import json
-    import sys
-    from pathlib import Path
-
-    spec = importlib.util.spec_from_file_location(
-        "compare_bench",
-        Path(__file__).resolve().parent.parent / "tools" / "compare_bench.py",
-    )
-    cb = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(cb)
-
-    old = {
-        "queries": {"qa": 1.0, "qb": 1.0},
-        "runs_sec": {"qa": [1.2, 1.0, 1.05], "qb": [1.2, 1.0, 1.05]},
-        "canary_sec": {"qa": 0.2, "qb": 0.2},
-    }
-    # qa regresses with a HOT trailing canary (bracket [quiet, 1.0]:
-    # the spike started mid-run-set — the WORSE sample rules);
-    # qb regresses with a quiet bracket -> genuine
-    new = {
-        "queries": {"qa": 3.0, "qb": 3.0},
-        "runs_sec": {"qa": [3.1, 3.0, 3.0], "qb": [3.1, 3.0, 3.0]},
-        "canary_sec": {"qa": [0.2, 1.0], "qb": [0.21, 0.22]},
-    }
-    po, pn = tmp_path / "old.json", tmp_path / "new.json"
-    po.write_text(json.dumps(old))
-    pn.write_text(json.dumps(new))
-
-    monkeypatch.setattr(sys, "argv", ["compare_bench", str(po), str(pn)])
-    with pytest.raises(SystemExit) as exc:
-        cb.main()
-    out = capsys.readouterr().out
-    assert exc.value.code == 1  # the quiet-canary regression wins
-    assert "[HOT-WINDOW] qa" in out
-    assert "[REGRESSION] qb" in out
-
-    # only the hot row: exit 2 (re-run demanded, not a regression)
-    new["queries"]["qb"] = 1.0
-    new["canary_sec"]["qb"] = [0.2, 0.2]
-    pn.write_text(json.dumps(new))
-    with pytest.raises(SystemExit) as exc:
-        cb.main()
-    assert exc.value.code == 2
-    assert "[HOT-WINDOW] qa" in capsys.readouterr().out
 
 
 def test_resolve_entities_multipass_and_block_cap(spark):

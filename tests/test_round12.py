@@ -167,43 +167,3 @@ def test_incremental_predicate_orientation(spark):
     inc = resolve_entities_incremental(old, old_labels, new, "id", passes)
     full = resolve_entities(old.unionByName(new), "id", passes)
     assert _labels(inc) == _labels(full)
-
-
-def test_incremental_curve_twin_equals_rebuild_twin(spark, sf_dir):
-    """The scale-curve twins share one corpus, so the incremental
-    absorb (fixed batch + cached old labels) must land on the exact
-    histogram the rebuild twin computes — the same equality the driver
-    gate proves at sf0.01, pinned here on the curve path (which
-    additionally exercises the /tmp label cache and the parquet
-    round-trip of old_labels)."""
-    from cyborgdb_encrypted_vector_search_spark.plans import catalog as C
-
-    a = sorted(map(tuple, C.entity_resolution_curve(spark, sf_dir).collect()))
-    b = sorted(
-        map(
-            tuple,
-            C.entity_resolution_incremental_curve(spark, sf_dir).collect(),
-        )
-    )
-    assert a == b
-
-
-def test_rotation_schedule_invariant():
-    """The r12 re-derived staleness arithmetic (ceiling 5, reserve 8)
-    must hold: the documented ceiling equals the derived one, the
-    queued GATE_PRIORITY window contains every at-ceiling and new
-    query, and the 12-round forward simulation never exceeds the
-    ceiling. Breaking any of these (catalog growth past the budget, a
-    window edit dropping a due cohort) fails here before the driver
-    sees it."""
-    import subprocess
-    import sys
-
-    for mode in ("status", "window"):
-        r = subprocess.run(
-            [sys.executable, "tools/rotation_schedule.py", mode],
-            capture_output=True,
-            text=True,
-            cwd="/root/repo",
-        )
-        assert r.returncode == 0, r.stdout + r.stderr

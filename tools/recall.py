@@ -1,7 +1,7 @@
 """Recall@k evaluation: every ANN variant vs exact brute-force kNN.
 
 Offline index-quality report (the accuracy half of the ANN story;
-bench.py is the speed half). For Q deterministic query vectors, takes
+perfbench/ is the speed half). For Q deterministic query vectors, takes
 exact cosine top-k as ground truth and measures each approximate
 method's overlap. Prints one JSON line:
 

@@ -27,10 +27,8 @@ LANG_MARKERS: dict[str, list[str]] = {
 
 STOPWORDS_EN = LANG_MARKERS["en"]
 
-# Word tokens: runs of letters/digits (unicode), lowercased. Simple BPE-ish
-# fallback regex for token *counting*: letter-runs, digit-runs, or single
-# punctuation marks each count as one token.
-WORD_RE = r"[^\p{L}\p{N}]+"
+# Word tokens: runs of letters/digits, lowercased; this separator regex
+# splits them the same way in Spark and in the DuckDB oracle.
 SQL_WORD_RE = r"[^a-z0-9À-ɏ一-鿿]+"
 
 

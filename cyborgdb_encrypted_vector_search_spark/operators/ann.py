@@ -8,9 +8,9 @@ fraction of it" are:
 
 - **Random-hyperplane LSH** (sign-of-projection bits → integer bucket).
   Pure column expressions over seeded literal planes: deterministic,
-  shuffle-free to compute, and bucket equality is a join key. At query
-  time only same-bucket (or multiprobe-neighbor-bucket) rows are
-  scored — candidate generation is a hash join, not a scan.
+  shuffle-free to compute, and a clusterable/partitionable key. At
+  query time only same-bucket (or multiprobe-neighbor-bucket) rows are
+  scored.
 - **IVF (inverted file)**: coarse-quantize every vector to its nearest
   centroid; lay the table out partitioned by ``centroid_id``. A query
   probes the ``nprobe`` nearest centroids and ranks exactly within
@@ -18,16 +18,23 @@ fraction of it" are:
   Centroids come from seeded k-means (:func:`kmeans_centroids`: one
   job to sample, k-means++ and Lloyd on the driver) or any fixed
   vector set.
-  Assignment and batch search run on the exact Arrow kernel of
-  ``operators/knn.py`` with the (small) centroid matrix in its closure:
-  assignment is one narrow stage, and a batch search picks every
-  query's probes on the driver, scores the probed lists in one kernel
-  stage (k candidates per query per partition) and merges them there.
+
+Every search — LSH, IVF, and the quantized families of
+``operators/quant.py`` (SQ8) and ``operators/pq.py`` (PQ, IVF-PQ,
+IVFADC) — runs :func:`kernel_search` on the exact Arrow kernel of
+``operators/knn.py``, the REPOSE (ICDE 2021) shape of local top-k per
+partition and one global merge on the driver: probe lists (IVF lists,
+LSH buckets) are picked on the driver, one ``mapInArrow`` pass scores
+each row only against the queries that probed it (through a family's
+decode hook for quantized rows), and an optional second pass of the
+same kernel re-ranks each query's shortlist exactly. Single-query
+searches are the batch path with one query; results are local frames.
+Assignment is one narrow kernel stage too (:func:`knn.nearest`).
 
 Both turn O(corpus) per query into O(corpus/buckets · probes) and are
 embarrassingly scalable: build is one pass, search is a pruned scan
-plus a top-k (TakeOrderedAndProject for one target, the kernel's
-per-partition candidates and one driver merge for a batch).
+with k candidates per query per partition and one driver merge, with
+no join, window or shuffle.
 """
 
 from __future__ import annotations
@@ -38,6 +45,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from cyborgdb_encrypted_vector_search_spark.functions import vector as V
 from cyborgdb_encrypted_vector_search_spark.operators import knn
@@ -113,6 +121,35 @@ def sql_multiprobe_buckets(bucket_expr: str, n_planes: int) -> str:
     return f"[{parts}]"
 
 
+def _lsh_search(
+    corpus_bucketed: DataFrame,
+    queries: tuple,
+    norms: Sequence[float],
+    buckets: Sequence[Sequence[int]],
+    k: int,
+    n_planes: int,
+    id_col: str,
+    unit_col: str,
+    norm_col: str,
+) -> pa.Table:
+    """Multiprobe LSH on the kernel: query ``i`` of ``queries`` (ids,
+    unit vectors, id type) scores the rows whose bucket is within
+    Hamming-1 of one of ``buckets[i]``, by unit cosine
+    (:func:`V.unit_cosine`'s fold over the stored and the given unit
+    vectors, -1.0 when either norm is 0)."""
+    lists = [
+        sorted({b ^ f for b in bs for f in [0] + [1 << i for i in range(n_planes)]})
+        for bs in buckets
+    ]
+    rest = [c for c in corpus_bucketed.columns if c not in (unit_col, norm_col, "unit", "vnorm")]
+    frame = corpus_bucketed.select(
+        *rest, F.col(unit_col).alias("unit"), F.col(norm_col).alias("vnorm")
+    )
+    return kernel_search(
+        frame, queries, k, "cosine", id_col, probes=("bucket", lists), query_norms=norms
+    )
+
+
 def lsh_probe_search(
     corpus_bucketed: DataFrame,
     target_unit,
@@ -124,24 +161,16 @@ def lsh_probe_search(
     norm_col: str = "vnorm",
 ) -> DataFrame:
     """Multiprobe LSH search: candidates = rows whose bucket is within
-    Hamming-1 of the target's bucket, ranked by exact cosine. On a
-    bucket-partitioned layout the semi-join on probe buckets is pure
-    partition pruning."""
-    probes = target_bucket_df.select(
-        F.explode(multiprobe_buckets("bucket", n_planes)).alias("bucket")
-    ).distinct()
-    cand = corpus_bucketed.join(F.broadcast(probes), "bucket")
-    t = V.literal_vector(target_unit)
-    return (
-        cand.withColumn(
-            "score",
-            F.when(F.col(norm_col) == 0, F.lit(-1.0)).otherwise(
-                V.dot(unit_col, t)
-            ),
-        )
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
+    Hamming-1 of the target's bucket, ranked by exact unit cosine.
+    :func:`lsh_search_batch` with one query; returns a local frame of
+    the corpus columns (but ``unit_col``/``norm_col``) plus ``score``,
+    best first. Jobs: the target bucket collect and the kernel."""
+    buckets = [r[0] for r in target_bucket_df.select("bucket").collect()]
+    hits = _lsh_search(
+        corpus_bucketed, one_query(target_unit), [V.norm_py(target_unit)], [buckets],
+        k, n_planes, id_col, unit_col, norm_col,
     )
+    return result_frame(corpus_bucketed.sparkSession, hits.drop([QID, "rank"]))
 
 
 def lsh_search_batch(
@@ -154,38 +183,29 @@ def lsh_search_batch(
     unit_col: str = "unit",
     norm_col: str = "vnorm",
 ) -> DataFrame:
-    """Batch multiprobe LSH: every query's probe + rank in ONE plan.
+    """Batch multiprobe LSH: every query's probe + rank in one kernel job.
 
     ``queries_bucketed`` carries (query_id, unit, vnorm, bucket) — the
     same index columns the corpus has. Per query the probe set is its
-    bucket plus all Hamming-1 neighbors (9 of 2^n_planes); the whole
-    (query, bucket) probe list is Q×9 rows, broadcasts, and hash-joins
-    the corpus on bucket — on a bucket-partitioned layout that is
-    partition pruning for the union of all queries' probes in a single
-    scan. Exact unit-cosine on candidates, per-query top-k window
-    (WindowGroupLimit). A corpus row has exactly one bucket, so no
-    (query, row) pair is scored twice.
-    """
-    from pyspark.sql import Window
-
-    probes = queries_bucketed.select(
-        F.col(query_id_col).alias("__qid"),
-        F.col(unit_col).alias("__qunit"),
-        F.col(norm_col).alias("__qnorm"),
-        F.explode(multiprobe_buckets("bucket", n_planes)).alias("bucket"),
+    bucket plus all Hamming-1 neighbors (9 of 2^n_planes); the corpus
+    is filtered to the union of the probe sets (partition pruning on a
+    bucket-partitioned layout) and each row is scored only against the
+    queries that probed its bucket, by exact unit cosine. Returns a
+    local frame of (query_id, id, score), each query's k best by
+    (score desc, id asc). Jobs: the query collect (none for a local
+    frame) and the kernel."""
+    rows = queries_bucketed.select(query_id_col, unit_col, norm_col, "bucket").collect()
+    queries = (
+        [r[0] for r in rows],
+        [r[1] for r in rows],
+        queries_bucketed.schema[query_id_col].dataType,
     )
-    cand = corpus_bucketed.join(F.broadcast(probes), "bucket")
-    score = F.when(
-        (F.col(norm_col) == 0) | (F.col("__qnorm") == 0), F.lit(-1.0)
-    ).otherwise(V.dot(unit_col, "__qunit"))
-    w = Window.partitionBy("__qid").orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        cand.withColumn("score", score)
-        .withColumn("__rank", F.row_number().over(w))
-        .filter(F.col("__rank") <= k)
-        .select(
-            F.col("__qid").alias(query_id_col), F.col(id_col), F.col("score")
-        )
+    hits = _lsh_search(
+        corpus_bucketed, queries, [r[2] for r in rows], [[r[3]] for r in rows],
+        k, n_planes, id_col, unit_col, norm_col,
+    )
+    return result_frame(
+        queries_bucketed.sparkSession, hits, [query_id_col, id_col, "score"], query_id_col
     )
 
 
@@ -411,23 +431,146 @@ def adaptive_probe_ids(
     probed iff the candidate total BEFORE it is still short of the
     target, so the result is the minimal prefix reaching k*factor.
     """
-    tvec = V.literal_vector([float(x) for x in target])
-    rows = (
-        centroids_with_counts.withColumn(
-            "__d", V.l2_distance("centroid", tvec)
-        )
-        .orderBy(F.asc("__d"), F.asc("centroid_id"))
-        .select("centroid_id", count_col)
-        .collect()
-    )
-    need = k * factor
+    rows = centroids_with_counts.select("centroid_id", "centroid", count_col).collect()
+    return _prefix_probes([tuple(r) for r in rows], target, k * factor)
+
+
+def _prefix_probes(rows: list[tuple], target: Sequence[float], need: int) -> list:
+    """:func:`adaptive_probe_ids` over (centroid id, centroid, list
+    size) rows: distances by the ``l2`` fold, ties to the smaller id."""
+    if not rows:
+        return []
+    rows = sorted(rows, key=lambda r: r[0])
+    cmat, _ = knn.query_matrix([r[1] for r in rows], "l2")
+    qmat, _ = knn.query_matrix([target], "l2")
     probe, cum = [], 0
-    for r in rows:
+    for i in np.argsort(knn.l2_distances(qmat, cmat)[0], kind="stable"):
         if cum >= need:
             break
-        probe.append(r["centroid_id"])
-        cum += r[count_col]
+        probe.append(rows[i][0])
+        cum += rows[i][2]
     return probe
+
+
+# --- one search path for every ANN family ---------------------------
+
+QID = "__qid"  # the query id column of kernel_search's result
+
+
+def kernel_search(
+    corpus: DataFrame,
+    queries: tuple,
+    k: int,
+    metric: str,
+    id_col: str,
+    vec_col: str = "embedding",
+    probes: tuple[str, Sequence[Sequence]] | None = None,
+    decode=None,
+    query_norms: Sequence[float] | None = None,
+    rerank: DataFrame | None = None,
+    shortlist: int = 0,
+) -> pa.Table:
+    """The search every ANN family runs, on the exact kernel
+    (:func:`knn.topk_candidates`), the local-top-k-then-global-merge
+    shape of REPOSE (ICDE 2021), for ``queries`` = (ids, vectors, id
+    type) (:func:`collect_queries`, :func:`one_query`):
+
+    1. one kernel pass over ``corpus`` keeps, per partition, each
+       query's best rows by ``metric``, only among the rows its
+       ``probes`` list (IVF lists, LSH buckets) and read through
+       ``decode`` (the quantized families' reconstruction,
+       :func:`knn.decode_codes`) — ``k`` of them, or ``shortlist``
+       when re-ranking;
+    2. :func:`knn.merge_topk` cuts each query's list on the driver;
+    3. with ``rerank`` (the full-precision frame), a second pass of the
+       same kernel scores each query's shortlist exactly
+       (``cosine_ratio``: :func:`V.cosine`'s fold) — the frame is
+       filtered by ``id IN`` the shortlists' union, a pushed scan
+       predicate, and a row is scored only against the queries that
+       shortlisted it — and a second merge keeps the top ``k``.
+
+    Returns the merged rows as an Arrow table: the pass's frame
+    columns, the query id (``QID``), ``score`` and ``rank``, plus the
+    first pass's ``approx_score`` after a re-rank. Jobs: one per pass."""
+
+    qids, qvecs, qid_type = queries
+
+    def top(frame, n, metric, probes, decode, norms):
+        cands = knn.topk_candidates(
+            frame, qids, qvecs, n, corpus_id_col=id_col, corpus_vec_col=vec_col,
+            metric=metric, query_id_col=QID, query_id_type=qid_type,
+            probes=probes, decode=decode, query_norms=norms,
+        )
+        return knn.merge_topk(cands.toArrow(), n, QID, id_col, desc=metric != "l2")
+
+    if rerank is None:
+        return top(corpus, k, metric, probes, decode, query_norms)
+    short = top(corpus, shortlist, metric, probes, decode, query_norms)
+    keys = list(zip(short.column(QID).to_pylist(), short.column(id_col).to_pylist()))
+    lists: dict = {q: [] for q in qids}
+    for q, i in keys:
+        lists[q].append(i)
+    hits = top(
+        rerank.select(id_col, vec_col), k, "cosine_ratio",
+        (id_col, [lists[q] for q in qids]), None, None,
+    )
+    approx = dict(zip(keys, short.column("score").to_pylist()))
+    got = zip(hits.column(QID).to_pylist(), hits.column(id_col).to_pylist())
+    return hits.append_column(
+        "approx_score", pa.array([approx[key] for key in got], pa.float64())
+    )
+
+
+def result_frame(
+    spark, hits: pa.Table, cols: Sequence[str] | None = None, qid_col: str | None = None
+) -> DataFrame:
+    """A :func:`kernel_search` result as a local frame (no Spark job to
+    read it): ``cols`` of it, the query id renamed to ``qid_col``."""
+    if qid_col is not None:
+        hits = hits.rename_columns([qid_col if c == QID else c for c in hits.column_names])
+    return spark.createDataFrame(hits if cols is None else hits.select(cols))
+
+
+def collect_queries(
+    queries: DataFrame, id_col: str, vec_col: str
+) -> tuple[list, list, T.DataType]:
+    """(ids, vectors, id type) of a query frame: one collect job, none
+    for a local frame."""
+    rows = queries.select(id_col, vec_col).collect()
+    return [r[0] for r in rows], [r[1] for r in rows], queries.schema[id_col].dataType
+
+
+def one_query(target: Sequence[float]) -> tuple[list, list, T.DataType]:
+    """A single-query search's queries: ``target`` under id 0."""
+    return [0], [target], T.LongType()
+
+
+def probe_lists(
+    centroids: DataFrame, qvecs: Sequence, nprobe: int
+) -> tuple[np.ndarray, np.ndarray, list]:
+    """(ascending centroid ids, centroid matrix, per-query probe lists):
+    on the driver, each query's ``nprobe`` nearest lists by the ``l2``
+    fold, ties to the smaller centroid id. Collecting a local centroid
+    table such as :func:`kmeans_centroids`' runs no job. Raises
+    ``ValueError`` on ``nprobe < 1`` (before the collect), an empty
+    centroid table, or a query vector that is null or not as long as
+    the centroids."""
+    if nprobe < 1:
+        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
+    cids, cvecs = _centroid_matrix(centroids)
+    cmat, _ = knn.query_matrix(cvecs, "l2")
+    bad = sorted({-1 if v is None else len(v) for v in qvecs} - {cmat.shape[1]})
+    if bad:
+        raise ValueError(
+            f"query vectors must be {cmat.shape[1]} long like the centroids,"
+            f" got lengths {bad} (-1: null)"
+        )
+    qmat, _ = knn.query_matrix(qvecs, "l2")
+    lists = [
+        [cids[c] for c in np.argsort(dq, kind="stable")[:nprobe]]
+        for dq in knn.l2_distances(qmat, cmat)
+    ]
+    return np.array(cids), cmat, lists
 
 
 def ivf_search_adaptive(
@@ -440,7 +583,9 @@ def ivf_search_adaptive(
     vec_col: str = "embedding",
     counts: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF probe search with candidate-count-adaptive probe depth.
+    """IVF probe search with candidate-count-adaptive probe depth
+    (:func:`adaptive_probe_ids`), exact cosine inside the probed lists
+    on the kernel; returns what :func:`ivf_search` returns.
 
     ``counts`` (centroid_id, n) comes from the build step; if omitted
     it is computed with one count-per-list aggregation (fine at test
@@ -450,82 +595,17 @@ def ivf_search_adaptive(
         counts = corpus_with_centroids.groupBy("centroid_id").agg(
             F.count(F.lit(1)).alias("n")
         )
-    cw = centroids.join(F.broadcast(counts), "centroid_id")
-    probe_ids = adaptive_probe_ids(cw, target, k=k, factor=factor)
-    t = V.literal_vector([float(x) for x in target])
-    return (
-        corpus_with_centroids.filter(F.col("centroid_id").isin(probe_ids))
-        .withColumn("score", V.cosine(vec_col, t))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def ivf_candidates(
-    queries: DataFrame,
-    corpus_with_centroids: DataFrame,
-    centroids: DataFrame,
-    k: int = 3,
-    nprobe: int = 2,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The kernel stage of :func:`ivf_search_batch`, lazy: at most k
-    candidate rows (id, centroid_id, vector, query_id, score) per query
-    per partition.
-
-    1. On the driver, each query's ``nprobe`` nearest lists by the
-       ``l2`` fold, ties to the smaller centroid id.
-    2. The corpus is filtered to the union of the probed lists
-       (partition pruning on a centroid-partitioned layout).
-    3. One ``mapInArrow`` stage (:func:`knn.topk_candidates`) scores
-       each row only against the queries that probed its list, in
-       :func:`V.cosine`'s order (``cosine_ratio``), and keeps k rows
-       per query per partition by (score desc, id asc).
-
-    Collecting the queries is the one job run here (none for a local
-    frame; a local centroid table costs none either). Raises
-    ``ValueError`` before it on ``k < 1`` or ``nprobe < 1``, and before
-    the kernel on an empty centroid table or a query vector that is
-    null or not as long as the centroids. A stored vector that is null,
-    empty or of another length keeps its :func:`V.cosine` score (null,
-    or -1.0 when its norm is 0).
-    """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if nprobe < 1:
-        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
+    sizes = dict(counts.select("centroid_id", "n").collect())
     cids, cvecs = _centroid_matrix(centroids)
-    cmat, _ = knn.query_matrix(cvecs, "l2")
-    rows = queries.select(query_id_col, query_vec_col).collect()
-    qvecs = [r[1] for r in rows]
-    bad = sorted({-1 if v is None else len(v) for v in qvecs} - {cmat.shape[1]})
-    if bad:
-        raise ValueError(
-            f"query vectors must be {cmat.shape[1]} long like the centroids,"
-            f" got lengths {bad} (-1: null)"
-        )
-    qmat, _ = knn.query_matrix(qvecs, "l2")
-    lists = [
-        [cids[c] for c in np.argsort(dq, kind="stable")[:nprobe]]
-        for dq in knn.l2_distances(qmat, cmat)
-    ]
-    probed = sorted({c for ls in lists for c in ls})
-    corpus = corpus_with_centroids.filter(F.col("centroid_id").isin(probed))
-    return knn.topk_candidates(
-        corpus.select(id_col, "centroid_id", vec_col),
-        [r[0] for r in rows],
-        qvecs,
-        k,
-        corpus_id_col=id_col,
-        corpus_vec_col=vec_col,
-        metric="cosine_ratio",
-        query_id_col=query_id_col,
-        query_id_type=queries.schema[query_id_col].dataType,
-        probes=("centroid_id", lists),
+    probe_ids = _prefix_probes(
+        [(c, v, sizes[c]) for c, v in zip(cids, cvecs) if c in sizes],
+        target, k * factor,
     )
+    hits = kernel_search(
+        corpus_with_centroids, one_query(target), k, "cosine_ratio", id_col,
+        vec_col, probes=("centroid_id", [probe_ids]),
+    )
+    return result_frame(corpus_with_centroids.sparkSession, hits.drop([QID, "rank"]))
 
 
 def ivf_search_batch(
@@ -543,22 +623,33 @@ def ivf_search_batch(
 
     Returns a local frame of (query_id, id, score): each query's k best
     by (cosine desc, id asc, null scores last) among the rows of its
-    ``nprobe`` nearest lists — the rows and scores :func:`ivf_search`
-    gives per query. :func:`ivf_candidates` builds the kernel stage;
-    its candidates are collected and merged on the driver
-    (:func:`knn.merge_topk`), the distributed top-k shape of REPOSE
-    (ICDE 2021). Jobs: the query collect (none for a local frame) and
-    the kernel; a local centroid table such as
-    :func:`kmeans_centroids`' costs none. Bad input raises as in
-    :func:`ivf_candidates`.
+    ``nprobe`` nearest lists (:func:`probe_lists`). The corpus is
+    filtered to the union of the probed lists (partition pruning on a
+    centroid-partitioned layout) and one ``mapInArrow`` pass
+    (:func:`kernel_search`) scores each row only against the queries
+    that probed its list, in :func:`V.cosine`'s order
+    (``cosine_ratio``); the driver merges each query's top k. A stored
+    vector that is null, empty or of another length keeps its
+    :func:`V.cosine` score (null, or -1.0 when its norm is 0).
+
+    Jobs: the query collect (none for a local frame) and the kernel; a
+    local centroid table such as :func:`kmeans_centroids`' costs none.
+    Raises ``ValueError`` before any job on ``k < 1`` or ``nprobe < 1``,
+    and before the kernel on an empty centroid table or a query vector
+    that is null or not as long as the centroids.
     """
-    cands = ivf_candidates(
-        queries, corpus_with_centroids, centroids, k, nprobe,
-        query_id_col, query_vec_col, id_col, vec_col,
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    if nprobe < 1:
+        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
+    qs = collect_queries(queries, query_id_col, query_vec_col)
+    _, _, lists = probe_lists(centroids, qs[1], nprobe)
+    hits = kernel_search(
+        corpus_with_centroids.select(id_col, "centroid_id", vec_col), qs, k,
+        "cosine_ratio", id_col, vec_col, probes=("centroid_id", lists),
     )
-    hits = knn.merge_topk(cands.toArrow(), k, query_id_col, id_col)
-    return queries.sparkSession.createDataFrame(
-        hits.select([query_id_col, id_col, "score"])
+    return result_frame(
+        queries.sparkSession, hits, [query_id_col, id_col, "score"], query_id_col
     )
 
 
@@ -571,22 +662,15 @@ def ivf_search(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Probe the nprobe nearest centroids, exact-rank inside them.
-
-    When corpus_with_centroids is a centroid-partitioned table, the
+    """Probe the nprobe nearest centroids, exact-rank inside them:
+    :func:`ivf_search_batch` with one query. Returns a local frame of
+    the corpus columns plus ``score``, best first. When
+    corpus_with_centroids is a centroid-partitioned table, the
     centroid_id IN (...) filter prunes partitions before any IO.
     """
-    t = V.literal_vector(target)
-    probe_ids = [
-        r["centroid_id"]
-        for r in centroids.withColumn("__d", V.l2_distance("centroid", t))
-        .orderBy(F.asc("__d"), F.asc("centroid_id"))
-        .limit(nprobe)
-        .collect()
-    ]
-    return (
-        corpus_with_centroids.filter(F.col("centroid_id").isin(probe_ids))
-        .withColumn("score", V.cosine(vec_col, t))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
+    _, _, lists = probe_lists(centroids, [target], nprobe)
+    hits = kernel_search(
+        corpus_with_centroids, one_query(target), k, "cosine_ratio", id_col,
+        vec_col, probes=("centroid_id", lists),
     )
+    return result_frame(corpus_with_centroids.sparkSession, hits.drop([QID, "rank"]))

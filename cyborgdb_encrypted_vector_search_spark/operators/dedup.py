@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import logging
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -509,10 +510,10 @@ def _er_closure_bound(n_edges: int) -> bool:
     return n_edges <= _ER_DRIVER_CLOSURE_CAP
 
 
-def _driver_closure_rows(rows) -> list[tuple]:
-    """Union-find over collected (a, b) pairs; returns one
-    (node, component) row per distinct endpoint with component = the
-    smallest node id reachable from it — exactly
+def _driver_closure_rows(a: list, b: list) -> tuple[list, list]:
+    """Union-find over the pairs (a[i], b[i]); returns (nodes,
+    components): every distinct endpoint, ascending, with component =
+    the smallest node id reachable from it — exactly
     connected_components_star's labeling contract."""
     parent: dict = {}
 
@@ -524,36 +525,32 @@ def _driver_closure_rows(rows) -> list[tuple]:
             parent[x], x = r, parent[x]
         return r
 
-    for a, b in rows:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-    nodes: set = set()
-    for a, b in rows:
-        nodes.add(a)
-        nodes.add(b)
+    for x, y in zip(a, b):
+        rx, ry = find(x), find(y)
+        if rx != ry:
+            parent[rx] = ry
+    nodes = sorted(set(a) | set(b))
+    roots = [find(n) for n in nodes]
     comp_min: dict = {}
-    roots = {n: find(n) for n in nodes}
-    for n, r in roots.items():
-        if r not in comp_min or n < comp_min[r]:
-            comp_min[r] = n
-    return [(n, comp_min[roots[n]]) for n in sorted(nodes)]
+    for n, r in zip(nodes, roots):  # ascending: the first node seen is the min
+        comp_min.setdefault(r, n)
+    return nodes, [comp_min[r] for r in roots]
 
 
-def _closure_frame(pairs: DataFrame, rows) -> DataFrame:
-    """Materialize a driver-computed closure as a (node, component)
-    frame with the pair frame's id type."""
-    from pyspark.sql.types import StructField, StructType
+def _closure_frame(pairs: DataFrame, edges: pa.Table) -> DataFrame:
+    """Materialize the driver closure of collected (a, b) ``edges`` as
+    a (node, component) local frame with the pair frame's id type.
+    The edges arrive through Arrow as two plain columns, not as one
+    Python ``Row`` per edge."""
+    from pyspark.sql.pandas.types import to_arrow_type
 
-    t = pairs.schema[0].dataType
-    schema = StructType(
-        [
-            StructField("node", t, False),
-            StructField("component", t, False),
-        ]
+    t = to_arrow_type(pairs.schema[0].dataType)
+    nodes, comps = _driver_closure_rows(
+        edges.column(0).to_pylist(), edges.column(1).to_pylist()
     )
+    schema = pa.schema([pa.field("node", t, False), pa.field("component", t, False)])
     return pairs.sparkSession.createDataFrame(
-        _driver_closure_rows(rows), schema
+        pa.table([pa.array(nodes, t), pa.array(comps, t)], schema=schema)
     )
 
 
@@ -1364,8 +1361,8 @@ def resolve_entities(
     # distributed closure — the contraction loop dedups its canonical
     # edge set in its own first checkpoint.)
     edges = track(edges.persist())
-    probe = edges.limit(_ER_DRIVER_CLOSURE_CAP + 1).collect()
-    if _er_closure_bound(len(probe)):
+    probe = edges.limit(_ER_DRIVER_CLOSURE_CAP + 1).toArrow()
+    if _er_closure_bound(probe.num_rows):
         comp = F.broadcast(_closure_frame(edges, probe))
     else:
         comp = connected_components_star(edges, "a", "b")
@@ -1581,7 +1578,7 @@ def resolve_entities_incremental(
         # edge set), inside the bound by construction: close on the
         # driver — one collect job replaces the star-contraction loop
         # (see _driver_closure_rows)
-        comp = _closure_frame(contracted, contracted.collect())
+        comp = _closure_frame(contracted, contracted.toArrow())
     else:
         comp = track(
             connected_components_star(contracted, "a", "b").persist()

@@ -108,12 +108,16 @@ def _check(k: int, metric: str) -> None:
         raise ValueError(f"unknown metric {metric!r}")
 
 
-def query_matrix(vecs: Sequence, metric: str) -> tuple[np.ndarray, np.ndarray]:
+def query_matrix(
+    vecs: Sequence, metric: str, norms: Sequence[float] | None = None
+) -> tuple[np.ndarray, np.ndarray]:
     """(queries x d matrix, zero-norm mask). Cosine queries are
     unit-normalized here with :func:`V.normalize_py`'s sequential fold,
     so they equal the JVM's ``with_unit_vectors`` bit for bit; the
-    other metrics keep the raw vectors. Raises ``ValueError`` on null,
-    empty or unequal-length vectors."""
+    other metrics keep the raw vectors. Cosine queries that already are
+    unit vectors come with their ``norms`` (``with_unit_vectors``'
+    columns) and are kept as given, a zero norm marking the sentinel.
+    Raises ``ValueError`` on null, empty or unequal-length vectors."""
     if any(v is None for v in vecs):
         raise ValueError("query vectors must not be null")
     vecs = [[float(x) for x in v] for v in vecs]
@@ -124,9 +128,11 @@ def query_matrix(vecs: Sequence, metric: str) -> tuple[np.ndarray, np.ndarray]:
         )
     if vecs and d == 0:
         raise ValueError("query vectors must not be empty")
-    zero = np.array([V.norm_py(v) == 0.0 for v in vecs], dtype=bool)
-    if metric == "cosine":
-        vecs = [V.normalize_py(v) for v in vecs]
+    if norms is None:
+        norms = [V.norm_py(v) for v in vecs]
+        if metric == "cosine":
+            vecs = [V.normalize_py(v) for v in vecs]
+    zero = np.array([n == 0.0 for n in norms], dtype=bool)
     return np.array(vecs, dtype=np.float64).reshape(len(vecs), d), zero
 
 
@@ -189,6 +195,31 @@ def _zero_norm_other_rows(col, ok: np.ndarray) -> np.ndarray:
     return out
 
 
+def decode_codes(
+    t: pa.Table,
+    d: int,
+    books: np.ndarray,
+    code_col: str = "codes",
+    centroids: tuple[np.ndarray, np.ndarray] | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The decode hook of quantized rows (:func:`topk_candidates`'
+    ``decode``): the ``code_col`` list of m codes becomes the (valid
+    rows x d) float64 matrix ``concat_j books[j][code_j]``, ``books``
+    being (m, codes per book, d/m). With ``centroids`` = (ascending
+    ids, matrix) each row adds its ``centroid_id``'s centroid, which
+    decodes IVFADC residual codes. A row whose code list is null or not
+    m long scores null."""
+    m = len(books)
+    codes, ok = _vectors(t.column(code_col), m)
+    x = books[np.arange(m), codes.astype(np.intp)].reshape(len(codes), m * books.shape[2])
+    if x.shape[1] != d:
+        raise ValueError(f"codes decode to {x.shape[1]} dims, the queries have {d}")
+    if centroids is not None:
+        ids, cmat = centroids
+        x += cmat[np.searchsorted(ids, t.column("centroid_id").to_numpy()[ok])]
+    return x, ok
+
+
 def _scores(
     t: pa.Table,
     qmat: np.ndarray,
@@ -196,32 +227,41 @@ def _scores(
     metric: str,
     vec_col: str,
     use_unit: bool,
+    decode=None,
 ) -> np.ndarray:
-    """Queries x rows score matrix; NaN marks a null score."""
+    """Queries x rows score matrix; NaN marks a null score. The rows
+    scored are the (valid rows x d) float64 matrix that ``decode(t, d)``
+    returns with its valid-row mask: by default the ``vec_col`` list
+    column (:func:`_vectors`; the ``unit`` column under ``use_unit``),
+    or the quantized rows' reconstruction (:func:`decode_codes`)."""
     n_q, d = qmat.shape
     out = np.full((n_q, t.num_rows), np.nan)
+    col = None
+    if use_unit:
+        x, ok = _vectors(t.column("unit"), d)
+    elif decode is not None:
+        x, ok = decode(t, d)
+    else:
+        col = t.column(vec_col).combine_chunks()
+        x, ok = _vectors(col, d)
     if metric == "cosine":
         if use_unit:
-            u, ok = _vectors(t.column("unit"), d)
             cn = t.column("vnorm").to_numpy()[ok]
         else:
-            x, ok = _vectors(t.column(vec_col), d)
             cn = np.sqrt(_rowsum(x * x))
-            u = x / np.where(cn == 0.0, 1.0, cn)[:, None]
-        acc = _dots(qmat, u)
+            x = x / np.where(cn == 0.0, 1.0, cn)[:, None]
+        acc = _dots(qmat, x)
         acc[:, cn == 0.0] = -1.0
         acc[qzero] = -1.0
     elif metric == "cosine_ratio":
-        col = t.column(vec_col).combine_chunks()
-        x, ok = _vectors(col, d)
         cn = np.sqrt(_rowsum(x * x))
         qn = np.sqrt(_rowsum(qmat * qmat))
         with np.errstate(divide="ignore", invalid="ignore"):
             acc = _dots(qmat, x) / (cn * qn[:, None])
         acc[:, cn == 0.0] = -1.0
-        out[:, _zero_norm_other_rows(col, ok)] = -1.0
+        if col is not None:
+            out[:, _zero_norm_other_rows(col, ok)] = -1.0
     else:
-        x, ok = _vectors(t.column(vec_col), d)
         acc = l2_distances(qmat, x)
     out[:, ok] = acc
     if metric == "cosine_ratio":
@@ -258,27 +298,30 @@ def _best(
 
 def _probed_scores(
     t: pa.Table,
-    probe: tuple[str, dict],
+    probe: tuple[str, dict, list],
     qmat: np.ndarray,
     qzero: np.ndarray,
     metric: str,
     vec_col: str,
     use_unit: bool,
+    decode,
 ) -> tuple[np.ndarray, np.ndarray]:
     """(scores, live) for a probed search: each row is scored only
     against the queries that probed its list; ``live`` marks those
-    (query, row) pairs, every other entry is no candidate at all."""
-    list_col, probed_by = probe
-    lists = np.array(t.column(list_col).to_pylist(), dtype=object)
+    (query, row) pairs, every other entry is no candidate at all.
+    ``probe`` maps each list to the index of its set of queries, so
+    rows probed by the same queries are scored together: an id-probed
+    re-rank costs one pass per distinct query set, not one per row."""
+    list_col, set_of, sets = probe
+    g = np.array([set_of.get(c, -1) for c in t.column(list_col).to_pylist()], dtype=np.int64)
     s = np.full((len(qmat), t.num_rows), np.nan)
     live = np.zeros(s.shape, dtype=bool)
-    for c in set(lists.tolist()):
-        qs = probed_by.get(c)
-        if qs is None:
-            continue
-        rows = np.flatnonzero(lists == c)
-        cell = np.ix_(qs, rows)
-        s[cell] = _scores(t.take(rows), qmat[qs], qzero[qs], metric, vec_col, use_unit)
+    for i in np.unique(g[g >= 0]):
+        rows = np.flatnonzero(g == i)
+        cell = np.ix_(sets[i], rows)
+        s[cell] = _scores(
+            t.take(rows), qmat[sets[i]], qzero[sets[i]], metric, vec_col, use_unit, decode
+        )
         live[cell] = True
     return s, live
 
@@ -295,7 +338,8 @@ def _topk_partition(
     use_unit: bool,
     keep: list[str],
     names: list[str],
-    probe: tuple[str, dict] | None,
+    probe: tuple[str, dict, list] | None,
+    decode,
 ):
     """mapInArrow body: fold a partition's batches into the union of
     every query's running top-k (rows and their scores, so no row is
@@ -308,9 +352,11 @@ def _topk_partition(
     for b in batches:
         t = pa.Table.from_batches([b])
         if probe is None:
-            s = _scores(t, qmat, qzero, metric, vec_col, use_unit)
+            s = _scores(t, qmat, qzero, metric, vec_col, use_unit, decode)
         else:
-            s, live = _probed_scores(t, probe, qmat, qzero, metric, vec_col, use_unit)
+            s, live = _probed_scores(
+                t, probe, qmat, qzero, metric, vec_col, use_unit, decode
+            )
         if kept is not None:
             t, s = pa.concat_tables([kept, t]), np.hstack([kept_s, s])
             if live is not None:
@@ -342,6 +388,8 @@ def topk_candidates(
     query_id_type: T.DataType = T.LongType(),
     score_col: str = "score",
     probes: tuple[str, Sequence[Sequence]] | None = None,
+    decode=None,
+    query_norms: Sequence[float] | None = None,
 ) -> DataFrame:
     """Exact per-partition kNN candidates: for every query and every
     corpus partition, that partition's k best rows by (score, id asc),
@@ -351,26 +399,39 @@ def topk_candidates(
     The query matrix rides in the kernel's closure. Cosine reuses the
     corpus's ``unit``/``vnorm`` columns when present (the materialized
     projection of ``registry.unit_embeddings``; dropped from the
-    output) and normalizes ``corpus_vec_col`` per batch otherwise.
-    ``probes = (list_col, lists)`` restricts query ``i`` to the rows
-    whose ``list_col`` is in ``lists[i]`` (the IVF probe mask): other
-    rows are never scored against it. Callers finish with a rank over
-    the candidates (:func:`knn_join`) or a driver merge
-    (:func:`merge_topk`)."""
+    output) and normalizes ``corpus_vec_col`` per batch otherwise;
+    ``query_norms`` marks cosine queries given as unit vectors (see
+    :func:`query_matrix`). ``probes = (list_col, lists)`` restricts
+    query ``i`` to the rows whose ``list_col`` is in ``lists[i]`` (the
+    IVF probe mask, or a per-query id shortlist): the corpus is
+    filtered to the union of the lists (partition pruning on a layout
+    partitioned by ``list_col``, a pushed ``IN`` on a file scan), and
+    other rows are never scored against query ``i``. ``decode`` is the
+    hook that turns an Arrow batch into the matrix the metric scores
+    (:func:`decode_codes` for quantized rows), in place of
+    ``corpus_vec_col``. Callers finish with a rank over the candidates
+    (:func:`knn_join`) or a driver merge (:func:`merge_topk`)."""
     from pyspark.sql.pandas.types import to_arrow_type
 
     _check(k, metric)
-    qmat, qzero = query_matrix(query_vecs, metric)
-    use_unit = metric == "cosine" and {"unit", "vnorm"} <= set(corpus.columns)
+    qmat, qzero = query_matrix(query_vecs, metric, query_norms)
+    use_unit = (
+        decode is None
+        and metric == "cosine"
+        and {"unit", "vnorm"} <= set(corpus.columns)
+    )
     keep = [c for c in corpus.columns if not (use_unit and c in ("unit", "vnorm"))]
     probe = None
     if probes is not None:
         list_col, lists = probes
         probed_by: dict = {}
         for i, ls in enumerate(lists):
-            for c in ls:
+            for c in set(ls):
                 probed_by.setdefault(c, []).append(i)
-        probe = (list_col, {c: np.array(q) for c, q in probed_by.items()})
+        sets: dict = {}
+        set_of = {c: sets.setdefault(tuple(qs), len(sets)) for c, qs in probed_by.items()}
+        probe = (list_col, set_of, [np.array(qs) for qs in sets])
+        corpus = corpus.filter(F.col(list_col).isin(sorted(probed_by)))
     schema = T.StructType(
         [corpus.schema[c] for c in keep]
         + [
@@ -391,6 +452,7 @@ def topk_candidates(
         keep=keep,
         names=schema.names,
         probe=probe,
+        decode=decode,
     )
     return corpus.mapInArrow(kernel, schema)
 
@@ -440,19 +502,23 @@ def nearest(
 
 
 def merge_topk(
-    cands: pa.Table, k: int, query_id_col: str, corpus_id_col: str
+    cands: pa.Table,
+    k: int,
+    query_id_col: str,
+    corpus_id_col: str,
+    desc: bool = True,
 ) -> pa.Table:
-    """Driver-side final merge of collected cosine
-    :func:`topk_candidates`: each query's k best by (score desc, id
-    asc), null scores last, in (query id, rank) order with a 1-based
-    int ``rank`` column."""
+    """Driver-side final merge of collected :func:`topk_candidates`:
+    each query's k best by (score desc — ascending for ``l2``, pass
+    ``desc=False`` — id asc), null scores last, in (query id, rank)
+    order with a 1-based int ``rank`` column."""
     qid = cands.column(query_id_col).to_numpy()
     score = cands.column("score").to_numpy()
     ids = cands.column(corpus_id_col).to_numpy()
     rows, ranks = [np.zeros(0, dtype=np.int64)], [np.zeros(0, dtype=np.int32)]
     for q in np.unique(qid):
         pos = np.flatnonzero(qid == q)
-        top = pos[_best(score[None, pos], ids[pos], k, desc=True)[0]]
+        top = pos[_best(score[None, pos], ids[pos], k, desc)[0]]
         rows.append(top)
         ranks.append(np.arange(1, len(top) + 1, dtype=np.int32))
     rank = pa.array(np.concatenate(ranks), pa.int32())

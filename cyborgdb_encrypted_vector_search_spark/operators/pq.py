@@ -13,34 +13,37 @@ Search", TPAMI 2011):
 - encode: each vector becomes ``m`` small codes (argmin centroid per
           subspace) — a one-time Arrow-batched pass; the encoded table
           is 64x smaller than float32 vectors at m=8, nbits=4, dim=64.
-- search (ADC, asymmetric distance computation): for a query, compute
-          the m x 2^nbits table of squared distances from each query
-          subvector to each centroid ONCE on the driver (numpy, a few
-          hundred floats), broadcast it as a literal, and score every
-          encoded row with pure JVM array lookups:
+- search (ADC, asymmetric distance computation): the one kNN kernel
+          of ``operators/knn.py`` (``ann.kernel_search``) with a decode
+          hook — each row's codes become x̂ = concat_j books[j][code_j]
+          inside the scoring stage (``knn.decode_codes``), so its
+          ``l2`` fold gives ‖q − x̂‖², which IS the ADC distance
+          sum_j table[j][code_j(row)] (same ranking, equal to 1e-9).
+          No lookup table is built per query or per (query, list):
+          IVFADC residual codes decode to centroid + r̂, and
+          ‖(q − c) − r̂‖² = ‖q − x̂‖².
 
-              approx_dist(row) = sum_j table[j][code_j(row)]
-
-          No Python, no UDF, no shuffle in the hot path — the scan
-          stays inside whole-stage codegen and the global top-k plans
-          as TakeOrderedAndProject. Encode is the only Python-touching
-          step, and it runs once at index-build time, not per query.
-
-Composes with the IVF layout (operators/ann.py): partition the encoded
-table by centroid_id and ADC-scan only the probed partitions; re-rank
-the ADC top candidates with exact distances from the full-precision
-vectors when recall matters.
+Composes with the IVF layout (operators/ann.py): the approximate pass
+reads only (id, codes, centroid_id) of the probed partitions, each row
+against only the queries that probed its list; each query's
+``k*rerank_factor`` ADC shortlist is then re-ranked with exact cosine
+by a second pass of the same kernel over the full-precision vectors,
+behind a pushed ``id IN (...)``. Single-query searches are the batch
+path with one query.
 """
 
 from __future__ import annotations
 
+import functools
 from typing import Sequence
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, SparkSession
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cyborgdb_encrypted_vector_search_spark.functions import vector as V
+from cyborgdb_encrypted_vector_search_spark.operators import ann as A
+from cyborgdb_encrypted_vector_search_spark.operators import knn
 
 
 def _kmeans_1sub(x: np.ndarray, k: int, seed: int, iters: int) -> np.ndarray:
@@ -131,44 +134,52 @@ def encode(
     )
 
 
-def adc_table(
-    target: Sequence[float], codebooks: Sequence[np.ndarray]
-) -> list[list[float]]:
-    """m x 2^nbits squared-distance lookup table for one query."""
-    t = np.asarray(target, dtype=np.float64)
-    sub = codebooks[0].shape[1]
-    return [
-        (
-            ((np.asarray(b) - t[j * sub : (j + 1) * sub][None, :]) ** 2)
-            .sum(axis=1)
-            .tolist()
-        )
-        for j, b in enumerate(codebooks)
-    ]
-
-
-def adc_score(codes_col: Column | str, table: list[list[float]]) -> Column:
-    """Approximate squared L2 distance via JVM-side table lookups.
-
-    The table is a literal array<array<double>> — whole-stage codegen
-    evaluates ``sum_j table[j][codes[j]]`` with no Python involved.
-    """
-    c = F.col(codes_col) if isinstance(codes_col, str) else codes_col
-    lit_table = F.array(
-        *[F.array(*[F.lit(float(x)) for x in row]) for row in table]
+def _search(
+    codes_df: DataFrame,
+    centroids: DataFrame | None,
+    codebooks: Sequence[np.ndarray],
+    queries: tuple,
+    k: int,
+    nprobe: int,
+    rerank_df: DataFrame | None,
+    rerank_factor: int,
+    id_col: str,
+    vec_col: str,
+    residual: bool = False,
+    qid_col: str | None = None,
+) -> DataFrame:
+    """Every PQ search (:func:`ann.kernel_search`): the codes decode to
+    x̂ = concat_j books[j][code_j] — plus the row's centroid for
+    ``residual`` codes — so the ``l2`` kernel's ‖q − x̂‖² is the ADC
+    distance, and the pass reads only (id, codes, centroid_id). With
+    ``centroids`` a row is scored only against the queries whose
+    ``nprobe`` nearest lists hold it. With ``rerank_df`` each query's
+    ``k*rerank_factor`` shortlist is re-ranked by exact cosine
+    (``score``); without, ``adc_dist`` is the ADC distance and
+    ``score`` = -``adc_dist`` (higher is better either way). A local
+    frame of (qid_col, id, [adc_dist,] score), without ``qid_col`` for
+    a single query."""
+    books = np.stack([np.asarray(b, dtype=np.float64) for b in codebooks])
+    cols, probes, cents = [id_col, "codes"], None, None
+    if centroids is not None:
+        cids, cmat, lists = A.probe_lists(centroids, queries[1], nprobe)
+        cols.append("centroid_id")
+        probes = ("centroid_id", lists)
+        cents = (cids, cmat) if residual else None
+    hits = A.kernel_search(
+        codes_df.select(*cols), queries, k, "l2", id_col, vec_col,
+        probes=probes,
+        decode=functools.partial(knn.decode_codes, books=books, centroids=cents),
+        rerank=rerank_df, shortlist=k * rerank_factor,
     )
-    m = len(table)
-    idx = F.sequence(F.lit(0), F.lit(m - 1))
-    terms = F.transform(
-        idx,
-        lambda j: F.element_at(
-            F.element_at(lit_table, (j + 1).cast("int")),
-            (F.element_at(c, (j + 1).cast("int")) + 1).cast("int"),
-        ),
-    )
-    return F.aggregate(
-        terms, F.lit(0.0), lambda acc, x: acc + x
-    )
+    out = [id_col, "score"]
+    if rerank_df is None:
+        adc = pc.multiply(hits.column("score"), hits.column("score"))
+        hits = hits.set_column(hits.column_names.index("score"), "score", pc.negate(adc))
+        hits, out = hits.append_column("adc_dist", adc), [id_col, "adc_dist", "score"]
+    if qid_col is None:
+        return A.result_frame(codes_df.sparkSession, hits, out)
+    return A.result_frame(codes_df.sparkSession, hits, [qid_col] + out, qid_col)
 
 
 def search_adc(
@@ -181,38 +192,18 @@ def search_adc(
     rerank_factor: int = 4,
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """PQ top-k by ADC; optionally re-rank with exact distances.
+    """PQ top-k by ADC over the whole code table; optionally re-rank
+    the ``k * rerank_factor`` best with exact cosine from the
+    full-precision ``rerank_df`` (the standard recall-recovery step).
 
-    Without re-rank: one codegen'd scan of the code table +
-    TakeOrderedAndProject. With ``rerank_df`` (the full-precision
-    table), the ADC top ``k * rerank_factor`` candidates — a tiny set —
-    join back to their exact vectors and re-sort by true cosine, the
-    standard recall-recovery step.
-
-    Output contract (both branches): a ``score`` column where HIGHER is
-    better — exact cosine similarity when re-ranking, else the negated
-    ADC L2 distance (``-adc_dist``, also kept as its own column). Callers
-    can always ``select(id_col, 'score')`` and sort DESC.
+    Returns a local frame, best first: (id, score) with ``score`` the
+    exact cosine when re-ranking, else (id, adc_dist, score) with
+    ``score`` = -``adc_dist``, so callers can always
+    ``select(id_col, 'score')`` and sort DESC.
     """
-    scored = codes_df.select(
-        F.col(id_col), adc_score("codes", adc_table(target, codebooks)).alias("adc_dist")
-    )
-    if rerank_df is None:
-        return (
-            scored.orderBy(F.asc("adc_dist"), F.asc(id_col))
-            .limit(k)
-            .withColumn("score", -F.col("adc_dist"))
-        )
-    cand = scored.orderBy(F.asc("adc_dist"), F.asc(id_col)).limit(
-        k * rerank_factor
-    )
-    t = V.literal_vector([float(x) for x in target])
-    return (
-        rerank_df.join(F.broadcast(cand), id_col)
-        .withColumn("score", F.round(V.cosine(vec_col, t), 7))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-        .select(id_col, "score")
+    return _search(
+        codes_df, None, codebooks, A.one_query(target), k, 0, rerank_df,
+        rerank_factor, id_col, vec_col,
     )
 
 
@@ -231,9 +222,7 @@ def residual_frame(
     budget yields a tighter quantizer. One broadcast join + one narrow
     projection — linear, shuffle-free at any corpus size.
     """
-    from cyborgdb_encrypted_vector_search_spark.operators import ann
-
-    assigned = ann.assign_centroids(
+    assigned = A.assign_centroids(
         df.select(id_col, vec_col), centroids, vec_col
     )
     cent = F.broadcast(
@@ -265,140 +254,18 @@ def ivfadc_search(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVFADC with residual codes: per-probe query-residual ADC tables.
+    """IVFADC with residual codes: :func:`ivfadc_search_batch` with one
+    query, returning :func:`search_adc`'s columns.
 
     ``codes_df`` is (id, centroid_id, codes) where the codes encode
-    residuals (``encode`` over ``residual_frame``). Because stored codes
-    are relative to their list's centroid, the query side must be too:
-    for each probed centroid c the driver builds the ADC table from the
-    query residual ``target - centroid_c`` (nprobe tiny numpy ops), and
-    the scan picks the right table per row with a chained CASE on
-    centroid_id — still one codegen'd pass over only the probed
-    partitions, no Python in the hot path.
+    residuals (``encode`` over ``residual_frame``). A row decodes to
+    its list's centroid plus the decoded residual, so
+    ‖(q − c) − r̂‖² = ‖q − x̂‖²: one decode replaces a residual ADC
+    table per (query, probed list).
     """
-    t = np.asarray(target, dtype=np.float64)
-    probe = (
-        centroids.withColumn(
-            "__d", V.l2_distance("centroid", V.literal_vector([float(x) for x in target]))
-        )
-        .orderBy(F.asc("__d"), F.asc("centroid_id"))
-        .limit(nprobe)
-        .select("centroid_id", "centroid")
-        .collect()
-    )
-    tables = {
-        r["centroid_id"]: adc_table(
-            (t - np.asarray(r["centroid"], dtype=np.float64)).tolist(),
-            codebooks,
-        )
-        for r in probe
-    }
-    pruned = codes_df.filter(
-        F.col("centroid_id").isin(list(tables.keys()))
-    )
-    expr = None
-    for cid, table in tables.items():
-        branch = adc_score("codes", table)
-        expr = (
-            F.when(F.col("centroid_id") == cid, branch)
-            if expr is None
-            else expr.when(F.col("centroid_id") == cid, branch)
-        )
-    scored = pruned.select(F.col(id_col), expr.alias("adc_dist"))
-    if rerank_df is None:
-        # Stable contract: `score` = -adc_dist (higher is better), so
-        # callers select the same column whether or not re-rank is on.
-        return (
-            scored.orderBy(F.asc("adc_dist"), F.asc(id_col))
-            .limit(k)
-            .withColumn("score", -F.col("adc_dist"))
-        )
-    cand = scored.orderBy(F.asc("adc_dist"), F.asc(id_col)).limit(
-        k * rerank_factor
-    )
-    tl = V.literal_vector([float(x) for x in target])
-    return (
-        rerank_df.join(F.broadcast(cand), id_col)
-        .withColumn("score", F.round(V.cosine(vec_col, tl), 7))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-        .select(id_col, "score")
-    )
-
-
-def _batch_probes(
-    q: DataFrame,
-    centroids: DataFrame,
-    nprobe: int,
-    keep_centroid: bool = False,
-) -> DataFrame:
-    """Per-query nprobe nearest lists via one broadcast window over
-    queries × centroids (q carries __qid/__qvec)."""
-    from pyspark.sql import Window
-
-    cent = centroids.select("centroid_id", "centroid")
-    wp = Window.partitionBy("__qid").orderBy(
-        F.asc("__cd"), F.asc("centroid_id")
-    )
-    cols = ["__qid", "__qvec", "centroid_id"] + (
-        ["__cvec"] if keep_centroid else []
-    )
-    return (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn("__cd", V.l2_distance("__qvec", "centroid"))
-        .withColumn("__cvec", F.col("centroid"))
-        .withColumn("__rn", F.row_number().over(wp))
-        .filter(F.col("__rn") <= nprobe)
-        .select(*cols)
-    )
-
-
-def _batch_finish(
-    scored: DataFrame,
-    q: DataFrame,
-    rerank_df: DataFrame | None,
-    k: int,
-    rerank_factor: int,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
-) -> DataFrame:
-    """Shared shortlist + exact-cosine re-rank tail of the batch ADC
-    searches (scored: __qid, __vid, adc_dist).
-
-    Output contract (both branches): a ``score`` column where HIGHER is
-    better — exact cosine when ``rerank_df`` is given, else the negated
-    ADC L2 distance (``-adc_dist``, also kept as its own column)."""
-    from pyspark.sql import Window
-
-    ws = Window.partitionBy("__qid").orderBy(
-        F.asc("adc_dist"), F.asc("__vid")
-    )
-    shortlist = scored.withColumn("__rn", F.row_number().over(ws)).filter(
-        F.col("__rn") <= k * (rerank_factor if rerank_df is not None else 1)
-    )
-    if rerank_df is None:
-        return shortlist.filter(F.col("__rn") <= k).select(
-            F.col("__qid").alias(query_id_col),
-            F.col("__vid").alias(id_col),
-            F.col("adc_dist"),
-            (-F.col("adc_dist")).alias("score"),
-        )
-    rer = (
-        rerank_df.select(F.col(id_col).cast("long").alias("__vid"), vec_col)
-        .join(F.broadcast(shortlist.select("__qid", "__vid")), "__vid")
-        .join(F.broadcast(q), "__qid")
-        .withColumn("score", F.round(V.cosine(vec_col, "__qvec"), 7))
-    )
-    wk = Window.partitionBy("__qid").orderBy(F.desc("score"), F.asc("__vid"))
-    return (
-        rer.withColumn("__rk", F.row_number().over(wk))
-        .filter(F.col("__rk") <= k)
-        .select(
-            F.col("__qid").alias(query_id_col),
-            F.col("__vid").alias(id_col),
-            F.col("score"),
-        )
+    return _search(
+        codes_df, centroids, codebooks, A.one_query(target), k, nprobe,
+        rerank_df, rerank_factor, id_col, vec_col, residual=True,
     )
 
 
@@ -416,71 +283,15 @@ def ivfadc_search_batch(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
 ) -> DataFrame:
-    """Batch IVFADC: residual-code search for a whole query batch in
-    ONE plan. Same skeleton as ``ivfpq_search_batch``, but because the
-    stored codes encode residuals vs their list's centroid, the ADC
-    table differs per (query, probed list) — the mapInPandas stage
-    groups by (query, centroid), builds the table from the query
-    residual ``qvec − centroid`` with vectorized numpy, and
-    gather-sums that group's codes. The single-target path's
-    chained-CASE JVM tables can't batch (one literal table per query ×
-    probe would blow up codegen); one Arrow-batched Python stage with
-    O(rows) work is the right trade."""
-    books = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    m = len(books)
-    sub = books[0].shape[1]
-
-    q = queries.select(
-        F.col(query_id_col).cast("long").alias("__qid"),
-        F.col(query_vec_col).cast("array<double>").alias("__qvec"),
-    )
-    probes = _batch_probes(q, centroids, nprobe, keep_centroid=True)
-    cand = codes_df.join(F.broadcast(probes), "centroid_id").select(
-        "__qid",
-        "__qvec",
-        "__cvec",
-        F.col("centroid_id"),
-        F.col(id_col).cast("long").alias("__vid"),
-        "codes",
-    )
-
-    def _adc(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            parts = []
-            for (qid, _cid), grp in pdf.groupby(["__qid", "centroid_id"]):
-                qv = np.asarray(grp["__qvec"].iloc[0], dtype=np.float64)
-                cv = np.asarray(grp["__cvec"].iloc[0], dtype=np.float64)
-                r = qv - cv
-                table = np.stack(
-                    [
-                        ((b - r[j * sub : (j + 1) * sub][None, :]) ** 2).sum(
-                            axis=1
-                        )
-                        for j, b in enumerate(books)
-                    ]
-                )
-                codes = np.stack(grp["codes"].to_list()).astype(np.int64)
-                dist = table[np.arange(m)[None, :], codes].sum(axis=1)
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "__qid": qid,
-                            "__vid": grp["__vid"].to_numpy(),
-                            "adc_dist": dist,
-                        }
-                    )
-                )
-            yield pd.concat(parts, ignore_index=True)
-
-    scored = cand.mapInPandas(
-        _adc, schema="__qid long, __vid long, adc_dist double"
-    )
-    return _batch_finish(
-        scored, q, rerank_df, k, rerank_factor, id_col, vec_col, query_id_col
+    """Batch IVFADC over residual codes: probes on the driver, one
+    approximate kernel pass over the probed lists, one exact re-rank
+    pass (see :func:`_search`). Returns a local frame of (query_id,
+    id, score) — plus ``adc_dist`` without re-rank. Jobs: the query and
+    centroid collects (none for local frames) and the kernel passes."""
+    return _search(
+        codes_df, centroids, codebooks,
+        A.collect_queries(queries, query_id_col, query_vec_col), k, nprobe,
+        rerank_df, rerank_factor, id_col, vec_col, True, query_id_col,
     )
 
 
@@ -499,74 +310,12 @@ def ivfpq_search_batch(
     query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """Batch IVF-PQ: every query probed, ADC-scored and re-ranked in
-    ONE plan — the 100 TB serving shape for a query BATCH.
-
-    The single-target ``ivfpq_search`` builds one JVM literal lookup
-    table per query and collects probe ids per query — N queries means
-    N driver round-trips and N plans. Here:
-
-    1. probe lists via a broadcast queries×centroids window (Q×nprobe
-       rows);
-    2. the probe list broadcasts onto the code table (partition
-       pruning on a centroid-partitioned layout) — each code row pairs
-       only with queries that probed its list;
-    3. ADC inside ``mapInPandas``: per Arrow batch, group by query,
-       build the m×2^nbits table ONCE per query with vectorized numpy,
-       then gather-sum all that query's codes in one shot. Tables
-       can't be JVM literals here because they differ per query row —
-       this is the one justified Python hop, Arrow-batched, O(rows)
-       work;
-    4. per-query shortlist window (k×rerank_factor), exact-cosine
-       re-rank against the full-precision table, final top-k window.
-    """
-    books = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    m = len(books)
-    sub = books[0].shape[1]
-
-    q = queries.select(
-        F.col(query_id_col).cast("long").alias("__qid"),
-        F.col(query_vec_col).cast("array<double>").alias("__qvec"),
-    )
-    probes = _batch_probes(q, centroids, nprobe)
-    cand = codes_df.join(F.broadcast(probes), "centroid_id").select(
-        "__qid", "__qvec", F.col(id_col).cast("long").alias("__vid"), "codes"
-    )
-
-    def _adc(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            parts = []
-            for qid, grp in pdf.groupby("__qid"):
-                qv = np.asarray(grp["__qvec"].iloc[0], dtype=np.float64)
-                table = np.stack(
-                    [
-                        ((b - qv[j * sub : (j + 1) * sub][None, :]) ** 2).sum(
-                            axis=1
-                        )
-                        for j, b in enumerate(books)
-                    ]
-                )
-                codes = np.stack(grp["codes"].to_list()).astype(np.int64)
-                dist = table[np.arange(m)[None, :], codes].sum(axis=1)
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "__qid": qid,
-                            "__vid": grp["__vid"].to_numpy(),
-                            "adc_dist": dist,
-                        }
-                    )
-                )
-            yield pd.concat(parts, ignore_index=True)
-
-    scored = cand.mapInPandas(
-        _adc, schema="__qid long, __vid long, adc_dist double"
-    )
-    return _batch_finish(
-        scored, q, rerank_df, k, rerank_factor, id_col, vec_col, query_id_col
+    two kernel passes — the serving shape for a query batch; returns
+    what :func:`ivfadc_search_batch` returns, over raw-vector codes."""
+    return _search(
+        codes_df, centroids, codebooks,
+        A.collect_queries(queries, query_id_col, query_vec_col), k, nprobe,
+        rerank_df, rerank_factor, id_col, vec_col, qid_col=query_id_col,
     )
 
 
@@ -582,7 +331,9 @@ def ivfpq_search(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF-PQ: coarse probe pruning, then ADC, then exact re-rank.
+    """IVF-PQ: coarse probe pruning, then ADC, then exact re-rank —
+    :func:`ivfpq_search_batch` with one query, returning
+    :func:`search_adc`'s columns.
 
     ``codes_df`` is the built index — (id, centroid_id, codes) — ideally
     materialized partitioned by centroid_id (ann.build_ivf_layout shape)
@@ -594,34 +345,7 @@ def ivfpq_search(
     100 TB the only full-corpus costs are build-time one-pass assign
     and encode.
     """
-    t = V.literal_vector([float(x) for x in target])
-    probe_ids = [
-        r["centroid_id"]
-        for r in centroids.withColumn("__d", V.l2_distance("centroid", t))
-        .orderBy(F.asc("__d"), F.asc("centroid_id"))
-        .limit(nprobe)
-        .collect()
-    ]
-    pruned = codes_df.filter(F.col("centroid_id").isin(probe_ids))
-    scored = pruned.select(
-        F.col(id_col),
-        adc_score("codes", adc_table(target, codebooks)).alias("adc_dist"),
-    )
-    if rerank_df is None:
-        # Stable contract: `score` = -adc_dist (higher is better), so
-        # callers select the same column whether or not re-rank is on.
-        return (
-            scored.orderBy(F.asc("adc_dist"), F.asc(id_col))
-            .limit(k)
-            .withColumn("score", -F.col("adc_dist"))
-        )
-    cand = scored.orderBy(F.asc("adc_dist"), F.asc(id_col)).limit(
-        k * rerank_factor
-    )
-    return (
-        rerank_df.join(F.broadcast(cand), id_col)
-        .withColumn("score", F.round(V.cosine(vec_col, t), 7))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-        .select(id_col, "score")
+    return _search(
+        codes_df, centroids, codebooks, A.one_query(target), k, nprobe,
+        rerank_df, rerank_factor, id_col, vec_col,
     )

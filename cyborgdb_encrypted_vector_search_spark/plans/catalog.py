@@ -1813,11 +1813,12 @@ def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_lsh_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch multiprobe LSH: 10 query vectors probed and ranked in ONE
-    declarative plan (operators/ann.lsh_search_batch) — the Q×9
-    (query, bucket) probe list broadcasts and prunes the bucketed
-    corpus in a single hash join; exact unit-cosine + per-query
-    WindowGroupLimit top-k. Deterministic (seeded planes, id
-    tie-breaks), so fully value-hashed against DuckDB."""
+    kernel job (operators/ann.lsh_search_batch) — each query's 9 probe
+    buckets are picked on the driver, the bucketed corpus is filtered
+    to their union, and one mapInArrow stage scores each row by exact
+    unit cosine only against the queries that probed its bucket; the
+    driver merges the per-partition top-k. Deterministic (seeded
+    planes, id tie-breaks), so fully value-hashed against DuckDB."""
     from cyborgdb_encrypted_vector_search_spark.sources.registry import lsh_index
 
     bucketed = lsh_index(spark, sf_dir).select(
@@ -5269,8 +5270,8 @@ def ann_pq_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization search (Jégou et al., TPAMI 2011): train
     m=8 x 16-centroid codebooks on a deterministic hash-sample, encode
     the corpus to 8 small codes/vector (64x compression), ADC-score
-    with a broadcast lookup table entirely JVM-side, re-rank the top
-    candidates by exact cosine. Gated on recall@10 ≥ 0.6 vs exact kNN
+    the decoded codes on the kernel (‖q − x̂‖² is the ADC distance),
+    re-rank the top candidates by exact cosine. Gated on recall@10 ≥ 0.6 vs exact kNN
     (measured 0.76 at sf0.01); exact side checksummed against DuckDB.
     Top-k shape itself pinned by tests/test_ann_collections.py."""
     from cyborgdb_encrypted_vector_search_spark.operators import pq
@@ -5292,8 +5293,8 @@ def ann_pq_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("ann_ivfpq_search_topk", _recall_oracle_sql("ivfpq_nprobe4"))
 def ann_ivfpq_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ (FAISS IVFADC shape): coarse centroids prune to nprobe
-    inverted lists, PQ/ADC scores only the survivors JVM-side, exact
-    cosine re-ranks the short candidate list. The 100 TB search path:
+    inverted lists, PQ/ADC scores only the survivors on the kernel,
+    exact cosine re-ranks the short candidate list. The 100 TB search path:
     partition pruning x 64x-compressed codes x bounded re-rank.
     Gated on recall@10 ≥ 0.5 vs exact kNN (measured 0.68 at sf0.01);
     exact side checksummed against DuckDB."""
@@ -5323,12 +5324,11 @@ def ann_ivfpq_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("ann_ivfpq_batch_topk", _recall_oracle_sql("ivfpq_batch_nprobe4"))
 def ann_ivfpq_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch IVF-PQ (operators/pq.ivfpq_search_batch): the recall-gate
-    query set probed, ADC-scored and re-ranked in ONE plan — probe
-    lists from a broadcast window, per-query ADC lookup tables built
-    with vectorized numpy inside mapInPandas (tables differ per query,
-    so the single-target JVM-literal trick can't apply), shortlist +
-    exact-cosine re-rank windows. Gated on recall@10 ≥ 0.5 vs exact
-    kNN with the ground truth checksummed against DuckDB."""
+    query set probed on the driver, ADC-scored over the probed lists'
+    decoded codes in one kernel pass and re-ranked by exact cosine in
+    a second — no per-query tables, windows or joins. Gated on
+    recall@10 ≥ 0.5 vs exact kNN with the ground truth checksummed
+    against DuckDB."""
     emb = load(spark, "embeddings", sf_dir).select("vec_id", "embedding")
     n = emb.count()
     qids = sorted({(i * n) // 5 + 1 for i in range(5)})
@@ -6822,9 +6822,9 @@ def ann_ivfadc_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classic IVFADC (Jégou et al., TPAMI 2011 §IV-A): codebooks are
     trained on and codes encode RESIDUALS vs the assigned coarse
     centroid, so the same bit budget quantizes a tighter distribution
-    than raw-vector IVF-PQ; at search each probed list is ADC-scanned
-    against the query residual for that list's centroid (per-probe
-    lookup tables, chained CASE, one codegen'd pass). Gated on
+    than raw-vector IVF-PQ; at search a row decodes to its centroid
+    plus the decoded residual, so one kernel pass over the probed lists
+    gives every (query, list) residual ADC distance. Gated on
     recall@10 ≥ 0.45 vs exact kNN (measured 0.62 at sf0.01); exact
     side checksummed against DuckDB."""
     from cyborgdb_encrypted_vector_search_spark.operators import pq
@@ -6854,11 +6854,10 @@ def ann_ivfadc_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("ann_ivfadc_batch_topk", _recall_oracle_sql("ivfadc_batch_nprobe4"))
 def ann_ivfadc_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch IVFADC (operators/pq.ivfadc_search_batch): the recall-gate
-    query set searched over residual codes in ONE plan — ADC tables
-    differ per (query, probed list), so the mapInPandas stage groups
-    by (query, centroid) and builds each table from the query residual
-    with vectorized numpy. Gated on recall@10 ≥ 0.45 vs exact kNN with
-    the ground truth checksummed against DuckDB."""
+    query set searched over residual codes in two kernel passes — a
+    row decodes to centroid + residual, so no per-(query, list) ADC
+    table exists. Gated on recall@10 ≥ 0.45 vs exact kNN with the
+    ground truth checksummed against DuckDB."""
     emb = load(spark, "embeddings", sf_dir).select("vec_id", "embedding")
     n = emb.count()
     qids = sorted({(i * n) // 5 + 1 for i in range(5)})
@@ -6909,10 +6908,10 @@ def _sq8_parts(spark: SparkSession, sf_dir: str) -> dict:
 
 @query("ann_sq8_search_topk", _recall_oracle_sql("sq8_rerank"))
 def ann_sq8_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar-quantized (SQ8) search, per query: byte codes scored
-    against query-specific literal weights in one codegen fold
-    (operators/quant.sq8_search — the approximate pass reads ONLY the
-    4x-smaller codes column), top oversample*k re-ranked exact. Gated
+    """Scalar-quantized (SQ8) search, per query: byte codes decoded and
+    scored by cosine on the kernel (operators/quant.sq8_search — the
+    approximate pass reads ONLY the 4x-smaller codes column), top
+    oversample*k re-ranked exact. Gated
     on recall@10 ≥ 0.7 vs exact kNN (measured 1.0 at sf0.001-0.01 —
     byte resolution on unit vectors loses almost nothing) with the
     exact side checksummed against DuckDB's brute force."""
@@ -6939,9 +6938,8 @@ def ann_sq8_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("ann_sq8_batch_topk", _recall_oracle_sql("sq8_batch_rerank"))
 def ann_sq8_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch SQ8: all recall-gate queries in ONE corpus pass
-    (operators/quant.sq8_batch_search — decode-once projection +
-    kernel-kNN approximate pass, exact re-rank of the candidate
-    union). Gated on recall@10 ≥ 0.7 vs exact kNN, ground truth
+    (operators/quant.sq8_batch_search — codes decoded inside the kernel
+    pass, exact re-rank of the shortlists by a second pass). Gated on recall@10 ≥ 0.7 vs exact kNN, ground truth
     checksummed against DuckDB."""
     p = _sq8_parts(spark, sf_dir)
     approx = sq8_batch_serve(spark, sf_dir).select(
@@ -6954,8 +6952,8 @@ def ann_sq8_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sq8_batch_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The serving plan of ann_sq8_batch_topk, which gates it: the
-    approximate-pass + re-rank plan alone over the cached pre-built
+    """The serving call of ann_sq8_batch_topk, which gates it: the
+    approximate pass + re-rank alone over the cached pre-built
     byte-code table."""
     from cyborgdb_encrypted_vector_search_spark.operators import quant as _q
 
@@ -7005,23 +7003,10 @@ def ann_ivfsq_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         r["vec_id"]: r["embedding"]
         for r in emb.filter(F.col("vec_id").isin(p["qids"])).collect()
     }
-    # one driver job for ALL five probe lists (r12): the per-query
-    # probe collects were 5 sequential jobs re-deriving the centroid
-    # frame each time — the searches themselves stay per-query (this
-    # gate prices single-query serving; the batch twin is
-    # ann_ivfsq_batch_topk)
-    probe_map = _q.ivfsq_probe_lists(cent, targets, nprobe=4)
     approx = None
     for qid, t in sorted(targets.items()):
         a = _q.ivfsq_search(
-            layout,
-            cent,
-            p["mins"],
-            p["maxs"],
-            t,
-            k=10,
-            nprobe=4,
-            probe_ids=probe_map[qid],
+            layout, cent, p["mins"], p["maxs"], t, k=10, nprobe=4
         ).select(
             F.lit(qid).cast("bigint").alias("qid"),
             F.col("vec_id").cast("bigint").alias("vec_id"),
@@ -7033,12 +7018,11 @@ def ann_ivfsq_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("ann_ivfsq_batch_topk", _recall_oracle_sql("ivfsq_batch_nprobe4"))
 def ann_ivfsq_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch IVF+SQ8 (operators/quant.ivfsq_search_batch): every
-    recall-gate query's probe + quantized scan + exact re-rank as ONE
-    declarative plan — broadcast probe lists hash-join the compressed
-    layout on centroid_id (a code row is scored only against queries
-    that probed its list), approximate-cosine window keeps the
-    shortlist, exact re-rank broadcasts it back. No per-query driver
-    jobs. Gated on recall@10 ≥ 0.5 vs exact kNN, ground truth
+    recall-gate query's probe, quantized scan and exact re-rank in two
+    kernel passes — probe lists picked on the driver prune the
+    compressed layout (a code row is scored only against queries that
+    probed its list), the driver cuts each shortlist, and the re-rank
+    reads only the shortlisted ids of the probed partitions. Gated on recall@10 ≥ 0.5 vs exact kNN, ground truth
     checksummed against DuckDB."""
     p = _sq8_parts(spark, sf_dir)
     approx = ivfsq_batch_serve(spark, sf_dir).select(
@@ -7104,8 +7088,8 @@ def ann_ivfsq_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ivfsq_batch_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The serving plan of ann_ivfsq_batch_topk, which gates it: the
-    one-plan probe + quantized scan + re-rank over the cached layout."""
+    """The serving call of ann_ivfsq_batch_topk, which gates it: probe
+    + quantized scan + re-rank over the cached layout."""
     from cyborgdb_encrypted_vector_search_spark.operators import quant as _q
 
     p = _sq8_parts(spark, sf_dir)

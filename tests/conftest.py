@@ -39,3 +39,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture
+def kernel_frames(monkeypatch):
+    """The kernel frames (``knn.topk_candidates`` results) that the
+    searches called under this fixture build, in call order. A search
+    returns a local frame merged on the driver, so these are where its
+    scans, filters and plan shape show."""
+    from cyborgdb_encrypted_vector_search_spark.operators import knn
+
+    frames = []
+    real = knn.topk_candidates
+
+    def spy(*args, **kwargs):
+        frames.append(real(*args, **kwargs))
+        return frames[-1]
+
+    monkeypatch.setattr(knn, "topk_candidates", spy)
+    return frames

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import re
 import tempfile
 
 import pytest
@@ -324,42 +325,49 @@ def test_pq_encode_deterministic_and_in_range(spark, sf_dir):
 
 
 def test_pq_adc_matches_numpy(spark, sf_dir):
+    """The PQ decode hook is ADC: ‖q − decode(codes)‖² equals the numpy
+    ADC table sum (the m x 2^nbits table of squared subvector
+    distances, gathered by code) to 1e-9 — for raw-vector codes, and
+    for IVFADC residual codes, whose decode adds the row's centroid so
+    that ‖q − x̂‖² = ‖(q − c) − r̂‖². The searches' ``adc_dist`` is that
+    same distance."""
     import numpy as np
 
     pq, emb, target, books = _pq_setup(spark, sf_dir)
-    codes = pq.encode(emb, books)
-    table = pq.adc_table(target, books)
-    got = {
-        r["vec_id"]: r["d"]
-        for r in codes.select(
-            "vec_id", F.round(pq.adc_score("codes", table), 6).alias("d")
-        )
-        .orderBy("vec_id")
-        .limit(10)
-        .collect()
-    }
-    raw = {r["vec_id"]: r["codes"] for r in codes.orderBy("vec_id").limit(10).collect()}
-    for vid, cs in raw.items():
-        expect = round(sum(table[j][cs[j]] for j in range(8)), 6)
-        assert abs(got[vid] - expect) < 1e-6
-
-
-def test_pq_adc_scan_stays_jvm_side(spark, sf_dir):
-    pq, emb, target, books = _pq_setup(spark, sf_dir)
-    codes = pq.encode(emb, books).persist()
-    codes.count()
-    from cyborgdb_encrypted_vector_search_spark.plans import explain as X
-
-    scored = pq.search_adc(codes, books, target, k=3)
-    plan = X.physical_plan(scored)
-    # scoring + top-k over the materialized code table: pure JVM
-    assert "TakeOrderedAndProject" in plan
-    # everything executed at query time (above the cached code table —
-    # the text below InMemoryTableScan is the cached relation's build
-    # lineage, which ran once at index time) is Python-free
-    query_time = plan[: plan.index("InMemoryTableScan")]
-    assert "EvalPython" not in query_time
-    codes.unpersist()
+    q = np.asarray(target, dtype=np.float64)
+    cent = ann.kmeans_centroids(emb, k=4, seed=1)
+    cids = np.array([r["centroid_id"] for r in cent.orderBy("centroid_id").collect()])
+    cmat = np.array([r["centroid"] for r in cent.orderBy("centroid_id").collect()])
+    residuals = pq.residual_frame(emb, cent)
+    rbooks = pq.train_codebooks(residuals, vec_col="residual", m=8, nbits=4, iters=5)
+    cases = [
+        (pq.encode(emb, books), books, None, lambda t: pq.search_adc(
+            t, books, target, k=10)),
+        (
+            pq.encode(residuals, rbooks, vec_col="residual", keep_cols=("centroid_id",)),
+            rbooks,
+            (cids, cmat),
+            lambda t: pq.ivfadc_search(t, cent, rbooks, target, k=10, nprobe=4),
+        ),
+    ]
+    for codes, bks, cents, search in cases:
+        hits = search(codes).collect()
+        assert len(hits) == 10
+        assert all(r["score"] == -r["adc_dist"] for r in hits)
+        adc = {r["vec_id"]: r["adc_dist"] for r in hits}
+        rows = codes.filter(F.col("vec_id").isin(list(adc))).toArrow()
+        x, ok = knn.decode_codes(rows, 64, np.stack(bks), centroids=cents)
+        assert ok.all()
+        got = ((q - x) ** 2).sum(axis=1)
+        cid = rows.column("centroid_id").to_numpy() if cents else None
+        for i, (vid, cs) in enumerate(
+            zip(rows.column("vec_id").to_pylist(), rows.column("codes").to_pylist())
+        ):
+            r = q if cents is None else q - cmat[np.searchsorted(cids, cid[i])]
+            table = [((b - r[j * 8 : (j + 1) * 8]) ** 2).sum(axis=1) for j, b in enumerate(bks)]
+            want = sum(table[j][c] for j, c in enumerate(cs))
+            assert abs(got[i] - want) < 1e-9
+            assert abs(adc[vid] - want) < 1e-9
 
 
 def test_pq_rerank_returns_true_scores_and_recalls(spark, sf_dir):
@@ -775,7 +783,7 @@ def test_collection_query_encrypted_matches_plaintext(spark, tmp_path):
     )
 
 
-def test_append_to_ivf_layout_equals_rebuild(spark, sf_dir, tmp_path):
+def test_append_to_ivf_layout_equals_rebuild(spark, sf_dir, tmp_path, kernel_frames):
     """Incremental IVF ingest (append_to_ivf_layout) must be
     indistinguishable from a from-scratch rebuild: same (vec_id,
     centroid_id) assignment set, and probe queries still read the
@@ -809,8 +817,8 @@ def test_append_to_ivf_layout_equals_rebuild(spark, sf_dir, tmp_path):
     # probe search over the appended layout still partition-prunes
     target = emb.filter(F.col("vec_id") == 42).collect()[0]["embedding"]
     res = ann.ivf_search(spark.read.parquet(incr), cent, target, k=3, nprobe=2)
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
+    plan = kernel_frames[-1]._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PartitionFilters: \[[^\]]*centroid_id", plan), plan
     got = res.collect()
     want = ann.ivf_search(spark.read.parquet(full), cent, target, k=3, nprobe=2).collect()
     assert [(r["vec_id"], round(r["score"], 9)) for r in got] == [
@@ -889,7 +897,9 @@ def test_collection_query_where_filters_before_scoring(spark, tmp_path):
     )
 
 
-def test_compact_ivf_layout_preserves_content_and_prunes(spark, sf_dir, tmp_path):
+def test_compact_ivf_layout_preserves_content_and_prunes(
+    spark, sf_dir, tmp_path, kernel_frames
+):
     """Compaction after append-ingest: same rows, at most max_tasks
     files per centroid directory, no shuffle in the compaction job,
     and probe search over the compacted layout still partition-prunes
@@ -939,7 +949,8 @@ def test_compact_ivf_layout_preserves_content_and_prunes(spark, sf_dir, tmp_path
     assert "Exchange" not in plan
     target = emb.filter(F.col("vec_id") == 42).collect()[0]["embedding"]
     a = ann.ivf_search(spark.read.parquet(compacted), cent, target, k=3, nprobe=2)
-    assert "PartitionFilters" in a._jdf.queryExecution().executedPlan().toString()
+    plan = kernel_frames[-1]._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PartitionFilters: \[[^\]]*centroid_id", plan), plan
     b = ann.ivf_search(spark.read.parquet(grown), cent, target, k=3, nprobe=2)
     assert [(r["vec_id"], round(r["score"], 9)) for r in a.collect()] == [
         (r["vec_id"], round(r["score"], 9)) for r in b.collect()
@@ -952,7 +963,10 @@ def test_compact_ivf_layout_preserves_content_and_prunes(spark, sf_dir, tmp_path
 
 def test_sq8_encode_reconstruction_error_bounded(spark, sf_dir):
     """Decode(encode(x)) is within half a quantization step per
-    dimension of the unit vector — the SQ8 contract."""
+    dimension of the unit vector — the SQ8 contract, read through the
+    decode hook the searches score."""
+    import numpy as np
+
     from cyborgdb_encrypted_vector_search_spark.functions import vector as V
     from cyborgdb_encrypted_vector_search_spark.operators import quant as Q
 
@@ -961,33 +975,24 @@ def test_sq8_encode_reconstruction_error_bounded(spark, sf_dir):
     )
     mins, maxs = Q.sq8_train(emb)
     scales = Q._scales(mins, maxs)
-    enc = Q.sq8_encode(emb, mins, maxs)
-    dec = enc.select(
-        "vec_id",
-        V.l2_normalize("embedding").alias("unit"),
-        Q.sq8_decode_expr("codes", mins, maxs).alias("approx"),
-    )
-    err = dec.select(
-        F.max(
-            F.aggregate(
-                F.zip_with(
-                    "unit", "approx", lambda a, b: F.abs(a - b).cast("double")
-                ),
-                F.lit(0.0),
-                lambda acc, x: F.greatest(acc, x),
-            )
-        ).alias("max_abs_err")
-    ).collect()[0]["max_abs_err"]
-    # worst case: half a step (+ float32 slack) on the widest dimension
-    assert err <= max(scales) / 2 + 1e-4
+    rows = Q.sq8_encode(emb, mins, maxs).select(
+        "codes", V.l2_normalize("embedding").alias("unit")
+    ).toArrow()
+    approx, ok = Q._sq8_decoder(mins, maxs, "codes")(rows, 64)
+    assert ok.all()
+    unit = np.array(rows.column("unit").to_pylist())
+    # worst case: half a step (+ rounding slack) on the widest dimension
+    assert np.abs(unit - approx).max() <= max(scales) / 2 + 1e-9
 
 
-def test_sq8_search_recall_and_plan_shape(spark, sf_dir):
-    """SQ8 top-k matches exact kNN at small scale, the approximate
-    pass reads only (vec_id, codes) — column pruning is the 4x IO win
-    — and the global candidate cut plans as TakeOrderedAndProject."""
+def test_sq8_search_recall_and_plan_shape(spark, sf_dir, kernel_frames):
+    """SQ8 top-k matches exact kNN at small scale; over a stored code
+    table the approximate pass reads only (vec_id, codes) — column
+    pruning is the 4x IO win — and the re-rank pass pushes the
+    shortlist ids into the full-precision scan."""
     from cyborgdb_encrypted_vector_search_spark.operators import knn
     from cyborgdb_encrypted_vector_search_spark.operators import quant as Q
+    from cyborgdb_encrypted_vector_search_spark.plans import explain as X
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
@@ -1006,36 +1011,23 @@ def test_sq8_search_recall_and_plan_shape(spark, sf_dir):
     ]
     assert len(set(got) & set(want)) >= 9  # recall@10 >= 0.9 at sf0.001
 
-    # persisted-code-table read (the serving shape), two pinned plans:
+    # persisted-code-table read (the serving shape), two pinned passes
     enc.write.mode("overwrite").parquet("/tmp/sq8_codes_test")
     stored = spark.read.parquet("/tmp/sq8_codes_test")
-    # (1) the approximate pass reads ONLY (id, codes) — the 4x IO win —
-    # and cuts globally via TakeOrderedAndProject (same expression
-    # shape sq8_search stage 1 builds before collecting the shortlist)
-    stage1 = (
-        stored.select("vec_id", "codes")
-        .orderBy(F.desc(F.size("codes")), F.asc("vec_id"))
-        .limit(80)
-    )
-    p1 = stage1._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in p1
-    s1_scans = [ln for ln in p1.splitlines() if "FileScan parquet" in ln]
-    assert s1_scans and all(
-        "embedding" not in ln.split("ReadSchema")[-1] for ln in s1_scans
-    )
-    # (2) the re-rank pass pushes the shortlist ids INTO the scan
-    # (PushedFilters In/INSET) instead of streaming the embedding
-    # column past a join — O(k) IO, not O(N)
+    del kernel_frames[:]
     res2 = Q.sq8_search(stored, mins, maxs, t, k=10, oversample=8)
-    p2 = res2._jdf.queryExecution().executedPlan().toString()
+    approx, rerank = kernel_frames
+    # (1) the approximate pass reads ONLY (id, codes)
+    assert X.scan_columns(approx) == ["vec_id", "codes"]
+    # (2) the re-rank pass pushes the shortlist ids INTO the scan
+    # (PushedFilters In) instead of streaming the embedding column
+    # past a join — O(k) IO, not O(N)
     rerank_scans = [
         ln
-        for ln in p2.splitlines()
+        for ln in X.physical_plan(rerank).splitlines()
         if "FileScan parquet" in ln and "embedding" in ln.split("ReadSchema")[-1]
     ]
-    assert rerank_scans and any(
-        ("In(vec_id" in ln) or ("INSET" in ln) for ln in rerank_scans
-    )
+    assert rerank_scans and all("In(vec_id" in ln for ln in rerank_scans)
     assert [r["vec_id"] for r in res2.collect()] == got
 
 
@@ -1182,7 +1174,9 @@ def test_chroma_api_surface(spark, tmp_path):
     assert list_collections(base) == ["второй"]
 
 
-def test_ivfsq_batch_matches_single_and_prunes(spark, sf_dir, tmp_path):
+def test_ivfsq_batch_matches_single_and_prunes(
+    spark, sf_dir, tmp_path, kernel_frames
+):
     from cyborgdb_encrypted_vector_search_spark.operators import quant as Q
     from cyborgdb_encrypted_vector_search_spark.operators import ann
 
@@ -1214,14 +1208,14 @@ def test_ivfsq_batch_matches_single_and_prunes(spark, sf_dir, tmp_path):
         )
         assert got[r["vec_id"]] == [x["vec_id"] for x in single.collect()]
 
-    # the single-query path partition-prunes the materialized layout
-    plan = (
-        Q.ivfsq_search(layout, cent, mins, maxs, rows[0]["embedding"], k=5, nprobe=2)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PartitionFilters" in plan
+    # the single-query path partition-prunes the materialized layout in
+    # both its passes
+    del kernel_frames[:]
+    Q.ivfsq_search(layout, cent, mins, maxs, rows[0]["embedding"], k=5, nprobe=2)
+    assert len(kernel_frames) == 2
+    for df in kernel_frames:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert re.search(r"PartitionFilters: \[[^\]]*centroid_id", plan), plan
 
 
 def test_ivfsq_incremental_append_equals_rebuild(spark, sf_dir, tmp_path):

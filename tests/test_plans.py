@@ -201,46 +201,177 @@ def test_decontaminate_broadcasts_benchmark_shingles(spark, sf_dir, cat):
     assert "SortMergeJoin" not in plan
 
 
-def test_batch_ann_serving_plans_broadcast_probes(spark, sf_dir, cat):
-    """The batch ANN serving paths must keep the corpus un-shuffled.
-    LSH: probe lists broadcast onto the index (one BroadcastHashJoin),
-    the only hash exchanges carry per-query window partials, and no
-    SortMergeJoin appears anywhere in the serving plan. IVF: the
-    gate's result is a local frame merged on the driver, so its kernel
-    stage is checked instead — the index is filtered to the probed
-    lists and scored in one mapInArrow stage, with no exchange and no
-    join of any kind."""
+@pytest.fixture(scope="module")
+def ann_index(spark, sf_dir, tmp_path_factory):
+    """Every ANN family's index over the smoke embeddings, written as
+    parquet (so scans show their pushed filters), with local (Arrow)
+    query and centroid frames, which cost no job to read."""
+    import pyarrow as pa
+
+    from cyborgdb_encrypted_vector_search_spark.functions import vector as V
     from cyborgdb_encrypted_vector_search_spark.operators import ann as A
-    from cyborgdb_encrypted_vector_search_spark.plans.catalog import (
-        _fixed_centroids,
-    )
-    from cyborgdb_encrypted_vector_search_spark.sources.registry import (
-        ivf_index,
-    )
+    from cyborgdb_encrypted_vector_search_spark.operators import pq as P
+    from cyborgdb_encrypted_vector_search_spark.operators import quant as Q
 
-    plan = X.physical_plan(cat["ann_lsh_batch_topk"].fn(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert "WindowGroupLimit" in plan
+    root = tmp_path_factory.mktemp("ann_index")
+    emb = load(spark, "embeddings", sf_dir).select("vec_id", "embedding")
+    rows = emb.orderBy("vec_id").limit(8).collect()
+    cent = spark.createDataFrame(pa.table({
+        "centroid_id": pa.array(range(8), pa.int32()),
+        "centroid": pa.array([r[1] for r in rows], pa.list_(pa.float64())),
+    }))
+    qvecs = [r[1] for r in emb.filter(F.col("vec_id").isin(3, 57, 201)).collect()]
 
-    emb = load(spark, "embeddings", sf_dir)
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    kernel = A.ivf_candidates(
-        queries, ivf_index(spark, sf_dir), _fixed_centroids(emb), k=3, nprobe=2
-    )
-    plan = X.physical_plan(kernel)
-    assert re.search(r"centroid_id#\d+ IN \(", plan), plan
-    assert "MapInArrow" in plan, plan
-    for node in (
-        "Exchange",
-        "SortMergeJoin",
-        "CartesianProduct",
-        "BroadcastNestedLoopJoin",
-    ):
-        assert node not in plan, (node, plan)
+    def local(**cols):
+        return spark.createDataFrame(pa.table(cols))
+
+    def write(df, name, part=None):
+        w = df.write.mode("overwrite")
+        (w.partitionBy(part) if part else w).parquet(str(root / name))
+        return spark.read.parquet(str(root / name))
+
+    A.build_ivf_layout(emb, cent, str(root / "ivf"))
+    ivf = spark.read.parquet(str(root / "ivf"))
+    lsh = write(A.with_lsh_buckets(V.with_unit_vectors(emb, "embedding")), "lsh")
+    lq = lsh.filter(F.col("vec_id").isin(3, 57, 201)).collect()
+    mins, maxs = Q.sq8_train(emb)
+    Q.build_ivfsq_layout(emb, cent, mins, maxs, str(root / "ivfsq"))
+    books = P.train_codebooks(emb, m=8, nbits=4, iters=3)
+    resid = P.residual_frame(emb, cent)
+    rbooks = P.train_codebooks(resid, vec_col="residual", m=8, nbits=4, iters=3)
+    return {
+        "emb": write(emb, "emb"),
+        "cent": cent,
+        "counts": local(
+            centroid_id=pa.array(range(8), pa.int32()),
+            n=pa.array(
+                [r[1] for r in ivf.groupBy("centroid_id").count().orderBy("centroid_id").collect()],
+                pa.int64(),
+            ),
+        ),
+        "target": qvecs[0],
+        "queries": local(query_id=pa.array([3, 57, 201], pa.int64()), query_vec=qvecs),
+        "sq_queries": local(qid=pa.array([3, 57, 201], pa.int64()), qvec=qvecs),
+        "ivf": ivf,
+        "lsh": lsh,
+        "lsh_queries": local(
+            query_id=pa.array([r["vec_id"] for r in lq], pa.int64()),
+            unit=[r["unit"] for r in lq],
+            vnorm=[r["vnorm"] for r in lq],
+            bucket=pa.array([r["bucket"] for r in lq], pa.int64()),
+        ),
+        "lsh_target": lq[0],
+        "lsh_bucket": local(bucket=pa.array([lq[0]["bucket"]], pa.int64())),
+        "mins": mins,
+        "maxs": maxs,
+        "sq8": write(Q.sq8_encode(emb, mins, maxs), "sq8"),
+        "ivfsq": spark.read.parquet(str(root / "ivfsq")),
+        "books": books,
+        "rbooks": rbooks,
+        "pq": write(P.encode(emb, books), "pq"),
+        "ivfpq": write(
+            P.encode(ivf, books, keep_cols=("centroid_id",)), "ivfpq", "centroid_id"
+        ),
+        "ivfadc": write(
+            P.encode(resid, rbooks, vec_col="residual", keep_cols=("centroid_id",)),
+            "ivfadc",
+            "centroid_id",
+        ),
+    }
+
+
+def _searches():
+    from cyborgdb_encrypted_vector_search_spark.operators import ann as A
+    from cyborgdb_encrypted_vector_search_spark.operators import pq as P
+    from cyborgdb_encrypted_vector_search_spark.operators import quant as Q
+
+    return {
+        "ivf_search": lambda x: A.ivf_search(x["ivf"], x["cent"], x["target"], k=3, nprobe=2),
+        "ivf_search_adaptive": lambda x: A.ivf_search_adaptive(
+            x["ivf"], x["cent"], x["target"], k=3, counts=x["counts"]
+        ),
+        "ivf_search_batch": lambda x: A.ivf_search_batch(
+            x["queries"], x["ivf"], x["cent"], k=3, nprobe=2
+        ),
+        "lsh_probe_search": lambda x: A.lsh_probe_search(
+            x["lsh"], x["lsh_target"]["unit"], x["lsh_bucket"], k=3
+        ),
+        "lsh_search_batch": lambda x: A.lsh_search_batch(x["lsh"], x["lsh_queries"], k=3),
+        "sq8_search": lambda x: Q.sq8_search(x["sq8"], x["mins"], x["maxs"], x["target"], k=5),
+        "sq8_batch_search": lambda x: Q.sq8_batch_search(
+            x["sq8"], x["mins"], x["maxs"], x["sq_queries"], k=5
+        ),
+        "ivfsq_search": lambda x: Q.ivfsq_search(
+            x["ivfsq"], x["cent"], x["mins"], x["maxs"], x["target"], k=5, nprobe=2
+        ),
+        "ivfsq_search_batch": lambda x: Q.ivfsq_search_batch(
+            x["ivfsq"], x["cent"], x["mins"], x["maxs"], x["sq_queries"], k=5, nprobe=2
+        ),
+        "search_adc": lambda x: P.search_adc(
+            x["pq"], x["books"], x["target"], k=5, rerank_df=x["emb"]
+        ),
+        "ivfpq_search": lambda x: P.ivfpq_search(
+            x["ivfpq"], x["cent"], x["books"], x["target"], k=5, rerank_df=x["emb"]
+        ),
+        "ivfpq_search_batch": lambda x: P.ivfpq_search_batch(
+            x["ivfpq"], x["cent"], x["books"], x["queries"], k=5, rerank_df=x["emb"]
+        ),
+        "ivfadc_search": lambda x: P.ivfadc_search(
+            x["ivfadc"], x["cent"], x["rbooks"], x["target"], k=5, rerank_df=x["emb"]
+        ),
+        "ivfadc_search_batch": lambda x: P.ivfadc_search_batch(
+            x["ivfadc"], x["cent"], x["rbooks"], x["queries"], k=5, rerank_df=x["emb"]
+        ),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_searches()))
+def test_ann_search_plan_shape(spark, ann_index, kernel_frames, name):
+    """Every ANN search runs the one kernel: at most two narrow
+    ``mapInArrow`` passes (approximate, then the exact re-rank), merged
+    on the driver — no exchange, join, cross product or rank window.
+    The quantized families' approximate pass reads only id, codes and
+    centroid_id; the re-rank pass pushes the shortlist ``id IN`` into
+    its scan; an IVF pass keeps only the probed ``centroid_id``
+    partitions. The call runs one job per pass, as its queries and
+    centroids are local frames."""
+    sc = spark.sparkContext
+    group = f"ann_plan_{name}"
+    sc.setJobGroup(group, group)
+    try:
+        res = _searches()[name](ann_index).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res
+    quantized = name.startswith(("sq8", "ivfsq", "search_adc", "ivfpq", "ivfadc"))
+    assert len(kernel_frames) == (2 if quantized else 1)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    for df in kernel_frames:
+        plan = X.physical_plan(df)
+        assert "MapInArrow" in plan, plan
+        for node in (
+            "Exchange",
+            "SortMergeJoin",
+            "CartesianProduct",
+            "BroadcastNestedLoopJoin",
+            "Window",
+        ):
+            assert node not in plan, (node, plan)
+    # the PQ re-rank reads the flat full-precision frame, not the layout
+    pruned = kernel_frames[:1] if name.startswith(("ivfpq", "ivfadc")) else kernel_frames
+    for df in pruned if name.startswith("ivf") else ():
+        plan = X.physical_plan(df)
+        assert re.search(r"PartitionFilters: \[[^\]]*centroid_id", plan), plan
+    if quantized:
+        approx, rerank = kernel_frames
+        assert set(X.scan_columns(approx)) <= {"vec_id", "codes", "centroid_id"}
+        pushed = [
+            ln for ln in X.physical_plan(rerank).splitlines() if "FileScan" in ln
+        ]
+        assert pushed and all(
+            re.search(r"PushedFilters: \[[^\]]*In\(vec_id", ln) for ln in pushed
+        ), pushed
+        assert "embedding" in X.scan_columns(rerank)
 
 
 def test_sketch_gate_predicates_recomputed_from_raw_frame(spark, sf_dir):
@@ -268,10 +399,13 @@ def test_sketch_gate_predicates_recomputed_from_raw_frame(spark, sf_dir):
         assert want_hll and want_p50, et
 
 
-def test_ivf_layout_scan_prunes_to_probed_partitions(spark, sf_dir, cat):
+def test_ivf_layout_scan_prunes_to_probed_partitions(
+    spark, sf_dir, cat, kernel_frames
+):
     """The materialized IVF layout must behave as an inverted file: the
     probe's centroid IN-filter appears as a PartitionFilter on the
-    parquet scan (pruned before any file IO) listing exactly the
+    kernel pass's parquet scan (pruned before any file IO) listing
+    exactly the
     nprobe=2 probed lists, while the layout on disk holds all 8."""
     import glob
     import hashlib
@@ -279,7 +413,8 @@ def test_ivf_layout_scan_prunes_to_probed_partitions(spark, sf_dir, cat):
     import re
     import tempfile
 
-    plan = X.physical_plan(cat["ann_ivf_layout_search"].fn(spark, sf_dir))
+    cat["ann_ivf_layout_search"].fn(spark, sf_dir)
+    plan = X.physical_plan(kernel_frames[-1])
     m = re.search(
         r"PartitionFilters: \[[^\]]*centroid_id[^\]]*?IN \(([^)]*)\)", plan
     )

@@ -7,7 +7,6 @@ wrong #4)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 

@@ -7,9 +7,8 @@ Two families:
   SimHash / fingerprint results can be differentially tested against
   the DuckDB oracle.
 - **Fast-path hashes** on ``xxhash64`` (JVM intrinsic, no hex-string
-  materialization) — the variant you run at 100 TB. Same algorithm
-  shape, different hash primitive; recall/grouping behavior is
-  statistically equivalent.
+  materialization) — the 8-byte fingerprint you run at 100 TB. Same
+  grouping behavior, different hash primitive.
 
 All pure column expressions — no UDFs.
 """
@@ -180,41 +179,3 @@ def sql_hamming32(a: str, b: str) -> str:
 def fingerprint_xxhash(col: Column | str) -> Column:
     """Fast-path 64-bit fingerprint (cluster-scale; not oracle-portable)."""
     return F.xxhash64(normalize_text(col))
-
-
-def minhash_xxhash(shingles: Column, num_hashes: int = 16) -> Column:
-    """Fast-path MinHash: array<long> via seeded xxhash64 — the variant to
-    run at 100 TB (8 bytes/element vs 32-char hex strings).
-
-    Per-function seeds are splitmix-spread (golden-ratio multiples)
-    rather than 0..n-1: with sequential small seeds the n families are
-    one avalanche apart, and on small shingle vocabularies (like the
-    synthetic corpus) adjacent families occasionally share a globally
-    common argmin shingle, which turns a band into one giant candidate
-    bucket. Spread seeds make the family draws independent."""
-    def _h(i):
-        seed = (i * 0x9E3779B97F4A7C15 + 0x9E3779B9) % (1 << 63)
-        return lambda s: F.xxhash64(s, F.lit(seed))
-
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, _h(i)))
-            for i in range(num_hashes)
-        ]
-    )
-
-
-def minhash_bands_xxhash(signature: Column, num_bands: int, rows_per_band: int) -> Column:
-    """Fast-path LSH band keys as array<long>: each band is the xxhash64
-    of its signature slice (seeded by band index), so the band-join key
-    is 8 bytes instead of a ``b:h1|h2`` string — smaller shuffle, faster
-    hash-join probe at cluster scale."""
-    return F.array(
-        *[
-            F.xxhash64(
-                F.slice(signature, b * rows_per_band + 1, rows_per_band),
-                F.lit(b),
-            )
-            for b in range(num_bands)
-        ]
-    )

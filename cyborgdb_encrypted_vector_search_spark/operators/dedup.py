@@ -11,9 +11,13 @@ large-corpus family:
 
 Scale notes: every variant is banding/bucketing first, pairwise second —
 the pairwise verification only ever runs on same-bucket candidates, so
-cost is O(corpus) + O(candidate pairs), never O(n^2). The md5 hash
-family keeps DuckDB-oracle parity; swap ``functions.hashing.
-minhash_xxhash`` in at cluster scale.
+cost is O(corpus) + O(candidate pairs), never O(n^2). MinHash uses
+the md5 hash family, which keeps DuckDB-oracle parity.
+
+Pairs become duplicate clusters through :func:`connected_components`
+(every node labeled with the smallest id it can reach): a driver
+union-find under ``_DRIVER_CLOSURE_CAP`` edges, the distributed
+large-star/small-star contraction above it.
 """
 
 from __future__ import annotations
@@ -202,143 +206,40 @@ def connected_components(
     pairs: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_iter: int = 50,
 ) -> DataFrame:
-    """Connected components of the duplicate-pair graph by iterative
-    min-label propagation: each node's component id converges to the
-    smallest node id reachable from it. Returns (node, component).
+    """Connected components of the duplicate-pair graph: every node of
+    ``pairs`` labeled with the smallest node id reachable from it.
+    Returns (node, component).
 
     This is the step that turns pairwise near-dup evidence (LSH bands,
     SimHash blocks) into duplicate CLUSTERS — pairs alone under-remove:
     A~B and B~C must collapse to one surviving doc even when A~C was
     never emitted as a pair.
 
-    Scale shape: per round, one shuffle join (edges ⋈ labels on node)
-    plus one min-aggregate — both partitioned on the node id, so AQE
-    coalesces them onto the same exchange. Rounds = label eccentricity
-    (bounded by graph diameter); duplicate CLUSTERS are near-cliques
-    (2-4 rounds), but band evidence CHAINS across perturbation
-    generations — the sf0.1 LSH pair graph measures 24 rounds through a
-    4,605-node chained component, which is why the default cap is 50,
-    not the near-clique 25 (converged loops break early, so slack is
-    free). For adversarial long-chain graphs use
-    connected_components_star below — the large-star/small-star
-    contraction (Kiveris et al., SoCC'14), same (node, component)
-    contract, O(log n) rounds (a round cap here would MISLABEL a chain
-    longer than it; the property suite pins both).
-    Each round's labels are localCheckpoint-ed: iterative
-    self-referencing plans otherwise grow multiplicatively and blow up
-    the driver (analysis + task serialization) long before the data
-    does — the checkpoint truncates lineage so every round pays only
-    its own join, on a 1 GB driver or a 1000-executor cluster alike.
+    One probe job decides the placement: ``pairs.select(src, dst)
+    .limit(_DRIVER_CLOSURE_CAP + 1).toArrow()``. At or under the cap the
+    collected edges ARE the closure input — a union-find closes them on
+    the driver and the labels come back as a local Arrow frame, whose
+    exact size statistics let a consumer's label join broadcast it
+    under the session's autoBroadcastJoinThreshold. Over the cap the
+    distributed large-star/small-star contraction
+    (:func:`connected_components_star`) runs over ``pairs``; persist a
+    pair frame that is expensive to recompute, as the probe and the
+    contraction both read it.
     """
-    # Undirected: propagate along both edge directions.
-    fwd = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    rev = pairs.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    edges = fwd.unionByName(rev).distinct().persist()
-    labels = (
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .persist()
+    edges = pairs.select(src, dst).limit(_DRIVER_CLOSURE_CAP + 1).toArrow()
+    if edges.num_rows > _DRIVER_CLOSURE_CAP:
+        return connected_components_star(pairs, src, dst)
+    # the edges arrive through Arrow as two plain columns, not as one
+    # Python Row per edge; the labels keep the edges' id type
+    t = edges.schema.field(0).type
+    nodes, comps = _driver_closure_rows(
+        edges.column(0).to_pylist(), edges.column(1).to_pylist()
     )
-    # Empty-graph short-circuit: one round of joins/aggregates over
-    # empty frames still launches every stage (~4s of pure scheduling
-    # floor in local mode, measured via scan_clusters' empty core
-    # subgraph at sf0.1) — the count on the just-persisted edge set is
-    # far cheaper than the no-op round it avoids.
-    if edges.count() == 0:
-        edges.unpersist()
-        return labels.select("node", "component")
-    # Convergence probe: labels only ever DECREASE (min-aggregate of a
-    # superset), so Σ component is strictly monotone until the fixed
-    # point — one aggregate per round on the freshly checkpointed
-    # labels replaces the old join-old-vs-new probe (one exchange
-    # cheaper per round). Decimal sum: exact, overflow-free for any id
-    # range. INTEGRAL ids only: casting string doc ids to decimal
-    # yields NULL (non-ANSI) or errors (ANSI), and a NULL sum would
-    # compare equal every round — silently-split components; fractional
-    # ids (float/double) are equally unsafe because decimal(38,0)
-    # ROUNDS them, so two distinct label states can share a sum (e.g.
-    # labels {1.4,1.2,1.0} and {1.2,1.0,1.0} both sum to 3). Exact
-    # DECIMAL(p, 0) ids are as safe as integers PROVIDED the sum has
-    # headroom: the probe's explicit cast fixes the accumulator at
-    # decimal(38,0) (sum of decimal(38,0) stays decimal(38,0) — no
-    # precision promotion is available above the cap), so p <= 28
-    # guarantees >= 10 digits of slack in that fixed accumulator
-    # (the same margin integers get: 19-digit longs in a 38-digit
-    # accumulator) while p > 28 can overflow that accumulator — ANSI
-    # crashes the round, non-ANSI yields NULL sums that compare equal
-    # every round and silently split components (caught
-    # by review in r10; pinned by
-    # test_min_label_wide_decimal_ids_use_changed_row_probe). Every
-    # other label type keeps the type-agnostic changed-row probe (one
-    # join per round instead of one aggregate).
-    from pyspark.sql.types import DecimalType, IntegralType
-
-    _label_type = labels.schema["component"].dataType
-    numeric_ids = isinstance(_label_type, IntegralType) or (
-        isinstance(_label_type, DecimalType)
-        and _label_type.scale == 0
-        and _label_type.precision <= 28
+    schema = pa.schema([pa.field("node", t, False), pa.field("component", t, False)])
+    return pairs.sparkSession.createDataFrame(
+        pa.table([pa.array(nodes, t), pa.array(comps, t)], schema=schema)
     )
-    prev_sum = (
-        labels.agg(
-            F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-        if numeric_ids
-        else None
-    )
-    converged = False
-    for _ in range(max_iter):
-        prop = edges.join(
-            labels, edges["a"] == labels["node"]
-        ).select(F.col("b").alias("node"), F.col("component"))
-        new_labels = (
-            labels.select("node", "component")
-            .unionByName(prop)
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint()  # truncate lineage + cache this round
-        )
-        if numeric_ids:
-            new_sum = new_labels.agg(
-                F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-            ).collect()[0]["s"]
-            round_converged = new_sum == prev_sum
-            prev_sum = new_sum
-        else:
-            round_converged = (
-                new_labels.alias("n")
-                .join(
-                    labels.select(
-                        "node", F.col("component").alias("__old")
-                    ),
-                    "node",
-                )
-                .filter(F.col("component") != F.col("__old"))
-                .limit(1)
-                .count()
-                == 0
-            )
-        labels.unpersist()
-        labels = new_labels
-        if round_converged:
-            converged = True
-            break
-    if not converged:
-        # labels are still propagating: a component wider than max_iter
-        # hops would be silently SPLIT into several labels. Duplicate
-        # clusters are near-cliques so this never fires there; chain-y
-        # graphs belong on connected_components_star (O(log n) rounds).
-        log.warning(
-            "connected_components: not converged after max_iter=%d "
-            "rounds — components wider than that many hops are split; "
-            "use connected_components_star for high-diameter graphs",
-            max_iter,
-        )
-    edges.unpersist()
-    return labels.select("node", "component")
 
 
 def connected_components_star(
@@ -350,25 +251,26 @@ def connected_components_star(
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
     contraction (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", SoCC'14) — the O(log n)-round alternative to
-    connected_components' min-label propagation, whose round count is
-    the graph DIAMETER (fine for near-clique duplicate clusters,
-    adversarial on chains: a path graph of length L needs L min-label
-    rounds but only ~log L contraction rounds — both measured in the
-    property suite and docs/COSTS.md).
+    and Beyond", SoCC'14) — the distributed half of
+    :func:`connected_components`, which runs it over pair graphs past
+    the driver-closure cap. O(log n) rounds on any graph, where
+    min-label propagation needs the graph DIAMETER: a path graph of
+    length L needs ~log L contraction rounds (pinned in the property
+    suite).
 
-    Same (node, component) contract as connected_components: every
-    node of ``pairs`` labeled with the smallest node id reachable from
-    it (both operations attach nodes to local minima; the fixed point
-    is a star rooted at each component's global minimum).
+    Same (node, component) contract as the driver closure: every node
+    of ``pairs`` labeled with the smallest node id reachable from it
+    (both operations attach nodes to local minima; the fixed point is
+    a star rooted at each component's global minimum).
 
     Per round: LARGE-STAR — for every node u, connect each strictly
     larger neighbor to min(Γ(u) ∪ {u}); SMALL-STAR — direct edges
     large→small, and for every node u connect itself and all smaller
     neighbors to their minimum. Each phase is one groupBy(min) + one
     keyed join; rounds are O(log n) on any graph. Every round's edge
-    set is localCheckpoint-ed (same lineage-truncation discipline as
-    the min-label loop); convergence = the edge set is unchanged
+    set is localCheckpoint-ed (iterative self-referencing plans
+    otherwise grow multiplicatively and blow up the driver long before
+    the data does); convergence = the edge set is unchanged
     (checked with one anti-join probe — both sides are distinct sets,
     so equal counts + empty difference ⇒ equal sets).
 
@@ -381,7 +283,7 @@ def connected_components_star(
     sym0 = unfiltered.filter(F.col("a") != F.col("b"))
     # nodes come from the UNFILTERED union: a node whose only
     # incidences are self-pairs must still be labeled (with itself) —
-    # the same contract as connected_components. Single-use frames
+    # the same contract as the driver closure. Single-use frames
     # stay lazy: nodes is read once by the final label join, and the
     # loop's own checkpoints bound all lineage — extra persists here
     # were measurable action-floor in local mode.
@@ -395,13 +297,10 @@ def connected_components_star(
     )
     n_e = e.count()
     if n_e == 0:
-        # Empty-graph short-circuit (same rationale as the min-label
-        # loop's): with no contractible edges every node is its own
-        # component, and skipping the parents aggregate + left join
-        # saves ~4 stage launches of pure local-mode scheduling floor —
-        # scan_clusters hits this path whenever the ε/μ gate yields no
-        # core-core edges (measured: the whole sf0.1 co-purchase core
-        # subgraph is empty at ε=0.45).
+        # Empty-graph short-circuit: with no contractible edges every
+        # node is its own component, and skipping the parents
+        # aggregate + left join saves ~4 stage launches of pure
+        # local-mode scheduling floor.
         if stats is not None:
             stats["rounds"] = 0
         return nodes.withColumn("component", F.col("node"))
@@ -473,10 +372,10 @@ def connected_components_star(
         stats["rounds"] = rounds
     if not converged:
         # the loop exhausted max_iter with edges still contracting:
-        # parents below are intermediate, not component minima — the
-        # same silent-wrong case connected_components warns about.
-        # Kiveris et al. bound rounds by O(log² n) worst case, so 50
-        # covers any real graph; this fires only on pathological input.
+        # parents below are intermediate, not component minima, so
+        # components would come back split. Kiveris et al. bound
+        # rounds by O(log² n) worst case, so 50 covers any real graph;
+        # this fires only on pathological input.
         log.warning(
             "connected_components_star: not converged after "
             "max_iter=%d rounds — labels may not be component minima",
@@ -490,24 +389,14 @@ def connected_components_star(
     )
 
 
-# Bounded driver-side closure (r13, guide §1.5: fewer driver jobs).
-# The entity-resolution paths close PAIR graphs whose labels are
-# already shipped through the driver anyway (the comp/remap broadcast
-# builds collect every row) — so under the same 32 MB comfort bound
-# the closure itself runs there too: ONE collect + a union-find
-# instead of the star-contraction loop's ~12 jobs (checkpoint + count
-# + two broadcast builds per round). Over the bound, the distributed
-# kernel runs unchanged; the dedup_components_star / SCAN consumers
-# keep calling connected_components_star directly, so the distributed
-# kernel's bench rows still price the distributed algorithm.
-# The dedup broadcast comfort bound (same class as the CC round probe
-# at `_contract_once`): ~16 B/row for the node-keyed tables, 2 per
-# edge, under 32 MB -> 2^20 edges.
-_ER_DRIVER_CLOSURE_CAP = (32 << 20) // 32
-
-
-def _er_closure_bound(n_edges: int) -> bool:
-    return n_edges <= _ER_DRIVER_CLOSURE_CAP
+# Driver-closure bound for connected_components: a pair graph of up
+# to this many edges is collected in its one probe job and closed with
+# a union-find on the driver, instead of the star-contraction loop's
+# ~12 jobs (checkpoint + count + two broadcast builds per round). The
+# bound is the dedup broadcast comfort bound (same class as the CC
+# round probe at `_contract_once`): ~16 B/row for the node-keyed
+# tables, 2 per edge, under 32 MB -> 2^20 edges.
+_DRIVER_CLOSURE_CAP = (32 << 20) // 32
 
 
 def _driver_closure_rows(a: list, b: list) -> tuple[list, list]:
@@ -535,23 +424,6 @@ def _driver_closure_rows(a: list, b: list) -> tuple[list, list]:
     for n, r in zip(nodes, roots):  # ascending: the first node seen is the min
         comp_min.setdefault(r, n)
     return nodes, [comp_min[r] for r in roots]
-
-
-def _closure_frame(pairs: DataFrame, edges: pa.Table) -> DataFrame:
-    """Materialize the driver closure of collected (a, b) ``edges`` as
-    a (node, component) local frame with the pair frame's id type.
-    The edges arrive through Arrow as two plain columns, not as one
-    Python ``Row`` per edge."""
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    t = to_arrow_type(pairs.schema[0].dataType)
-    nodes, comps = _driver_closure_rows(
-        edges.column(0).to_pylist(), edges.column(1).to_pylist()
-    )
-    schema = pa.schema([pa.field("node", t, False), pa.field("component", t, False)])
-    return pairs.sparkSession.createDataFrame(
-        pa.table([pa.array(nodes, t), pa.array(comps, t)], schema=schema)
-    )
 
 
 def ngram_jaccard_pairs(
@@ -648,44 +520,6 @@ def simhash_fingerprints(
             F.col(f"__s{j}") > 0, F.lit(1 << j)
         ).otherwise(F.lit(0)).cast("bigint")
     return agg.select(F.col(id_col), fingerprint.alias("simhash"))
-
-
-def lsh_candidate_pairs_xxhash(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_len: int = 3,
-    num_hashes: int = 8,
-    num_bands: int = 4,
-) -> DataFrame:
-    """Fast-path twin of :func:`lsh_candidate_pairs`: xxhash64 minhashes
-    (array<long> signature) and 8-byte band keys instead of md5 hex
-    strings — the variant to run at cluster scale (smaller rows, no hex
-    materialization, cheaper shuffle + join probe). Not oracle-portable;
-    recall behavior is statistically identical (same banding math over a
-    different uniform hash family)."""
-    rows_per_band = num_hashes // num_bands
-    shingled = df.select(
-        F.col(id_col), H.word_shingles(F.col(text_col), shingle_len).alias("__sh")
-    )
-    sig = shingled.select(
-        F.col(id_col), H.minhash_xxhash(F.col("__sh"), num_hashes).alias("signature")
-    )
-    banded = sig.select(
-        F.col(id_col).alias("doc"),
-        F.explode(
-            H.minhash_bands_xxhash(F.col("signature"), num_bands, rows_per_band)
-        ).alias("band"),
-    )
-    banded = track(banded.persist())
-    left = banded.alias("l")
-    right = banded.alias("r")
-    return (
-        left.join(right, on="band")
-        .filter(F.col("l.doc") < F.col("r.doc"))
-        .select(F.col("l.doc").alias("doc_a"), F.col("r.doc").alias("doc_b"))
-        .distinct()
-    )
 
 
 def simhash_fingerprints_xxhash(
@@ -1279,9 +1113,10 @@ def resolve_entities(
     (logged with their keys' count) exactly like the co-occurrence
     hub cap — an oversized block means the blocking key is broken,
     and silently going quadratic on it would be the real failure.
-    Cluster formation is large-star/small-star contraction (O(log n)
-    rounds). Returns (``id_col``, entity) with entity = the smallest
-    record id in the cluster; unmatched records resolve to themselves.
+    Cluster formation is :func:`connected_components` (a driver
+    union-find under its cap, star contraction above it). Returns
+    (``id_col``, entity) with entity = the smallest record id in the
+    cluster; unmatched records resolve to themselves.
 
     ``stats``, when passed a dict, is populated in place with
     ``dropped_blocks`` (total oversized blocks dropped across passes)
@@ -1351,21 +1186,14 @@ def resolve_entities(
             .select(F.col("_ida").alias("a"), F.col("_idb").alias("b"))
         )
         edges = pairs if edges is None else edges.unionByName(pairs)
-    # Closure routing (r13): the pair set is output-bound (only
-    # blocked candidate pairs that passed the predicate), usually far
-    # smaller than the corpus. Persist it, probe with a capped limit-
-    # collect (ONE job — if the cap is not hit, the collected rows ARE
-    # the closure input), and close on the driver under the bound;
-    # past the cap the star-contraction kernel runs unchanged over the
-    # cache. (r12 note still holds: no .distinct() before the
-    # distributed closure — the contraction loop dedups its canonical
-    # edge set in its own first checkpoint.)
+    # The pair set is output-bound (only blocked candidate pairs that
+    # passed the predicate), usually far smaller than the corpus:
+    # persisted, so connected_components' probe and (past its cap) the
+    # star contraction read one cache. No .distinct() first — the
+    # probe collects raw rows and the contraction loop dedups its
+    # canonical edge set in its own first checkpoint.
     edges = track(edges.persist())
-    probe = edges.limit(_ER_DRIVER_CLOSURE_CAP + 1).toArrow()
-    if _er_closure_bound(probe.num_rows):
-        comp = F.broadcast(_closure_frame(edges, probe))
-    else:
-        comp = connected_components_star(edges, "a", "b")
+    comp = connected_components(edges, "a", "b")
     return (
         rec.join(comp, rec["_rid"] == comp["node"], "left")
         .select(
@@ -1414,7 +1242,7 @@ def resolve_entities_incremental(
     CONTRACTED to its existing entity label — sound because an old
     entity is already a connected set, and exact for the min-id label
     rule because the old label IS the min member id — and
-    large-star/small-star closure runs on the contracted graph only:
+    :func:`connected_components` runs on the contracted graph only:
     nodes = batch ids + touched old entity labels, i.e. O(batch), not
     O(corpus). Old entities transitively merged THROUGH a new record
     (two contracted labels linked by a batch node) land in one
@@ -1531,15 +1359,15 @@ def resolve_entities_incremental(
     # endpoint set, semi-reduce old_labels against its broadcast (one
     # scan, BHJ, O(batch) survivors), and broadcast THAT lookup into
     # both endpoint joins — old_labels is scanned, never shuffled.
-    # ALL of those broadcasts are now guarded by one bounded probe
-    # (r13, VERDICT r12 "what's wrong" #2): n_ed bounds touched and lk
-    # (<= 2 * n_ed rows each) and the contracted closure's node set —
-    # a caller whose batch outgrows the documented micro-batch
-    # contract gets scale-safe shuffle joins and the distributed
-    # closure instead of a silent driver-side blowup.
+    # ALL of those broadcasts are guarded by one bounded count: n_ed
+    # bounds touched and lk (<= 2 * n_ed rows each) and the contracted
+    # closure's node set — a caller whose batch outgrows the
+    # documented micro-batch contract gets scale-safe shuffle joins
+    # instead of a silent driver-side blowup (connected_components
+    # makes the same choice for the closure from its own probe).
     ed = track(edges.distinct().persist())
     n_ed = ed.count()
-    small = _er_closure_bound(n_ed)
+    small = n_ed <= _DRIVER_CLOSURE_CAP
     touched = (
         ed.select(F.col("a").alias("_t"))
         .unionByName(ed.select(F.col("b").alias("_t")))
@@ -1573,16 +1401,12 @@ def resolve_entities_incremental(
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    if small:
-        # contracted has <= n_ed rows (a contraction of the distinct
-        # edge set), inside the bound by construction: close on the
-        # driver — one collect job replaces the star-contraction loop
-        # (see _driver_closure_rows)
-        comp = _closure_frame(contracted, contracted.toArrow())
-    else:
-        comp = track(
-            connected_components_star(contracted, "a", "b").persist()
-        )
+    # contracted has <= n_ed rows (a contraction of the distinct edge
+    # set), so whenever `small` holds it closes on the driver; comp
+    # feeds two joins, so the distributed labels are cached
+    comp = connected_components(contracted, "a", "b")
+    if not small:
+        comp = track(comp.persist())
     new_lab = (
         new_records.select(F.col(id_col).alias("_rid"))
         .join(

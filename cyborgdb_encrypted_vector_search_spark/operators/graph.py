@@ -7,9 +7,9 @@ needing — triangle counting (community density / spam detection) and
 PageRank (entity importance for sampling weights) — expressed as
 DataFrame joins and aggregations so Catalyst plans them like any other
 query. Connected components (the third kernel) lives in
-operators/dedup: connected_components (min-label, O(diameter) rounds)
-and connected_components_star (large-star/small-star contraction,
-O(log n) rounds — what scan_clusters uses).
+operators/dedup.connected_components (what scan_clusters uses): a
+driver union-find under its edge cap, large-star/small-star
+contraction (O(log n) rounds) above it.
 
 Scale notes
 -----------
@@ -834,7 +834,7 @@ def ktruss_edges(
     once and read ~rounds times).
 
     Same fixed-point discipline as pagerank_fixedpoint /
-    connected_components: all keyed shuffles, no global sort; each
+    connected_components_star: all keyed shuffles, no global sort; each
     round's survivor set is localCheckpoint-ed and the triangle list
     re-persisted per round so the iterative plan doesn't grow
     multiplicatively. Convergence probe is one count per round
@@ -1300,11 +1300,12 @@ def scan_clusters(
       (d(u)+1)·(d(v)+1).
     - v is a CORE iff |N_ε(v)| >= mu, i.e. strong_degree(v) + 1 >= mu
       (v belongs to its own ε-neighborhood).
-    - clusters = connected components (large-star/small-star
-      contraction, O(log n) rounds) over core-core strong edges;
-      isolated cores seed their own cluster. Labels are component
-      minima either way, so the oracle's recursive min-label CTE
-      gates the contraction exactly.
+    - clusters = connected components (dedup.connected_components:
+      driver union-find under its cap, large-star/small-star
+      contraction above it) over core-core strong edges; isolated
+      cores seed their own cluster. Labels are component minima
+      either way, so the oracle's recursive min-label CTE gates the
+      closure exactly.
     - BORDER members: non-core vertices strongly adjacent to >= 1
       core, attached to the smallest cluster label among their strong
       core neighbors (deterministic tie-break). Everything else is a
@@ -1342,7 +1343,7 @@ def _scan_members(
     oriented route) ``deg`` must be persisted by the caller; ``stats``
     is the caller's _support_stats probe."""
     from cyborgdb_encrypted_vector_search_spark.operators.dedup import (
-        connected_components_star,
+        connected_components,
     )
 
     # One pass computes cn AND both degrees when the cost model picks
@@ -1450,10 +1451,10 @@ def _scan_members(
     core_edges = strong.join(
         cores.withColumnRenamed("v", "src"), "src", "left_semi"
     ).join(cores.withColumnRenamed("v", "dst"), "dst", "left_semi")
-    # star contraction (O(log n) rounds on ANY core subgraph — min-label
-    # is O(diameter), unproven on co-purchase cores) with the same
-    # min-id component labels the oracle's recursive CTE computes
-    comp = connected_components_star(core_edges, "src", "dst")
+    # min-id component labels, the same the oracle's recursive CTE
+    # computes; over the driver-closure cap the contraction's O(log n)
+    # rounds hold on ANY core subgraph
+    comp = connected_components(core_edges, "src", "dst")
     core_labels = (
         cores.join(comp, cores["v"] == comp["node"], "left")
         .select(
@@ -1671,7 +1672,7 @@ def bfs_levels(
     round's frontier and the accumulated visited set are
     localCheckpoint'ed so lineage (and therefore task closure size)
     stays O(1) in the round number, the same discipline as the
-    min-label/star-contraction components loops. Early exit when the
+    star-contraction components loop. Early exit when the
     frontier empties — the ``limit(1).count()`` probe costs one
     near-empty stage, not a full count.
 

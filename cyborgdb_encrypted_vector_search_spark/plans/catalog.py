@@ -1931,10 +1931,16 @@ def ann_ivf_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _fixed_centroids(emb: DataFrame) -> DataFrame:
     """The IVF gates' fixed deterministic quantizer: the first 8 stored
     vectors as centroids (oracle-replicable, unlike k-means — the
-    k-means build path is gated separately in ann_ivf_kmeans_build)."""
-    return emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").cast("int").alias("centroid_id"),
-        F.col("embedding").cast("array<double>").alias("centroid"),
+    k-means build path is gated separately in ann_ivf_kmeans_build),
+    collected once into a local Arrow frame, so the searches that read
+    it per query pay no centroid job."""
+    return emb.sparkSession.createDataFrame(
+        emb.filter(F.col("vec_id") < 8)
+        .select(
+            F.col("vec_id").cast("int").alias("centroid_id"),
+            F.col("embedding").cast("array<double>").alias("centroid"),
+        )
+        .toArrow()
     )
 
 
@@ -2889,7 +2895,9 @@ def _cc_minlabel_sql(rounds: int = _CC_ORACLE_ROUNDS) -> str:
     l0 = identity labels; l_{{i+1}}(v) = min(l_i(v), min_{{u~v}} l_i(u));
     final `cc` guarded on Σ-label equality of the last two rounds
     (monotone labels ⇒ equal sums ⇒ identical sets — convergence
-    proven inside the SQL, not trusted)."""
+    proven inside the SQL, not trusted). Declare `edges` MATERIALIZED:
+    DuckDB otherwise inlines it and re-derives the whole pair graph
+    under every round (77 s vs 3.8 s at sf0.01 for the LSH graph)."""
     assert rounds >= 2, "convergence proof needs two comparable rounds"
     blocks = [
         """
@@ -2934,7 +2942,7 @@ def _cc_minlabel_sql(rounds: int = _CC_ORACLE_ROUNDS) -> str:
       SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
       FROM banded l JOIN banded r ON l.band = r.band AND l.doc_id < r.doc_id
     ),
-    edges AS (
+    edges AS MATERIALIZED (
       SELECT doc_a AS a, doc_b AS b FROM pairs
       UNION
       SELECT doc_b AS a, doc_a AS b FROM pairs
@@ -2948,52 +2956,35 @@ def _cc_minlabel_sql(rounds: int = _CC_ORACLE_ROUNDS) -> str:
 )
 def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full duplicate-cluster formation: MinHash-band candidate pairs
-    over a chained 3x corpus, then connected components (iterative
-    min-label propagation) so every transitive chain collapses into one
-    cluster with the smallest member as representative. This is the
-    cluster step real 100 TB dedup pipelines run between pair
-    generation and survivor selection; the DuckDB oracle runs the SAME
-    min-label rounds unrolled over the identical pair graph and PROVES
-    its own convergence in-SQL (Σ-label equality across the last two
-    rounds — see _cc_minlabel_sql; the former transitive-closure
-    recursion was O(component²) per depth and took 542 s at sf0.1).
-    Output is O(clusters): rep, size, sorted member list."""
-    docs = (
-        load(spark, "documents", sf_dir)
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    c1 = docs.select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz qq ww")).alias("text"),
-    )
-    c2 = docs.select(
-        (F.col("doc_id") + 200000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz qq ww xj kq vz")).alias("text"),
-    )
-    corpus = docs.unionByName(c1).unionByName(c2)
-    pairs = dedup.lsh_candidate_pairs(
-        corpus, "doc_id", "text", shingle_len=3, num_hashes=8, num_bands=4
-    ).persist()
-    labels = dedup.connected_components(pairs, "doc_a", "doc_b")
-    out = labels.groupBy("component").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.array_join(
-            F.sort_array(F.collect_list("node")).cast("array<string>"), ","
-        ).alias("doc_ids"),
-    )
-    return out.select(F.col("component").cast("bigint"), "n_docs", "doc_ids")
+    over a chained 3x corpus, then connected components
+    (dedup.connected_components — the gate's ~1.9k-pair graph closes
+    on the driver in the operator's one probe job) so every transitive
+    chain collapses into one cluster with the smallest member as
+    representative. This is the cluster step real 100 TB dedup
+    pipelines run between pair generation and survivor selection; the
+    DuckDB oracle runs min-label rounds unrolled over the identical
+    pair graph and PROVES its own convergence in-SQL (Σ-label equality
+    across the last two rounds — see _cc_minlabel_sql; the former
+    transitive-closure recursion was O(component²) per depth and took
+    542 s at sf0.1). Output is O(clusters): rep, size, sorted member
+    list."""
+    return _cc_gate(spark, sf_dir, dedup.connected_components)
 
 
 def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_connected_components with the r8 star-contraction CC
-    (operators/dedup.connected_components_star — large-star/small-star,
-    Kiveris et al. SoCC'14, O(log n) rounds where min-label is
-    O(diameter)) swapped in as the cluster step. Both algorithms label
-    every node with its component MINIMUM, so this gate reuses the
-    min-label gate's unrolled-propagation oracle verbatim — a three-way
-    algorithmic differential (contraction vs propagation vs unrolled
-    SQL rounds) on the identical LSH pair graph."""
+    """dedup_connected_components with the distributed half of the
+    closure (dedup.connected_components_star — large-star/small-star,
+    Kiveris et al. SoCC'14, O(log n) rounds) called directly, so the
+    contraction that connected_components runs past its driver cap is
+    gated at sf0.01 too. Both halves label every node with its
+    component MINIMUM, so this gate reuses the unrolled-propagation
+    oracle verbatim."""
+    return _cc_gate(spark, sf_dir, dedup.connected_components_star)
+
+
+def _cc_gate(spark: SparkSession, sf_dir: str, closure) -> DataFrame:
+    """The CC gates' shared body: LSH pairs over the chained 3x corpus,
+    ``closure(pairs, "doc_a", "doc_b")``, then one row per component."""
     docs = (
         load(spark, "documents", sf_dir)
         .select("doc_id", "text")
@@ -3008,10 +2999,12 @@ def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.col("text"), F.lit(" zz qq ww xj kq vz")).alias("text"),
     )
     corpus = docs.unionByName(c1).unionByName(c2)
-    pairs = dedup.lsh_candidate_pairs(
-        corpus, "doc_id", "text", shingle_len=3, num_hashes=8, num_bands=4
-    ).persist()
-    labels = dedup.connected_components_star(pairs, "doc_a", "doc_b")
+    pairs = track(
+        dedup.lsh_candidate_pairs(
+            corpus, "doc_id", "text", shingle_len=3, num_hashes=8, num_bands=4
+        ).persist()
+    )
+    labels = closure(pairs, "doc_a", "doc_b")
     out = labels.groupBy("component").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.array_join(
@@ -3021,8 +3014,8 @@ def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(F.col("component").cast("bigint"), "n_docs", "doc_ids")
 
 
-# same oracle as the min-label gate — the result contract (component =
-# min reachable id) is algorithm-independent
+# same oracle as dedup_connected_components — the result contract
+# (component = min reachable id) is algorithm-independent
 CATALOG["dedup_components_star"] = CatalogEntry(
     "dedup_components_star",
     dedup_components_star,
@@ -3741,16 +3734,14 @@ def source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, "documents", sf_dir).select("text")
     ctag = _content_tag(spark, sf_dir, "documents", "doc_id")
-    tag = _hl.md5(f"{sf_dir}:write_text_v3:{ctag}".encode()).hexdigest()[:10]
+    tag = _hl.md5(f"{sf_dir}:write_text_v4:{ctag}".encode()).hexdigest()[:10]
     path = _os.path.join(_tf.gettempdir(), f"corpus_{tag}_txt")
-    if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        (
-            docs.select(
-                F.concat(F.lit("  "), F.col("text"), F.lit("  ")).alias("value")
-            )
-            .write.mode("overwrite")
-            .text(path)
-        )
+    if not _os.path.isdir(path):
+        tmp = f"{path}.tmp{_os.getpid()}"
+        docs.select(
+            F.concat(F.lit("  "), F.col("text"), F.lit("  ")).alias("value")
+        ).write.mode("overwrite").text(tmp)
+        _publish_dir(tmp, path)
     lines = spark.read.text(path).select(
         F.trim(F.col("value")).alias("text")
     )
@@ -5423,10 +5414,12 @@ def ann_ivf_layout_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, "embeddings", sf_dir)
     cent = _fixed_centroids(emb)
     ctag = _content_tag(spark, sf_dir, "embeddings", "vec_id")
-    tag = _hl.md5(f"{sf_dir}:{ctag}".encode()).hexdigest()[:10]
+    tag = _hl.md5(f"{sf_dir}:ivf_layout_v2:{ctag}".encode()).hexdigest()[:10]
     path = _os.path.join(_tf.gettempdir(), f"ivf_layout_{tag}")
-    if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        A.build_ivf_layout(emb.select("vec_id", "embedding"), cent, path)
+    if not _os.path.isdir(path):
+        tmp = f"{path}.tmp{_os.getpid()}"
+        A.build_ivf_layout(emb.select("vec_id", "embedding"), cent, tmp)
+        _publish_dir(tmp, path)
     table = spark.read.parquet(path)
     target = [
         r["embedding"] for r in emb.filter(F.col("vec_id") == 42).collect()
@@ -6972,13 +6965,14 @@ def _ivfsq_layout(spark: SparkSession, sf_dir: str, p: dict) -> DataFrame:
 
     from cyborgdb_encrypted_vector_search_spark.operators import quant as _q
 
-    cent = _fixed_centroids(p["emb"])
     ctag = _content_tag(spark, sf_dir, "embeddings", "vec_id")
     tag = _hl.md5(f"{sf_dir}:ivfsq_v1:{ctag}".encode()).hexdigest()[:10]
     path = _os.path.join(_tf.gettempdir(), f"ivfsq_layout_{tag}")
     if not _os.path.isdir(path):
         tmp = f"{path}.tmp{_os.getpid()}"
-        _q.build_ivfsq_layout(p["emb"], cent, p["mins"], p["maxs"], tmp)
+        _q.build_ivfsq_layout(
+            p["emb"], _fixed_centroids(p["emb"]), p["mins"], p["maxs"], tmp
+        )
         _publish_dir(tmp, path)
     return spark.read.parquet(path)
 
@@ -7539,8 +7533,8 @@ def pipeline_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     it). Pass 1 blocks on the exact phone; pass 2 blocks on (nation,
     the 9-digit key segment of the name) and verifies levenshtein <= 2
     inside the block — so each variant axis is found by a different
-    pass, the star-contraction closure merges the evidence into one
-    entity per customer, and the per-size cluster histogram +
+    pass, the connected-components closure merges the evidence into
+    one entity per customer, and the per-size cluster histogram +
     entity-id checksum is value-hashed against DuckDB running the
     identical blocking, the identical levenshtein threshold, and a
     recursive min-label CTE over the identical edge set.
@@ -8612,10 +8606,12 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", "lang", "n_chars"
     )
     ctag = _content_tag(spark, sf_dir, "documents", "doc_id")
-    tag = _hl.md5(f"{sf_dir}:orc_rt_v2:{ctag}".encode()).hexdigest()[:10]
+    tag = _hl.md5(f"{sf_dir}:orc_rt_v3:{ctag}".encode()).hexdigest()[:10]
     path = _os.path.join(_tf.gettempdir(), f"orc_rt_{tag}")
-    if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        docs.write.mode("overwrite").orc(path)
+    if not _os.path.isdir(path):
+        tmp = f"{path}.tmp{_os.getpid()}"
+        docs.write.mode("overwrite").orc(tmp)
+        _publish_dir(tmp, path)
     back = spark.read.schema(docs.schema).orc(path)
     return back.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -11101,9 +11097,9 @@ def q_graph_scan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     SCAN from thresholded connected components). ε = 45/100 is kept
     RATIONAL and the core test squared into BIGINT arithmetic, so an
     inherently float-looking definition (σ ≥ ε with a sqrt) gates
-    integer-exactly; cluster labels come from the same min-label
-    machinery as dedup_connected_components, which the oracle
-    reproduces with a recursive CTE. Output: every clustered vertex
+    integer-exactly; cluster labels come from the same
+    dedup.connected_components as dedup_connected_components, which
+    the oracle reproduces with a recursive CTE. Output: every clustered vertex
     with its cluster label and core/border role (7 communities, 48
     members at sf0.01 — the rest of the 150-node graph is hub/outlier
     background)."""

@@ -58,3 +58,32 @@ def kernel_frames(monkeypatch):
 
     monkeypatch.setattr(knn, "topk_candidates", spy)
     return frames
+
+
+@pytest.fixture
+def cc_placements(monkeypatch):
+    """Call to iterate both placements of ``dedup.connected_components``:
+    ``"driver"`` (the union-find, under the real cap) and ``"star"``
+    (cap forced below any edge count, so even an empty pair frame takes
+    the star contraction). Each phase asserts it ran the half it names."""
+    from cyborgdb_encrypted_vector_search_spark.operators import dedup
+
+    cap, star = dedup._DRIVER_CLOSURE_CAP, dedup.connected_components_star
+    calls = []
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return star(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "connected_components_star", spy)
+
+    def placements():
+        calls.clear()
+        monkeypatch.setattr(dedup, "_DRIVER_CLOSURE_CAP", cap)
+        yield "driver"
+        assert not calls, "the driver placement ran the star contraction"
+        monkeypatch.setattr(dedup, "_DRIVER_CLOSURE_CAP", -1)
+        yield "star"
+        assert calls, "the star placement never ran the star contraction"
+
+    return placements

@@ -187,36 +187,10 @@ def test_winnow_short_doc_filtered(spark):
     assert {r["doc_id"] for r in got.select("doc_id").distinct().collect()} == {2}
 
 
-def test_fastpath_xxhash_minhash_and_bands(spark):
-    # Fast-path (xxhash64) twins: same LSH behavior as the md5 family —
-    # identical docs collide, unrelated docs don't; long-typed keys.
-    df = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog"),
-         (2, "the quick brown fox jumps over the lazy dog"),
-         (3, "completely different words entirely here now today friend")],
-        "doc_id long, text string",
-    )
-    pairs = {(r["doc_a"], r["doc_b"]) for r in
-             dedup.lsh_candidate_pairs_xxhash(df).collect()}
-    assert (1, 2) in pairs
-    assert (1, 3) not in pairs and (2, 3) not in pairs
-
-    sh = df.select("doc_id", H.word_shingles(F.col("text"), 3).alias("sh"))
-    sig = sh.select("doc_id", H.minhash_xxhash(F.col("sh"), 8).alias("sig"))
-    row = sig.filter(F.col("doc_id") == 1).collect()[0]
-    assert len(row["sig"]) == 8 and all(isinstance(v, int) for v in row["sig"])
-    # spread seeds: the 8 family draws must not all agree on one shingle
-    assert len(set(row["sig"])) > 1
-    banded = sig.select(
-        F.explode(H.minhash_bands_xxhash(F.col("sig"), 4, 2)).alias("band")
-    )
-    assert banded.schema["band"].dataType.typeName() == "long"
-
-
 def test_lsh_band_cache_released(spark):
-    """Both MinHash banding paths persist their banded frame for the
-    self-join; release_all() must free it once the pairs are collected,
-    so repeated calls do not pin one cached relation each."""
+    """MinHash banding persists its banded frame for the self-join;
+    release_all() must free it once the pairs are collected, so
+    repeated calls do not pin one cached relation each."""
     from cyborgdb_encrypted_vector_search_spark import caching
 
     df = spark.createDataFrame(
@@ -227,17 +201,16 @@ def test_lsh_band_cache_released(spark):
     )
     cm = spark._jsparkSession.sharedState().cacheManager()
     storage = spark.sparkContext._jsc.sc().getRDDStorageInfo
-    for fn in (dedup.lsh_candidate_pairs, dedup.lsh_candidate_pairs_xxhash):
-        caching.release_all()  # frames other tests left tracked
-        cached_before = len(storage())
-        pairs = fn(df)
-        banded = list(caching._LIVE)
-        assert len(banded) == 1, fn.__name__
-        assert (1, 2) in {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
-        assert cm.lookupCachedData(banded[0]._jdf).nonEmpty()
-        assert caching.release_all() == 1
-        assert cm.lookupCachedData(banded[0]._jdf).isEmpty(), fn.__name__
-        assert len(storage()) == cached_before, fn.__name__
+    caching.release_all()  # frames other tests left tracked
+    cached_before = len(storage())
+    pairs = dedup.lsh_candidate_pairs(df)
+    banded = list(caching._LIVE)
+    assert len(banded) == 1
+    assert (1, 2) in {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
+    assert cm.lookupCachedData(banded[0]._jdf).nonEmpty()
+    assert caching.release_all() == 1
+    assert cm.lookupCachedData(banded[0]._jdf).isEmpty()
+    assert len(storage()) == cached_before
 
 
 def test_fastpath_simhash_xxhash_near_and_far(spark):
@@ -335,36 +308,38 @@ def test_pii_redaction_and_flags(spark):
     assert (out[2]["s"], out[2]["c"], out[2]["e"]) == (False, False, False)
 
 
-def test_connected_components_transitive_chain(spark):
-    # Two components: a 6-node path (forces multiple propagation
-    # rounds — min label must travel the whole chain) and a disjoint
-    # pair. No A-C edge anywhere on the path: transitivity is earned
-    # by iteration, not by the input pairs.
+def test_connected_components_transitive_chain(spark, cc_placements):
+    # Two components: a 6-node path (the min label must travel the
+    # whole chain) and a disjoint pair. No A-C edge anywhere on the
+    # path: transitivity is earned by the closure, not by the input
+    # pairs. Both placements (driver union-find, star contraction).
     pairs = spark.createDataFrame(
         [(10, 11), (11, 12), (12, 13), (13, 14), (14, 15), (50, 51)],
         ["doc_a", "doc_b"],
     )
-    got = {
-        r["node"]: r["component"]
-        for r in dedup.connected_components(pairs).collect()
-    }
-    assert got == {
-        10: 10, 11: 10, 12: 10, 13: 10, 14: 10, 15: 10, 50: 50, 51: 50,
-    }
+    for placement in cc_placements():
+        got = {
+            r["node"]: r["component"]
+            for r in dedup.connected_components(pairs).collect()
+        }
+        assert got == {
+            10: 10, 11: 10, 12: 10, 13: 10, 14: 10, 15: 10, 50: 50, 51: 50,
+        }, placement
 
 
-def test_connected_components_merges_via_shared_node(spark):
+def test_connected_components_merges_via_shared_node(spark, cc_placements):
     # Triangle evidence arriving as two pairs plus a bridge between
     # two otherwise-separate clusters: all five nodes collapse to one
-    # component under the smallest id.
+    # component under the smallest id, in both placements.
     pairs = spark.createDataFrame(
         [(3, 4), (1, 2), (2, 3), (4, 5)], ["doc_a", "doc_b"]
     )
-    comps = {
-        r["component"]
-        for r in dedup.connected_components(pairs).collect()
-    }
-    assert comps == {1}
+    for placement in cc_placements():
+        comps = {
+            r["component"]
+            for r in dedup.connected_components(pairs).collect()
+        }
+        assert comps == {1}, placement
 
 
 def test_char_ngram_lm_and_perplexity_hand_computed(spark):

@@ -427,7 +427,7 @@ def test_ivf_layout_scan_prunes_to_probed_partitions(
     )
 
     ctag = _content_tag(spark, sf_dir, "embeddings", "vec_id")
-    tag = hashlib.md5(f"{sf_dir}:{ctag}".encode()).hexdigest()[:10]
+    tag = hashlib.md5(f"{sf_dir}:ivf_layout_v2:{ctag}".encode()).hexdigest()[:10]
     layout = os.path.join(tempfile.gettempdir(), f"ivf_layout_{tag}")
     n_parts = len(glob.glob(os.path.join(layout, "centroid_id=*")))
     assert n_parts == 8

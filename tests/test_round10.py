@@ -264,11 +264,9 @@ class TestMediaNullLoudness:
             M.decode_video_stats(self._null_media(spark)).collect()
 
 
-def test_min_label_decimal_ids_full_propagation(spark):
-    """Advisory (r9): exact DECIMAL(p,0) ids with sum headroom
-    (p <= 28) keep the cheap one-aggregate-per-round Σ-probe — and
-    must still fully propagate a 4-hop chain (3+ rounds) to the
-    minimum label."""
+def test_min_label_decimal_ids_full_propagation(spark, cc_placements):
+    """Exact DECIMAL(28,0) ids: a 4-hop chain must fully close to the
+    minimum label, in both placements."""
     import decimal
 
     pairs = spark.createDataFrame(
@@ -279,19 +277,19 @@ def test_min_label_decimal_ids_full_propagation(spark):
         + [(decimal.Decimal(90), decimal.Decimal(91))],
         "doc_a decimal(28,0), doc_b decimal(28,0)",
     )
-    got = {
-        int(r["node"]): int(r["component"])
-        for r in connected_components(pairs).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 90: 90, 91: 90}
+    for placement in cc_placements():
+        got = {
+            int(r["node"]): int(r["component"])
+            for r in connected_components(pairs).collect()
+        }
+        assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 90: 90, 91: 90}, placement
 
 
-def test_min_label_wide_decimal_ids_use_changed_row_probe(spark):
-    """Review finding (r10): decimal(38,0) ids near 1e37 overflow the
-    decimal(38,0) Σ accumulator — ANSI crashes, non-ANSI NULLs the sum
-    so every round compares equal and components silently split.
-    Wide decimals must take the type-agnostic changed-row probe and
-    still fully propagate a multi-hop chain of huge ids."""
+def test_min_label_wide_decimal_ids_use_changed_row_probe(spark, cc_placements):
+    """decimal(38,0) ids near 1e37 (four of them overflow a 38-digit
+    sum): a multi-hop chain of huge ids must fully close to the
+    minimum, in both placements — the driver closure keeps them exact
+    as Python Decimals, the star contraction as Spark decimals."""
     import decimal
 
     lo = 3 * 10**37  # 4 ids this size overflow the 38-digit sum
@@ -305,11 +303,12 @@ def test_min_label_wide_decimal_ids_use_changed_row_probe(spark):
         ],
         "doc_a decimal(38,0), doc_b decimal(38,0)",
     )
-    got = {
-        int(r["node"]): int(r["component"])
-        for r in connected_components(pairs).collect()
-    }
-    assert got == {lo + i: lo for i in range(5)}
+    for placement in cc_placements():
+        got = {
+            int(r["node"]): int(r["component"])
+            for r in connected_components(pairs).collect()
+        }
+        assert got == {lo + i: lo for i in range(5)}, placement
 
 
 def test_wedge_width_follows_shuffle_partitions(spark):

@@ -137,6 +137,25 @@ def test_driver_closure_matches_star_contraction(spark):
         release_all()
 
 
+def test_connected_components_under_cap_is_one_job(spark):
+    """Under the driver-closure cap, connected_components is its one
+    probe job: the collected edges close on the driver and come back
+    as a local frame. The graph has the dedup_connected_components
+    gate's size (1,880 pairs over 1,499 nodes at sf0.01)."""
+    pairs = spark.range(1880, numPartitions=4).select(
+        (F.col("id") * 7 % 1499).alias("doc_a"),
+        (F.col("id") * 13 % 1499).alias("doc_b"),
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("cc_under_cap", "cc_under_cap")
+    try:
+        labels = D.connected_components(pairs).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("cc_under_cap")) == 1
+    assert len(labels) == 1499
+
+
 def _er_fixture(spark):
     """A miniature variant corpus in the gate's shape."""
     rows = []
@@ -174,7 +193,7 @@ def test_resolve_entities_over_cap_routes_distributed(spark, monkeypatch):
     from cyborgdb_encrypted_vector_search_spark.caching import release_all
 
     release_all()
-    monkeypatch.setattr(D, "_ER_DRIVER_CLOSURE_CAP", 0)
+    monkeypatch.setattr(D, "_DRIVER_CLOSURE_CAP", 0)
     forced = {
         (r["id"], r["entity"])
         for r in D.resolve_entities(recs, "id", _er_passes()).collect()
@@ -204,7 +223,7 @@ def test_resolve_incremental_over_cap_matches_rebuild(spark, monkeypatch):
 
     assert absorb() == want  # small path (driver closure + broadcasts)
     release_all()
-    monkeypatch.setattr(D, "_ER_DRIVER_CLOSURE_CAP", 0)
+    monkeypatch.setattr(D, "_DRIVER_CLOSURE_CAP", 0)
     assert absorb() == want  # over-cap: shuffle joins + distributed CC
     release_all()
 

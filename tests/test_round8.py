@@ -67,8 +67,10 @@ def test_star_cc_matches_union_find(spark, edges):
 @settings(max_examples=8, deadline=None)
 @given(edges=edge_sets)
 def test_star_cc_differential_vs_minlabel(spark, edges):
-    """Both CC implementations must label every node with its
-    component minimum — interchangeable under the same contract."""
+    """Both halves of connected_components label every node with its
+    component minimum: the star contraction (its distributed half)
+    equals connected_components on these graphs, which are under the
+    cap and so close on the driver."""
     df = _pairs(spark, edges)
     a = {
         r["node"]: r["component"]
@@ -84,9 +86,9 @@ def test_star_cc_differential_vs_minlabel(spark, edges):
 
 def test_star_cc_path_graph_rounds_logarithmic(spark):
     """The adversarial-diameter case the contraction exists for: a
-    64-node path has diameter 63 (min-label would need ~63 rounds and
-    the default max_iter=25 would return WRONG labels); star
-    contraction must finish in O(log n) rounds and still be exact."""
+    64-node path has diameter 63 (min-label propagation would need ~63
+    rounds); star contraction must finish in O(log n) rounds and still
+    be exact."""
     n = 64
     edges = [(i, i + 1) for i in range(n - 1)]
     stats: dict = {}
@@ -113,9 +115,10 @@ def test_star_cc_empty_and_single_edge(spark):
     caching.release_all()
 
 
-def test_minlabel_cc_empty_short_circuit(spark):
+def test_minlabel_cc_empty_short_circuit(spark, cc_placements):
     empty = spark.createDataFrame([], "doc_a long, doc_b long")
-    assert connected_components(empty).count() == 0
+    for placement in cc_placements():
+        assert connected_components(empty).count() == 0, placement
     caching.release_all()
 
 
@@ -192,33 +195,6 @@ def test_scan_eps_test_survives_huge_support(spark):
     assert bool(row["strong"]) == (
         (cn + 2) ** 2 * eps_den**2 >= eps_num**2 * 50_000_001**2
     )
-
-
-def test_minlabel_cc_warns_when_not_converged(spark, caplog):
-    """A component wider than max_iter hops exits the loop UNconverged
-    — labels are split and the operator must say so (the silent-wrong
-    case connected_components_star exists to avoid)."""
-    import logging
-
-    from cyborgdb_encrypted_vector_search_spark.operators import dedup as D
-
-    chain = _pairs(spark, [(i, i + 1) for i in range(10)])
-    with caplog.at_level(logging.WARNING, logger=D.__name__):
-        labels = {
-            r["node"]: r["component"]
-            for r in connected_components(chain, max_iter=3).collect()
-        }
-    assert any(
-        "not converged" in rec.getMessage() for rec in caplog.records
-    )
-    assert len(set(labels.values())) > 1  # split, as warned
-    # the contraction variant nails the same chain exactly
-    star = {
-        r["node"]: r["component"]
-        for r in connected_components_star(chain).collect()
-    }
-    assert set(star.values()) == {0}
-    caching.release_all()
 
 
 def _edges_df(spark, edges):
@@ -358,8 +334,8 @@ def test_support_auto_kernel_string_ids(spark):
 
 def test_star_cc_self_loop_only_node(spark):
     """A node whose only incidences are self-pairs must still be
-    labeled with itself — the min-label contract. (Regression: the
-    first cut derived nodes from the self-loop-filtered union.)"""
+    labeled with itself — the driver closure's contract. (Regression:
+    the first cut derived nodes from the self-loop-filtered union.)"""
     pairs = _pairs(spark, [(5, 5), (1, 2)])
     got = {
         r["node"]: r["component"]

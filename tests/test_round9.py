@@ -1,5 +1,5 @@
-"""Round-9 regression tests: ADVICE fixes (string-id min-label
-convergence probe, star-contraction converged flag) plus the new
+"""Round-9 regression tests: ADVICE fixes (string-id components,
+star-contraction converged flag) plus the new
 operators added this round (tests appended as they land)."""
 
 from __future__ import annotations
@@ -20,11 +20,11 @@ def _labels(df):
 
 
 class TestStringIdComponents:
-    def test_min_label_string_ids_full_propagation(self, spark):
-        """The r8 decimal-sum probe cast string ids to NULL in non-ANSI
-        mode, declaring convergence after one round; a 4-hop chain of
-        string doc ids needs 3+ propagation rounds — every node must
-        still reach the lexicographic minimum."""
+    def test_min_label_string_ids_full_propagation(self, spark, cc_placements):
+        """String doc ids: along a 4-hop chain every node must reach
+        the lexicographic minimum, in both placements (the driver
+        union-find compares Python strings, the star contraction Spark
+        strings)."""
         pairs = spark.createDataFrame(
             [
                 ("doc_a", "doc_b"),
@@ -35,26 +35,30 @@ class TestStringIdComponents:
             ],
             "doc_a string, doc_b string",
         )
-        got = _labels(connected_components(pairs))
-        assert got == {
-            "doc_a": "doc_a",
-            "doc_b": "doc_a",
-            "doc_c": "doc_a",
-            "doc_d": "doc_a",
-            "doc_e": "doc_a",
-            "doc_x": "doc_x",
-            "doc_y": "doc_x",
-        }
+        for placement in cc_placements():
+            got = _labels(connected_components(pairs))
+            assert got == {
+                "doc_a": "doc_a",
+                "doc_b": "doc_a",
+                "doc_c": "doc_a",
+                "doc_d": "doc_a",
+                "doc_e": "doc_a",
+                "doc_x": "doc_x",
+                "doc_y": "doc_x",
+            }, placement
 
-    def test_min_label_string_ids_matches_star(self, spark):
+    def test_min_label_string_ids_matches_star(self, spark, cc_placements):
         pairs = spark.createDataFrame(
             [("u%02d" % i, "u%02d" % (i + 1)) for i in range(0, 8)]
             + [("v1", "v2"), ("v2", "v0")],
             "doc_a string, doc_b string",
         )
-        ml = _labels(connected_components(pairs))
-        st = _labels(connected_components_star(pairs))
-        assert ml == st
+        got = {p: _labels(connected_components(pairs)) for p in cc_placements()}
+        assert got["driver"] == got["star"]
+        assert got["star"] == {
+            **{"u%02d" % i: "u00" for i in range(9)},
+            "v0": "v0", "v1": "v0", "v2": "v0",
+        }
 
 
 class TestStarConvergedWarning:
@@ -447,17 +451,16 @@ class TestSmallAdjBroadcast:
         assert plain == bcast and len(plain) == 7
 
 
-def test_min_label_fractional_ids_use_changed_row_probe(spark):
-    """Review finding (r9): decimal(38,0) ROUNDS fractional labels, so
-    two distinct label states can share a sum and the Σ-probe would
-    declare convergence early. Fractional ids must take the
-    type-agnostic changed-row probe — a 3-hop double-id chain needs 2+
-    propagation rounds and every node must reach the minimum."""
+def test_min_label_fractional_ids_use_changed_row_probe(spark, cc_placements):
+    """Fractional (double) ids, which no integer rounding may merge:
+    along a 2-hop chain every node must reach the minimum, in both
+    placements."""
     pairs = spark.createDataFrame(
         [(1.4, 1.2), (1.2, 1.0)], "doc_a double, doc_b double"
     )
-    got = _labels(connected_components(pairs))
-    assert got == {1.4: 1.0, 1.2: 1.0, 1.0: 1.0}
+    for placement in cc_placements():
+        got = _labels(connected_components(pairs))
+        assert got == {1.4: 1.0, 1.2: 1.0, 1.0: 1.0}, placement
 
 
 def test_bmp_rejects_data_offset_inside_headers():

@@ -389,30 +389,6 @@ def append_to_ivf_layout(
     assigned.write.mode("append").partitionBy("centroid_id").parquet(path)
 
 
-def compact_ivf_layout(
-    spark, src_path: str, dest_path: str, max_tasks: int = 8
-) -> None:
-    """Compact an append-grown IVF layout into ``dest_path``.
-
-    Every append_to_ivf_layout batch adds at least one file per
-    touched ``centroid_id=`` directory, so a long-running ingest
-    accumulates small files (the classic streaming-sink problem) and
-    probe-time listing/open cost creeps up. Compaction is a
-    SHUFFLE-FREE maintenance job: read → ``coalesce(max_tasks)``
-    (narrow — no Exchange) → rewrite ``partitionBy(centroid_id)``,
-    leaving at most ``max_tasks`` files per centroid directory. The
-    caller swaps ``dest_path`` in atomically (directory rename) so
-    readers never see a half-compacted index; the source layout stays
-    intact until then."""
-    df = spark.read.parquet(src_path)
-    (
-        df.coalesce(max_tasks)
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(dest_path)
-    )
-
-
 def adaptive_probe_ids(
     centroids_with_counts: DataFrame,
     target: Sequence[float],

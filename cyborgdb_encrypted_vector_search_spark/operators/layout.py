@@ -221,11 +221,12 @@ def compact_partitioned_layout(
     rewrite ``partitionBy(partition_col)``, leaving at most
     ``max_tasks`` files per partition directory. Content is preserved
     byte-for-byte (the gate fingerprints the compacted layout against
-    the raw source cross-engine). The caller swaps ``dest_path`` in
-    atomically (directory rename — same _publish_dir discipline as the
-    IVF/BM25 index builds) so readers never see a half-compacted
-    table; at cluster scale run one compaction per partition subtree
-    to bound task memory and preserve intra-file ordering locality."""
+    the raw source cross-engine). ``src_path`` is left as it was;
+    at cluster scale run one compaction per partition subtree to bound
+    task memory and preserve intra-file ordering locality. Serves the
+    date-partitioned tables, IVF ``centroid_id=`` layouts grown by
+    ann.append_to_ivf_layout, and (with its stats merge)
+    retrieval.compact_postings."""
     df = spark.read.parquet(src_path)
     (
         df.coalesce(max_tasks)

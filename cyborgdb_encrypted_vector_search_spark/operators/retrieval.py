@@ -28,6 +28,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cyborgdb_encrypted_vector_search_spark.functions import text as X
+from cyborgdb_encrypted_vector_search_spark.operators.layout import (
+    compact_partitioned_layout,
+)
 
 K1 = 1.2
 B = 0.75
@@ -344,19 +347,12 @@ def compact_postings(spark, src_path: str, dest_path: str, max_tasks: int = 8) -
     Every append_postings batch (and every streaming micro-batch) adds
     at least one file per touched ``term_bucket=`` directory plus one
     sidecar stats row, so a long-running ingest accumulates small
-    files and probe-time listing cost creeps up. Same maintenance
-    shape as ann.compact_ivf_layout: read → ``coalesce(max_tasks)``
-    (narrow, no Exchange) → rewrite ``partitionBy(term_bucket)``; the
+    files and probe-time listing cost creeps up. The data files go
+    through layout.compact_partitioned_layout (shuffle-free, at most
+    ``max_tasks`` files per ``term_bucket=`` directory); the
     accumulated partial-stats rows collapse to ONE merged row (integer
-    sums — exact). The caller swaps ``dest_path`` in atomically so
-    probes never see a half-compacted index."""
-    df = spark.read.parquet(src_path)
-    (
-        df.coalesce(max_tasks)
-        .write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .parquet(dest_path)
-    )
+    sums — exact). ``src_path`` is left as it was."""
+    compact_partitioned_layout(spark, src_path, dest_path, "term_bucket", max_tasks)
     (
         spark.read.parquet(f"{src_path}/_stats")
         .agg(

@@ -769,10 +769,10 @@ def dedup_jaccard_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LSH over distinct shingles: build candidates from a pre-distinct
     # shingle frame to mirror the oracle exactly. Persisted: referenced
     # three times (signature build + both verify sides).
-    shingled = corpus.select(
+    shingled = track(corpus.select(
         "doc_id",
         F.array_distinct(H.word_shingles(F.col("text"), 3)).alias("sh"),
-    ).persist()
+    ).persist())
     sigs = shingled.select(
         "doc_id", H.minhash_md5(F.col("sh"), 8).alias("signature")
     )
@@ -2705,7 +2705,7 @@ def _simhash_pairs(
     corpus = _corpus2x(spark, sf_dir, near=True)
     # explode->codegen->aggregate formulation (dedup.simhash_fingerprints):
     # bit-identical to the fold version, ~3x faster (no interpreted HOFs)
-    fps = dedup.simhash_fingerprints(corpus, "doc_id", "text").persist()
+    fps = track(dedup.simhash_fingerprints(corpus, "doc_id", "text").persist())
     blocked = fps.select(
         "doc_id",
         "simhash",
@@ -3107,9 +3107,9 @@ def dedup_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     this finds contiguous-copy near-dups that token-multiset methods
     (SimHash) miss."""
     corpus = _corpus2x(spark, sf_dir, near=True)
-    fps = dedup.winnow_fingerprints(
+    fps = track(dedup.winnow_fingerprints(
         corpus, "doc_id", "text", k=_WINNOW_K, w=_WINNOW_W
-    ).persist()
+    ).persist())
     # Document frequency as a window count over fp — one shuffle, no
     # join. (The previous broadcast of the rare-fp set was a hidden
     # scale bug: rare fingerprints are MOST fingerprints, O(corpus/w)
@@ -7412,15 +7412,15 @@ def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("stopr") >= 0.01)
     )
     w = Window.partitionBy(H.fingerprint_md5(t)).orderBy("doc_id")
-    survivors = (
+    survivors = track(
         quality_kept.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
         .persist()
     )
-    shingled = survivors.select(
+    shingled = track(survivors.select(
         "doc_id", F.array_distinct(H.word_shingles(t, 3)).alias("sh")
-    ).persist()
+    ).persist())
     sigs = shingled.select(
         "doc_id", H.minhash_md5(F.col("sh"), 8).alias("signature")
     )
@@ -8451,9 +8451,9 @@ def collection_upsert_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Collection.upsert / Collection.delete over a ``buckets=16``
     layout): upsert rewrites 5 documents and inserts 2 synthetic rows,
     delete removes 5 ids — each op rewrites ONLY the ``id_bucket=``
-    dirs the touched ids hash into (PartitionFilters on the read,
-    per-bucket dir swap on the write; tests pin that untouched buckets
-    keep their files). The final table's fidelity aggregate must match
+    dirs the touched ids hash into (PartitionFilters on the read, one
+    staged write committed bucket dir by bucket dir; tests pin that
+    untouched buckets keep their files). The final table's fidelity aggregate must match
     DuckDB simulating the same edits relationally over the original
     parquet — the oracle adds the 2 synthetic rows' contributions as
     constants (doc_len 2x9, emb sum 2x32.0).
@@ -10277,9 +10277,9 @@ def q_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, "events", sf_dir).filter(F.col("user_id").isNotNull())
     # persisted: the per-user aggregate feeds BOTH the sketch cells and
     # the estimate probe — one fact-table scan, not two
-    ex = ev.groupBy("user_id").agg(
+    ex = track(ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("exact_n")
-    ).persist()
+    ).persist())
     keyed = ex.select(
         "user_id",
         "exact_n",

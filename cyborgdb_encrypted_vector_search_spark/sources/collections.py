@@ -22,10 +22,12 @@ per-record CRUD is an explicit non-goal (batch append/compact model).
 from __future__ import annotations
 
 import os
+import shutil
 from dataclasses import dataclass
 
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.dataset as pa_ds
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -51,16 +53,19 @@ class Collection:
 
     Two layouts:
 
-    - flat (default): a plain parquet dir; CRUD (delete/upsert) is a
-      full write-then-swap rewrite — fine for small/medium tables.
+    - flat (default): a plain parquet dir; delete/upsert/compact
+      rewrite the whole table — fine for small/medium tables.
     - bucket-partitioned (``create(..., buckets=N)``): rows land under
       ``id_bucket=pmod(xxhash64(id), N)/`` partition dirs. Point-gets
       prune to one bucket's files, and delete/upsert REWRITE ONLY THE
-      TOUCHED BUCKETS (partition-pruned read + per-bucket dir swap) —
-      at 100 TB a batch of deletes costs O(touched buckets), never a
-      full-table rewrite. The bucket count is recorded in a
-      ``_coll_meta.json`` sidecar (underscore-prefixed: invisible to
-      Spark's file listing) so any later opener sees the layout.
+      TOUCHED BUCKETS — at 100 TB a batch of deletes costs O(touched
+      buckets), never a full-table rewrite. The bucket count is
+      recorded in a ``_coll_meta.json`` sidecar (underscore-prefixed:
+      invisible to Spark's file listing) so any later opener sees the
+      layout.
+
+    Every rewrite on either layout is one staged write and one commit
+    (:meth:`_rewrite`, :meth:`_commit`); appends write in place.
     """
 
     spark: SparkSession
@@ -117,33 +122,26 @@ class Collection:
         return self.buckets
 
     def _bucket_expr(self, id_col: str = "id") -> Column:
-        return F.pmod(F.xxhash64(F.col(id_col)), F.lit(self.bucket_count)).cast(
-            "int"
-        )
+        return F.pmod(
+            F.xxhash64(F.col(id_col).cast("string")), F.lit(self.bucket_count)
+        ).cast("int")
 
     def _buckets_of(self, ids_df: DataFrame, id_col: str = "id") -> list[int]:
         """The bucket set a batch of ids lands in — computed WITH
-        Spark's own xxhash64 (never re-implemented driver-side), and
-        bounded by the bucket count, so the collect is tiny."""
-        return sorted(
-            r["b"]
-            for r in ids_df.select(
-                self._bucket_expr(id_col).alias("b")
-            )
-            .distinct()
-            .collect()
-        )
+        Spark's own xxhash64 (never re-implemented driver-side). A local
+        frame (an Arrow LocalRelation such as :meth:`_id_frame`) is
+        constant-folded by the optimizer, so its collect runs no job and
+        dedup is in Python; any other frame is deduplicated first, so
+        the collect stays bounded by the bucket count."""
+        b = ids_df.select(self._bucket_expr(id_col))
+        if not ids_df.isLocal():
+            b = b.distinct()
+        return sorted({r[0] for r in b.collect()})
 
     def _id_frame(self, ids: list[str]) -> DataFrame:
         """A caller's id list as a local frame (an Arrow LocalRelation:
         reading it back costs no Spark job)."""
         return self.spark.createDataFrame(pa.table({"id": pa.array(ids, pa.string())}))
-
-    def _buckets_of_ids(self, ids_df: DataFrame) -> list[int]:
-        """:meth:`_buckets_of` for an :meth:`_id_frame`: the optimizer
-        constant-folds Spark's own ``pmod(xxhash64(id), N)`` over the
-        local rows, so the collect runs no job; dedup is in Python."""
-        return sorted({r[0] for r in ids_df.select(self._bucket_expr()).collect()})
 
     # -- writes ---------------------------------------------------------
     def _project_rows(
@@ -188,23 +186,31 @@ class Collection:
         src/chromadb_store.py:7-8). Generates UUID ids when none given
         (reference src/cod.py:68); enforces the dim constraint the
         reference never checked."""
-        out = self._project_rows(
-            df, id_col, document_col, embedding_col, metadata_col
+        self._write(
+            self._project_rows(df, id_col, document_col, embedding_col, metadata_col),
+            self.path,
+            "append",
         )
+
+    def _write(
+        self, rows: DataFrame, dest: str, mode: str, files: int | None = None
+    ) -> None:
+        """The one physical write of both layouts (appends and staged
+        rewrites). Bucketed rows shuffle once by bucket before the
+        partitioned write, so each write lands ONE file per touched
+        bucket instead of (input partitions x buckets) small files;
+        ``files`` caps the shuffle's partitions (default: the bucket
+        count). A flat write repartitions only when ``files`` is set."""
         if self.bucket_count:
-            # shuffle once by bucket before the partitioned write: each
-            # append lands ONE file per touched bucket instead of
-            # (input partitions x buckets) small files — the shuffle is
-            # O(batch) and keeps every later bucket-pruned read cheap
             (
-                out.withColumn("id_bucket", self._bucket_expr())
-                .repartition(self.bucket_count, F.col("id_bucket"))
-                .write.mode("append")
+                rows.withColumn("id_bucket", self._bucket_expr())
+                .repartition(files or self.bucket_count, F.col("id_bucket"))
+                .write.mode(mode)
                 .partitionBy("id_bucket")
-                .parquet(self.path)
+                .parquet(dest)
             )
         else:
-            out.write.mode("append").parquet(self.path)
+            (rows.repartition(files) if files else rows).write.mode(mode).parquet(dest)
 
     # -- reads ----------------------------------------------------------
     def scan(self) -> DataFrame:
@@ -273,7 +279,7 @@ class Collection:
             # prune to the buckets the requested ids hash into: the
             # id_bucket IN (...) predicate is a PartitionFilter, so the
             # point-get reads only those buckets' files
-            buckets = self._buckets_of_ids(self._id_frame(ids))
+            buckets = self._buckets_of(self._id_frame(ids))
             src = self._scan_raw().filter(F.col("id_bucket").isin(buckets))
             return src.select(*cols).filter(F.col("id").isin(ids))
         return self.scan().select(*cols).filter(F.col("id").isin(ids))
@@ -410,150 +416,117 @@ class Collection:
     # -- batch maintenance (append/compact model; online CRUD is an
     #    explicit non-goal — SURVEY.md §7 hard parts (d)) ---------------
     def compact(self, target_partitions: int = 8) -> int:
-        """Rewrite the collection into ``target_partitions`` files.
-
-        Batch appends accumulate small files (each ``add`` writes >=1);
-        periodic compaction restores scan efficiency. Write-then-swap:
-        the new layout lands in a staging dir and replaces the old one
-        only after a successful write, so readers never see a partial
-        table. Returns the row count."""
-        import shutil
-
-        staged = self.path + ".compacting"
+        """Rewrite the collection into ``target_partitions`` files (a
+        bucketed layout: one file per bucket). Batch appends accumulate
+        small files (each ``add`` writes >=1); periodic compaction
+        restores scan efficiency. Returns the row count."""
         if self.bucket_count:
-            # keep the bucket layout: one hash-partitioned write keyed
-            # by id_bucket folds each bucket's small files into one
-            df = self._scan_raw().repartition("id_bucket")
-            n = df.count()
-            df.write.mode("overwrite").partitionBy("id_bucket").parquet(staged)
-            meta = os.path.join(self.path, self._META_FILE)
-            if os.path.isfile(meta):
-                shutil.copy(meta, os.path.join(staged, self._META_FILE))
-        else:
-            df = self.scan().repartition(target_partitions)
-            n = df.count()
-            df.write.mode("overwrite").parquet(staged)
-        old = self.path + ".old"
-        shutil.move(self.path, old)
-        shutil.move(staged, self.path)
-        shutil.rmtree(old)
-        return n
-
-    def _swap_in(self, keep: DataFrame, staged_suffix: str) -> int:
-        """Write ``keep`` to a staging dir, then atomically swap it in
-        for the current table (write-then-swap; readers never see a
-        partial table). Returns rows remaining."""
-        import shutil
-
-        staged = self.path + staged_suffix
-        n = keep.count()
-        keep.write.mode("overwrite").parquet(staged)
-        old = self.path + ".old"
-        shutil.move(self.path, old)
-        shutil.move(staged, self.path)
-        shutil.rmtree(old)
-        return n
-
-    def _rewrite_buckets(
-        self,
-        ids_df: DataFrame,
-        new_rows: DataFrame | None,
-        affected: list[int] | None = None,
-    ) -> int:
-        """Partition-pruned CRUD core for the bucketed layout: read
-        ONLY the buckets the incoming ids hash into (id_bucket IN (...)
-        is a PartitionFilter), anti-join the ids out, optionally union
-        replacement rows, stage the result partitioned, then swap just
-        the touched bucket dirs. Untouched buckets are never read,
-        never rewritten — the 100 TB CRUD contract. A bucket left empty
-        by a pure delete is removed (staging has no dir for it).
-        ``affected`` is the bucket set when the caller already has it.
-        Returns the number of touched buckets."""
-        import shutil
-
-        if affected is None:
-            affected = self._buckets_of(ids_df)
-        if not affected:
-            return 0
-        incoming = ids_df.select(F.col("id").cast("string").alias("id")).distinct()
-        keep = (
-            self._scan_raw()
-            .filter(F.col("id_bucket").isin(affected))
-            .join(F.broadcast(incoming), "id", "left_anti")
-        )
-        out = keep
-        if new_rows is not None:
-            out = keep.unionByName(
-                new_rows.withColumn("id_bucket", self._bucket_expr())
-            )
-        # pid-suffixed staging: two concurrent CRUD jobs on the same
-        # collection must not share a staging dir (last-writer-wins on
-        # the bucket swap below is the documented concurrency model,
-        # but a shared stage would interleave FILES, not buckets)
-        staged = f"{self.path}.crud_stage{os.getpid()}"
-        (
-            out.repartition(max(len(affected), 1), F.col("id_bucket"))
-            .write.mode("overwrite")
-            .partitionBy("id_bucket")
-            .parquet(staged)
-        )
-        for b in affected:
-            old_dir = os.path.join(self.path, f"id_bucket={b}")
-            new_dir = os.path.join(staged, f"id_bucket={b}")
-            if os.path.isdir(old_dir):
-                shutil.rmtree(old_dir)
-            if os.path.isdir(new_dir):
-                shutil.move(new_dir, old_dir)
-        shutil.rmtree(staged, ignore_errors=True)
-        return len(affected)
+            live = [d for d in os.listdir(self.path) if d.startswith("id_bucket=")]
+            return self._rewrite(None, buckets=sorted(int(d.split("=")[1]) for d in live))
+        return self._rewrite(None, files=target_partitions)
 
     def delete(self, ids: list[str]) -> int:
         """Batch delete by a SMALL caller-provided id list: the
         NOT-IN predicate pushes into the scan. For id sets of
         DataFrame scale use ``delete_matching`` — never materialize a
-        big id list on the driver. On a bucketed layout only the
-        touched buckets are rewritten; flat layouts pay the full
-        write-then-swap. Returns rows remaining (flat) or touched
-        buckets (bucketed)."""
-        if self.bucket_count:
-            ids_df = self._id_frame(ids)
-            return self._rewrite_buckets(ids_df, None, self._buckets_of_ids(ids_df))
-        keep = self.scan().filter(~F.col("id").isin(ids))
-        return self._swap_in(keep, ".deleting")
-
-    def _without(self, ids_df: DataFrame, id_col: str = "id") -> DataFrame:
-        """The collection minus every id in ``ids_df``: a left-anti
-        join plan (the incoming side shuffles/broadcasts by id; the
-        collection side streams — no driver materialization)."""
-        incoming = ids_df.select(
-            F.col(id_col).cast("string").alias("id")
-        ).distinct()
-        return self.scan().join(incoming, "id", "left_anti")
+        big id list on the driver. Returns rows remaining (flat) or
+        touched buckets (bucketed)."""
+        if not self.bucket_count:
+            return self._rewrite(ids)
+        buckets = self._buckets_of(self._id_frame(ids))
+        self._rewrite(ids, buckets=buckets)
+        return len(buckets)
 
     def delete_matching(self, ids_df: DataFrame, id_col: str = "id") -> int:
-        """Batch delete of every id present in ``ids_df`` via left-anti
-        join — fully distributed. Bucketed layouts rewrite only the
-        touched buckets; flat layouts swap the full table."""
-        if self.bucket_count:
-            return self._rewrite_buckets(
-                ids_df.select(F.col(id_col).cast("string").alias("id")), None
-            )
-        return self._swap_in(self._without(ids_df, id_col), ".deleting")
+        """Batch delete of every id present in ``ids_df`` via a
+        broadcast left-anti join — the ids never land on the driver.
+        Returns rows remaining (flat) or touched buckets (bucketed)."""
+        drop = ids_df.select(F.col(id_col).cast("string").alias("id"))
+        if not self.bucket_count:
+            return self._rewrite(drop)
+        buckets = self._buckets_of(ids_df, id_col)
+        self._rewrite(drop, buckets=buckets)
+        return len(buckets)
 
     def upsert(self, df: DataFrame, id_col: str = "id", **kwargs) -> None:
-        """Batch upsert: anti-join out the incoming ids, then append
-        the new rows. Both halves are distributed jobs — at ingest
-        scale the incoming batch never lands on the driver. On a
-        bucketed layout the old-row removal and the new-row insert land
-        in ONE partition-pruned rewrite of just the touched buckets."""
-        if self.bucket_count:
-            new_rows = self._project_rows(df, id_col=id_col, **kwargs)
-            self._rewrite_buckets(
-                df.select(F.col(id_col).cast("string").alias("id")), new_rows
+        """Batch upsert: the removal of the incoming ids (a broadcast
+        left-anti join) and the insert of the new rows are ONE staged
+        rewrite and one commit, on both layouts."""
+        self._rewrite(
+            df.select(F.col(id_col).cast("string").alias("id")),
+            self._project_rows(df, id_col=id_col, **kwargs),
+            self._buckets_of(df, id_col) if self.bucket_count else None,
+        )
+
+    def _rewrite(
+        self,
+        drop: list[str] | DataFrame | None,
+        new_rows: DataFrame | None = None,
+        buckets: list[int] | None = None,
+        files: int | None = None,
+    ) -> int:
+        """The one rewrite path of every collection write. Reads the
+        touched part — the ``buckets`` (``id_bucket IN (...)`` is a
+        PartitionFilter: untouched buckets are never read or rewritten)
+        or the whole flat table — drops the ``drop`` ids (a pushed
+        NOT IN for a list, a broadcast left-anti join for a frame),
+        unions ``new_rows``, writes the result to a sibling staging dir
+        and commits it part by part. Returns the staged row count, read
+        from the Parquet footers on the driver (no Spark job)."""
+        if buckets is None:
+            rows = self.scan()
+        elif not buckets:
+            return 0
+        else:
+            rows = self._scan_raw().filter(F.col("id_bucket").isin(buckets))
+            rows, files = rows.drop("id_bucket"), len(buckets)
+        if isinstance(drop, list):
+            rows = rows.filter(~F.col("id").isin(drop))
+        elif drop is not None:
+            rows = rows.join(F.broadcast(drop), "id", "left_anti")
+        if new_rows is not None:
+            rows = rows.unionByName(new_rows)
+        # pid-suffixed: two concurrent writers never share a stage
+        # (last-writer-wins per part is the concurrency model)
+        staged = f"{self.path}.stage{os.getpid()}"
+        self._write(rows, staged, "overwrite", files)
+        n = pa_ds.dataset(staged, format="parquet").count_rows()
+        if buckets is not None:
+            self._commit(staged, [f"id_bucket={b}" for b in buckets])
+            return n
+        # the flat commit replaces the whole dir: carry its sidecars
+        # (``_stream_commits/`` replay markers, ``_coll_meta.json``)
+        for entry in os.listdir(self.path):
+            src = os.path.join(self.path, entry)
+            if entry.startswith("_") and entry != "_SUCCESS":
+                copy = shutil.copytree if os.path.isdir(src) else shutil.copy2
+                copy(src, os.path.join(staged, entry))
+        self._commit(staged, [""])
+        return n
+
+    def _commit(self, staged: str, parts: list[str]) -> None:
+        """Swap each staged part in for the live one — a part is an
+        ``id_bucket=b`` dir or, as ``""``, the whole flat dir. Per part:
+        rename the live dir aside, rename the staged one in; the aside
+        copies are removed last, so a failure at any rename leaves every
+        committed row on disk (in the live part or under
+        ``{path}.aside{pid}``). A bucket the rewrite left empty has no
+        staged dir and simply disappears. The only place collection
+        data is renamed."""
+        aside = f"{self.path}.aside{os.getpid()}"
+        if os.path.exists(aside):  # an unfinished commit's rows: keep them
+            raise FileExistsError(f"{aside} is left from a failed commit")
+        for part in parts:
+            live, new, old = (
+                os.path.join(d, part) if part else d for d in (self.path, staged, aside)
             )
-            return
-        self.delete_matching(df, id_col=id_col)
-        self.add(df, id_col=id_col, **kwargs)
+            if os.path.isdir(live):
+                os.makedirs(os.path.dirname(old), exist_ok=True)
+                os.rename(live, old)
+            if os.path.isdir(new):
+                os.rename(new, live)
+        shutil.rmtree(aside, ignore_errors=True)
+        shutil.rmtree(staged, ignore_errors=True)
 
     # -- layouts ---------------------------------------------------------
     def save_bucketed(
@@ -673,7 +646,7 @@ class Collection:
             F.array().cast("array<float>").alias("embedding"),
             ct_map.alias("metadata"),
         )
-        out.write.mode("append").parquet(self.path)
+        self._write(out, self.path, "append")
 
     def extract_encrypted(self) -> DataFrame:
         """Scan of the encrypted table: yields ciphertext only (the
@@ -744,8 +717,6 @@ def list_collections(base_dir: str) -> list[str]:
 def delete_collection(base_dir: str, name: str) -> bool:
     """Drop a collection (Chroma's ``client.delete_collection()``).
     Returns False if it does not exist."""
-    import shutil
-
     p = os.path.join(base_dir, name)
     if not os.path.isdir(p):
         return False

@@ -176,8 +176,9 @@ def stream_append_to_ivf_layout(
     — duplicates survive only a crash in the narrow window between the
     parquet append and the marker write (see run_idempotent_batch for
     the transactional-format production answer). Compaction
-    (ann.compact_ivf_layout) bounds the small files appends leave
-    behind; centroid refresh stays a batch rebuild decision."""
+    (layout.compact_partitioned_layout over ``centroid_id``) bounds the
+    small files appends leave behind; centroid refresh stays a batch
+    rebuild decision."""
     from cyborgdb_encrypted_vector_search_spark.operators import ann as A
 
     name = f"ivf_ingest_{uuid.uuid4().hex[:8]}"

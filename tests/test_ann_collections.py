@@ -11,6 +11,9 @@ from pyspark.sql import functions as F
 
 from cyborgdb_encrypted_vector_search_spark.functions import vector as V
 from cyborgdb_encrypted_vector_search_spark.operators import ann, knn
+from cyborgdb_encrypted_vector_search_spark.operators.layout import (
+    compact_partitioned_layout,
+)
 from cyborgdb_encrypted_vector_search_spark.sources.collections import Collection
 from cyborgdb_encrypted_vector_search_spark.sources.registry import load
 
@@ -218,12 +221,17 @@ def test_collection_compact_delete_upsert(spark, tmp_path):
     assert rows == {"1": "doc 1 v2", "3": "doc 3", "5": "doc 5"}
 
 
-def test_upsert_delete_plan_is_distributed_anti_join(spark, tmp_path):
+def test_upsert_delete_plan_is_distributed_anti_join(spark, tmp_path, monkeypatch):
     """The upsert/delete_matching path must never materialize the
-    incoming ids on the driver: its keep-side plan is a left-anti JOIN
-    against the incoming DataFrame (broadcast/shuffle by id), not an
-    isin over a collected list."""
+    incoming ids on the driver: the plan the rewrite writes is a
+    left-anti JOIN against the incoming DataFrame (broadcast by id),
+    not an isin over a collected list."""
     coll = Collection.create(spark, "ua", str(tmp_path), dim=2)
+    written, frame_cls = [], type(coll.scan())
+    write = frame_cls.write
+    monkeypatch.setattr(
+        frame_cls, "write", property(lambda df: written.append(df) or write.fget(df))
+    )
     base = spark.createDataFrame(
         [(str(i), f"doc {i}", [float(i), 0.0]) for i in range(10)],
         "id string, d string, e array<float>",
@@ -232,12 +240,16 @@ def test_upsert_delete_plan_is_distributed_anti_join(spark, tmp_path):
     incoming = spark.createDataFrame(
         [("3", "v2", [9.0, 9.0]), ("99", "new", [1.0, 1.0])],
         "id string, d string, e array<float>",
-    )
-    plan = coll._without(incoming)._jdf.queryExecution().toString()
-    assert "LeftAnti" in plan
-    assert " IN (" not in plan  # no driver-collected id list
-
-    coll.upsert(incoming, id_col="id", document_col="d", embedding_col="e")
+    ).repartition(2)  # a distributed frame, not a local relation
+    for write_op in (
+        lambda: coll.delete_matching(incoming.filter(F.col("id") == "3")),
+        lambda: coll.upsert(incoming, id_col="id", document_col="d", embedding_col="e"),
+    ):
+        del written[:]
+        write_op()
+        plan = written[-1]._jdf.queryExecution().toString()
+        assert "LeftAnti" in plan
+        assert " IN (" not in plan  # no driver-collected id list
     rows = {r["id"]: r["document"] for r in coll.scan().collect()}
     assert rows["3"] == "v2" and rows["99"] == "new" and len(rows) == 11
 
@@ -922,7 +934,7 @@ def test_compact_ivf_layout_preserves_content_and_prunes(
             grown,
         )
     compacted = str(tmp_path / "compacted")
-    ann.compact_ivf_layout(spark, grown, compacted, max_tasks=2)
+    compact_partitioned_layout(spark, grown, compacted, "centroid_id", 2)
 
     def files_per_dir(path):
         return {
@@ -1303,3 +1315,184 @@ def test_bucketed_crud_model_based_random_ops(spark, tmp_path):
     sample = rng.sample(universe, 8)
     got_pg = {r["id"]: r["document"] for r in c.get(sample).collect()}
     assert got_pg == {i: model[i] for i in sample if i in model}
+
+
+# ---------------------------------------------------------------------------
+# One rewrite-and-commit path (Collection._rewrite / Collection._commit)
+# ---------------------------------------------------------------------------
+
+def _vec_frame(spark, ids, tag="v"):
+    return spark.createDataFrame(
+        [(i, f"{tag}{i}", [float(len(i)), float(k)], {"t": tag}) for k, i in enumerate(ids)],
+        "id string, document string, embedding array<float>, "
+        "metadata map<string,string>",
+    )
+
+
+def _ids_on_disk(*dirs):
+    """Every id in a parquet file under ``dirs`` (Spark's ``_``/``.``
+    entries skipped), read without Spark."""
+    import pyarrow.dataset as pa_ds
+
+    found = set()
+    for d in filter(os.path.isdir, dirs):
+        data = pa_ds.dataset(d, format="parquet")
+        if data.files:  # an aside dir the fault left empty has none
+            found |= set(data.to_table(columns=["id"])["id"].to_pylist())
+    return found
+
+
+def test_add_encrypted_lands_in_buckets(spark, tmp_path):
+    """A bucketed collection stores encrypted rows under its
+    ``id_bucket=`` dirs like any append, so every read path sees them."""
+    key = "0123456789abcdef"
+    df = _vec_frame(spark, [str(i) for i in range(10)])
+    enc = Collection.create(spark, "encb", str(tmp_path), dim=2, buckets=4)
+    enc.add_encrypted(df, key, id_col="id", metadata_col="metadata")
+    assert not [f for f in os.listdir(enc.path) if f.endswith(".parquet")]
+    assert _ids_on_disk(enc.path) == {str(i) for i in range(10)}
+
+    dec = {r["id"]: (r["document"], list(r["embedding"])) for r in enc.decrypt(key).collect()}
+    want = {r["id"]: (r["document"], list(r["embedding"])) for r in df.collect()}
+    assert dec == want
+    assert [r["id"] for r in enc.get(["7", "nope"]).collect()] == ["7"]
+
+    plain = Collection.create(spark, "plainb", str(tmp_path), dim=2)
+    plain.add(df, id_col="id", metadata_col="metadata")
+    q = [[1.0, 3.0], [1.0, -1.0]]
+    hits = lambda c: [  # noqa: E731
+        tuple(r) for r in c.select("query_idx", "rank", "id", "distance").collect()
+    ]
+    assert hits(enc.query_encrypted(key, query_embeddings=q, n_results=4)) == hits(
+        plain.query(query_embeddings=q, n_results=4)
+    )
+
+
+@pytest.mark.parametrize("buckets", [None, 4])
+def test_rewrites_keep_sidecars(spark, tmp_path, buckets):
+    """``_``-prefixed sidecars (the bucket-count meta, streaming replay
+    markers) survive compact, delete and upsert on both layouts."""
+    from cyborgdb_encrypted_vector_search_spark.streaming.ingest import (
+        run_idempotent_batch,
+    )
+
+    c = Collection.create(spark, "side", str(tmp_path), dim=2, buckets=buckets)
+    ids = [str(i) for i in range(20)]
+    run_idempotent_batch(
+        c.path, "tag", 0, lambda: c.add(_vec_frame(spark, ids), id_col="id")
+    )
+    marker = os.path.join(c.path, "_stream_commits", "tag-0")
+    sidecars = {e for e in os.listdir(c.path) if e.startswith("_") and e != "_SUCCESS"}
+    assert os.path.isfile(marker)
+    assert (Collection._META_FILE in sidecars) == bool(buckets)
+    for write in (
+        lambda: c.compact(),
+        lambda: c.delete(["3", "4"]),
+        lambda: c.upsert(_vec_frame(spark, ["5", "new"], "u"), id_col="id"),
+    ):
+        write()
+        assert sidecars <= set(os.listdir(c.path))
+        assert os.path.isfile(marker)
+        assert not run_idempotent_batch(c.path, "tag", 0, lambda: None)
+    assert c.bucket_count == buckets
+    got = {r["id"]: r["document"] for r in c.scan().collect()}
+    assert got == {**{i: f"v{i}" for i in ids if i not in ("3", "4")}, "5": "u5", "new": "unew"}
+
+
+@pytest.mark.parametrize(
+    "buckets, write",
+    [
+        (4, lambda spark, c: c.upsert(_vec_frame(spark, ["1", "2", "x"], "u"), id_col="id")),
+        (None, lambda spark, c: c.compact(target_partitions=1)),
+    ],
+    ids=["bucketed_upsert", "flat_compact"],
+)
+def test_commit_fault_keeps_committed_rows(spark, tmp_path, monkeypatch, buckets, write):
+    """A failure at any rename of a commit loses no committed row:
+    each one is still on disk, in its live part or in the aside dir
+    that holds the parts moved out so far."""
+    from pyspark.errors import AnalysisException
+
+    real_commit, real_rename = Collection._commit, os.rename
+    state = {"armed": False, "calls": 0, "fail_at": None}
+
+    def commit(self, staged, parts):
+        state["armed"] = True
+        try:
+            return real_commit(self, staged, parts)
+        finally:
+            state["armed"] = False
+
+    def rename(src, dst):
+        if state["armed"]:
+            if state["calls"] == state["fail_at"]:
+                raise OSError(f"injected fault at rename {state['calls']}")
+            state["calls"] += 1
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(Collection, "_commit", commit)
+    monkeypatch.setattr(os, "rename", rename)
+    ids = [str(i) for i in range(40)]
+    faults = 0
+    while True:
+        state.update(calls=0, fail_at=faults)
+        c = Collection.create(spark, f"f{faults}", str(tmp_path), dim=2, buckets=buckets)
+        for part in (ids[:20], ids[20:]):  # two appends: a compact has work
+            c.add(_vec_frame(spark, part), id_col="id")
+        assert _ids_on_disk(c.path) == set(ids)
+        try:
+            write(spark, c)
+        except OSError:
+            faults += 1
+            aside = f"{c.path}.aside{os.getpid()}"
+            assert _ids_on_disk(c.path, aside) >= set(ids)
+            if os.path.isdir(aside):
+                # the next write stops (at its commit, or at the read of
+                # a flat table that is still aside) and clears nothing
+                with pytest.raises((FileExistsError, AnalysisException)):
+                    c.delete(["0"])
+                assert _ids_on_disk(c.path, aside) >= set(ids)
+            continue
+        break
+    # every rename of the commit was failed once, then the write ran through
+    assert faults == state["calls"] >= 2
+    assert {r["id"] for r in c.scan().collect()} == set(ids) | (
+        {"x"} if buckets else set()
+    )
+
+
+def test_write_jobs(spark, tmp_path):
+    """Spark jobs per write: the bucket set of a local frame is hashed
+    with no job, the row count comes from the staged footers, and every
+    rewrite is one staged write (plus its shuffle map stage)."""
+    import pyarrow as pa
+
+    sc = spark.sparkContext
+
+    def jobs(name, fn):
+        sc.setJobGroup(name, name)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(name))
+
+    def arrow_frame(ids):
+        return spark.createDataFrame(pa.table({
+            "id": pa.array(ids, pa.string()),
+            "document": pa.array([f"u{i}" for i in ids], pa.string()),
+            "embedding": pa.array([[1.0, 2.0]] * len(ids), pa.list_(pa.float32())),
+        }))
+
+    base = _vec_frame(spark, [str(i) for i in range(200)])
+    bkt = Collection.create(spark, "jb", str(tmp_path), dim=2, buckets=8)
+    flat = Collection.create(spark, "jf", str(tmp_path), dim=2)
+    for c in (bkt, flat):
+        c.add(base, id_col="id", metadata_col="metadata")
+    up = arrow_frame(["1", "2", "new"])
+    assert up.isLocal()
+    assert jobs("jb_upsert", lambda: bkt.upsert(up, id_col="id")) <= 4
+    assert jobs("jb_delete", lambda: bkt.delete(["5", "6"])) <= 2
+    assert jobs("jb_compact", lambda: bkt.compact()) <= 2
+    assert jobs("jf_upsert", lambda: flat.upsert(up, id_col="id")) <= 4
+    assert (bkt.count(), flat.count()) == (199, 201)

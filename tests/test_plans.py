@@ -682,3 +682,35 @@ def test_bloom_filtered_join_injects_runtime_filter(spark, sf_dir, cat):
         "l_returnflag"
     ).count()
     assert "bloom_filter_agg" not in X.physical_plan(fresh)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_jaccard_verified",
+        "dedup_simhash",
+        "dedup_winnow_overlap",
+        "pipeline_corpus_curation",
+        "q_heavy_hitters_cms",
+    ],
+)
+def test_gate_persists_are_released(spark, sf_dir, cat, monkeypatch, name):
+    """Every relation a gate persists is tracked, so release_all()
+    leaves none of them cached. Entries are looked up by the persisted
+    frames' plans, so relations other tests cached do not count."""
+    from cyborgdb_encrypted_vector_search_spark.caching import release_all
+
+    frame_cls, persisted = type(spark.range(1)), []
+    for method in ("persist", "cache"):
+        real = getattr(frame_cls, method)
+        monkeypatch.setattr(
+            frame_cls,
+            method,
+            lambda df, *a, _real=real, **k: persisted.append(df) or _real(df, *a, **k),
+        )
+    release_all()
+    cat[name].fn(spark, sf_dir).collect()
+    release_all()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    assert persisted
+    assert [df for df in persisted if cm.lookupCachedData(df._jdf).nonEmpty()] == []

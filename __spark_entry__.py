@@ -4,8 +4,9 @@ A caller runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row count + schema +
 order-insensitive values). ``tests/test_spark_entry.py`` does exactly
-that for all 206 entries; ``tools/parity.py`` is the same check as a
-script.
+that for all 169 entries; ``tools/parity.py`` is the same check as a
+script. docs/CATALOG_PRUNE.md names the paper feature each entry
+serves.
 
 All real logic lives in ``cyborgdb_encrypted_vector_search_spark/``; this module just
 adapts the query catalog (plans/catalog.py) to the driver's API.

@@ -45,19 +45,6 @@ class CatalogEntry:
 CATALOG: dict[str, CatalogEntry] = {}
 
 
-def _epoch_us(col: str) -> "F.Column":
-    """Microseconds since epoch for a TIMESTAMP_NTZ column.
-
-    ``unix_micros`` rejects NTZ, and casting NTZ→TIMESTAMP first would
-    re-introduce session-timezone dependence; timestampdiff between two
-    NTZ values is pure wall-clock integer math — identical in any
-    session, matching DuckDB's ``epoch_us`` on its (naive) timestamps.
-    """
-    return F.expr(
-        f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', {col})"
-    )
-
-
 def query(name: str, sql: str | None):
     def deco(fn):
         CATALOG[name] = CatalogEntry(name, fn, sql)
@@ -277,139 +264,6 @@ def knn_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Relational pack (generalized operators: joins/aggs/windows/set ops)
 # ----------------------------------------------------------------------
 
-@query(
-    "q1_pricing_summary",
-    """
-    SELECT l_returnflag, l_linestatus,
-           CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-           CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
-           CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE)
-             AS sum_disc_price,
-           CAST(count(*) AS BIGINT) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-    GROUP BY l_returnflag, l_linestatus
-    """,
-)
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 shape: scan-filter-aggregate with map-side partials.
-    Sums run through DECIMAL(18,4) so partial-agg order can't change the
-    result vs the oracle; output cast back to DOUBLE for schema parity."""
-    li = load(spark, "lineitem", sf_dir)
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(F.col("l_quantity").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("sum_qty"),
-            F.sum(F.col("l_extendedprice").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("sum_base_price"),
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(18,4)"
-                )
-            )
-            .cast("double")
-            .alias("sum_disc_price"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-@query(
-    "q3_top_unshipped_orders",
-    """
-    SELECT o.o_orderkey AS o_orderkey,
-           strftime(o.o_orderdate, '%Y-%m-%d') AS o_orderdate,
-           CAST(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,4)))
-                AS DOUBLE) AS revenue
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE c.c_mktsegment = 'BUILDING'
-      AND o.o_orderdate < TIMESTAMP '1995-03-15 00:00:00'
-      AND l.l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
-    GROUP BY o.o_orderkey, o.o_orderdate
-    ORDER BY revenue DESC, o_orderkey ASC
-    LIMIT 10
-    """,
-)
-def q3_top_unshipped_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: selective dim filter -> fact join -> agg -> top-k.
-    customer is small relative to lineitem: broadcast it; the
-    lineitem-orders join shuffles on orderkey (the natural key)."""
-    c = load(spark, "customer", sf_dir).filter(F.col("c_mktsegment") == "BUILDING")
-    o = load(spark, "orders", sf_dir).filter(
-        F.col("o_orderdate") < F.lit("1995-03-15").cast("timestamp")
-    )
-    l = load(spark, "lineitem", sf_dir).filter(
-        F.col("l_shipdate") > F.lit("1995-03-15").cast("timestamp")
-    )
-    return (
-        l.join(o, l["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .groupBy("o_orderkey", "o_orderdate")
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(18,4)"
-                )
-            )
-            .cast("double")
-            .alias("revenue")
-        )
-        .select(
-            "o_orderkey",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_orderdate"),
-            "revenue",
-        )
-        .orderBy(F.desc("revenue"), F.asc("o_orderkey"))
-        .limit(10)
-    )
-
-
-@query(
-    "q5_nation_revenue",
-    """
-    SELECT n.n_name AS n_name,
-           CAST(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,4)))
-                AS DOUBLE) AS revenue
-    FROM region r
-    JOIN nation n ON n.n_regionkey = r.r_regionkey
-    JOIN customer c ON c.c_nationkey = n.n_nationkey
-    JOIN orders o ON o.o_custkey = c.c_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE r.r_name = 'ASIA'
-    GROUP BY n.n_name
-    """,
-)
-def q5_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: star join, dims broadcast, one shuffle on the
-    fact keys + one on the group key."""
-    r = load(spark, "region", sf_dir).filter(F.col("r_name") == "ASIA")
-    n = load(spark, "nation", sf_dir)
-    c = load(spark, "customer", sf_dir)
-    o = load(spark, "orders", sf_dir)
-    l = load(spark, "lineitem", sf_dir)
-    return (
-        l.join(o, l["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
-        .groupBy("n_name")
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(18,4)"
-                )
-            )
-            .cast("double")
-            .alias("revenue")
-        )
-    )
-
 
 @query(
     "q_window_top_orders_per_cust",
@@ -444,48 +298,6 @@ def q_window_top_orders_per_cust(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("o_totalprice", 4).alias("o_totalprice"),
             F.col("rnk").cast("int").alias("rnk"),
         )
-    )
-
-
-@query(
-    "q_events_json_agg",
-    """
-    SELECT event_type,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-           CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value,
-           CAST(sum(CASE WHEN CAST(json_extract_string(props, '$.k') AS INT) > 50
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_high_k
-    FROM events GROUP BY event_type
-    """,
-)
-def q_events_json_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured ops: JSON prop extraction (from_json) + multi-agg
-    incl. distinct count (SURVEY.md §2.4 generalization).
-
-    The distinct count is computed as a TWO-LEVEL aggregate — partial
-    agg keyed (event_type, user_id), then final agg by event_type with
-    n_users = count(*) of the first level — instead of
-    count_distinct in the multi-agg, which Catalyst plans via Expand
-    (every row duplicated per aggregate group before the shuffle). The
-    two-level shape map-side-combines BOTH levels, so the first
-    shuffle carries one row per (type, user) pair and the second one
-    row per pair again — at 100 TB that's the difference between
-    shuffling 2x the fact table and shuffling the distinct-pair set."""
-    ev = load(spark, "events", sf_dir)
-    k = F.from_json(F.col("props"), "k INT")["k"]
-    per_user = ev.groupBy("event_type", "user_id").agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.sum(F.col("value").cast("decimal(18,4)")).alias("__val"),
-        F.sum(F.when(k > 50, 1).otherwise(0)).alias("__high"),
-    )
-    return per_user.groupBy("event_type").agg(
-        F.sum("__n").cast("bigint").alias("n_events"),
-        # count(user_id), not count(*): a NULL-user group must not be
-        # counted — count(DISTINCT user_id) semantics exclude NULL.
-        F.count("user_id").cast("bigint").alias("n_users"),
-        F.sum("__val").cast("double").alias("total_value"),
-        F.sum("__high").cast("bigint").alias("n_high_k"),
     )
 
 
@@ -1553,49 +1365,6 @@ def q_rollup_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_events_user_gaps",
-    """
-    WITH seq AS (
-      SELECT user_id, event_type, epoch_us(ts) AS ts_us,
-             lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-               AS prev_us
-      FROM events
-    )
-    SELECT event_type,
-           CAST(count(*) AS BIGINT) AS n_gaps,
-           CAST(CAST(sum(ts_us - prev_us) AS BIGINT) AS DOUBLE) / count(*)
-             AS avg_gap_us
-    FROM seq WHERE prev_us IS NOT NULL
-    GROUP BY event_type
-    """,
-)
-def q_events_user_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Analytic window (lag) over event time per user — inter-event gap
-    stats by type. One shuffle on user_id for the window, one on
-    event_type for the aggregate. Integer microsecond math end-to-end,
-    so the average is bit-stable."""
-    ev = load(spark, "events", sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "user_id",
-        "event_type",
-        _epoch_us("ts").alias("ts_us"),
-        F.lag(_epoch_us("ts")).over(w).alias("prev_us"),
-    )
-    return (
-        seq.filter(F.col("prev_us").isNotNull())
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_gaps"),
-            (
-                F.sum(F.col("ts_us") - F.col("prev_us")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("avg_gap_us"),
-        )
-    )
-
-
-@query(
     "q_anti_join_quiet_customers",
     """
     SELECT n.n_name AS n_name, CAST(count(*) AS BIGINT) AS n_quiet
@@ -2089,47 +1858,6 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = S.read_events_stream(spark, _os.path.join(sf_dir, "events.parquet"))
     return S.run_stream_to_batch(spark, S.hourly_event_counts(stream))
-
-
-@query(
-    "q_events_sessionization",
-    """
-    WITH seq AS (
-      SELECT user_id, ts,
-             CASE WHEN lag(ts) OVER w IS NULL
-                    OR epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000
-                  THEN 1 ELSE 0 END AS new_s
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    sess AS (
-      SELECT user_id,
-             sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                              ROWS UNBOUNDED PRECEDING) AS sid
-      FROM seq
-    ),
-    per AS (
-      SELECT user_id, sid, count(*) AS n FROM sess GROUP BY 1, 2
-    )
-    SELECT user_id,
-           CAST(count(*) AS BIGINT) AS n_sessions,
-           CAST(max(n) AS BIGINT) AS max_session_events
-    FROM per GROUP BY user_id
-    """,
-)
-def q_events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session windows (30-minute gap) per user via the built-in
-    session_window aggregation; the oracle derives identical sessions
-    from first principles (lag → new-session flag → running sum). Works
-    unchanged on a stream (state-store sessions + watermark)."""
-    from cyborgdb_encrypted_vector_search_spark.streaming import ingest as S
-
-    ev = load(spark, "events", sf_dir)
-    per_session = S.sessionize(ev, "30 minutes")
-    return per_session.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_sessions"),
-        F.max("n_events").cast("bigint").alias("max_session_events"),
-    )
 
 
 # ----------------------------------------------------------------------
@@ -2652,7 +2380,7 @@ def text_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------------------------------------------------------
 # Coverage sweep: SimHash, prompt assembly (F6), JSON vector round-trip
-# (S3/F7), semi/as-of joins, range-frame windows, part/supplier tables,
+# (S3/F7), semi joins, part/supplier tables,
 # collection lifecycle (K1/K2/K5/S5/S6)
 # ----------------------------------------------------------------------
 
@@ -3353,55 +3081,6 @@ def q_semi_join_active(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_events_asof_signup",
-    """
-    SELECT event_id,
-           CAST(CASE WHEN last_signup_us IS NULL THEN -1
-                ELSE (ts_us - last_signup_us) END AS BIGINT) AS us_since_signup
-    FROM (
-      SELECT event_id, epoch_us(ts) AS ts_us,
-             max(CASE WHEN event_type = 'signup' THEN epoch_us(ts) END)
-               OVER (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS last_signup_us
-      FROM events
-    )
-    WHERE event_id < 500
-    """,
-)
-def q_events_asof_signup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join expressed as a running conditional max: each event
-    carries the timestamp of the user's most recent signup at-or-before
-    it (-1 if none yet). The classic as-of-join semantics without a
-    range join: one window shuffle on user_id, no point-in-time probe
-    per row."""
-    ev = load(spark, "events", sf_dir)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    last_signup = F.max(
-        F.when(F.col("event_type") == "signup", _epoch_us("ts"))
-    ).over(w)
-    return (
-        ev.select(
-            "event_id",
-            _epoch_us("ts").alias("__ts_us"),
-            last_signup.alias("__ls_us"),
-        )
-        .filter(F.col("event_id") < 500)
-        .select(
-            "event_id",
-            F.when(F.col("__ls_us").isNull(), F.lit(-1))
-            .otherwise(F.col("__ts_us") - F.col("__ls_us"))
-            .cast("bigint")
-            .alias("us_since_signup"),
-        )
-    )
-
-
-@query(
     "collection_lifecycle",
     """
     SELECT CAST(d.doc_id AS VARCHAR) AS id, d.text AS document,
@@ -3705,8 +3384,8 @@ def ann_ivf_kmeans_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Sources (S1 text-line reader), stateful streaming, skew-salted join,
-# approximate sketches
+# Sources (S1 text-line reader), stateful streaming, approximate
+# sketches
 # ----------------------------------------------------------------------
 
 @query(
@@ -3776,38 +3455,6 @@ def streaming_stateful_user_counts(spark: SparkSession, sf_dir: str) -> DataFram
     return (
         result.groupBy("user_id")
         .agg(F.max("n_events").alias("n_events"))
-    )
-
-
-@query(
-    "q_skew_salted_join",
-    """
-    SELECT c.c_mktsegment AS c_mktsegment,
-           CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-    GROUP BY c.c_mktsegment
-    """,
-)
-def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-mitigation pattern: the fact side is salted (key, salt) and
-    the dim side replicated across all salts, so one hot key spreads
-    over N tasks instead of one straggler. Differential claim: the
-    salted join computes exactly the plain join's result. (AQE skew-join
-    handles this adaptively; explicit salting is the belt-and-braces
-    version for deterministic layouts.)"""
-    from cyborgdb_encrypted_vector_search_spark.operators import skew
-
-    o = load(spark, "orders", sf_dir)
-    c = load(spark, "customer", sf_dir)
-    joined = skew.salted_join(
-        o, c, left_key="o_custkey", right_key="c_custkey", n_salts=8
-    )
-    return joined.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
-        .cast("double")
-        .alias("total"),
     )
 
 
@@ -3929,8 +3576,7 @@ def q_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     its exact values) — both engines' sketches must independently meet
     the contract for the hash to match; tests/test_plans.py recomputes
     the Spark predicates from sketch_accuracy_frame's raw columns.
-    Exact twins stay separately gated (q_events_json_agg,
-    q_percentiles)."""
+    The exact twin stays separately gated (q_percentiles)."""
     agg = sketch_accuracy_frame(spark, sf_dir)
     return agg.select(
         "event_type",
@@ -3943,84 +3589,6 @@ def q_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("p50_approx") >= F.col("p40_exact"))
             & (F.col("p50_approx") <= F.col("p60_exact"))
         ).alias("p50_ok"),
-    )
-
-
-@query(
-    "q_events_funnel",
-    """
-    WITH v AS (
-      SELECT user_id, min(ts) AS t1 FROM events
-      WHERE event_type = 'view' GROUP BY user_id
-    ),
-    c AS (
-      SELECT e.user_id, min(e.ts) AS t2
-      FROM events e JOIN v ON v.user_id = e.user_id AND e.ts > v.t1
-      WHERE e.event_type = 'click' GROUP BY e.user_id
-    ),
-    p AS (
-      SELECT e.user_id, min(e.ts) AS t3
-      FROM events e JOIN c ON c.user_id = e.user_id AND e.ts > c.t2
-      WHERE e.event_type = 'purchase' GROUP BY e.user_id
-    )
-    SELECT
-      (SELECT CAST(count(*) AS BIGINT) FROM v) AS n_view,
-      (SELECT CAST(count(*) AS BIGINT) FROM c) AS n_view_click,
-      (SELECT CAST(count(*) AS BIGINT) FROM p) AS n_funnel,
-      (SELECT CAST(coalesce(sum(epoch_us(p.t3) - epoch_us(v.t1)), 0)
-                   AS BIGINT)
-       FROM p JOIN v ON v.user_id = p.user_id) AS total_conv_us
-    """,
-)
-def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered-sequence FUNNEL analysis (view → click → purchase): per
-    user, the first view, the first click strictly after it, the first
-    purchase strictly after that — the product-analytics conversion
-    query. Step k is one filtered aggregate joined to step k-1 on
-    user_id with the ordering predicate in the join condition. Scale
-    shape: each step frame is ≤1 row per user — tiny next to the event
-    stream — so the step side broadcasts (the measured plan: 5 BHJ, 0
-    SMJ, the event scan's exchanges reused 4x); with user counts past
-    broadcast size every groupBy/join keys on user_id, so the steps
-    co-partition and adding a funnel step adds one co-partitioned
-    join, never a fresh shuffle of the raw events.
-    Conversion time sums in integer MICROSECONDS (order-free exact;
-    second-granularity truncation differs between engines on
-    fractional-second timestamps)."""
-    ev = load(spark, "events", sf_dir)
-
-    def first_after(prev: DataFrame, prev_t: str, etype: str, out_t: str):
-        e = ev.filter(F.col("event_type") == etype)
-        return (
-            e.join(prev, "user_id")
-            .filter(F.col("ts") > F.col(prev_t))
-            .groupBy("user_id")
-            .agg(F.min("ts").alias(out_t))
-        )
-
-    v = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-    )
-    c = first_after(v, "t1", "click", "t2")
-    p = first_after(c, "t2", "purchase", "t3")
-    conv = p.join(v, "user_id").select(
-        F.expr("timestampdiff(MICROSECOND, t1, t3)").alias("us")
-    )
-    return (
-        v.agg(F.count(F.lit(1)).cast("bigint").alias("n_view"))
-        .crossJoin(
-            c.agg(F.count(F.lit(1)).cast("bigint").alias("n_view_click"))
-        )
-        .crossJoin(p.agg(F.count(F.lit(1)).cast("bigint").alias("n_funnel")))
-        .crossJoin(
-            conv.agg(
-                F.coalesce(F.sum("us"), F.lit(0))
-                .cast("bigint")
-                .alias("total_conv_us")
-            )
-        )
     )
 
 
@@ -4231,55 +3799,6 @@ def q_retention_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_events_retention",
-    """
-    WITH firstw AS (
-      SELECT user_id, CAST(date_trunc('week', min(ts)) AS DATE) AS cohort
-      FROM events GROUP BY user_id
-    ),
-    act AS (
-      SELECT DISTINCT user_id, CAST(date_trunc('week', ts) AS DATE) AS w
-      FROM events
-    )
-    SELECT strftime(f.cohort, '%Y-%m-%d') AS cohort_week,
-           CAST(date_diff('day', f.cohort, a.w) // 7 AS INT) AS week_offset,
-           CAST(count(DISTINCT a.user_id) AS BIGINT) AS n_users
-    FROM firstw f JOIN act a USING (user_id)
-    WHERE date_diff('day', f.cohort, a.w) // 7 BETWEEN 0 AND 3
-    GROUP BY cohort_week, week_offset
-    """,
-)
-def q_events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COHORT RETENTION matrix — the companion analytics shape to the
-    funnel: users grouped by the week of their first event, counted in
-    each subsequent week they remain active (offsets 0-3). Both sides
-    are user-keyed aggregates joined on user_id (first-touch cohort ≤1
-    row/user broadcasts; the distinct-activity frame reuses the same
-    event scan), and week arithmetic stays in integer days (div 7 on
-    Monday-truncated dates — exact in both engines, no timestamp
-    truncation ambiguity)."""
-    ev = load(spark, "events", sf_dir)
-    firstw = ev.groupBy("user_id").agg(
-        F.date_trunc("week", F.min("ts")).cast("date").alias("cohort")
-    )
-    act = ev.select(
-        "user_id", F.date_trunc("week", "ts").cast("date").alias("w")
-    ).distinct()
-    j = act.join(F.broadcast(firstw), "user_id").withColumn(
-        "week_offset",
-        F.expr("CAST(datediff(w, cohort) div 7 AS INT)"),
-    )
-    return (
-        j.filter(F.col("week_offset").between(0, 3))
-        .groupBy(
-            F.date_format("cohort", "yyyy-MM-dd").alias("cohort_week"),
-            "week_offset",
-        )
-        .agg(F.countDistinct("user_id").cast("bigint").alias("n_users"))
-    )
-
-
-@query(
     "q_sketch_rollup_users",
     """
     SELECT event_type,
@@ -4409,671 +3928,6 @@ def q_argmax_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q4_order_priority",
-    """
-    SELECT o.o_orderpriority AS o_orderpriority,
-           CAST(count(*) AS BIGINT) AS order_count
-    FROM orders o
-    WHERE o.o_orderdate >= TIMESTAMP '1996-07-01'
-      AND o.o_orderdate < TIMESTAMP '1996-10-01'
-      AND EXISTS (
-        SELECT 1 FROM lineitem l
-        WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate
-      )
-    GROUP BY o.o_orderpriority
-    """,
-)
-def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: correlated EXISTS as a left-semi join against the
-    fact table, then a small aggregate. The semi join shuffles once on
-    orderkey; lineitem never materializes beyond the join keys."""
-    o = load(spark, "orders", sf_dir).filter(
-        (F.col("o_orderdate") >= F.lit("1996-07-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1996-10-01").cast("timestamp"))
-    )
-    l = load(spark, "lineitem", sf_dir).select("l_orderkey", "l_shipdate")
-    semi = o.join(
-        l,
-        (o["o_orderkey"] == l["l_orderkey"]) & (l["l_shipdate"] > o["o_orderdate"]),
-        "left_semi",
-    )
-    return semi.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("order_count")
-    )
-
-
-@query(
-    "q12_shipmode_priority",
-    """
-    SELECT l.l_linestatus AS l_linestatus,
-           CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                         THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-           CAST(sum(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                         THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-    WHERE l.l_shipdate >= TIMESTAMP '1997-01-01'
-      AND l.l_shipdate < TIMESTAMP '1998-01-01'
-    GROUP BY l.l_linestatus
-    """,
-)
-def q12_shipmode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape: conditional CASE aggregation over a fact-fact
-    join — pivot-style counting without a pivot operator."""
-    l = load(spark, "lineitem", sf_dir).filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    o = load(spark, "orders", sf_dir)
-    high = F.col("o_orderpriority").isin(["1-URGENT", "2-HIGH"])
-    return (
-        l.join(o, l["l_orderkey"] == o["o_orderkey"])
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).cast("bigint").alias(
-                "high_line_count"
-            ),
-            F.sum(F.when(~high, 1).otherwise(0)).cast("bigint").alias(
-                "low_line_count"
-            ),
-        )
-    )
-
-
-@query(
-    "q14_promo_share",
-    """
-    SELECT round(
-             100.0 * CAST(sum(CASE WHEN p.p_type = 'PROMO'
-                    THEN CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,4))
-                    ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE)
-             / CAST(sum(CAST(l.l_extendedprice * (1 - l.l_discount)
-                    AS DECIMAL(18,4))) AS DOUBLE), 6) AS promo_share_pct
-    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-    WHERE l.l_shipdate >= TIMESTAMP '1997-03-01'
-      AND l.l_shipdate < TIMESTAMP '1997-04-01'
-    """,
-)
-def q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape: conditional revenue share — broadcast dim join +
-    two conditional decimal sums divided in double."""
-    l = load(spark, "lineitem", sf_dir).filter(
-        (F.col("l_shipdate") >= F.lit("1997-03-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
-    )
-    p = load(spark, "part", sf_dir)
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(18,4)"
-    )
-    promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(
-        F.lit(0).cast("decimal(18,4)")
-    )
-    return (
-        l.join(F.broadcast(p), l["l_partkey"] == p["p_partkey"])
-        .agg(
-            F.round(
-                F.lit(100.0)
-                * F.sum(promo).cast("double")
-                / F.sum(rev).cast("double"),
-                6,
-            ).alias("promo_share_pct")
-        )
-    )
-
-
-@query(
-    "q6_forecast_revenue",
-    """
-    SELECT CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,4)))
-                AS DOUBLE) AS revenue
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-      AND l_shipdate < TIMESTAMP '1997-01-01'
-      AND l_discount BETWEEN 0.05 AND 0.07
-      AND l_quantity < 24
-    """,
-)
-def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape: pure scan-filter-agg — every predicate pushes to
-    the parquet reader (range on shipdate/discount/quantity), no
-    shuffle beyond the single-row final agg. The canonical test that
-    pushdown + whole-stage codegen are working; dates shifted to the
-    testdata's 1995-2001 span."""
-    li = load(spark, "lineitem", sf_dir)
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_discount") >= 0.05)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * F.col("l_discount")).cast(
-                    "decimal(18,4)"
-                )
-            )
-            .cast("double")
-            .alias("revenue")
-        )
-    )
-
-
-@query(
-    "q10_returned_items",
-    """
-    SELECT c.c_custkey AS c_custkey, c.c_name AS c_name, n.n_name AS n_name,
-           CAST(sum(CAST(l.l_extendedprice * (1 - l.l_discount)
-                AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    WHERE o.o_orderdate >= TIMESTAMP '1996-10-01'
-      AND o.o_orderdate < TIMESTAMP '1997-01-01'
-      AND l.l_returnflag = 'R'
-    GROUP BY c.c_custkey, c.c_name, n.n_name
-    ORDER BY revenue DESC, c_custkey ASC LIMIT 20
-    """,
-)
-def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape: who returned the most revenue in a quarter.
-    Fact-fact join orders⋈lineitem shuffles on orderkey; customer and
-    nation are broadcast dims; global top-20 plans as
-    TakeOrderedAndProject, never a full sort. Deterministic tiebreak on
-    c_custkey so the LIMIT is stable across engines."""
-    o = load(spark, "orders", sf_dir).filter(
-        (F.col("o_orderdate") >= F.lit("1996-10-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
-    )
-    l = load(spark, "lineitem", sf_dir).filter(F.col("l_returnflag") == "R")
-    c = load(spark, "customer", sf_dir)
-    n = load(spark, "nation", sf_dir)
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(18,4)"
-    )
-    return (
-        l.join(o, l["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(F.sum(rev).cast("double").alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-        .limit(20)
-    )
-
-
-@query(
-    "q13_customer_distribution",
-    """
-    SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-    FROM (
-      SELECT c.c_custkey, CAST(count(o.o_orderkey) AS BIGINT) AS c_count
-      FROM customer c
-      LEFT JOIN orders o ON c.c_custkey = o.o_custkey
-        AND o.o_orderpriority <> '1-URGENT'
-      GROUP BY c.c_custkey
-    )
-    GROUP BY c_count
-    """,
-)
-def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape: distribution of orders per customer including
-    zero-order customers — LEFT join with a compound on-clause (the
-    filter must live in the join condition, not WHERE, to keep the
-    unmatched rows), count(nullable) then a second small agg over the
-    counts. The filter-in-ON vs filter-in-WHERE distinction is the
-    semantic point pinned here."""
-    c = load(spark, "customer", sf_dir)
-    o = load(spark, "orders", sf_dir)
-    per_cust = (
-        c.join(
-            o,
-            (c["c_custkey"] == o["o_custkey"])
-            & (o["o_orderpriority"] != "1-URGENT"),
-            "left",
-        )
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(
-        F.count(F.lit(1)).alias("custdist")
-    )
-
-
-@query(
-    "q18_large_orders",
-    """
-    SELECT c.c_name AS c_name, c.c_custkey AS c_custkey,
-           o.o_orderkey AS o_orderkey,
-           strftime(o.o_orderdate, '%Y-%m-%d') AS o_orderdate,
-           o.o_totalprice AS o_totalprice,
-           CAST(sum(CAST(l.l_quantity AS DECIMAL(18,4))) AS DOUBLE)
-             AS total_qty
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    WHERE o.o_orderkey IN (
-      SELECT l_orderkey FROM lineitem
-      GROUP BY l_orderkey HAVING sum(l_quantity) > 300
-    )
-    GROUP BY c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
-             o.o_totalprice
-    """,
-)
-def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape: large-volume orders via an IN-subquery that is
-    itself an aggregate — planned as a semi-join against the
-    grouped-and-filtered lineitem. The qualifying-key set is tiny
-    (p99 of per-order qty is ~260), so it broadcasts; the outer
-    aggregation then only touches the surviving orders."""
-    l = load(spark, "lineitem", sf_dir)
-    qualifying = (
-        l.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("__qty"))
-        .filter(F.col("__qty") > 300)
-        .select("l_orderkey")
-    )
-    o = load(spark, "orders", sf_dir).join(
-        F.broadcast(qualifying),
-        F.col("o_orderkey") == qualifying["l_orderkey"],
-        "left_semi",
-    )
-    c = load(spark, "customer", sf_dir)
-    return (
-        o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .join(l, o["o_orderkey"] == l["l_orderkey"])
-        .groupBy("c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-        .agg(
-            F.sum(F.col("l_quantity").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("total_qty")
-        )
-        .select(
-            "c_name",
-            "c_custkey",
-            "o_orderkey",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_orderdate"),
-            "o_totalprice",
-            "total_qty",
-        )
-    )
-
-
-@query(
-    "q19_disjunctive_revenue",
-    """
-    SELECT CAST(sum(CAST(l.l_extendedprice * (1 - l.l_discount)
-                AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-           CAST(count(*) AS BIGINT) AS n_lines
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-    WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 5
-           AND l.l_quantity BETWEEN 1 AND 11)
-       OR (p.p_brand = 'Brand#23' AND p.p_size BETWEEN 1 AND 10
-           AND l.l_quantity BETWEEN 10 AND 20)
-       OR (p.p_brand = 'Brand#34' AND p.p_size BETWEEN 1 AND 15
-           AND l.l_quantity BETWEEN 20 AND 30)
-    """,
-)
-def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 shape: disjunctive multi-table predicate. The
-    single-table conjuncts Catalyst can factor out (brand IN (...),
-    size <= 15, quantity <= 30) push to each scan; the cross-table
-    residual evaluates after the broadcast join. Container/shipmode
-    columns don't exist in the testdata, so the brand/size/quantity
-    core of the predicate carries the shape."""
-    l = load(spark, "lineitem", sf_dir)
-    p = load(spark, "part", sf_dir)
-    cond = (
-        (F.col("p_brand") == "Brand#12")
-        & F.col("p_size").between(1, 5)
-        & F.col("l_quantity").between(1, 11)
-    ) | (
-        (F.col("p_brand") == "Brand#23")
-        & F.col("p_size").between(1, 10)
-        & F.col("l_quantity").between(10, 20)
-    ) | (
-        (F.col("p_brand") == "Brand#34")
-        & F.col("p_size").between(1, 15)
-        & F.col("l_quantity").between(20, 30)
-    )
-    return (
-        l.join(F.broadcast(p), l["l_partkey"] == p["p_partkey"])
-        .filter(cond)
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(18,4)"
-                )
-            )
-            .cast("double")
-            .alias("revenue"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-    )
-
-
-@query(
-    "q7_nation_volume",
-    """
-    SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-           CAST(year(l.l_shipdate) AS INTEGER) AS ship_year,
-           CAST(sum(CAST(l.l_extendedprice * (1 - l.l_discount)
-                AS DECIMAL(18,4))) AS DOUBLE) AS volume
-    FROM lineitem l
-    JOIN supplier s ON s.s_suppkey = l.l_suppkey
-    JOIN orders o ON o.o_orderkey = l.l_orderkey
-    JOIN customer c ON c.c_custkey = o.o_custkey
-    JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
-    JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
-    WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-       OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
-    GROUP BY n1.n_name, n2.n_name, year(l.l_shipdate)
-    """,
-)
-def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape: bilateral trade volume by year. One fact-fact
-    shuffle join (lineitem⋈orders on orderkey); supplier, customer and
-    both nation legs broadcast. The disjunctive nation-pair predicate
-    can't push below the joins — it needs both sides — so it runs as a
-    post-join filter, exactly where Catalyst places it."""
-    l = load(spark, "lineitem", sf_dir)
-    s = load(spark, "supplier", sf_dir)
-    o = load(spark, "orders", sf_dir)
-    c = load(spark, "customer", sf_dir)
-    n1 = load(spark, "nation", sf_dir).select(
-        F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation")
-    )
-    n2 = load(spark, "nation", sf_dir).select(
-        F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation")
-    )
-    pair = (
-        (F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2")
-    ) | (
-        (F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1")
-    )
-    return (
-        l.join(o, l["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(s), l["l_suppkey"] == s["s_suppkey"])
-        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
-        .filter(pair)
-        .groupBy(
-            "supp_nation", "cust_nation", F.year("l_shipdate").alias("ship_year")
-        )
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(18,4)"
-                )
-            )
-            .cast("double")
-            .alias("volume")
-        )
-    )
-
-
-@query(
-    "q8_market_share",
-    """
-    SELECT ship_year,
-           round(CAST(sum(CASE WHEN supp_nation = 'NATION_1'
-                         THEN volume ELSE CAST(0 AS DECIMAL(18,4)) END)
-                 AS DOUBLE)
-                 / CAST(sum(volume) AS DOUBLE), 7) AS mkt_share
-    FROM (
-      SELECT CAST(year(o.o_orderdate) AS INTEGER) AS ship_year,
-             CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,4))
-               AS volume,
-             n1.n_name AS supp_nation
-      FROM lineitem l
-      JOIN part p ON p.p_partkey = l.l_partkey
-      JOIN orders o ON o.o_orderkey = l.l_orderkey
-      JOIN customer c ON c.c_custkey = o.o_custkey
-      JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
-      JOIN region r ON n2.n_regionkey = r.r_regionkey
-      JOIN supplier s ON s.s_suppkey = l.l_suppkey
-      JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
-      WHERE r.r_name = 'EUROPE' AND p.p_type = 'PROMO'
-    )
-    GROUP BY ship_year
-    """,
-)
-def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 shape: one supplier nation's share of PROMO-part volume
-    sold into EUROPE, per year — conditional-sum-over-sum after a
-    seven-table join. All dimension legs broadcast; the only shuffle is
-    lineitem⋈orders and the final small agg on year."""
-    l = load(spark, "lineitem", sf_dir)
-    p = load(spark, "part", sf_dir).filter(F.col("p_type") == "PROMO")
-    o = load(spark, "orders", sf_dir)
-    c = load(spark, "customer", sf_dir)
-    s = load(spark, "supplier", sf_dir)
-    n1 = load(spark, "nation", sf_dir).select(
-        F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation")
-    )
-    n2 = load(spark, "nation", sf_dir).select(
-        F.col("n_nationkey").alias("n2_key"), F.col("n_regionkey").alias("n2_region")
-    )
-    r = load(spark, "region", sf_dir).filter(F.col("r_name") == "EUROPE")
-    vol = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(18,4)"
-    )
-    n1_vol = F.when(F.col("supp_nation") == "NATION_1", F.col("volume")).otherwise(
-        F.lit(0).cast("decimal(18,4)")
-    )
-    joined = (
-        l.join(o, l["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(p), l["l_partkey"] == p["p_partkey"])
-        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
-        .join(F.broadcast(r), F.col("n2_region") == F.col("r_regionkey"))
-        .join(F.broadcast(s), l["l_suppkey"] == s["s_suppkey"])
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
-        .select(
-            F.year("o_orderdate").alias("ship_year"),
-            vol.alias("volume"),
-            "supp_nation",
-        )
-    )
-    return joined.groupBy("ship_year").agg(
-        F.round(
-            F.sum(n1_vol).cast("double") / F.sum("volume").cast("double"), 7
-        ).alias("mkt_share")
-    )
-
-
-@query(
-    "q15_top_supplier",
-    """
-    WITH rev AS (
-      SELECT l_suppkey,
-             CAST(sum(CAST(l_extendedprice * (1 - l_discount)
-                  AS DECIMAL(18,4))) AS DOUBLE) AS total_revenue
-      FROM lineitem
-      WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        AND l_shipdate < TIMESTAMP '1996-04-01'
-      GROUP BY l_suppkey
-    )
-    SELECT s.s_suppkey AS s_suppkey, s.s_name AS s_name,
-           rev.total_revenue AS total_revenue
-    FROM supplier s JOIN rev ON s.s_suppkey = rev.l_suppkey
-    WHERE rev.total_revenue = (SELECT max(total_revenue) FROM rev)
-    """,
-)
-def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15 shape: the view-then-max pattern — quarterly revenue
-    per supplier, keep the supplier(s) at the global max. The revenue
-    frame is computed once and reused for both the max (scalar
-    aggregate, broadcast back) and the final equality filter; Spark
-    expresses the reuse as a cached-free double reference the optimizer
-    dedups into one shuffle at this size."""
-    li = load(spark, "lineitem", sf_dir).filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
-    )
-    rev = li.groupBy("l_suppkey").agg(
-        F.sum(
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                "decimal(18,4)"
-            )
-        )
-        .cast("double")
-        .alias("total_revenue")
-    )
-    mx = rev.agg(F.max("total_revenue").alias("__mx"))
-    s = load(spark, "supplier", sf_dir)
-    return (
-        rev.join(F.broadcast(mx), rev["total_revenue"] == mx["__mx"])
-        .join(F.broadcast(s), rev["l_suppkey"] == s["s_suppkey"])
-        .select("s_suppkey", "s_name", "total_revenue")
-    )
-
-
-@query(
-    "q17_small_quantity_revenue",
-    """
-    SELECT round(CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,4)))
-                 AS DOUBLE) / 7.0, 6) AS avg_yearly,
-           CAST(count(*) AS BIGINT) AS n_lines
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-    WHERE p.p_brand = 'Brand#23'
-      AND l.l_quantity < (
-        SELECT 0.5 * avg(l2.l_quantity) FROM lineitem l2
-        WHERE l2.l_partkey = p.p_partkey
-      )
-    """,
-)
-def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape: correlated aggregate subquery (per-part average
-    quantity) decorrelated into a groupBy + broadcast join — the
-    classic rewrite Spark's planner applies to correlated scalar
-    subqueries, written out explicitly here: per-part thresholds are a
-    tiny aggregate frame joined back to the brand-filtered fact."""
-    l = load(spark, "lineitem", sf_dir)
-    p = load(spark, "part", sf_dir).filter(F.col("p_brand") == "Brand#23")
-    # per-part threshold over ALL lineitems of that part (not only the
-    # brand-filtered ones) — matches the correlated subquery's scope
-    thresholds = l.groupBy(F.col("l_partkey").alias("t_partkey")).agg(
-        (F.lit(0.5) * F.avg("l_quantity")).alias("qty_threshold")
-    )
-    return (
-        l.join(F.broadcast(p), l["l_partkey"] == p["p_partkey"])
-        .join(F.broadcast(thresholds), l["l_partkey"] == F.col("t_partkey"))
-        .filter(F.col("l_quantity") < F.col("qty_threshold"))
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice").cast("decimal(18,4)")).cast(
-                    "double"
-                )
-                / 7.0,
-                6,
-            ).alias("avg_yearly"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-    )
-
-
-@query(
-    "q22_idle_rich_customers",
-    """
-    SELECT c.c_nationkey AS c_nationkey,
-           CAST(count(*) AS BIGINT) AS numcust,
-           round(CAST(sum(CAST(c.c_acctbal AS DECIMAL(18,4))) AS DOUBLE), 4)
-             AS totacctbal
-    FROM customer c
-    WHERE c.c_acctbal > (
-        SELECT avg(c_acctbal) FROM customer WHERE c_acctbal > 0
-      )
-      AND NOT EXISTS (
-        SELECT 1 FROM orders o
-        WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT'
-      )
-    GROUP BY c.c_nationkey
-    """,
-)
-def q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape: above-average-balance customers with no urgent
-    orders, summarized per nation. Scalar aggregate subquery (global
-    average) broadcast into the filter + NOT EXISTS planned as a
-    left-anti join against the urgent-order keys. The testdata carries
-    no phone column, so nationkey stands in for the country-code
-    grouping."""
-    c = load(spark, "customer", sf_dir)
-    avg_bal = c.filter(F.col("c_acctbal") > 0).agg(
-        F.avg("c_acctbal").alias("__avg")
-    )
-    urgent = (
-        load(spark, "orders", sf_dir)
-        .filter(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_custkey")
-    )
-    return (
-        c.join(F.broadcast(avg_bal))
-        .filter(F.col("c_acctbal") > F.col("__avg"))
-        .join(urgent, c["c_custkey"] == urgent["o_custkey"], "left_anti")
-        .groupBy("c_nationkey")
-        .agg(
-            F.count(F.lit(1)).alias("numcust"),
-            F.round(
-                F.sum(F.col("c_acctbal").cast("decimal(18,4)")).cast("double"), 4
-            ).alias("totacctbal"),
-        )
-    )
-
-
-@query(
-    "q_events_range_join",
-    """
-    WITH p AS (SELECT event_id, user_id, ts FROM events
-               WHERE event_type = 'purchase'),
-    c AS (SELECT event_id, user_id, ts FROM events
-          WHERE event_type = 'click'),
-    per_purchase AS (
-      SELECT p.event_id, count(c.event_id) AS n_recent_clicks
-      FROM p LEFT JOIN c
-        ON p.user_id = c.user_id
-       AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts < p.ts
-      GROUP BY p.event_id
-    )
-    SELECT CAST(n_recent_clicks AS BIGINT) AS n_recent_clicks,
-           CAST(count(*) AS BIGINT) AS n_purchases
-    FROM per_purchase GROUP BY 1
-    """,
-)
-def q_events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval/range join: clicks within the hour before each purchase
-    by the same user. The equi-key (user_id) carries the shuffle — the
-    range predicate evaluates inside each sort-merge group, so cost is
-    O(per-user events), never a cross product. Summarized into a
-    clicks-before-purchase histogram."""
-    ev = load(spark, "events", sf_dir)
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("p_id"), "user_id", F.col("ts").alias("p_ts")
-    )
-    c = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("c_id"),
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-    )
-    per = (
-        p.join(
-            c,
-            (p["user_id"] == c["c_user"])
-            & (c["c_ts"] >= p["p_ts"] - F.expr("INTERVAL 1 HOUR"))
-            & (c["c_ts"] < p["p_ts"]),
-            "left",
-        )
-        .groupBy("p_id")
-        .agg(F.count("c_id").alias("n_recent_clicks"))
-    )
-    return per.groupBy("n_recent_clicks").agg(
-        F.count(F.lit(1)).alias("n_purchases")
-    )
-
-
-@query(
     "q_sample_hash",
     """
     SELECT doc_id, lang FROM documents
@@ -5122,137 +3976,6 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select("lang", "doc_id", F.row_number().over(w).alias("rn"))
         .filter(F.col("rn") <= 20)
         .select("lang", "doc_id")
-    )
-
-
-@query(
-    "q9_product_profit",
-    """
-    SELECT n.n_name AS nation,
-           CAST(year(o.o_orderdate) AS INTEGER) AS order_year,
-           round(CAST(sum(CAST(l.l_extendedprice * (1 - l.l_discount)
-                  - 0.6 * p.p_retailprice * l.l_quantity
-                  AS DECIMAL(18,4))) AS DOUBLE), 4) AS profit
-    FROM lineitem l
-    JOIN part p ON p.p_partkey = l.l_partkey
-    JOIN supplier s ON s.s_suppkey = l.l_suppkey
-    JOIN nation n ON s.s_nationkey = n.n_nationkey
-    JOIN orders o ON o.o_orderkey = l.l_orderkey
-    WHERE p.p_name LIKE '%ring%'
-    GROUP BY n.n_name, year(o.o_orderdate)
-    """,
-)
-def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 shape: profit per supplier-nation per year for parts
-    matching a name pattern. The testdata has no partsupp, so supply
-    cost is modeled as 60% of p_retailprice — the join/agg shape (LIKE
-    filter on a broadcast dim, fact-fact shuffle, two-level group) is
-    what's exercised."""
-    l = load(spark, "lineitem", sf_dir)
-    p = load(spark, "part", sf_dir).filter(F.col("p_name").like("%ring%"))
-    s = load(spark, "supplier", sf_dir)
-    n = load(spark, "nation", sf_dir)
-    o = load(spark, "orders", sf_dir)
-    amount = (
-        F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        - 0.6 * F.col("p_retailprice") * F.col("l_quantity")
-    ).cast("decimal(18,4)")
-    return (
-        l.join(o, l["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(p), l["l_partkey"] == p["p_partkey"])
-        .join(F.broadcast(s), l["l_suppkey"] == s["s_suppkey"])
-        .join(F.broadcast(n), F.col("s_nationkey") == n["n_nationkey"])
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.year("o_orderdate").alias("order_year"),
-        )
-        .agg(F.round(F.sum(amount).cast("double"), 4).alias("profit"))
-    )
-
-
-@query(
-    "q16_supplier_breadth",
-    """
-    SELECT p.p_brand AS p_brand, p.p_type AS p_type, p.p_size AS p_size,
-           CAST(count(DISTINCT l.l_suppkey) AS BIGINT) AS supplier_cnt
-    FROM part p JOIN lineitem l ON p.p_partkey = l.l_partkey
-    WHERE p.p_brand <> 'Brand#45'
-      AND p.p_size IN (1, 4, 9, 16, 25, 36, 49)
-    GROUP BY p.p_brand, p.p_type, p.p_size
-    """,
-)
-def q16_supplier_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16 shape: how many distinct suppliers ship each
-    (brand, type, size) bucket — distinct-count after a dim filter with
-    an IN-list. partsupp doesn't exist in the testdata, so the
-    supplier-part relation is derived from lineitem, which is the same
-    distinct-agg shape at fact-table scale (two-phase: local distinct
-    sets, then merged)."""
-    p = load(spark, "part", sf_dir).filter(
-        (F.col("p_brand") != "Brand#45")
-        & F.col("p_size").isin(1, 4, 9, 16, 25, 36, 49)
-    )
-    l = load(spark, "lineitem", sf_dir)
-    return (
-        l.join(F.broadcast(p), l["l_partkey"] == p["p_partkey"])
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-    )
-
-
-@query(
-    "q21_sole_late_shipper",
-    """
-    WITH per AS (
-      SELECT l_orderkey, l_suppkey, max(l_shipdate) AS sd
-      FROM lineitem GROUP BY l_orderkey, l_suppkey
-    ),
-    ord AS (
-      SELECT l_orderkey, max(sd) AS mx, count(*) AS nsupp
-      FROM per GROUP BY l_orderkey
-    ),
-    atmax AS (
-      SELECT per.l_orderkey, per.l_suppkey, ord.nsupp
-      FROM per JOIN ord
-        ON per.l_orderkey = ord.l_orderkey AND per.sd = ord.mx
-    ),
-    cnt AS (
-      SELECT l_orderkey, count(*) AS n_at_max FROM atmax GROUP BY l_orderkey
-    ),
-    sole AS (
-      SELECT atmax.l_suppkey
-      FROM atmax JOIN cnt ON atmax.l_orderkey = cnt.l_orderkey
-      WHERE atmax.nsupp >= 2 AND cnt.n_at_max = 1
-    )
-    SELECT l_suppkey AS s_suppkey, CAST(count(*) AS BIGINT) AS numwait
-    FROM sole GROUP BY l_suppkey
-    """,
-)
-def q21_sole_late_shipper(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21 shape: suppliers who alone shipped last on
-    multi-supplier orders (the testdata lacks commit/receipt dates, so
-    'kept the order waiting' = sole holder of the order's latest ship
-    date). Two-level aggregation replaces Q21's EXISTS/NOT EXISTS
-    pair: per-(order,supplier) max, then per-order stats, then a semi
-    filter — no correlated re-scan of lineitem."""
-    l = load(spark, "lineitem", sf_dir)
-    per = l.groupBy("l_orderkey", "l_suppkey").agg(
-        F.max("l_shipdate").alias("sd")
-    )
-    w_ord = per.groupBy("l_orderkey").agg(
-        F.max("sd").alias("mx"), F.count(F.lit(1)).alias("nsupp")
-    )
-    joined = per.join(w_ord, "l_orderkey")
-    at_max = joined.filter(F.col("sd") == F.col("mx"))
-    n_at_max = at_max.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).alias("n_at_max")
-    )
-    sole = (
-        at_max.join(n_at_max, "l_orderkey")
-        .filter((F.col("nsupp") >= 2) & (F.col("n_at_max") == 1))
-    )
-    return sole.groupBy(F.col("l_suppkey").alias("s_suppkey")).agg(
-        F.count(F.lit(1)).alias("numwait")
     )
 
 
@@ -6027,215 +4750,6 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q2_min_cost_supplier",
-    """
-    WITH cost AS (
-      SELECT l_partkey, l_suppkey,
-             CAST(sum(CAST(l_extendedprice / l_quantity AS DECIMAL(18,6)))
-                  AS DOUBLE) / count(*) AS supplycost
-      FROM lineitem GROUP BY 1, 2
-    ),
-    eligible AS (
-      SELECT c.l_partkey, c.l_suppkey, c.supplycost
-      FROM cost c
-      JOIN supplier s ON s.s_suppkey = c.l_suppkey
-      JOIN nation n ON n.n_nationkey = s.s_nationkey
-      JOIN region r ON r.r_regionkey = n.n_regionkey
-      WHERE r.r_name = 'EUROPE'
-    ),
-    minc AS (
-      SELECT l_partkey, min(supplycost) AS mc FROM eligible GROUP BY 1
-    )
-    SELECT round(s.s_acctbal, 4) AS s_acctbal, s.s_name AS s_name,
-           n.n_name AS n_name, p.p_partkey AS p_partkey,
-           round(e.supplycost, 6) AS supplycost
-    FROM eligible e
-    JOIN minc m ON m.l_partkey = e.l_partkey AND e.supplycost = m.mc
-    JOIN part p ON p.p_partkey = e.l_partkey
-    JOIN supplier s ON s.s_suppkey = e.l_suppkey
-    JOIN nation n ON n.n_nationkey = s.s_nationkey
-    WHERE p.p_size = 15 AND p.p_type = 'PROMO'
-    ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-    LIMIT 100
-    """,
-)
-def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 shape: for each qualifying part, the supplier(s) in one
-    region offering the minimum supply cost (correlated min subquery →
-    decorrelated per-part min joined back on float equality). The
-    testdata has no partsupp, so supply cost is derived as the average
-    unit price each supplier actually charged for the part in lineitem
-    — summed through DECIMAL so Spark and the oracle agree bit-exactly
-    before the min-equality filter. Region/nation/supplier are all tiny
-    dims: every join below the per-(part,supplier) aggregate is a
-    broadcast, so the only shuffle is the cost groupBy itself."""
-    li = load(spark, "lineitem", sf_dir)
-    s = load(spark, "supplier", sf_dir)
-    n = load(spark, "nation", sf_dir)
-    r = load(spark, "region", sf_dir).filter(F.col("r_name") == "EUROPE")
-    cost = li.groupBy("l_partkey", "l_suppkey").agg(
-        (
-            F.sum(
-                (F.col("l_extendedprice") / F.col("l_quantity")).cast(
-                    "decimal(18,6)"
-                )
-            ).cast("double")
-            / F.count(F.lit(1))
-        ).alias("supplycost")
-    )
-    eligible = (
-        cost.join(F.broadcast(s), cost["l_suppkey"] == s["s_suppkey"])
-        .join(F.broadcast(n), s["s_nationkey"] == n["n_nationkey"])
-        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
-        .select("l_partkey", "l_suppkey", "supplycost", "s_acctbal", "s_name", "n_name")
-    )
-    minc = eligible.groupBy(F.col("l_partkey").alias("m_partkey")).agg(
-        F.min("supplycost").alias("mc")
-    )
-    p = load(spark, "part", sf_dir).filter(
-        (F.col("p_size") == 15) & (F.col("p_type") == "PROMO")
-    )
-    return (
-        eligible.join(
-            F.broadcast(minc),
-            (eligible["l_partkey"] == F.col("m_partkey"))
-            & (eligible["supplycost"] == F.col("mc")),
-        )
-        .join(F.broadcast(p), eligible["l_partkey"] == p["p_partkey"])
-        .select(
-            F.round("s_acctbal", 4).alias("s_acctbal"),
-            "s_name",
-            "n_name",
-            "p_partkey",
-            F.round("supplycost", 6).alias("supplycost"),
-        )
-        .orderBy(F.desc("s_acctbal"), "n_name", "s_name", "p_partkey")
-        .limit(100)
-    )
-
-
-@query(
-    "q11_important_part_value",
-    """
-    WITH val AS (
-      SELECT l.l_partkey AS p_partkey,
-             sum(CAST(l.l_extendedprice * (1 - l.l_discount)
-                      AS DECIMAL(18,4))) AS v
-      FROM lineitem l
-      JOIN supplier s ON s.s_suppkey = l.l_suppkey
-      JOIN nation n ON n.n_nationkey = s.s_nationkey
-      WHERE n.n_name IN ('NATION_3', 'NATION_7')
-      GROUP BY 1
-    )
-    SELECT p_partkey, round(CAST(v AS DOUBLE), 4) AS part_value
-    FROM val
-    WHERE CAST(v AS DOUBLE) > (SELECT CAST(sum(v) AS DOUBLE) * 0.001 FROM val)
-    """,
-)
-def q11_important_part_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11 shape: per-part traded value restricted to two
-    nations' suppliers, keeping parts whose value exceeds a fraction of
-    the grand total — the scalar-subquery-in-HAVING pattern. The value
-    frame is aggregated once; the global total is a one-row aggregate
-    of that same frame broadcast back into the filter, so the plan is
-    one shuffle (the partkey groupBy) + a broadcast nested-loop of a
-    single row. Sums stay DECIMAL-exact until the final comparison."""
-    li = load(spark, "lineitem", sf_dir)
-    s = load(spark, "supplier", sf_dir)
-    n = load(spark, "nation", sf_dir).filter(
-        F.col("n_name").isin("NATION_3", "NATION_7")
-    )
-    val = (
-        li.join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
-        .join(F.broadcast(n), s["s_nationkey"] == n["n_nationkey"])
-        .groupBy(F.col("l_partkey").alias("p_partkey"))
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(18,4)"
-                )
-            ).alias("v")
-        )
-    )
-    total = val.agg((F.sum("v").cast("double") * F.lit(0.001)).alias("__thr"))
-    return (
-        val.join(F.broadcast(total))
-        .filter(F.col("v").cast("double") > F.col("__thr"))
-        .select(
-            "p_partkey", F.round(F.col("v").cast("double"), 4).alias("part_value")
-        )
-    )
-
-
-@query(
-    "q20_heavy_shippers",
-    """
-    WITH shipped AS (
-      SELECT l_partkey, l_suppkey,
-             sum(CAST(l_quantity AS DECIMAL(18,4))) AS qty
-      FROM lineitem
-      WHERE l_shipdate >= TIMESTAMP '1995-01-01'
-        AND l_shipdate < TIMESTAMP '1996-01-01'
-      GROUP BY 1, 2
-    ),
-    avail AS (
-      SELECT l_partkey AS a_partkey,
-             CAST(sum(qty) AS DOUBLE) / count(*) AS avg_qty
-      FROM shipped GROUP BY 1
-    ),
-    big AS (
-      SELECT DISTINCT sh.l_suppkey
-      FROM shipped sh
-      JOIN part p ON p.p_partkey = sh.l_partkey
-      JOIN avail a ON a.a_partkey = sh.l_partkey
-      WHERE p.p_name LIKE '%widget%'
-        AND CAST(sh.qty AS DOUBLE) > 1.5 * a.avg_qty
-    )
-    SELECT s.s_name AS s_name, round(s.s_acctbal, 4) AS s_acctbal
-    FROM supplier s
-    JOIN nation n ON n.n_nationkey = s.s_nationkey
-    WHERE n.n_name = 'NATION_5'
-      AND s.s_suppkey IN (SELECT l_suppkey FROM big)
-    ORDER BY s_name
-    """,
-)
-def q20_heavy_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20 shape: the nested-IN semi-join chain — suppliers in
-    one nation who shipped disproportionate volume of a part family in
-    1995. The original's partsupp.availqty threshold becomes a per-part
-    average-shipped proxy (same correlated-threshold structure as the
-    real query, partsupp being absent from the testdata). Spark plans
-    the IN as a left-semi join; the shipped aggregate is the only fact
-    shuffle and the date filter is pushed to the parquet scan."""
-    li = load(spark, "lineitem", sf_dir).filter(
-        (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1996-01-01").cast("timestamp"))
-    )
-    shipped = li.groupBy("l_partkey", "l_suppkey").agg(
-        F.sum(F.col("l_quantity").cast("decimal(18,4)")).alias("qty")
-    )
-    avail = shipped.groupBy(F.col("l_partkey").alias("a_partkey")).agg(
-        (F.sum("qty").cast("double") / F.count(F.lit(1))).alias("avg_qty")
-    )
-    p = load(spark, "part", sf_dir).filter(F.col("p_name").like("%widget%"))
-    big = (
-        shipped.join(F.broadcast(p), shipped["l_partkey"] == p["p_partkey"])
-        .join(F.broadcast(avail), shipped["l_partkey"] == F.col("a_partkey"))
-        .filter(F.col("qty").cast("double") > F.lit(1.5) * F.col("avg_qty"))
-        .select("l_suppkey")
-        .distinct()
-    )
-    s = load(spark, "supplier", sf_dir)
-    n = load(spark, "nation", sf_dir).filter(F.col("n_name") == "NATION_5")
-    return (
-        s.join(F.broadcast(n), s["s_nationkey"] == n["n_nationkey"])
-        .join(big, s["s_suppkey"] == big["l_suppkey"], "left_semi")
-        .select("s_name", F.round("s_acctbal", 4).alias("s_acctbal"))
-        .orderBy("s_name")
-    )
-
-
-@query(
     "q_grouping_sets_orders",
     """
     SELECT coalesce(o_orderstatus, 'ALL') AS o_orderstatus,
@@ -6446,10 +4960,9 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE streaming session windows (F.session_window, gap 30 min):
     state merges adjacent events per user until a gap >= the timeout,
     window end = last event + gap. The oracle derives the identical
-    sessions relationally (lag -> gap flags -> running session id) —
-    the batch formulation q_events_sessionization aggregates further;
-    this one checks the raw per-session frame, including Spark's
-    dynamic-gap window bounds, against SQL."""
+    sessions relationally (lag -> gap flags -> running session id) and
+    checks the raw per-session frame, including Spark's dynamic-gap
+    window bounds, against SQL."""
     import os as _os
 
     from cyborgdb_encrypted_vector_search_spark.streaming import ingest as S
@@ -8665,8 +7178,7 @@ def q_split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ----------------------------------------------------------------------
 # Round-5 continuation: training-pipeline breadth — semantic dedup
 # (SemDeDup), exact containment, CDC snapshot diff, incremental rollup
-# maintenance, last-touch attribution, rolling time-range features,
-# robust outlier detection
+# maintenance, robust outlier detection
 # ----------------------------------------------------------------------
 
 @query(
@@ -8873,103 +7385,6 @@ def q_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_events_attribution",
-    """
-    WITH seq AS (
-      SELECT user_id, event_id, ts, event_type,
-             last_value(CASE WHEN event_type IN ('click', 'view')
-                             THEN event_id END IGNORE NULLS) OVER w
-               AS attr_id,
-             last_value(CASE WHEN event_type IN ('click', 'view')
-                             THEN ts END IGNORE NULLS) OVER w
-               AS attr_ts
-      FROM events
-      WHERE user_id < 30
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-    )
-    SELECT user_id, event_id,
-           strftime(ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts,
-           attr_id,
-           CAST(epoch_us(ts) - epoch_us(attr_ts) AS BIGINT) AS gap_us
-    FROM seq WHERE event_type = 'purchase'
-    """,
-)
-def q_events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Last-touch attribution: each purchase joined to the user's most
-    recent STRICTLY PRIOR click/view — the marketing-attribution /
-    feature-store point-in-time primitive. One window over ROWS
-    UNBOUNDED..1 PRECEDING with last(ignorenulls) does the as-of join
-    without any self-join or per-event subquery: one shuffle on
-    user_id, linear scan per user. Ties at identical ts break on
-    event_id identically in both engines; purchases with no prior
-    touch keep NULL attribution."""
-    ev = load(spark, "events", sf_dir).filter(F.col("user_id") < 30)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    is_touch = F.col("event_type").isin("click", "view")
-    seq = ev.withColumn(
-        "attr_id",
-        F.last(F.when(is_touch, F.col("event_id")), ignorenulls=True).over(w),
-    ).withColumn(
-        "attr_ts",
-        F.last(F.when(is_touch, F.col("ts")), ignorenulls=True).over(w),
-    )
-    return seq.filter(F.col("event_type") == "purchase").select(
-        "user_id",
-        "event_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
-        "attr_id",
-        (_epoch_us("ts") - _epoch_us("attr_ts")).cast("bigint").alias("gap_us"),
-    )
-
-
-@query(
-    "q_events_rolling_features",
-    """
-    SELECT user_id, event_id,
-           strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
-           CAST(count(*) OVER w AS BIGINT) AS n_1h,
-           CAST(sum(CAST(value AS DECIMAL(18,4))) OVER w AS DOUBLE)
-             AS v_1h
-    FROM events
-    WHERE user_id < 10
-    WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-                 RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-    """,
-)
-def q_events_rolling_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-range rolling features: per user, the trailing-1-hour event
-    count and value sum at every event — the standard feature-
-    engineering shape (RANGE frame over event time, not ROWS, so burst
-    density is measured in wall-clock). The frame is keyed on exact
-    epoch microseconds; peers at identical ts are in-frame for each
-    other in both engines by RANGE semantics. Sums go through
-    DECIMAL(18,4) so in-frame accumulation order cannot change a bit.
-    One shuffle on user_id; the user predicate is pushed to the scan."""
-    ev = load(spark, "events", sf_dir).filter(F.col("user_id") < 10)
-    ev = ev.withColumn("__eus", _epoch_us("ts"))
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("__eus")
-        .rangeBetween(-3_600_000_000, 0)
-    )
-    return ev.select(
-        "user_id",
-        "event_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
-        F.count(F.lit(1)).over(w).cast("bigint").alias("n_1h"),
-        F.sum(F.col("value").cast("decimal(18,4)"))
-        .over(w)
-        .cast("double")
-        .alias("v_1h"),
-    )
-
-
-@query(
     "q_outlier_orders",
     """
     WITH spend AS (
@@ -9057,7 +7472,7 @@ def q_outlier_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ----------------------------------------------------------------------
 # Round-5 additions, second wave: data-derived sampling quotas, kNN
 # classification + retrieval eval metrics, binary payload dedup,
-# histograms, per-doc TF-IDF keywords, gaps-and-islands streaks
+# histograms, per-doc TF-IDF keywords
 # ----------------------------------------------------------------------
 
 _UNIT_EMB_L = V.sql_with_unit("embeddings", "vec_id, label", "embedding")
@@ -9408,65 +7823,6 @@ def text_keyword_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_events_streaks",
-    """
-    WITH days AS (
-      SELECT DISTINCT user_id, CAST(ts AS DATE) AS d
-      FROM events WHERE user_id < 50
-    ),
-    isl AS (
-      SELECT user_id, d,
-             d - CAST(row_number() OVER (
-                   PARTITION BY user_id ORDER BY d
-                 ) AS INT) AS anchor
-      FROM days
-    ),
-    streaks AS (
-      SELECT user_id, anchor, CAST(count(*) AS BIGINT) AS best_streak,
-             min(d) AS start_d
-      FROM isl GROUP BY 1, 2
-    )
-    SELECT user_id, best_streak,
-           strftime(start_d, '%Y-%m-%d') AS streak_start
-    FROM streaks
-    QUALIFY row_number() OVER (
-      PARTITION BY user_id ORDER BY best_streak DESC, start_d ASC
-    ) = 1
-    """,
-)
-def q_events_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Longest consecutive-day activity streak per user (ties: earliest
-    streak wins) — the gaps-and-islands idiom: anchor = date minus its
-    per-user rank collapses each run of consecutive days to one
-    constant, so streaks fall out of a plain groupBy. Engagement /
-    retention feature with two shuffles (distinct days, island
-    aggregate), both keyed on user_id so at scale they reuse one
-    partitioning."""
-    ev = load(spark, "events", sf_dir).filter(F.col("user_id") < 50)
-    days = ev.select("user_id", F.to_date("ts").alias("d")).distinct()
-    w = Window.partitionBy("user_id").orderBy("d")
-    isl = days.withColumn(
-        "anchor", F.date_sub(F.col("d"), F.row_number().over(w))
-    )
-    streaks = isl.groupBy("user_id", "anchor").agg(
-        F.count(F.lit(1)).cast("bigint").alias("best_streak"),
-        F.min("d").alias("start_d"),
-    )
-    w2 = Window.partitionBy("user_id").orderBy(
-        F.desc("best_streak"), F.asc("start_d")
-    )
-    return (
-        streaks.withColumn("__r", F.row_number().over(w2))
-        .filter(F.col("__r") == 1)
-        .select(
-            "user_id",
-            "best_streak",
-            F.date_format("start_d", "yyyy-MM-dd").alias("streak_start"),
-        )
-    )
-
-
-@query(
     "q_table_fingerprint",
     """
     SELECT o_orderstatus,
@@ -9557,52 +7913,6 @@ def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select("doc_id", "n_chars", es_key.alias("es_key"))
         .orderBy(F.desc("es_key"), F.asc("doc_id"))
         .limit(100)
-    )
-
-
-@query(
-    "q_events_transitions",
-    """
-    WITH seq AS (
-      SELECT user_id, event_type,
-             lag(event_type) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-             ) AS prev_type
-      FROM events
-    )
-    SELECT prev_type, event_type AS next_type,
-           CAST(count(*) AS BIGINT) AS n,
-           round(count(*) * 1.0 / sum(count(*)) OVER (
-             PARTITION BY prev_type), 7) AS p_next
-    FROM seq WHERE prev_type IS NOT NULL
-    GROUP BY 1, 2
-    """,
-)
-def q_events_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition matrix over per-user event
-    sequences: lag() pairs each event with its predecessor
-    (deterministic (ts, event_id) order), then one |types|² aggregate
-    with row-normalized transition probabilities. The behavioral-model
-    / anomaly-baseline primitive next to the funnel and sessionization
-    gates. Scales as one user_id-partitioned sort window (the same
-    partitioning sessionization uses) feeding a tiny aggregate; the
-    normalizing window runs on |types|² rows."""
-    ev = load(spark, "events", sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "user_id",
-        "event_type",
-        F.lag("event_type").over(w).alias("prev_type"),
-    ).filter(F.col("prev_type").isNotNull())
-    counts = seq.groupBy("prev_type", F.col("event_type").alias("next_type")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n")
-    )
-    wnorm = Window.partitionBy("prev_type")
-    return counts.select(
-        "prev_type",
-        "next_type",
-        "n",
-        F.round(F.col("n") * 1.0 / F.sum("n").over(wnorm), 7).alias("p_next"),
     )
 
 
@@ -10552,103 +8862,6 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_events_gapfill_hourly",
-    """
-    WITH bounds AS (
-      SELECT date_trunc('hour', min(ts)) AS h0,
-             date_trunc('hour', max(ts)) AS h1
-      FROM events
-    ),
-    grid AS (
-      SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h
-      FROM bounds
-    ),
-    types AS (SELECT DISTINCT event_type AS et FROM events),
-    hourly AS (
-      SELECT event_type AS et, date_trunc('hour', ts) AS h,
-             CAST(count(*) AS BIGINT) AS n,
-             round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE)
-                   / count(*), 7) AS avg_v
-      FROM events GROUP BY 1, 2
-    ),
-    filled AS (
-      SELECT t.et, g.h,
-             coalesce(hr.n, 0) AS n_events,
-             last_value(hr.avg_v IGNORE NULLS) OVER (
-               PARTITION BY t.et ORDER BY g.h
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-             ) AS ff_avg
-      FROM grid g CROSS JOIN types t
-      LEFT JOIN hourly hr ON hr.et = t.et AND hr.h = g.h
-    )
-    SELECT et AS event_type,
-           strftime(h, '%Y-%m-%d %H:00') AS hour,
-           n_events, ff_avg
-    FROM filled
-    """,
-)
-def q_events_gapfill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-series resample + gap fill + forward fill — the hypertable
-    read pattern (TimescaleDB's time_bucket_gapfill + locf,
-    re-expressed declaratively): a dense hourly grid is generated with
-    one ``sequence`` over the table's [min, max] hour (a bounded
-    2-value aggregate fixes the bounds), cross-joined with the bounded
-    event-type dim, left-joined against the hourly aggregate, and
-    missing hours get count 0 plus a forward-filled (last non-null)
-    hourly average via one per-type ordered window. Scale shape: the
-    fact table is touched ONCE (the hourly groupBy); the grid is
-    O(hours × types) — metadata-sized next to the 100 TB fact — and
-    the forward-fill window partitions by type, so no single-partition
-    sort over raw rows anywhere. Averages go through exact DECIMAL
-    sums and round ONCE (cross-engine float discipline)."""
-    ev = load(spark, "events", sf_dir)
-    b = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = b.select(
-        F.explode(
-            F.sequence("h0", "h1", F.expr("INTERVAL 1 HOUR"))
-        ).alias("h")
-    )
-    types = ev.select(
-        F.col("event_type").alias("et")
-    ).distinct()
-    hourly = ev.groupBy(
-        F.col("event_type").alias("et"),
-        F.date_trunc("hour", "ts").alias("h"),
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.round(
-            F.sum(F.col("value").cast("decimal(18,4)")).cast("double")
-            / F.count(F.lit(1)),
-            7,
-        ).alias("avg_v"),
-    )
-    w = (
-        Window.partitionBy("et")
-        .orderBy("h")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        grid.crossJoin(F.broadcast(types))
-        .join(hourly, ["et", "h"], "left")
-        .select(
-            "et",
-            "h",
-            F.coalesce("n", F.lit(0)).cast("bigint").alias("n_events"),
-            F.last("avg_v", ignorenulls=True).over(w).alias("ff_avg"),
-        )
-        .select(
-            F.col("et").alias("event_type"),
-            F.date_format("h", "yyyy-MM-dd HH:00").alias("hour"),
-            "n_events",
-            "ff_avg",
-        )
-    )
-
-
-@query(
     "q_graph_edge_support",
     f"""
     WITH edges AS ({_GRAPH_EDGES_SQL}),
@@ -10856,68 +9069,8 @@ def q_stats_regression_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_events_ema_user",
-    """
-    WITH RECURSIVE seq AS (
-      SELECT user_id,
-             row_number() OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-             ) AS rn,
-             CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT) AS x
-      FROM events WHERE user_id IS NOT NULL
-    ),
-    nmax AS (
-      SELECT user_id, CAST(count(*) AS BIGINT) AS n_events
-      FROM seq GROUP BY 1
-    ),
-    ema AS (
-      SELECT user_id, rn, x AS e FROM seq WHERE rn = 1
-      UNION ALL
-      SELECT s.user_id, s.rn, (85 * e.e + 15 * s.x) // 100 AS e
-      FROM ema e JOIN seq s
-        ON s.user_id = e.user_id AND s.rn = e.rn + 1
-    )
-    SELECT m.user_id, m.n_events, CAST(e.e AS BIGINT) AS ema_fp
-    FROM ema e JOIN nmax m
-      ON m.user_id = e.user_id AND e.rn = m.n_events
-    """,
-)
-def q_events_ema_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user exponentially-decayed activity score (operators/
-    timeseries.ema_fixedpoint) — the recency-weighted feature training
-    pipelines weight users/sources by. A true per-key RECURSION (row i
-    depends on row i-1's OUTPUT), the one time-series shape Catalyst
-    can't express declaratively: runs as one Arrow-batched
-    applyInPandas fold per user — distributed across keys, sequential
-    only within a key's bounded event list. Fixed-point contract
-    (value → DECIMAL(18,4) → ×10^4 BIGINT; floor division; decay
-    0.85), so the recursion is exactly reproducible and value-hashes
-    against the oracle's genuinely recursive CTE — two very different
-    executions of the same integer recurrence."""
-    from cyborgdb_encrypted_vector_search_spark.operators import (
-        timeseries as T,
-    )
-
-    ev = (
-        load(spark, "events", sf_dir)
-        .filter(F.col("user_id").isNotNull())
-        .select(
-            "user_id",
-            "ts",
-            "event_id",
-            (F.col("value").cast("decimal(18,4)") * 10000)
-            .cast("bigint")
-            .alias("x"),
-        )
-    )
-    return T.ema_fixedpoint(
-        ev, "user_id", ["ts", "event_id"], "x", decay_pct=85
-    )
-
-
 # ----------------------------------------------------------------------
-# Round-7 additions: k-truss peeling, SCAN clustering, per-row EMA,
+# Round-7 additions: k-truss peeling, SCAN clustering,
 # approx-vs-exact quantile error-bound cross-gate.
 # ----------------------------------------------------------------------
 
@@ -11952,58 +10105,6 @@ def q_graph_skew_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").cast("bigint").alias("v"),
         F.col("cluster").cast("bigint").alias("cluster"),
         "is_core",
-    )
-
-
-@query(
-    "q_events_ema_rows",
-    """
-    WITH RECURSIVE seq AS (
-      SELECT user_id,
-             row_number() OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-             ) AS rn,
-             CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT) AS x
-      FROM events WHERE user_id IS NOT NULL
-    ),
-    ema AS (
-      SELECT user_id, rn, x AS e FROM seq WHERE rn = 1
-      UNION ALL
-      SELECT s.user_id, s.rn, (85 * e.e + 15 * s.x) // 100 AS e
-      FROM ema e JOIN seq s
-        ON s.user_id = e.user_id AND s.rn = e.rn + 1
-    )
-    SELECT user_id, CAST(rn AS BIGINT) AS rn, CAST(e AS BIGINT) AS ema_fp
-    FROM ema
-    """,
-)
-def q_events_ema_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-ROW running EMA (operators/timeseries.ema_fixedpoint_rows):
-    the feature-pipeline shape of q_events_ema_user — every event gets
-    the EMA state AFTER folding it, not just the final per-key value,
-    under the identical fixed-point contract (value → DECIMAL(18,4) →
-    ×10^4 BIGINT, floor division, decay 0.85). Output size = input
-    size; the oracle's recursive CTE emits the same full trajectory,
-    so every intermediate state of the recursion is value-hashed
-    cross-engine, row by row."""
-    from cyborgdb_encrypted_vector_search_spark.operators import (
-        timeseries as T,
-    )
-
-    ev = (
-        load(spark, "events", sf_dir)
-        .filter(F.col("user_id").isNotNull())
-        .select(
-            "user_id",
-            "ts",
-            "event_id",
-            (F.col("value").cast("decimal(18,4)") * 10000)
-            .cast("bigint")
-            .alias("x"),
-        )
-    )
-    return T.ema_fixedpoint_rows(
-        ev, "user_id", ["ts", "event_id"], "x", decay_pct=85
     )
 
 

@@ -22,6 +22,7 @@ per-record CRUD is an explicit non-goal (batch append/compact model).
 from __future__ import annotations
 
 import os
+import re
 import shutil
 from dataclasses import dataclass
 
@@ -167,12 +168,16 @@ class Collection:
             sel.append(F.lit(None).cast("map<string,string>").alias("metadata"))
         else:
             sel.append(F.col(metadata_col).alias("metadata"))
-        out = out.select(*sel)
-        if self.dim is not None:
-            out = out.filter(
-                F.col("embedding").isNull() | dim_check("embedding", self.dim)
-            )
-        return out
+        return self._keep_dim(out.select(*sel), "embedding")
+
+    def _keep_dim(self, df: DataFrame, embedding_col: str) -> DataFrame:
+        """Drop rows whose non-null embedding breaks the collection's
+        dim constraint (every write path: add, upsert, add_encrypted)."""
+        if self.dim is None:
+            return df
+        return df.filter(
+            F.col(embedding_col).isNull() | dim_check(embedding_col, self.dim)
+        )
 
     def add(
         self,
@@ -626,11 +631,10 @@ class Collection:
         reserved ``embedding_ct`` entry is stripped from it first so a
         round-trip (decrypt → re-encrypt, e.g. key rotation) can't
         smuggle a stale ciphertext through."""
-        staged = df
         emb = kwargs.pop("embedding_col", "embedding")
         doc = kwargs.pop("document_col", "document")
         meta = kwargs.pop("metadata_col", None)
-        staged = staged.withColumn(
+        staged = self._keep_dim(df, emb).withColumn(
             "__emb_ct", crypto.encrypt_vector(emb, key)
         ).withColumn("__doc_ct", crypto.encrypt_text(doc, key))
         ct_map = F.create_map(F.lit("embedding_ct"), F.base64("__emb_ct"))
@@ -694,16 +698,24 @@ class Collection:
         return rotated
 
 
+# Sibling dirs a commit leaves behind when it fails half way
+# (``Collection._commit``): ``{name}.stage{pid}`` / ``{name}.aside{pid}``.
+_COMMIT_LEFTOVER = re.compile(r"\.(stage|aside)\d+$")
+
+
 def list_collections(base_dir: str) -> list[str]:
     """Names of the collections under ``base_dir`` (Chroma's
     ``client.list_collections()``): any subdirectory holding a parquet
-    table or a collection meta sidecar."""
+    table or a collection meta sidecar, except a failed commit's stage
+    and aside dirs. Nothing recovers such a commit yet, so a flat
+    collection whose dir was moved aside is missing from the list until
+    its rows are moved back."""
     if not os.path.isdir(base_dir):
         return []
     out = []
     for name in sorted(os.listdir(base_dir)):
         p = os.path.join(base_dir, name)
-        if not os.path.isdir(p):
+        if not os.path.isdir(p) or _COMMIT_LEFTOVER.search(name):
             continue
         if (
             os.path.isfile(os.path.join(p, "_SUCCESS"))

@@ -442,23 +442,6 @@ def stateful_user_counts(events: DataFrame) -> DataFrame:
     )
 
 
-def sessionize(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Session windows per user (gap-based), batch or streaming.
-
-    Returns one row per (user_id, session) with event count and span.
-    Uses the built-in session_window aggregation — state-store-backed
-    when streaming, plain aggregation in batch.
-    """
-    src = events
-    if events.isStreaming:
-        src = events.withWatermark("ts", gap)
-    return (
-        src.groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select("user_id", "n_events", F.col("w.start").alias("session_start"))
-    )
-
-
 def stream_interval_join(
     purchases: DataFrame,
     clicks: DataFrame,

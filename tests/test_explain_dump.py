@@ -12,9 +12,9 @@ def test_midloop_without_snap_site_warns_and_writes_nothing(
 ):
     explain_dump = load_tool("explain_dump")
     explain_dump.dump(
-        spark, ["q1_pricing_summary"], str(tmp_path), "t", True, SF_SMOKE
+        spark, ["vector_scan_stats"], str(tmp_path), "t", True, SF_SMOKE
     )
     assert list(tmp_path.iterdir()) == []
     err = capsys.readouterr().err
-    assert "[warn] q1_pricing_summary" in err
+    assert "[warn] vector_scan_stats" in err
     assert caching._PLAN_SINK is None

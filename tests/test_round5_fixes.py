@@ -1,10 +1,9 @@
 """Round-5 hardening: the ADVICE.md findings, each pinned by a test.
 
 1. foreachBatch replay idempotency (commit markers).
-2. q_events_json_agg NULL-user semantics vs count(DISTINCT).
-3. _publish_dir re-raises non-race OSErrors.
-4. rotate_key carries plaintext metadata through rotation.
-5. read_time_range day-inclusive bounds on hour-partitioned layouts.
+2. _publish_dir re-raises non-race OSErrors.
+3. rotate_key carries plaintext metadata through rotation.
+4. read_time_range day-inclusive bounds on hour-partitioned layouts.
 """
 
 from __future__ import annotations
@@ -72,45 +71,6 @@ def test_stream_ivf_ingest_replay_does_not_duplicate(spark, tmp_path):
     )
     assert ran is False
     assert spark.read.parquet(layout).count() == n0
-
-
-def test_events_json_agg_excludes_null_users(spark, tmp_path):
-    """Differential: with NULL user_ids present, the two-level rewrite
-    must still equal count(DISTINCT user_id) (NULL excluded)."""
-    import duckdb
-
-    from cyborgdb_encrypted_vector_search_spark.plans import catalog as C
-
-    ev = spark.createDataFrame(
-        [
-            (1, "2024-01-01 00:00:00", 10, "click", 1.5, '{"k": 60}'),
-            (2, "2024-01-01 00:01:00", None, "click", 2.5, '{"k": 10}'),
-            (3, "2024-01-01 00:02:00", 10, "click", 3.0, '{"k": 99}'),
-            (4, "2024-01-01 00:03:00", None, "view", 1.0, "{}"),
-            (5, "2024-01-01 00:04:00", None, "view", 2.0, '{"k": 70}'),
-        ],
-        "event_id long, ts string, user_id long, event_type string, value double, props string",
-    ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    ev.write.parquet(str(tmp_path / "events.parquet"))
-
-    got = {
-        r["event_type"]: r.asDict()
-        for r in C.CATALOG["q_events_json_agg"].fn(spark, str(tmp_path)).collect()
-    }
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet/*.parquet')"
-    )
-    want = con.execute(C.CATALOG["q_events_json_agg"].sql).fetchall()
-    for event_type, n_events, n_users, total_value, n_high_k in want:
-        g = got[event_type]
-        assert g["n_events"] == n_events
-        assert g["n_users"] == n_users, (event_type, g, n_users)
-        assert g["total_value"] == pytest.approx(total_value)
-        assert g["n_high_k"] == n_high_k
-    # the interesting case: 'view' has only NULL users -> n_users == 0
-    assert got["view"]["n_users"] == 0
-    assert got["click"]["n_users"] == 1
 
 
 def test_publish_dir_race_vs_real_error(tmp_path):

@@ -1,7 +1,7 @@
 """Unit/property coverage for the round-5 continuation operators:
 semantic pruning (SemDeDup), shingle containment, CDC snapshot diff,
-incremental rollup maintenance, last-touch attribution, rolling
-time-range features, robust outliers."""
+incremental rollup maintenance, last-touch attribution, robust
+outliers."""
 
 from __future__ import annotations
 
@@ -224,39 +224,6 @@ def test_attribution_last_touch_and_null(spark):
     )
     got = {r["event_id"]: r["attr_id"] for r in out}
     assert got == {1: None, 4: 3, 6: 5}
-
-
-# --------------------------------------------------------- rolling features
-
-
-def test_rolling_window_hour_boundary_inclusive(spark):
-    import datetime as dt
-
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    rows = [
-        (1, t0, 1, "view", 1.0, "{}"),
-        (2, t0 + dt.timedelta(seconds=3600), 1, "view", 2.0, "{}"),  # exactly 1h -> in frame
-        (3, t0 + dt.timedelta(seconds=7201), 1, "view", 4.0, "{}"),  # 3601s after ev2 -> alone
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp_ntz, user_id long, event_type string, value double, props string"
-    )
-    from pyspark.sql import Window
-
-    from cyborgdb_encrypted_vector_search_spark.plans.catalog import _epoch_us
-
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col("__eus"))
-        .rangeBetween(-3_600_000_000, 0)
-    )
-    out = (
-        df.withColumn("__eus", _epoch_us("ts"))
-        .select("event_id", F.count(F.lit(1)).over(w).alias("n"))
-        .collect()
-    )
-    got = {r["event_id"]: r["n"] for r in out}
-    assert got == {1: 1, 2: 2, 3: 1}
 
 
 # ----------------------------------------------------------------- outliers

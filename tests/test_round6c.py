@@ -246,27 +246,6 @@ def test_triangle_count_empty_and_triangle_free(spark):
     assert (row["n_edges"], row["n_triangles"]) == (3, 0)
 
 
-def test_gapfill_grid_is_dense_and_forward_filled(spark, cat, sf_dir):
-    import pandas as pd
-
-    pdf = cat["q_events_gapfill_hourly"].fn(spark, sf_dir).toPandas()
-    # dense: every (type, hour) cell present exactly once
-    per_type = pdf.groupby("event_type")["hour"].nunique()
-    assert per_type.nunique() == 1  # same grid for every type
-    assert len(pdf) == per_type.iloc[0] * pdf["event_type"].nunique()
-    # gap rows exist (count 0) and their ff_avg is carried forward,
-    # i.e. non-null whenever any earlier hour of that type had data
-    gaps = pdf[pdf["n_events"] == 0]
-    assert len(gaps) > 0
-    pdf = pdf.sort_values(["event_type", "hour"])
-    seen = set()
-    for r in pdf.itertuples():
-        if r.event_type in seen and r.n_events == 0:
-            assert not pd.isna(r.ff_avg)
-        if r.n_events > 0:
-            seen.add(r.event_type)
-
-
 def _lev(a: str, b: str) -> int:
     if len(a) < len(b):
         a, b = b, a
@@ -369,33 +348,6 @@ def test_triangle_count_matches_bruteforce_property(spark):
         edf = spark.createDataFrame(edges, "src long, dst long")
         row = G.triangle_count(edf).head()
         assert (row["n_edges"], row["n_triangles"]) == (len(edges), want)
-
-
-# --------------------------------------------------------------- EMA fold
-
-
-def test_ema_fixedpoint_matches_hand_fold_and_input_order(spark):
-    from cyborgdb_encrypted_vector_search_spark.operators import (
-        timeseries as T,
-    )
-
-    rows = [(1, i, (i * 37) % 11, 10_000 * (i + 1)) for i in range(9)]
-    df = spark.createDataFrame(
-        rows, "user_id long, ts long, event_id long, x long"
-    )
-    want = None
-    for _, _, _, x in sorted(rows, key=lambda r: (r[1], r[2])):
-        want = x if want is None else (85 * want + 15 * x) // 100
-    got = T.ema_fixedpoint(df, "user_id", ["ts", "event_id"], "x").head()
-    assert (got["user_id"], got["n_events"], got["ema_fp"]) == (1, 9, want)
-    # partition-order independence: shuffled input, same exact integers
-    got2 = T.ema_fixedpoint(
-        df.orderBy(F.desc("event_id")).repartition(5),
-        "user_id",
-        ["ts", "event_id"],
-        "x",
-    ).head()
-    assert got2["ema_fp"] == want
 
 
 def test_edge_support_on_known_graph(spark):

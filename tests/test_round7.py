@@ -1,5 +1,5 @@
 """Round-7 additions: k-truss peeling, SCAN clustering, co-occurrence
-hub cap, per-row EMA, quantile error-bound gate, cache release valve,
+hub cap, quantile error-bound gate, cache release valve,
 and the StubChatModel whitespace round-trip."""
 
 from __future__ import annotations
@@ -13,7 +13,6 @@ from cyborgdb_encrypted_vector_search_spark import caching
 from cyborgdb_encrypted_vector_search_spark.functions import llm as L
 from cyborgdb_encrypted_vector_search_spark.operators import graph as G
 from cyborgdb_encrypted_vector_search_spark.operators import ranking as R
-from cyborgdb_encrypted_vector_search_spark.operators import timeseries as T
 
 SF = "/root/testdata/sf0.001"
 
@@ -228,39 +227,6 @@ def test_scan_roles_hub_and_outlier(spark):
     )
     assert got == want
     caching.release_all()
-
-
-def test_ema_rows_trajectory_and_final_state(spark):
-    """ema_fixedpoint_rows emits the exact per-row fold trajectory
-    (verified against a hand-rolled Python fold) and its last row per
-    key equals ema_fixedpoint's final state."""
-    rows = [
-        (7, 1, 100), (7, 2, 200), (7, 3, 50),
-        (9, 1, 1000), (9, 2, 0),
-    ]
-    df = spark.createDataFrame(rows, "k long, seq long, x long")
-    got = {
-        (r["k"], r["rn"]): r["ema_fp"]
-        for r in T.ema_fixedpoint_rows(df, "k", ["seq"], "x", 85).collect()
-    }
-
-    def fold(xs):
-        e, out = None, []
-        for x in xs:
-            e = x if e is None else (85 * e + 15 * x) // 100
-            out.append(e)
-        return out
-
-    want = {}
-    for k, xs in ((7, [100, 200, 50]), (9, [1000, 0])):
-        for i, e in enumerate(fold(xs), 1):
-            want[(k, i)] = e
-    assert got == want
-    final = {
-        r["k"]: (r["n_events"], r["ema_fp"])
-        for r in T.ema_fixedpoint(df, "k", ["seq"], "x", 85).collect()
-    }
-    assert final == {7: (3, got[(7, 3)]), 9: (2, got[(9, 2)])}
 
 
 def test_quantile_bounds_gate_smoke(spark, cat):

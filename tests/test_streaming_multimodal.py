@@ -33,25 +33,6 @@ def test_stream_append_to_collection(spark, sf_dir):
         assert n == load(spark, "events", sf_dir).count()
 
 
-def test_sessionize_gap_semantics(spark):
-    # 3 events: two 10 min apart (one session), third 40 min later (new)
-    rows = [
-        (1, "2024-01-01 00:00:00"),
-        (1, "2024-01-01 00:10:00"),
-        (1, "2024-01-01 00:50:00"),
-        (2, "2024-01-01 01:00:00"),
-    ]
-    ev = spark.createDataFrame(rows, "user_id long, ts_s string").select(
-        "user_id", F.col("ts_s").cast("timestamp").alias("ts")
-    )
-    out = S.sessionize(ev, "30 minutes").collect()
-    per_user = {}
-    for r in out:
-        per_user.setdefault(r["user_id"], []).append(r["n_events"])
-    assert sorted(per_user[1]) == [1, 2]
-    assert per_user[2] == [1]
-
-
 def test_watermark_drops_late_data(spark, tmp_path):
     """Late rows beyond the watermark are dropped from the windowed agg:
     batch 1 advances the watermark past midnight; batch 2's 00:30 event

@@ -79,7 +79,7 @@ def main() -> int:
         sdf = entry.fn(spark, sf_dir)
         spark_pdf = sdf.toPandas()
         # correctness-device persists (ranking/graph) are per-query;
-        # release them so a 190-query run doesn't accumulate caches
+        # release them so a full run doesn't accumulate caches
         release_all()
         if entry.sql is None:
             print(f"[rows-only] {name}: {len(spark_pdf)} rows")

@@ -1,9 +1,10 @@
 """Run every catalog entry under a PLAIN SparkSession.
 
-The round driver builds its own ``SparkSession.builder.getOrCreate()``
-with none of our factory confs — exactly the environment that produced
-every round-1 failure (events.ts surfacing as TIMESTAMP_NTZ instead of
-the factory's long-nanos shape). This script is that environment: no
+A caller of ``__spark_entry__`` may build its own
+``SparkSession.builder.getOrCreate()`` with none of our factory confs —
+exactly the environment that produced every round-1 failure (events.ts
+surfacing as TIMESTAMP_NTZ instead of the factory's long-nanos shape).
+This script is that environment: no
 timezone conf, no shuffle sizing, no Arrow flag. Each query runs with
 ``limit(5).collect()`` — enough to force full analysis + execution of
 the plan (AnalysisException, the r1 bug class, can't hide) without
@@ -48,8 +49,8 @@ def main() -> int:
         except Exception as ex:  # noqa: BLE001 — we report every failure
             errors[name] = f"{type(ex).__name__}: {ex}"[:300]
         finally:
-            # per-query correctness persists must not accumulate
-            # across a 191-query sweep on a default-heap session
+            # per-query persists must not accumulate across the
+            # sweep on a default-heap session
             release_all()
     print(
         json.dumps(

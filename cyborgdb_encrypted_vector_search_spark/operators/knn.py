@@ -233,7 +233,8 @@ def _scores(
     scored are the (valid rows x d) float64 matrix that ``decode(t, d)``
     returns with its valid-row mask: by default the ``vec_col`` list
     column (:func:`_vectors`; the ``unit`` column under ``use_unit``),
-    or the quantized rows' reconstruction (:func:`decode_codes`)."""
+    the quantized rows' reconstruction (:func:`decode_codes`) or the
+    decrypted rows (``crypto.decode_vectors``)."""
     n_q, d = qmat.shape
     out = np.full((n_q, t.num_rows), np.nan)
     col = None
@@ -408,9 +409,10 @@ def topk_candidates(
     partitioned by ``list_col``, a pushed ``IN`` on a file scan), and
     other rows are never scored against query ``i``. ``decode`` is the
     hook that turns an Arrow batch into the matrix the metric scores
-    (:func:`decode_codes` for quantized rows), in place of
-    ``corpus_vec_col``. Callers finish with a rank over the candidates
-    (:func:`knn_join`) or a driver merge (:func:`merge_topk`)."""
+    (:func:`decode_codes` for quantized rows, ``crypto.decode_vectors``
+    for ciphertext), in place of ``corpus_vec_col``. Callers finish
+    with a rank over the candidates (:func:`knn_join`) or a driver
+    merge (:func:`merge_topk`)."""
     from pyspark.sql.pandas.types import to_arrow_type
 
     _check(k, metric)

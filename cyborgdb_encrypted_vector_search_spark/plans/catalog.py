@@ -6761,7 +6761,7 @@ def _gate_collection(spark: SparkSession, sf_dir: str, encrypted: bool):
 
     The plaintext variant stores array<float> (reference parity); the
     encrypted variant stores AES-GCM ciphertext of the ORIGINAL
-    float64 vectors (to_json round-trips doubles exactly), so its
+    float64 vectors (the plaintext holds them bit for bit), so its
     decrypt-and-score plan is float64 end-to-end. Population happens
     in a tmp dir renamed into place — a crash mid-build leaves no
     half-populated collection to double-append into — and the cache
@@ -6817,19 +6817,21 @@ def _gate_collection(spark: SparkSession, sf_dir: str, encrypted: bool):
 
 
 # 7 decimals here (vs 5 for the plaintext gate): the encrypted
-# collection round-trips the ORIGINAL float64 vectors through
-# to_json → AES-GCM → from_json exactly, so there is no float32
-# quantization between Spark's scores and DuckDB's — the tighter
-# tolerance is free, and it additionally pins decrypt fidelity.
+# collection round-trips the ORIGINAL float64 vectors exactly (tagged
+# little-endian float64 plaintext; a cached JSON-era collection reads
+# them back exactly too), so there is no float32 quantization between
+# Spark's scores and DuckDB's — the tighter tolerance is free, and it
+# additionally pins decrypt fidelity.
 @query("collection_query_encrypted", _collection_query_oracle(7))
 def collection_query_encrypted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's core thesis — encrypted store + retrieval
     (src/cyborgdb_store.py stub + src/cod.py:124-129) — closed as ONE
     gated dataflow: an AES-GCM-encrypted collection (crypto_roundtrip
     gates the cipher itself; tests pin ciphertext-scan-reveals-nothing)
-    queried through Collection.query_encrypted, which decrypts and
-    scores in a single plan (scan → aes_decrypt → from_json → cosine →
-    top-k; sources/collections.py). Matching DuckDB's brute force on
+    queried through Collection.query_encrypted, which scores the
+    ciphertext in a single kernel pass (each partition decrypts its own
+    rows in the kNN kernel's decode hook → cosine → top-k → driver
+    merge; sources/collections.py). Matching DuckDB's brute force on
     the PLAINTEXT table proves decrypt→score is lossless end-to-end:
     the authorized reader gets exactly the plaintext ranking, while the
     unauthorized scan (extract_encrypted) sees only ciphertext."""

@@ -11,7 +11,7 @@ Reference semantics re-created batch-first (SURVEY.md §1, §2.1):
 - point get by id              (reference src/cod.py:107-120)
                                → pushed-down key-equality filter
 - encrypted store/extract stub (reference src/cyborgdb_store.py:4-11)
-                               → real AES-GCM BINARY column
+                               → real AES-GCM ciphertext (base64 text)
 
 Scale design: a collection written with ``save`` is repartitioned by a
 hash of the id so point-gets and id-joins hit a bounded set of files;
@@ -357,18 +357,23 @@ class Collection:
         """Similarity query against an AES-GCM-encrypted collection —
         the reference's core thesis (encrypted store + retrieval,
         src/cyborgdb_store.py + src/cod.py:124-129) as ONE Spark job:
-        scan → aes_decrypt → from_json on the JVM, then the same Arrow
-        scoring kernel and driver merge as :meth:`query`. No decrypted
-        intermediate is ever materialized to storage; like
-        :meth:`query`, the call runs its job eagerly and returns a
-        local frame of the hits."""
+        the same Arrow scoring kernel and driver merge as :meth:`query`,
+        scoring the stored ciphertext directly. Each partition decrypts
+        its rows inside the kernel (the decode hook
+        ``crypto.vector_decoder``, the key in its closure, never in the
+        plan) and scores them in the same pass, so no decrypted
+        intermediate exists outside a task. Of the documents, only the
+        returned hits' are decrypted, on the driver. Like :meth:`query`,
+        the call runs its job eagerly and returns a local frame of the
+        hits."""
         cols = include or ["documents", "distances"]
-        plain = self.decrypt(key)
-        corpus = plain.select(
-            "id", "embedding", *(["document"] if "documents" in cols else [])
+        corpus = self.scan().select(
+            "id",
+            F.unbase64(F.col("metadata")["embedding_ct"]).alias("embedding"),
+            *([F.unbase64("document").alias("document")] if "documents" in cols else []),
         )
         return self._query_over(
-            corpus, query_embeddings, query_texts, n_results, embedder, cols
+            corpus, query_embeddings, query_texts, n_results, embedder, cols, key
         )
 
     def _query_over(
@@ -379,10 +384,15 @@ class Collection:
         n_results: int,
         embedder,
         cols: list[str],
+        key: str | None = None,
     ) -> DataFrame:
+        """The kernel pass and driver merge of every query kind; with a
+        ``key`` the corpus's ``embedding`` and ``document`` columns hold
+        ciphertext, decoded in the kernel and on the driver."""
         from cyborgdb_encrypted_vector_search_spark.functions import embed as E
         from cyborgdb_encrypted_vector_search_spark.operators import knn
 
+        decode = None if key is None else crypto.vector_decoder(key)
         if (query_embeddings is None) == (query_texts is None):
             raise ValueError(
                 "pass exactly one of query_embeddings / query_texts"
@@ -409,11 +419,13 @@ class Collection:
             corpus_id_col="id",
             corpus_vec_col="embedding",
             query_id_col="query_idx",
+            decode=decode,
         ).drop("embedding")
         hits = knn.merge_topk(cands.toArrow(), n_results, "query_idx", "id")
         out = {c: hits.column(c) for c in ("query_idx", "rank", "id")}
         if "documents" in cols:
-            out["document"] = hits.column("document")
+            doc = hits.column("document")
+            out["document"] = doc if key is None else crypto.decrypt_texts(doc, key)
         if "distances" in cols:
             out["distance"] = pc.subtract(pa.scalar(1.0), hits.column("score"))
         return self.spark.createDataFrame(pa.table(out))
@@ -624,7 +636,11 @@ class Collection:
 
     # -- encrypted variant (reference src/cyborgdb_store.py) -------------
     def add_encrypted(self, df: DataFrame, key: str, **kwargs) -> None:
-        """Store with AES-GCM-encrypted embedding + document columns.
+        """Store with AES-GCM-encrypted embedding + document columns
+        (``functions/crypto.py``: the vector as tagged float64
+        plaintext, both ciphertexts base64 text in the collection
+        schema). A local input frame (rows the driver already holds)
+        is encrypted in one task.
 
         ``metadata_col`` (optional) names a MAP<STRING,STRING> column of
         plaintext metadata to carry alongside the ciphertext; the
@@ -634,19 +650,22 @@ class Collection:
         emb = kwargs.pop("embedding_col", "embedding")
         doc = kwargs.pop("document_col", "document")
         meta = kwargs.pop("metadata_col", None)
-        staged = self._keep_dim(df, emb).withColumn(
-            "__emb_ct", crypto.encrypt_vector(emb, key)
-        ).withColumn("__doc_ct", crypto.encrypt_text(doc, key))
-        ct_map = F.create_map(F.lit("embedding_ct"), F.base64("__emb_ct"))
+        emb_ct = crypto.encrypt_vector(emb, key)
+        doc_ct = crypto.encrypt_text(doc, key)
+        staged = self._keep_dim(df, emb)
+        if df.isLocal():  # rows the driver holds: one Python task, not one per core
+            staged = staged.coalesce(1)
+        ct_map = F.create_map(F.lit("embedding_ct"), F.base64(emb_ct))
         if meta is not None:
             extra = F.map_filter(
                 F.coalesce(F.col(meta), F.create_map().cast("map<string,string>")),
                 lambda k, _v: k != F.lit("embedding_ct"),
             )
             ct_map = F.map_concat(extra, ct_map)
+        # both ciphers in one projection: one Python pass over each batch
         out = staged.select(
             (F.col(kwargs["id_col"]).cast("string") if kwargs.get("id_col") else F.expr("uuid()")).alias("id"),
-            F.base64("__doc_ct").alias("document"),
+            F.base64(doc_ct).alias("document"),
             F.array().cast("array<float>").alias("embedding"),
             ct_map.alias("metadata"),
         )

@@ -58,15 +58,6 @@ def test_column_pruning_reaches_scan(spark, sf_dir):
     assert cols == ["l_returnflag"]  # 1 of 11 columns read
 
 
-def test_filter_evaluates_before_join(spark, sf_dir):
-    # selective dim filter must sit under the join, not above it
-    c = load(spark, "customer", sf_dir).filter(F.col("c_mktsegment") == "BUILDING")
-    o = load(spark, "orders", sf_dir)
-    df = o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"]).select("o_orderkey")
-    plan = X.physical_plan(df)
-    assert "PushedFilters: [IsNotNull(c_mktsegment), EqualTo(c_mktsegment,BUILDING)" in plan
-
-
 def test_stratified_sample_uses_window_group_limit(spark, sf_dir, cat):
     plan = X.physical_plan(cat["q_sample_stratified"].fn(spark, sf_dir))
     assert "WindowGroupLimit" in plan

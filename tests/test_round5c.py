@@ -181,51 +181,6 @@ def test_incremental_rollup_merge_equals_direct(spark, sf_dir):
     assert direct.exceptAll(merged).count() == 0
 
 
-# ------------------------------------------------------------- attribution
-
-
-def test_attribution_last_touch_and_null(spark):
-    import datetime as dt
-
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-
-    def ev(eid, sec, typ):
-        return (eid, t0 + dt.timedelta(seconds=sec), 7, typ, 0.0, "{}")
-
-    rows = [
-        ev(1, 0, "purchase"),   # nothing prior -> NULL attribution
-        ev(2, 10, "click"),
-        ev(3, 20, "view"),
-        ev(4, 30, "purchase"),  # last touch = view (id 3)
-        ev(5, 30, "click"),     # same ts as 4 but larger id -> NOT prior to 4
-        ev(6, 40, "purchase"),  # last touch = click (id 5)
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp_ntz, user_id long, event_type string, value double, props string"
-    )
-    df.createOrReplaceTempView("__attr_events")
-
-    from pyspark.sql import Window
-
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    is_touch = F.col("event_type").isin("click", "view")
-    out = (
-        df.withColumn(
-            "attr_id",
-            F.last(F.when(is_touch, F.col("event_id")), ignorenulls=True).over(w),
-        )
-        .filter(F.col("event_type") == "purchase")
-        .select("event_id", "attr_id")
-        .collect()
-    )
-    got = {r["event_id"]: r["attr_id"] for r in out}
-    assert got == {1: None, 4: 3, 6: 5}
-
-
 # ----------------------------------------------------------------- outliers
 
 

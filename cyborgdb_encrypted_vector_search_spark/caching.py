@@ -4,12 +4,12 @@ Some operators persist an intermediate frame as a correctness device,
 not a performance hint: scalable_row_number (operators/ranking.py)
 materializes the range-partitioned enumeration once so its counts
 branch and data branch read the SAME nondeterministic boundary sample,
-and the graph kernels (operators/graph.py) pin the derived edge frame
-so every fixed-point iteration reads one invariant adjacency. Those
-frames cannot be unpersisted inside the operator — the cache must
-outlive the caller's action — so in a long-running driver that executes
-many catalog queries the InMemoryRelations would accumulate for the
-session lifetime.
+and entity resolution (operators/dedup.py) pins its record and edge
+frames so the connected-components probe and every contraction round
+read one invariant edge set. Those frames cannot be unpersisted inside
+the operator — the cache must outlive the caller's action — so in a
+long-running driver that executes many catalog queries the
+InMemoryRelations would accumulate for the session lifetime.
 
 This module is the release valve: operators register such frames with
 ``track``; query runners (tools/parity.py, tools/smoke_plain.py, the
@@ -46,9 +46,9 @@ def track(df: DataFrame) -> DataFrame:
     return df
 
 
-# Mid-loop plan capture (r13): the iterative kernels (truss peeling,
-# star-contraction CC, k-core) checkpoint every round, so a dump of
-# the final frame shows only the trivial assembled plan.
+# Mid-loop plan capture (r13): the star-contraction CC
+# (dedup.connected_components_star) checkpoints every round, so a dump
+# of the final frame shows only the trivial assembled plan.
 # tools/explain_dump.py sets this sink to a list; each round then
 # appends (label, formatted plan) for the round frame JUST BEFORE its
 # checkpoint truncates the lineage. None (the default) is a no-op on

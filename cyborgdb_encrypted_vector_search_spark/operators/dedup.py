@@ -319,10 +319,8 @@ def connected_components_star(
 
         ``bcast`` (cost probe, r12): the per-node min tables are O(n)
         rows with n bounded by the node count; while they comfortably
-        broadcast (~16 B/row, same bound class as pagerank's
-        broadcast_ranks and the support kernel's small_adj), the two
-        attach joins stream sym/large with NO shuffle. Big graphs keep
-        the scale-safe shuffle joins."""
+        broadcast (~16 B/row), the two attach joins stream sym/large
+        with NO shuffle. Big graphs keep the scale-safe shuffle joins."""
         sym = cur.unionAll(
             cur.select(F.col("b").alias("a"), F.col("a").alias("b"))
         )
@@ -1110,9 +1108,9 @@ def resolve_entities(
     Scale shape: each pass is one self-equi-join on the blocking key
     (shuffle on that key, pairs bounded per block), never an all-pairs
     product; blocks larger than ``max_block`` are DROPPED LOUDLY
-    (logged with their keys' count) exactly like the co-occurrence
-    hub cap — an oversized block means the blocking key is broken,
-    and silently going quadratic on it would be the real failure.
+    (logged with their keys' count) — an oversized block means the
+    blocking key is broken, and silently going quadratic on it would
+    be the real failure.
     Cluster formation is :func:`connected_components` (a driver
     union-find under its cap, star contraction above it). Returns
     (``id_col``, entity) with entity = the smallest record id in the

@@ -29,9 +29,6 @@ from cyborgdb_encrypted_vector_search_spark.functions import hashing as H
 from cyborgdb_encrypted_vector_search_spark.functions import text as X
 from cyborgdb_encrypted_vector_search_spark.functions import vector as V
 from cyborgdb_encrypted_vector_search_spark.operators import dedup, knn
-from cyborgdb_encrypted_vector_search_spark.operators.graph import (
-    LINKPRED_SCALE,
-)
 from cyborgdb_encrypted_vector_search_spark.sources.registry import load
 
 
@@ -2608,13 +2605,13 @@ _CORPUS3X_CHAIN_SQL = """
 # Oracle round budget for the unrolled min-label CTEs below: the sf0.1
 # pair graph's worst component needs 24 propagation rounds (a
 # 4,605-node chained near-dup cluster, measured); +margin. The unroll
-# is SELF-VERIFYING (same discipline as _truss_level_sql): labels only
-# ever decrease, so equal Σ label across the final two rounds proves
-# the fixed point was reached — the cc CTE empties (loud gate failure)
-# if a corpus/sf change ever needs more rounds. This replaced the
-# original `reach` recursive CTE, whose transitive closure materialized
-# O(component²) rows per recursion depth — 542 s at sf0.1 on DuckDB vs
-# ~1 s for the 28 keyed rounds; the gate semantics are identical.
+# is SELF-VERIFYING: labels only ever decrease, so equal Σ label
+# across the final two rounds proves the fixed point was reached — the
+# cc CTE empties (loud gate failure) if a corpus/sf change ever needs
+# more rounds. This replaced the original `reach` recursive CTE, whose
+# transitive closure materialized O(component²) rows per recursion
+# depth — 542 s at sf0.1 on DuckDB vs ~1 s for the 28 keyed rounds; the
+# gate semantics are identical.
 _CC_ORACLE_ROUNDS = 28
 
 
@@ -8728,262 +8725,6 @@ def q_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     return t.groupBy("event_type").agg(*_events_fingerprint_cols())
 
 
-# Both graph gates derive the same co-purchase graph: users purchasing
-# in the same HOUR (day granularity is near-complete at sf0.1 — hour
-# keeps contexts bounded, the same context-sizing discipline dedup
-# applies to band buckets).
-_GRAPH_EDGES_SQL = """
-      WITH pur AS (
-        SELECT DISTINCT date_trunc('hour', ts) AS d, user_id AS u
-        FROM events
-        WHERE event_type = 'purchase' AND user_id IS NOT NULL
-      )
-      SELECT DISTINCT a.u AS src, b.u AS dst
-      FROM pur a JOIN pur b ON a.d = b.d AND a.u < b.u
-"""
-
-
-def _graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    pur = (
-        load(spark, "events", sf_dir)
-        .filter(
-            (F.col("event_type") == "purchase")
-            & F.col("user_id").isNotNull()
-        )
-        .select(
-            F.date_trunc("hour", "ts").alias("hour_ctx"), "user_id"
-        )
-    )
-    return G.cooccurrence_edges(pur, "user_id", "hour_ctx")
-
-
-@query(
-    "q_graph_triangles",
-    f"""
-    WITH edges AS ({_GRAPH_EDGES_SQL}),
-    tri AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_triangles
-      FROM edges e1
-      JOIN edges e2 ON e2.src = e1.src AND e2.dst > e1.dst
-      JOIN edges e3 ON e3.src = e1.dst AND e3.dst = e2.dst
-    )
-    SELECT (SELECT CAST(count(*) AS BIGINT) FROM edges) AS n_edges,
-           n_triangles
-    FROM tri
-    """,
-)
-def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed triangle counting (operators/graph.triangle_count)
-    over the hourly co-purchase graph. Spark enumerates wedges under
-    DEGREE ORIENTATION (every undirected edge re-directed from its
-    lower-degree endpoint), which bounds per-vertex wedge fan-out by
-    O(sqrt(m)) on skewed graphs — the difference between a feasible
-    and a 10^12-row wedge join at a social-scale hub. The oracle
-    counts the same triangles WITHOUT orientation (canonical
-    id-ordered wedge join) — an algorithmic differential: both
-    formulations must agree on the exact count."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    return G.triangle_count(_graph_edges(spark, sf_dir))
-
-
-@query(
-    "q_graph_pagerank",
-    f"""
-    WITH edges AS ({_GRAPH_EDGES_SQL}),
-    sym AS (
-      SELECT src, dst FROM edges
-      UNION ALL
-      SELECT dst AS src, src AS dst FROM edges
-    ),
-    deg AS (
-      SELECT src, CAST(count(*) AS BIGINT) AS deg FROM sym GROUP BY 1
-    ),
-    nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM deg),
-    r0 AS (
-      SELECT d.src AS v,
-             CAST(1000000000000 // n AS BIGINT) AS rank_fp
-      FROM deg d, nn
-    ),
-    t1 AS (
-      SELECT s.dst AS v, sum(r.rank_fp // d.deg) AS in_sum
-      FROM sym s JOIN r0 r ON r.v = s.src JOIN deg d ON d.src = s.src
-      GROUP BY 1
-    ),
-    r1 AS (
-      SELECT v, CAST((15 * 1000000000000) // (100 * n)
-                 + (85 * in_sum) // 100 AS BIGINT) AS rank_fp
-      FROM t1, nn
-    ),
-    t2 AS (
-      SELECT s.dst AS v, sum(r.rank_fp // d.deg) AS in_sum
-      FROM sym s JOIN r1 r ON r.v = s.src JOIN deg d ON d.src = s.src
-      GROUP BY 1
-    ),
-    r2 AS (
-      SELECT v, CAST((15 * 1000000000000) // (100 * n)
-                 + (85 * in_sum) // 100 AS BIGINT) AS rank_fp
-      FROM t2, nn
-    ),
-    t3 AS (
-      SELECT s.dst AS v, sum(r.rank_fp // d.deg) AS in_sum
-      FROM sym s JOIN r2 r ON r.v = s.src JOIN deg d ON d.src = s.src
-      GROUP BY 1
-    ),
-    r3 AS (
-      SELECT v, CAST((15 * 1000000000000) // (100 * n)
-                 + (85 * in_sum) // 100 AS BIGINT) AS rank_fp
-      FROM t3, nn
-    )
-    SELECT v AS user_id, rank_fp
-    FROM r3 ORDER BY rank_fp DESC, v LIMIT 10
-    """,
-)
-def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative PageRank (operators/graph.pagerank_fixedpoint), 3
-    rounds, damping 0.85, over the hourly co-purchase graph — the
-    entity-importance signal sampling mixtures weight by. Iterative
-    float algorithms normally can't be value-hashed cross-engine
-    (summation order drifts); here ALL arithmetic is fixed-point on
-    positive BIGINTs (10^12 scale, floor division), so Spark's 3
-    join+agg message-passing rounds and the oracle's unrolled CTEs
-    must produce IDENTICAL integers — an exact gate on an iterative
-    distributed algorithm. Top-10 users by rank, ties broken by id."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    ranks = G.pagerank_fixedpoint(
-        _graph_edges(spark, sf_dir), iterations=3, damping_pct=85
-    )
-    return (
-        ranks.select(F.col("v").alias("user_id"), "rank_fp")
-        .orderBy(F.desc("rank_fp"), F.asc("user_id"))
-        .limit(10)
-    )
-
-
-@query(
-    "q_graph_edge_support",
-    f"""
-    WITH edges AS ({_GRAPH_EDGES_SQL}),
-    tri AS (
-      SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-      FROM edges e1
-      JOIN edges e2 ON e2.src = e1.src AND e2.dst > e1.dst
-      JOIN edges e3 ON e3.src = e1.dst AND e3.dst = e2.dst
-    ),
-    sides AS (
-      SELECT a AS src, b AS dst FROM tri
-      UNION ALL SELECT a, c FROM tri
-      UNION ALL SELECT b, c FROM tri
-    ),
-    sup AS (
-      SELECT src, dst, CAST(count(*) AS BIGINT) AS support
-      FROM sides GROUP BY 1, 2
-    )
-    SELECT src, dst, support
-    FROM sup ORDER BY support DESC, src, dst LIMIT 10
-    """,
-)
-def q_graph_edge_support(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-edge triangle support (operators/graph.edge_triangle_support)
-    — the k-truss primitive: the top-10 most triangle-embedded edges of
-    the co-purchase graph, i.e. the densest community cores. Spark
-    enumerates each triangle once under degree orientation and credits
-    its three canonical edges; the oracle derives the identical
-    support from an id-ordered (a<b<c) triangle CTE — same algorithmic
-    differential as q_graph_triangles, now checked per edge instead of
-    in aggregate. Ties broken by (src, dst) so the top-10 set is
-    deterministic."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    sup = G.edge_triangle_support(_graph_edges(spark, sf_dir))
-    return sup.orderBy(
-        F.desc("support"), F.asc("src"), F.asc("dst")
-    ).limit(10)
-
-
-@query(
-    "q_graph_structural_similarity",
-    f"""
-    WITH edges AS ({_GRAPH_EDGES_SQL}),
-    deg AS (
-      SELECT v, CAST(count(*) AS BIGINT) AS d FROM (
-        SELECT src AS v FROM edges UNION ALL SELECT dst FROM edges
-      ) GROUP BY 1
-    ),
-    tri AS (
-      SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-      FROM edges e1
-      JOIN edges e2 ON e2.src = e1.src AND e2.dst > e1.dst
-      JOIN edges e3 ON e3.src = e1.dst AND e3.dst = e2.dst
-    ),
-    sides AS (
-      SELECT a AS src, b AS dst FROM tri
-      UNION ALL SELECT a, c FROM tri
-      UNION ALL SELECT b, c FROM tri
-    ),
-    sup AS (
-      SELECT src, dst, CAST(count(*) AS BIGINT) AS cn
-      FROM sides GROUP BY 1, 2
-    ),
-    sim AS (
-      SELECT s.src, s.dst, s.cn,
-             round(CAST(s.cn AS DOUBLE)
-                   / (da.d + db.d - 2 - s.cn), 7) AS jaccard
-      FROM sup s
-      JOIN deg da ON da.v = s.src
-      JOIN deg db ON db.v = s.dst
-    )
-    SELECT src, dst, cn, jaccard
-    FROM sim ORDER BY jaccard DESC, src, dst LIMIT 10
-    """,
-)
-def q_graph_structural_similarity(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Structural edge similarity (SCAN clustering's core signal): for
-    each edge, the Jaccard of its endpoints' open neighborhoods —
-    common neighbors cn over |N(a) ∪ N(b)| \\ {a, b} = d(a)+d(b)-2-cn.
-    cn per edge IS the triangle support (a common neighbor of an
-    adjacent pair closes a triangle), so this composes the verified
-    oriented-wedge machinery with the degree table and one closed-form
-    division, rounded once — the per-edge signal SCAN thresholds to
-    peel communities from hubs/outliers at scale. Top-10 most
-    structurally-embedded edges, ties broken by (src, dst)."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    edges = _graph_edges(spark, sf_dir)
-    sup = G.edge_triangle_support(edges)
-    deg = (
-        edges.select(F.col("src").alias("v"))
-        .unionAll(edges.select(F.col("dst").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    )
-    sim = (
-        sup.withColumnRenamed("support", "cn")
-        .join(deg.withColumnRenamed("v", "src"), "src")
-        .withColumnRenamed("d", "da")
-        .join(deg.withColumnRenamed("v", "dst"), "dst")
-        .withColumnRenamed("d", "db")
-        .select(
-            "src",
-            "dst",
-            "cn",
-            F.round(
-                F.col("cn").cast("double")
-                / (F.col("da") + F.col("db") - 2 - F.col("cn")),
-                7,
-            ).alias("jaccard"),
-        )
-    )
-    return sim.orderBy(
-        F.desc("jaccard"), F.asc("src"), F.asc("dst")
-    ).limit(10)
-
-
 @query(
     "q_stats_regression_lineitem",
     """
@@ -9072,1043 +8813,8 @@ def q_stats_regression_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Round-7 additions: k-truss peeling, SCAN clustering,
-# approx-vs-exact quantile error-bound cross-gate.
+# Round-7 addition: approx-vs-exact quantile error-bound cross-gate.
 # ----------------------------------------------------------------------
-
-# Shared SQL fragment: one support-peeling round — given edge CTE name
-# {src}, emit the (src, dst) pairs whose triangle support in that edge
-# set is >= {thr}. Edges in zero triangles have no support row (inner
-# semantics), matching operators/graph.ktruss_edges exactly.
-def _peel_sql(src_cte: str, out_cte: str, thr: int) -> str:
-    # MATERIALIZED is load-bearing: each peel references the previous
-    # round's edge set THREE times in its triangle join, and DuckDB
-    # inlines plain CTEs per reference — an unrolled 3-round peel
-    # would re-evaluate the whole chain 3^depth times (measured: 472s
-    # vs 0.4s at sf0.01).
-    return f"""
-    tri_{out_cte} AS MATERIALIZED (
-      SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-      FROM {src_cte} e1
-      JOIN {src_cte} e2 ON e2.src = e1.src AND e2.dst > e1.dst
-      JOIN {src_cte} e3 ON e3.src = e1.dst AND e3.dst = e2.dst
-    ),
-    sup_{out_cte} AS MATERIALIZED (
-      SELECT src, dst, count(*) AS s FROM (
-        SELECT a AS src, b AS dst FROM tri_{out_cte}
-        UNION ALL SELECT a, c FROM tri_{out_cte}
-        UNION ALL SELECT b, c FROM tri_{out_cte}
-      ) GROUP BY 1, 2
-    ),
-    {out_cte} AS MATERIALIZED (
-      SELECT src, dst FROM sup_{out_cte} WHERE s >= {thr}
-    )"""
-
-
-_KTRUSS_K, _KTRUSS_ROUNDS = 8, 3
-
-
-@query(
-    "q_graph_ktruss",
-    f"""
-    WITH edges AS MATERIALIZED ({_GRAPH_EDGES_SQL}),
-    {_peel_sql('edges', 'p1', _KTRUSS_K - 2)},
-    {_peel_sql('p1', 'p2', _KTRUSS_K - 2)},
-    {_peel_sql('p2', 'p3', _KTRUSS_K - 2)}
-    SELECT (SELECT CAST(count(*) AS BIGINT) FROM p3) AS n_edges,
-           (SELECT CAST(count(DISTINCT v) AS BIGINT) FROM (
-              SELECT src AS v FROM p3 UNION ALL SELECT dst FROM p3
-            )) AS n_nodes,
-           (SELECT CAST(coalesce(sum(src * 100003 + dst), 0) AS BIGINT)
-              FROM p3) AS edge_checksum
-    """,
-)
-def q_graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-truss peeling (operators/graph.ktruss_edges): iteratively drop
-    edges with triangle support < k-2, recomputing support on the
-    survivors — the dense-community decomposition built on the
-    q_graph_edge_support primitive. Gate contract is EXACTLY
-    {_KTRUSS_ROUNDS} peel rounds at k={_KTRUSS_K} (deterministic
-    regardless of where the fixed point lies — an extra peel of a
-    converged set is idempotent; full fixed-point convergence is pinned
-    by a unit test on a crafted fixture): Spark peels with the
-    degree-oriented O(sqrt(m))-fan-out wedge join per round, the oracle
-    unrolls {_KTRUSS_ROUNDS} id-ordered triangle CTEs — the same
-    algorithmic differential as q_graph_triangles, iterated. Output is
-    the O(1) survivor summary (edge/node counts + position checksum),
-    never the edge list."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    kept = G.ktruss_edges(
-        _graph_edges(spark, sf_dir), k=_KTRUSS_K, rounds=_KTRUSS_ROUNDS
-    )
-    summary = kept.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_edges"),
-        F.coalesce(
-            F.sum(F.col("src") * F.lit(100003) + F.col("dst")), F.lit(0)
-        )
-        .cast("bigint")
-        .alias("edge_checksum"),
-    )
-    nodes = (
-        kept.select(F.explode(F.array("src", "dst")).alias("v"))
-        .agg(F.countDistinct("v").cast("bigint").alias("n_nodes"))
-    )
-    return summary.crossJoin(nodes).select(
-        "n_edges", "n_nodes", "edge_checksum"
-    )
-
-
-_SCAN_EPS_NUM, _SCAN_EPS_DEN, _SCAN_MU = 45, 100, 3
-
-
-# Shared SCAN CTE chain: edges -> structural-similarity strong edges
-# -> cores -> recursive min-label components -> core labels + borders.
-_SCAN_CTES_SQL = f"""
-    WITH RECURSIVE edges AS MATERIALIZED ({_GRAPH_EDGES_SQL}),
-    deg AS (
-      SELECT v, CAST(count(*) AS BIGINT) AS d FROM (
-        SELECT src AS v FROM edges UNION ALL SELECT dst FROM edges
-      ) GROUP BY 1
-    ),
-    tri AS MATERIALIZED (
-      SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-      FROM edges e1
-      JOIN edges e2 ON e2.src = e1.src AND e2.dst > e1.dst
-      JOIN edges e3 ON e3.src = e1.dst AND e3.dst = e2.dst
-    ),
-    cn AS MATERIALIZED (
-      SELECT src, dst, CAST(count(*) AS BIGINT) AS cn FROM (
-        SELECT a AS src, b AS dst FROM tri
-        UNION ALL SELECT a, c FROM tri
-        UNION ALL SELECT b, c FROM tri
-      ) GROUP BY 1, 2
-    ),
-    strong AS MATERIALIZED (
-      SELECT e.src, e.dst
-      FROM edges e
-      LEFT JOIN cn USING (src, dst)
-      JOIN deg da ON da.v = e.src
-      JOIN deg db ON db.v = e.dst
-      WHERE (coalesce(cn.cn, 0) + 2) * (coalesce(cn.cn, 0) + 2)
-              * {_SCAN_EPS_DEN * _SCAN_EPS_DEN}
-            >= {_SCAN_EPS_NUM * _SCAN_EPS_NUM} * (da.d + 1) * (db.d + 1)
-    ),
-    sdeg AS (
-      SELECT v, count(*) AS sd FROM (
-        SELECT src AS v FROM strong UNION ALL SELECT dst FROM strong
-      ) GROUP BY 1
-    ),
-    cores AS MATERIALIZED (SELECT v FROM sdeg WHERE sd + 1 >= {_SCAN_MU}),
-    ce AS (
-      SELECT s.src, s.dst FROM strong s
-      JOIN cores c1 ON c1.v = s.src
-      JOIN cores c2 ON c2.v = s.dst
-    ),
-    ces AS (
-      SELECT src AS a, dst AS b FROM ce
-      UNION
-      SELECT dst AS a, src AS b FROM ce
-    ),
-    reach(node, lab) AS (
-      SELECT a, a FROM ces
-      UNION
-      SELECT e.b, r.lab FROM reach r JOIN ces e ON r.node = e.a
-    ),
-    comp AS (SELECT node, min(lab) AS component FROM reach GROUP BY node),
-    corelab AS (
-      SELECT c.v, coalesce(p.component, c.v) AS cluster
-      FROM cores c LEFT JOIN comp p ON p.node = c.v
-    ),
-    symstrong AS (
-      SELECT src, dst FROM strong
-      UNION ALL
-      SELECT dst AS src, src AS dst FROM strong
-    ),
-    border AS (
-      SELECT s.dst AS v, min(cl.cluster) AS cluster
-      FROM symstrong s JOIN corelab cl ON cl.v = s.src
-      WHERE s.dst NOT IN (SELECT v FROM cores)
-      GROUP BY s.dst
-    )
-"""
-
-
-@query(
-    "q_graph_scan_clusters",
-    f"""
-    {_SCAN_CTES_SQL}
-    SELECT CAST(v AS BIGINT) AS v, CAST(cluster AS BIGINT) AS cluster,
-           TRUE AS is_core
-    FROM corelab
-    UNION ALL
-    SELECT CAST(v AS BIGINT), CAST(cluster AS BIGINT), FALSE FROM border
-    """,
-)
-def q_graph_scan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCAN structural clustering (operators/graph.scan_clusters) —
-    the completion of q_graph_structural_similarity's per-edge signal
-    into communities with hubs/outliers EXCLUDED (what distinguishes
-    SCAN from thresholded connected components). ε = 45/100 is kept
-    RATIONAL and the core test squared into BIGINT arithmetic, so an
-    inherently float-looking definition (σ ≥ ε with a sqrt) gates
-    integer-exactly; cluster labels come from the same
-    dedup.connected_components as dedup_connected_components, which
-    the oracle reproduces with a recursive CTE. Output: every clustered vertex
-    with its cluster label and core/border role (7 communities, 48
-    members at sf0.01 — the rest of the 150-node graph is hub/outlier
-    background)."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    members = G.scan_clusters(
-        _graph_edges(spark, sf_dir),
-        eps_num=_SCAN_EPS_NUM,
-        eps_den=_SCAN_EPS_DEN,
-        mu=_SCAN_MU,
-    )
-    return members.select(
-        F.col("v").cast("bigint").alias("v"),
-        F.col("cluster").cast("bigint").alias("cluster"),
-        "is_core",
-    )
-
-
-@query(
-    "q_graph_scan_roles",
-    f"""
-    {_SCAN_CTES_SQL},
-    members AS MATERIALIZED (
-      SELECT v, cluster, 'core' AS role FROM corelab
-      UNION ALL
-      SELECT v, cluster, 'border' AS role FROM border
-    ),
-    allnodes AS (
-      SELECT DISTINCT v FROM (
-        SELECT src AS v FROM edges UNION ALL SELECT dst FROM edges
-      )
-    ),
-    symall AS (
-      SELECT src, dst FROM edges
-      UNION ALL
-      SELECT dst AS src, src AS dst FROM edges
-    ),
-    nm AS MATERIALIZED (
-      SELECT v FROM allnodes WHERE v NOT IN (SELECT v FROM members)
-    ),
-    nc AS MATERIALIZED (
-      SELECT s.dst AS v, count(DISTINCT m.cluster) AS nc
-      FROM symall s JOIN members m ON m.v = s.src
-      WHERE s.dst IN (SELECT v FROM nm)
-      GROUP BY s.dst
-    )
-    SELECT CAST(v AS BIGINT) AS v, CAST(cluster AS BIGINT) AS cluster, role
-    FROM members
-    UNION ALL
-    SELECT CAST(v AS BIGINT), CAST(-1 AS BIGINT), 'hub'
-    FROM nc WHERE nc >= 2
-    UNION ALL
-    SELECT CAST(v AS BIGINT), CAST(-1 AS BIGINT), 'outlier'
-    FROM nm WHERE v NOT IN (SELECT v FROM nc WHERE nc >= 2)
-    """,
-)
-def q_graph_scan_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full SCAN vertex classification (operators/graph.scan_roles):
-    every vertex of the co-purchase graph labeled core / border / hub /
-    outlier — the two NON-member roles are what SCAN exists to
-    separate from communities (a hub's plain neighbors span >= 2
-    distinct clusters; an outlier's don't). Built on the gated
-    scan_clusters members plus one symmetric-adjacency join and a
-    per-non-member countDistinct — vertex-keyed, nothing quadratic.
-    cluster = -1 sentinel for hubs/outliers so the frame value-hashes
-    without NULL ambiguity."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    roles = G.scan_roles(
-        _graph_edges(spark, sf_dir),
-        eps_num=_SCAN_EPS_NUM,
-        eps_den=_SCAN_EPS_DEN,
-        mu=_SCAN_MU,
-    )
-    return roles.select(
-        F.col("v").cast("bigint").alias("v"),
-        F.col("cluster").cast("bigint").alias("cluster"),
-        "role",
-    )
-
-
-# Bounded-level oracle for the full truss decomposition: unroll each
-# level's peeling to a FIXED number of rounds that covers the measured
-# fixed point on the gate graph (+1 idempotent margin — an extra peel
-# of a converged set is the set, so over-unrolling is always safe;
-# under-unrolling would diverge). Measured at sf0.01: k=3 converges in
-# 2 rounds, k=4 in 3, k=5 in 5 (pure-Python peeler, /tools lineage).
-# The margin round is not just slack — _truss_level_sql turns it into
-# an in-SQL convergence PROOF (see below), so these constants are
-# verified by every oracle run, not trusted.
-_TRUSS_HIST_ROUNDS = {3: 3, 4: 4, 5: 6}
-
-
-def _truss_level_sql(src_cte: str, level: int) -> tuple[str, str]:
-    """CTE chain peeling ``src_cte`` to the {level}-truss fixed point
-    (unrolled _peel_sql rounds); returns (sql, final_cte_name).
-
-    SELF-VERIFYING: peeling is monotone (every round's survivor set is
-    a subset of the previous round's), so equal COUNTS between the last
-    two unrolled rounds proves they are the identical set — i.e. the
-    unroll reached the true fixed point. The level's output CTE guards
-    on that equality and yields ZERO rows when it fails, so a corpus or
-    scale-factor change that outgrows the measured round constants
-    breaks the gate LOUDLY (empty histogram level → hash mismatch)
-    instead of silently comparing a non-converged oracle against
-    Spark's true fixed point."""
-    n = _TRUSS_HIST_ROUNDS[level]
-    assert n >= 2, "convergence proof needs two comparable rounds"
-    blocks = []
-    cur = src_cte
-    for i in range(1, n + 1):
-        out = f"t{level}r{i}"
-        blocks.append(_peel_sql(cur, out, level - 2))
-        cur = out
-    blocks.append(
-        f"""
-    t{level} AS MATERIALIZED (
-      SELECT * FROM t{level}r{n}
-      WHERE (SELECT count(*) FROM t{level}r{n})
-          = (SELECT count(*) FROM t{level}r{n - 1})
-    )"""
-    )
-    return ",\n".join(blocks), f"t{level}"
-
-
-_TRUSS_HIST_SQL_PARTS = [
-    _truss_level_sql("edges", 3),
-    _truss_level_sql("t3", 4),
-    _truss_level_sql("t4", 5),
-]
-
-
-@query(
-    "q_graph_trussness_hist",
-    f"""
-    WITH edges AS MATERIALIZED ({_GRAPH_EDGES_SQL}),
-    {",".join(sql for sql, _ in _TRUSS_HIST_SQL_PARTS)},
-    lab AS (
-      SELECT e.src, e.dst, 2 AS trussness FROM edges e
-      WHERE NOT EXISTS (
-        SELECT 1 FROM t3 WHERE t3.src = e.src AND t3.dst = e.dst)
-      UNION ALL
-      SELECT e.src, e.dst, 3 FROM t3 e
-      WHERE NOT EXISTS (
-        SELECT 1 FROM t4 WHERE t4.src = e.src AND t4.dst = e.dst)
-      UNION ALL
-      SELECT e.src, e.dst, 4 FROM t4 e
-      WHERE NOT EXISTS (
-        SELECT 1 FROM t5 WHERE t5.src = e.src AND t5.dst = e.dst)
-      UNION ALL
-      SELECT src, dst, 5 FROM t5
-    )
-    SELECT CAST(trussness AS BIGINT) AS trussness,
-           CAST(count(*) AS BIGINT) AS n_edges,
-           CAST(sum(src * 100003 + dst) AS BIGINT) AS edge_checksum
-    FROM lab GROUP BY 1
-    """,
-)
-def q_graph_trussness_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trussness histogram — the driver gate the r7 verdict asked for
-    on the full truss decomposition (operators/graph.edge_trussness,
-    previously property-only): every co-purchase edge's trussness,
-    capped at 5 (the k_max safety bound doubles as the cap — edges
-    surviving the 5-truss report trussness 5, documented in the
-    operator), aggregated to (trussness -> edge count + position
-    checksum). Spark peels each level to its TRUE fixed point with the
-    shared one-enumeration prune machinery; the oracle unrolls each
-    level a fixed, measured-sufficient number of rounds AND PROVES
-    convergence in-SQL (peeling is monotone, so equal counts across
-    the final two rounds ⇒ identical sets; the level CTE empties —
-    failing the gate loudly — if the round constants ever
-    under-unroll; see _truss_level_sql). Same deterministic-round
-    contract as q_graph_ktruss, iterated across levels, but hardened
-    against corpus/sf drift."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    t = G.edge_trussness(_graph_edges(spark, sf_dir), k_max=5)
-    return t.groupBy(
-        F.col("trussness").cast("bigint").alias("trussness")
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_edges"),
-        F.sum(F.col("src") * F.lit(100003) + F.col("dst"))
-        .cast("bigint")
-        .alias("edge_checksum"),
-    )
-
-
-_KCORE_K, _KCORE_ROUNDS = 16, 3
-
-
-def _kcore_peel_sql(src_cte: str, out_cte: str, k: int) -> str:
-    """One degree-peeling round: vertices of {src_cte} with degree
-    >= k survive; {out_cte} is the induced edge set."""
-    return f"""
-    deg_{out_cte} AS MATERIALIZED (
-      SELECT v, count(*) AS d FROM (
-        SELECT src AS v FROM {src_cte}
-        UNION ALL SELECT dst FROM {src_cte}
-      ) GROUP BY 1
-    ),
-    {out_cte} AS MATERIALIZED (
-      SELECT e.src, e.dst FROM {src_cte} e
-      JOIN deg_{out_cte} da ON da.v = e.src AND da.d >= {k}
-      JOIN deg_{out_cte} db ON db.v = e.dst AND db.d >= {k}
-    )"""
-
-
-@query(
-    "q_graph_kcore",
-    f"""
-    WITH edges AS MATERIALIZED ({_GRAPH_EDGES_SQL}),
-    {_kcore_peel_sql('edges', 'c1', _KCORE_K)},
-    {_kcore_peel_sql('c1', 'c2', _KCORE_K)},
-    {_kcore_peel_sql('c2', 'c3', _KCORE_K)}
-    SELECT (SELECT CAST(count(*) AS BIGINT) FROM c3) AS n_edges,
-           (SELECT CAST(count(DISTINCT v) AS BIGINT) FROM (
-              SELECT src AS v FROM c3 UNION ALL SELECT dst FROM c3
-            )) AS n_nodes,
-           (SELECT CAST(coalesce(sum(src * 100003 + dst), 0) AS BIGINT)
-              FROM c3) AS edge_checksum
-    """,
-)
-def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-core decomposition (operators/graph.kcore_edges): iteratively
-    drop vertices with fewer than k={_KCORE_K} neighbors in the
-    current subgraph — the standard density filter one level weaker
-    than k-truss (degree, not triangle support). Gate contract is
-    EXACTLY {_KCORE_ROUNDS} peel rounds (convergence at sf0.01 takes
-    2; extra peels of a converged set are idempotent — same
-    deterministic-round contract as q_graph_ktruss); the oracle
-    unrolls the same degree-filter rounds as MATERIALIZED CTEs.
-    Output is the O(1) survivor summary."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    kept = G.kcore_edges(
-        _graph_edges(spark, sf_dir), k=_KCORE_K, rounds=_KCORE_ROUNDS
-    )
-    summary = kept.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_edges"),
-        F.coalesce(
-            F.sum(F.col("src") * F.lit(100003) + F.col("dst")), F.lit(0)
-        )
-        .cast("bigint")
-        .alias("edge_checksum"),
-    )
-    nodes = kept.select(
-        F.explode(F.array("src", "dst")).alias("v")
-    ).agg(F.countDistinct("v").cast("bigint").alias("n_nodes"))
-    return summary.crossJoin(nodes).select(
-        "n_edges", "n_nodes", "edge_checksum"
-    )
-
-
-# the docstring references the module constants — interpolate them so
-# help() shows the values, not literal '{_KCORE_K}' placeholders
-q_graph_kcore.__doc__ = q_graph_kcore.__doc__.format(
-    _KCORE_K=_KCORE_K, _KCORE_ROUNDS=_KCORE_ROUNDS
-)
-
-
-_BFS_MAX_HOPS, _BFS_N_SEEDS = 3, 5
-
-
-@query(
-    "q_graph_bfs_levels",
-    f"""
-    WITH RECURSIVE edges AS MATERIALIZED ({_GRAPH_EDGES_SQL}),
-    sym AS (
-      SELECT src, dst FROM edges
-      UNION ALL
-      SELECT dst AS src, src AS dst FROM edges
-    ),
-    seeds AS (
-      SELECT DISTINCT src AS v FROM sym ORDER BY v LIMIT {_BFS_N_SEEDS}
-    ),
-    walk(v, hops) AS (
-      SELECT v, 0 FROM seeds
-      UNION
-      SELECT s.dst, w.hops + 1
-      FROM walk w JOIN sym s ON s.src = w.v
-      WHERE w.hops < {_BFS_MAX_HOPS}
-    )
-    SELECT CAST(v AS BIGINT) AS v, CAST(min(hops) AS BIGINT) AS hops
-    FROM walk GROUP BY v
-    """,
-)
-def q_graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-source BFS hop distances (operators/graph.bfs_levels) —
-    the fourth graph kernel (after triangles / PageRank / components):
-    minimum hop count from the {_BFS_N_SEEDS} smallest-id vertices of
-    the hourly co-purchase graph, bounded at {_BFS_MAX_HOPS} hops (the
-    spam-distance / trust-radius feature a curation pipeline derives
-    from a labeled seed set). Spark expands one frontier per round —
-    hash join on the vertex key + anti-join against the visited set,
-    lineage truncated per round — while the oracle computes the same
-    minimum distances with a recursive UNION CTE (distinct (v, hops)
-    states, min-grouped), so every level of the traversal is
-    value-hashed cross-engine. Min-hop is deterministic regardless of
-    expansion order, which is what makes an iterative traversal
-    hashable at all."""
-    edges = track(_graph_edges(spark, sf_dir).persist())
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    verts = (
-        edges.select(F.col("src").alias("v"))
-        .unionAll(edges.select(F.col("dst").alias("v")))
-        .distinct()
-    )
-    seeds = verts.orderBy(F.asc("v")).limit(_BFS_N_SEEDS)
-    res = G.bfs_levels(edges, seeds, max_hops=_BFS_MAX_HOPS)
-    return res.select(
-        F.col("v").cast("bigint").alias("v"),
-        F.col("hops").cast("bigint").alias("hops"),
-    )
-
-
-q_graph_bfs_levels.__doc__ = q_graph_bfs_levels.__doc__.format(
-    _BFS_N_SEEDS=_BFS_N_SEEDS, _BFS_MAX_HOPS=_BFS_MAX_HOPS
-)
-
-
-_BFS_TRUNC_HOPS = 1
-
-
-@query(
-    "q_graph_bfs_truncated",
-    f"""
-    WITH RECURSIVE edges AS MATERIALIZED ({_GRAPH_EDGES_SQL}),
-    sym AS (
-      SELECT src, dst FROM edges
-      UNION ALL
-      SELECT dst AS src, src AS dst FROM edges
-    ),
-    seeds AS (
-      SELECT DISTINCT src AS v FROM sym ORDER BY v LIMIT {_BFS_N_SEEDS}
-    ),
-    walk(v, hops) AS (
-      SELECT v, 0 FROM seeds
-      UNION
-      SELECT s.dst, w.hops + 1
-      FROM walk w JOIN sym s ON s.src = w.v
-      WHERE w.hops < {_BFS_TRUNC_HOPS}
-    )
-    SELECT CAST(v AS BIGINT) AS v, CAST(min(hops) AS BIGINT) AS hops
-    FROM walk GROUP BY v
-    """,
-)
-def q_graph_bfs_truncated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hop-budget TRUNCATION twin of q_graph_bfs_levels (r11 verdict
-    task 6): the gate fixture's co-purchase graph reaches its whole
-    component within ~2 hops of the seed set, so the main gate
-    (max_hops={_BFS_MAX_HOPS}) exercises early exit but never the
-    truncation branch. This twin runs the SAME seeds at
-    max_hops={_BFS_TRUNC_HOPS}, where vertices beyond the budget must
-    be absent from BOTH engines' output — the truncation semantics are
-    now value-hashed cross-engine, not just unit-pinned
-    (test_round11.py pins the Spark side alone)."""
-    edges = track(_graph_edges(spark, sf_dir).persist())
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    verts = (
-        edges.select(F.col("src").alias("v"))
-        .unionAll(edges.select(F.col("dst").alias("v")))
-        .distinct()
-    )
-    seeds = verts.orderBy(F.asc("v")).limit(_BFS_N_SEEDS)
-    res = G.bfs_levels(edges, seeds, max_hops=_BFS_TRUNC_HOPS)
-    return res.select(
-        F.col("v").cast("bigint").alias("v"),
-        F.col("hops").cast("bigint").alias("hops"),
-    )
-
-
-q_graph_bfs_truncated.__doc__ = q_graph_bfs_truncated.__doc__.format(
-    _BFS_MAX_HOPS=_BFS_MAX_HOPS, _BFS_TRUNC_HOPS=_BFS_TRUNC_HOPS
-)
-
-
-_LINKPRED_MIN_CN, _LINKPRED_TOPK = 2, 20
-
-
-@query(
-    "q_graph_link_prediction",
-    f"""
-    WITH edges AS MATERIALIZED ({_GRAPH_EDGES_SQL}),
-    sym AS (
-      SELECT src AS w, dst AS n FROM edges
-      UNION ALL
-      SELECT dst AS w, src AS n FROM edges
-    ),
-    cn AS (
-      SELECT a.n AS u, b.n AS v, CAST(count(*) AS BIGINT) AS cn
-      FROM sym a JOIN sym b ON a.w = b.w AND a.n < b.n
-      GROUP BY 1, 2
-    )
-    SELECT u, v, cn FROM cn
-    WHERE cn >= {_LINKPRED_MIN_CN}
-      AND NOT EXISTS (
-        SELECT 1 FROM edges e WHERE e.src = cn.u AND e.dst = cn.v)
-    ORDER BY cn DESC, u, v LIMIT {_LINKPRED_TOPK}
-    """,
-)
-def q_graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Common-neighbor link prediction
-    (operators/graph.common_neighbor_candidates): the top-{_LINKPRED_TOPK}
-    NON-adjacent user pairs of the co-purchase graph by shared-neighbor
-    count — friend-of-friend candidate generation, the simplest
-    Liben-Nowell/Kleinberg link-prediction score kept INTEGER so the
-    ranking gates exactly (ties broken by the id pair). Spark
-    enumerates pairs at the shared apex (one adjacency self-join +
-    anti-join against the edge set); the oracle runs the identical
-    wedge join in SQL."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    cand = G.common_neighbor_candidates(
-        _graph_edges(spark, sf_dir), min_common=_LINKPRED_MIN_CN
-    )
-    return cand.orderBy(
-        F.desc("cn"), F.asc("u"), F.asc("v")
-    ).limit(_LINKPRED_TOPK)
-
-
-q_graph_link_prediction.__doc__ = q_graph_link_prediction.__doc__.format(
-    _LINKPRED_TOPK=_LINKPRED_TOPK
-)
-
-
-@query(
-    "q_graph_adamic_adar",
-    f"""
-    WITH edges AS MATERIALIZED ({_GRAPH_EDGES_SQL}),
-    sym AS (
-      SELECT src AS w, dst AS n FROM edges
-      UNION ALL
-      SELECT dst AS w, src AS n FROM edges
-    ),
-    wdeg AS (
-      SELECT w, CAST(count(*) AS BIGINT) AS dw FROM sym GROUP BY 1
-    ),
-    scored AS (
-      SELECT a.n AS u, b.n AS v,
-             CAST(count(*) AS BIGINT) AS cn,
-             CAST(sum({LINKPRED_SCALE} // d.dw) AS BIGINT) AS ra_fp,
-             CAST(sum({LINKPRED_SCALE}
-                      // length(printf('%b', d.dw))) AS BIGINT) AS aa_fp
-      FROM sym a
-      JOIN sym b ON a.w = b.w AND a.n < b.n
-      JOIN wdeg d ON d.w = a.w
-      GROUP BY 1, 2
-    )
-    SELECT u, v, cn, ra_fp, aa_fp FROM scored
-    WHERE cn >= {_LINKPRED_MIN_CN}
-      AND NOT EXISTS (
-        SELECT 1 FROM edges e WHERE e.src = scored.u AND e.dst = scored.v)
-    ORDER BY aa_fp DESC, u, v LIMIT {_LINKPRED_TOPK}
-    """,
-)
-def q_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree-weighted link prediction
-    (operators/graph.weighted_link_scores): the ranking a recommender
-    actually uses on top of q_graph_link_prediction's raw candidate
-    counts — Adamic-Adar (Σ 1/log d(w)) and resource allocation
-    (Σ 1/d(w)) down-weight common neighbors that are promiscuous hubs.
-    Both scores are FIXED-POINT integers so the ranking gates exactly
-    cross-engine: RA sums 10^12 div d(w); AA takes the log as the
-    integer staircase 1 + floor(log2 d) = bit length of d (Spark
-    length(bin(d)), DuckDB length(printf('%b', d)) — float ln() is a
-    last-ulp portability hazard a value hash cannot tolerate). One
-    extra projection on the same single-shuffle wedge join; top-
-    {_LINKPRED_TOPK} by aa_fp, ties broken by the id pair."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    scored = G.weighted_link_scores(
-        _graph_edges(spark, sf_dir), min_common=_LINKPRED_MIN_CN
-    )
-    return scored.orderBy(
-        F.desc("aa_fp"), F.asc("u"), F.asc("v")
-    ).limit(_LINKPRED_TOPK)
-
-
-q_graph_adamic_adar.__doc__ = q_graph_adamic_adar.__doc__.format(
-    _LINKPRED_TOPK=_LINKPRED_TOPK
-)
-
-
-# ----------------------------------------------------------------------
-# Skewed-graph gates: the ORIENTED support kernel under the driver
-# oracle. The co-purchase graph is near-regular, so _support_stats
-# routes every gate above to the fulladj kernel — the oriented path
-# (the one the 100 TB power-law claim rests on) was covered only by
-# forced-kernel unit differentials. This fixture is the adversarial
-# shape degree orientation exists for: ONE mega-hub (node 0 spoked to
-# every other orderkey — a flash-sale context / boilerplate cluster),
-# a chain+skip strip along the dense orderkey line (so peeling
-# cascades), and a K32 seed community that survives it. Σd² is
-# hub-dominated (≈ n² vs the 8·m·√m rule at ~3x margin at sf0.01,
-# ~9x at sf0.1), so the auto cost model provably picks 'oriented' —
-# asserted by tests/test_round9.py.
-#
-# The ORACLE must be hub-safe too: a naive id-ordered wedge join
-# (what _GRAPH_EDGES_SQL's gates use) would emit O(n²) pairs at the
-# hub, so these oracles enumerate triangles DEGREE-ORIENTED in SQL —
-# the same O(m^1.5) bound as the kernel under test, independently
-# implemented.
-# ----------------------------------------------------------------------
-
-_SKEW_EDGES_SQL = """
-      SELECT CAST(0 AS BIGINT) AS src, o_orderkey AS dst
-      FROM orders WHERE o_orderkey >= 1
-      UNION ALL
-      SELECT a.o_orderkey AS src, b.o_orderkey AS dst
-      FROM orders a JOIN orders b ON b.o_orderkey = a.o_orderkey + 1
-      WHERE a.o_orderkey >= 1
-      UNION ALL
-      SELECT a.o_orderkey AS src, b.o_orderkey AS dst
-      FROM orders a JOIN orders b ON b.o_orderkey = a.o_orderkey + 2
-      WHERE a.o_orderkey >= 1
-      UNION ALL
-      SELECT a.o_orderkey AS src, b.o_orderkey AS dst
-      FROM orders a JOIN orders b
-        ON b.o_orderkey > a.o_orderkey + 2 AND b.o_orderkey < 32
-      WHERE a.o_orderkey >= 1 AND a.o_orderkey < 32
-"""
-
-# Degree-oriented triangle enumeration over the `edges` CTE: orient
-# each edge from its lower-degree endpoint (ties by id), wedge-join at
-# the oriented source, close against the canonical edge set. Work is
-# O(Σ fwd²) = O(m^1.5) — the hub contributes NO wedges (all its edges
-# point into it).
-_SKEW_TRI_SQL = """
-    deg AS MATERIALIZED (
-      SELECT v, CAST(count(*) AS BIGINT) AS d FROM (
-        SELECT src AS v FROM edges UNION ALL SELECT dst FROM edges
-      ) GROUP BY 1
-    ),
-    oe AS MATERIALIZED (
-      SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND e.src < e.dst)
-                  THEN e.src ELSE e.dst END AS u,
-             CASE WHEN da.d < db.d OR (da.d = db.d AND e.src < e.dst)
-                  THEN e.dst ELSE e.src END AS w
-      FROM edges e
-      JOIN deg da ON da.v = e.src
-      JOIN deg db ON db.v = e.dst
-    ),
-    tri0 AS MATERIALIZED (
-      SELECT a.u AS u, least(a.w, b.w) AS w1, greatest(a.w, b.w) AS w2
-      FROM oe a
-      JOIN oe b ON b.u = a.u AND a.w < b.w
-      JOIN edges e3 ON e3.src = least(a.w, b.w)
-                   AND e3.dst = greatest(a.w, b.w)
-    )
-"""
-
-
-def _skew_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The skew fixture as one canonical (src < dst, disjoint-by-
-    construction) edge frame: hub spokes + chain + skip strip + K32
-    completion — see the block comment above."""
-    o = load(spark, "orders", sf_dir).select(F.col("o_orderkey").alias("k"))
-    pos = o.filter(F.col("k") >= 1)
-    nxt = o.select(F.col("k").alias("k2"))
-    # hub id 0 spelled k*0, NOT lit(0): a literal alias plants a
-    # `src = 0` equality constraint on this union branch, and
-    # localCheckpoint carries the origin plan's constraints into the
-    # LogicalRDD — when a downstream kernel then SELF-JOINS the
-    # checkpointed frame (the fulladj adjacency route at small sf),
-    # DeduplicateRelations re-ids one side and Spark 4.1's
-    # UnionBase.rewriteConstraints crashes looking up the stale id
-    # ("key not found: src#..."). k*0 yields the same hub id with no
-    # foldable equality constraint. Pinned by
-    # test_skew_fixture_survives_fulladj_selfjoin.
-    spokes = pos.select(
-        (F.col("k") * F.lit(0)).cast("long").alias("src"),
-        F.col("k").alias("dst"),
-    )
-    chain = pos.join(nxt, F.col("k2") == F.col("k") + 1).select(
-        F.col("k").alias("src"), F.col("k2").alias("dst")
-    )
-    skip = pos.join(nxt, F.col("k2") == F.col("k") + 2).select(
-        F.col("k").alias("src"), F.col("k2").alias("dst")
-    )
-    clique = (
-        pos.filter(F.col("k") < 32)
-        .join(
-            nxt.filter(F.col("k2") < 32),
-            F.col("k2") > F.col("k") + 2,
-        )
-        .select(F.col("k").alias("src"), F.col("k2").alias("dst"))
-    )
-    return (
-        spokes.unionAll(chain).unionAll(skip).unionAll(clique)
-    )
-
-
-@query(
-    "q_graph_skew_triangles",
-    f"""
-    WITH edges AS MATERIALIZED ({_SKEW_EDGES_SQL}),
-    {_SKEW_TRI_SQL}
-    SELECT (SELECT CAST(count(*) AS BIGINT) FROM edges) AS n_edges,
-           (SELECT CAST(count(*) AS BIGINT) FROM tri0) AS n_triangles
-    """,
-)
-def q_graph_skew_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle count over the hub-dominated skew fixture — the gate
-    that puts a CORRECTNESS row on the ORIENTED kernel's auto route
-    (operators/graph.triangle_count; route asserted by
-    test_skew_fixture_routes_oriented). The oracle enumerates the same
-    triangles degree-oriented in SQL; an id-ordered wedge join would be
-    O(n²) at the hub on BOTH engines, which is exactly the failure mode
-    the kernel under test avoids."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    return G.triangle_count(_skew_edges(spark, sf_dir))
-
-
-@query(
-    "q_graph_skew_support",
-    f"""
-    WITH edges AS MATERIALIZED ({_SKEW_EDGES_SQL}),
-    {_SKEW_TRI_SQL},
-    sides AS (
-      SELECT least(u, w1) AS src, greatest(u, w1) AS dst FROM tri0
-      UNION ALL
-      SELECT least(u, w2), greatest(u, w2) FROM tri0
-      UNION ALL
-      SELECT w1, w2 FROM tri0
-    ),
-    sup AS (
-      SELECT src, dst, CAST(count(*) AS BIGINT) AS support
-      FROM sides GROUP BY 1, 2
-    )
-    SELECT support,
-           CAST(count(*) AS BIGINT) AS n_edges,
-           CAST(sum(src * 100003 + dst) AS BIGINT) AS edge_checksum
-    FROM sup GROUP BY 1
-    """,
-)
-def q_graph_skew_support(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-edge triangle support on the skew fixture, aggregated to a
-    support histogram (support → edge count + position checksum) so
-    the output stays O(distinct supports) while pinning every edge's
-    exact support through the checksum. Exercises
-    edge_triangle_support's ORIENTED enumerate-then-explode path end to
-    end under the driver oracle (the auto route — see
-    q_graph_skew_triangles)."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    sup = G.edge_triangle_support(_skew_edges(spark, sf_dir))
-    return sup.groupBy("support").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_edges"),
-        F.sum(F.col("src") * F.lit(100003) + F.col("dst"))
-        .cast("bigint")
-        .alias("edge_checksum"),
-    )
-
-
-_SKEW_KTRUSS_K, _SKEW_KTRUSS_ROUNDS = 5, 4
-
-
-def _skew_peel_sql(cur: str, tri_cur: str, rnd: int, thr: int) -> str:
-    """One oracle peel round over the PRUNED shared triangle list —
-    the SQL mirror of ktruss_edges' enumerate-once-then-prune design:
-    support from {tri_cur}'s three sides (inner join ⇒ support-0 edges
-    drop, matching the operator), survivors p{rnd}, triangle list
-    pruned to triangles whose three sides all survived."""
-    out, tri_out = f"p{rnd}", f"tri{rnd}"
-    return f"""
-    sup_{out} AS MATERIALIZED (
-      SELECT src, dst, CAST(count(*) AS BIGINT) AS s FROM (
-        SELECT least(u, w1) AS src, greatest(u, w1) AS dst FROM {tri_cur}
-        UNION ALL
-        SELECT least(u, w2), greatest(u, w2) FROM {tri_cur}
-        UNION ALL
-        SELECT w1, w2 FROM {tri_cur}
-      ) GROUP BY 1, 2
-    ),
-    {out} AS MATERIALIZED (
-      SELECT e.src, e.dst FROM {cur} e
-      JOIN sup_{out} s USING (src, dst)
-      WHERE s.s >= {thr}
-    ),
-    {tri_out} AS MATERIALIZED (
-      SELECT t.u, t.w1, t.w2 FROM {tri_cur} t
-      WHERE EXISTS (SELECT 1 FROM {out} e
-                    WHERE e.src = least(t.u, t.w1)
-                      AND e.dst = greatest(t.u, t.w1))
-        AND EXISTS (SELECT 1 FROM {out} e
-                    WHERE e.src = least(t.u, t.w2)
-                      AND e.dst = greatest(t.u, t.w2))
-        AND EXISTS (SELECT 1 FROM {out} e
-                    WHERE e.src = t.w1 AND e.dst = t.w2)
-    )"""
-
-
-@query(
-    "q_graph_skew_ktruss",
-    f"""
-    WITH edges AS MATERIALIZED ({_SKEW_EDGES_SQL}),
-    {_SKEW_TRI_SQL},
-    {",".join(
-        _skew_peel_sql(f"p{r - 1}" if r > 1 else "edges",
-                       f"tri{r - 1}" if r > 1 else "tri0",
-                       r, _SKEW_KTRUSS_K - 2)
-        for r in range(1, _SKEW_KTRUSS_ROUNDS + 1)
-    )}
-    SELECT (SELECT CAST(count(*) AS BIGINT)
-              FROM p{_SKEW_KTRUSS_ROUNDS}) AS n_edges,
-           (SELECT CAST(count(DISTINCT v) AS BIGINT) FROM (
-              SELECT src AS v FROM p{_SKEW_KTRUSS_ROUNDS}
-              UNION ALL SELECT dst FROM p{_SKEW_KTRUSS_ROUNDS}
-            )) AS n_nodes,
-           (SELECT CAST(coalesce(sum(src * 100003 + dst), 0) AS BIGINT)
-              FROM p{_SKEW_KTRUSS_ROUNDS}) AS edge_checksum
-    """,
-)
-def q_graph_skew_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-truss peeling on the skew fixture — k=5, EXACTLY 4 peel
-    rounds (the chain/skip strip cascades over 3 rounds: skips die at
-    support 2, chains follow, then the tail spokes; the K32 seed — all
-    supports 30 — is the surviving fixed point, so the gate answer is
-    structurally non-trivial). Exercises ktruss_edges' ORIENTED
-    enumerate-once-then-prune path on its auto route; the oracle runs
-    the identical prune design in SQL over the degree-oriented
-    triangle list (a per-round wedge re-join would be O(n²) at the
-    hub)."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    kept = G.ktruss_edges(
-        _skew_edges(spark, sf_dir),
-        k=_SKEW_KTRUSS_K,
-        rounds=_SKEW_KTRUSS_ROUNDS,
-    )
-    summary = kept.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_edges"),
-        F.coalesce(
-            F.sum(F.col("src") * F.lit(100003) + F.col("dst")), F.lit(0)
-        )
-        .cast("bigint")
-        .alias("edge_checksum"),
-    )
-    nodes = kept.select(
-        F.explode(F.array("src", "dst")).alias("v")
-    ).agg(F.countDistinct("v").cast("bigint").alias("n_nodes"))
-    return summary.crossJoin(nodes).select(
-        "n_edges", "n_nodes", "edge_checksum"
-    )
-
-
-_SKEW_SCAN_EPS_NUM, _SKEW_SCAN_EPS_DEN, _SKEW_SCAN_MU = 9, 10, 3
-
-
-@query(
-    "q_graph_skew_scan",
-    f"""
-    WITH RECURSIVE edges AS MATERIALIZED ({_SKEW_EDGES_SQL}),
-    {_SKEW_TRI_SQL},
-    cn AS MATERIALIZED (
-      SELECT src, dst, CAST(count(*) AS BIGINT) AS cn FROM (
-        SELECT least(u, w1) AS src, greatest(u, w1) AS dst FROM tri0
-        UNION ALL
-        SELECT least(u, w2), greatest(u, w2) FROM tri0
-        UNION ALL
-        SELECT w1, w2 FROM tri0
-      ) GROUP BY 1, 2
-    ),
-    strong AS MATERIALIZED (
-      SELECT e.src, e.dst
-      FROM edges e
-      LEFT JOIN cn USING (src, dst)
-      JOIN deg da ON da.v = e.src
-      JOIN deg db ON db.v = e.dst
-      WHERE (coalesce(cn.cn, 0) + 2) * (coalesce(cn.cn, 0) + 2)
-              * {_SKEW_SCAN_EPS_DEN * _SKEW_SCAN_EPS_DEN}
-            >= {_SKEW_SCAN_EPS_NUM * _SKEW_SCAN_EPS_NUM}
-               * (da.d + 1) * (db.d + 1)
-    ),
-    sdeg AS (
-      SELECT v, count(*) AS sd FROM (
-        SELECT src AS v FROM strong UNION ALL SELECT dst FROM strong
-      ) GROUP BY 1
-    ),
-    cores AS MATERIALIZED (
-      SELECT v FROM sdeg WHERE sd + 1 >= {_SKEW_SCAN_MU}
-    ),
-    ce AS (
-      SELECT s.src, s.dst FROM strong s
-      JOIN cores c1 ON c1.v = s.src
-      JOIN cores c2 ON c2.v = s.dst
-    ),
-    ces AS (
-      SELECT src AS a, dst AS b FROM ce
-      UNION
-      SELECT dst AS a, src AS b FROM ce
-    ),
-    reach(node, lab) AS (
-      SELECT a, a FROM ces
-      UNION
-      SELECT e.b, r.lab FROM reach r JOIN ces e ON r.node = e.a
-    ),
-    comp AS (SELECT node, min(lab) AS component FROM reach GROUP BY node),
-    corelab AS (
-      SELECT c.v, coalesce(p.component, c.v) AS cluster
-      FROM cores c LEFT JOIN comp p ON p.node = c.v
-    ),
-    symstrong AS (
-      SELECT src, dst FROM strong
-      UNION ALL
-      SELECT dst AS src, src AS dst FROM strong
-    ),
-    border AS (
-      SELECT s.dst AS v, min(cl.cluster) AS cluster
-      FROM symstrong s JOIN corelab cl ON cl.v = s.src
-      WHERE s.dst NOT IN (SELECT v FROM cores)
-      GROUP BY s.dst
-    )
-    SELECT CAST(v AS BIGINT) AS v, CAST(cluster AS BIGINT) AS cluster,
-           TRUE AS is_core
-    FROM corelab
-    UNION ALL
-    SELECT CAST(v AS BIGINT), CAST(cluster AS BIGINT), FALSE FROM border
-    """,
-)
-def q_graph_skew_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCAN structural clustering on the hub-dominated skew fixture —
-    the driver row for _scan_members' ORIENTED branch (r10): the AUTO
-    cost probe routes this fixture's degree distribution to the
-    oriented support kernel, so the cn derivation under test is
-    edge_triangle_support(kernel='oriented') + the left-join-support
-    + degree-join path, never exercised by the co-purchase SCAN gates
-    (which route fulladj). ε = 9/10 separates the fixture's σ strata
-    exactly: the dense clique's closed-neighborhood similarity is 1.0
-    (strong, the surviving community), interior chain edges sit at
-    5/6 ≈ 0.83 and skip edges at 2/3 (both weak), and every hub spoke
-    is diluted to ~0 by the hub's degree — so the clustering output
-    is the clique community plus whatever small isolated key-segments
-    clear the threshold, all computed identically by the oracle's
-    hub-safe degree-oriented triangle CTEs (an id-ordered wedge join
-    would be O(n²) at the hub) and its recursive min-label components
-    over the tiny core subgraph."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    members = G.scan_clusters(
-        _skew_edges(spark, sf_dir),
-        eps_num=_SKEW_SCAN_EPS_NUM,
-        eps_den=_SKEW_SCAN_EPS_DEN,
-        mu=_SKEW_SCAN_MU,
-    )
-    return members.select(
-        F.col("v").cast("bigint").alias("v"),
-        F.col("cluster").cast("bigint").alias("cluster"),
-        "is_core",
-    )
-
 
 _QB_QS = [0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
 _QB_ACCURACY = 1000  # Spark GK sketch: rank error <= N/accuracy

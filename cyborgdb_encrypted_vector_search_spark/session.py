@@ -67,14 +67,11 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # AQE sizes coalesced reads by SHUFFLE BYTES and cannot see a
-        # downstream operator's fan-out or per-row CPU: the graph
-        # kernels' adjacency joins (a few MB of arrays that explode
-        # into O(Σd²) intersect work) were measured collapsing to ONE
-        # post-shuffle partition, serializing the whole stage on one
-        # core (q_graph_triangles 5.5 s -> 2.4 s at sf0.1 with this
-        # floor). 64k keeps small-but-CPU-dense shuffles parallel; at
-        # real data scale partitions dwarf the floor and the setting
-        # is inert.
+        # downstream operator's fan-out or per-row CPU, so a small
+        # shuffle that feeds CPU-dense work can collapse to ONE
+        # post-shuffle partition and serialize its stage on one core.
+        # 64k keeps such shuffles parallel; at real data scale
+        # partitions dwarf the floor and the setting is inert.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Shuffled-hash-join preference was A/B'd in r12

@@ -707,11 +707,14 @@ class Collection:
         plaintext is identical. Plaintext metadata entries ride through
         the rotation untouched (decrypt exposes them; add_encrypted
         merges them back beside the fresh ciphertext). Returns the
-        rotated collection."""
+        rotated collection. Raises FileExistsError, before any job, if
+        ``dest_base_dir`` already holds a collection of this name (the
+        source's own base dir included): appending there would mix
+        the two keys' ciphertexts."""
         plain = self.decrypt(old_key)
         crypto.check_key(new_key)  # both keys before create's write job
         rotated = Collection.create(
-            self.spark, self.name, dest_base_dir, dim=self.dim
+            self.spark, self.name, dest_base_dir, dim=self.dim, exist_ok=False
         )
         rotated.add_encrypted(plain, new_key, id_col="id", metadata_col="metadata")
         return rotated

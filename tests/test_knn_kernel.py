@@ -232,6 +232,29 @@ def test_bad_aes_key_length_raises_before_any_job(spark, tmp_path, key):
         crypto.check_key(good)
 
 
+def test_rotate_key_refuses_occupied_destination(spark, tmp_path):
+    """Rotating into a base dir that already holds a collection of the
+    same name (another one, or the source's own) raises before any job:
+    appending there would leave rows under two keys, which no key reads."""
+    df = spark.createDataFrame(
+        [("a", [1.0, 0.0, 0.0], "doc a"), ("b", [0.0, 1.0, 0.0], "doc b")],
+        "id string, embedding array<float>, document string",
+    )
+    src = Collection.create(spark, "occupied", str(tmp_path / "src"), dim=3)
+    src.add_encrypted(df, KEY, id_col="id")
+    other = tmp_path / "other"
+    Collection.create(spark, "occupied", str(other), dim=3)
+    new_key = "fedcba9876543210"
+    for i, dest in enumerate((other, tmp_path / "src")):
+        group = f"rotate_occupied_{i}"
+        with pytest.raises(FileExistsError):
+            _jobs(spark, group, lambda: src.rotate_key(KEY, new_key, str(dest)))
+        assert spark.sparkContext.statusTracker().getJobIdsForGroup(group) == []
+    assert src.count() == 2
+    got = {r["id"]: (r["document"], r["embedding"]) for r in src.decrypt(KEY).collect()}
+    assert got == {"a": ("doc a", [1.0, 0.0, 0.0]), "b": ("doc b", [0.0, 1.0, 0.0])}
+
+
 def test_one_job_per_serving_call(spark, tmp_path):
     rng = np.random.default_rng(3)
     # float32-exact doubles: the plain (float32) and encrypted (JSON

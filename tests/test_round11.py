@@ -109,60 +109,6 @@ def test_crud_gate_deterministic_and_bounded_tmp(spark):
     assert base, "canonical crud base dir missing"
 
 
-def test_bfs_levels_min_hop_and_early_exit(spark):
-    """bfs_levels must report MINIMUM hop distances (a vertex reachable
-    at hops 1 and 2 reports 1), stop expanding at max_hops, exclude
-    unreachable vertices, and exit early on an exhausted frontier
-    (max_hops larger than the graph's eccentricity is harmless)."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    # 1-2-3-4 path, plus a 1-3 chord, plus disconnected 8-9
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (1, 3), (8, 9)], "src int, dst int"
-    )
-    seeds = spark.createDataFrame([(1,)], "v int")
-    got = {
-        r["v"]: r["hops"]
-        for r in G.bfs_levels(edges, seeds, max_hops=2).collect()
-    }
-    assert got == {1: 0, 2: 1, 3: 1, 4: 2}  # 3 via chord, not 2 hops
-
-    # max_hops beyond eccentricity: early exit, same fixed point
-    got10 = {
-        r["v"]: r["hops"]
-        for r in G.bfs_levels(edges, seeds, max_hops=10).collect()
-    }
-    assert got10 == {1: 0, 2: 1, 3: 1, 4: 2}
-
-    # multi-source: both components covered, per-source minima
-    seeds2 = spark.createDataFrame([(4,), (8,)], "v int")
-    got2 = {
-        r["v"]: r["hops"]
-        for r in G.bfs_levels(edges, seeds2, max_hops=1).collect()
-    }
-    assert got2 == {4: 0, 8: 0, 3: 1, 9: 1}
-
-    # hop-0 only
-    got0 = {
-        r["v"]: r["hops"]
-        for r in G.bfs_levels(edges, seeds, max_hops=0).collect()
-    }
-    assert got0 == {1: 0}
-
-    with pytest.raises(ValueError, match="max_hops"):
-        G.bfs_levels(edges, seeds, max_hops=-1)
-
-    # NULL endpoints are not vertices: no (NULL, hops) rows, no
-    # duplicate re-emission round over round (NULL never equals NULL
-    # in the visited anti-join)
-    edges_n = spark.createDataFrame(
-        [(1, None), (1, 2), (2, None)], "src int, dst int"
-    )
-    got_n = G.bfs_levels(edges_n, seeds, max_hops=3).collect()
-    assert {(r["v"], r["hops"]) for r in got_n} == {(1, 0), (2, 1)}
-    assert len(got_n) == 2
-
-
 def test_encode_avi_rejects_zero_fps():
     """ADVICE r10: fps=0 must raise a validating ValueError, not a
     ZeroDivisionError from the microseconds-per-frame division."""

@@ -1,128 +1,12 @@
-"""Round-12 optimization pins: the decremental truss peeler
-(operators/graph._TrussPeeler) — equality to recompute-per-round
-peeling on BOTH its paths (decremental rounds and the over-cap
-compaction fallback), and the star-contraction round-shape change
-(duplicate-tolerant large-star without its distinct) — correctness
-under duplicated/self-loop pair input."""
+"""Round-12 optimization pins: the star-contraction round-shape
+change (duplicate-tolerant large-star without its distinct) —
+correctness under duplicated/self-loop pair input."""
 
 from __future__ import annotations
 
-import random
-
-import pytest
-
-from cyborgdb_encrypted_vector_search_spark.operators import graph as G
 from cyborgdb_encrypted_vector_search_spark.operators.dedup import (
     connected_components_star,
 )
-
-
-def _py_support(es):
-    adj = {}
-    for a, b in es:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    return {(a, b): len(adj[a] & adj[b]) for (a, b) in es}
-
-
-def _py_trussness(edges, k_max):
-    cur, out, k = set(edges), {}, 3
-    while cur and k <= k_max:
-        while True:
-            sup = _py_support(cur)
-            drop = {e for e, s in sup.items() if s < k - 2}
-            if not drop:
-                break
-            for e in drop:
-                out[e] = k - 1
-            cur -= drop
-        k += 1
-    for e in cur:
-        out[e] = k_max
-    return out
-
-
-def _py_peel_rounds(es, k, rounds):
-    cur = set(es)
-    for _ in range(rounds):
-        sup = _py_support(cur)
-        nxt = {e for e in cur if sup[e] >= k - 2}
-        if nxt == cur:
-            break
-        cur = nxt
-    return cur
-
-
-def _random_edges(seed, n=13, p=0.45):
-    rnd = random.Random(seed)
-    return sorted(
-        {
-            (a, b)
-            for a in range(n)
-            for b in range(a + 1, n)
-            if rnd.random() < p
-        }
-    )
-
-
-def test_trussness_decremental_matches_python_peeler(spark):
-    """The flat decremental level loop produces the identical
-    trussness map as literal recompute-per-round level peeling."""
-    for seed in (1, 2):
-        edges = _random_edges(seed)
-        df = spark.createDataFrame(edges, "src long, dst long")
-        got = {
-            (r["src"], r["dst"]): r["trussness"]
-            for r in G.edge_trussness(df, k_max=6).collect()
-        }
-        assert got == _py_trussness(edges, 6)
-
-
-def test_trussness_compaction_path_matches(spark, monkeypatch):
-    """Forcing _REMOVED_BROADCAST_CAP below every round's drop count
-    routes every round through the compact-then-recount fallback —
-    results must not change (the decremental and recompute rounds are
-    interchangeable mid-peel)."""
-    monkeypatch.setattr(G, "_REMOVED_BROADCAST_CAP", 1)
-    edges = _random_edges(5, n=12, p=0.5)
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        (r["src"], r["dst"]): r["trussness"]
-        for r in G.edge_trussness(df, k_max=6).collect()
-    }
-    assert got == _py_trussness(edges, 6)
-
-
-def test_ktruss_oriented_rounds_contract_decremental(spark):
-    """ktruss_edges' EXACTLY-N-rounds contract holds on the oriented
-    (decremental) path: every prefix of peel rounds matches the
-    pure-Python recompute peeler, including early convergence."""
-    edges = _random_edges(9, n=14, p=0.4)
-    df = spark.createDataFrame(edges, "src long, dst long")
-    for k in (3, 4):
-        for rounds in (1, 2, 3, None):
-            got = {
-                (r["src"], r["dst"])
-                for r in G.ktruss_edges(
-                    df, k=k, rounds=rounds, kernel="oriented"
-                ).collect()
-            }
-            want = _py_peel_rounds(edges, k, rounds if rounds else 99)
-            assert got == want, (k, rounds)
-
-
-def test_peeler_zero_support_edges_drop_first_round(spark):
-    """Edges in no triangle must drop in peel round 1 (the pre-r12
-    inner-join semantics) — the peeler's left-join + coalesce(0)
-    representation preserves that."""
-    # triangle + pendant edge
-    edges = [(1, 2), (1, 3), (2, 3), (3, 9)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    kept = {
-        (r["src"], r["dst"])
-        for r in G.ktruss_edges(df, k=3, rounds=1, kernel="oriented").collect()
-    }
-    assert kept == {(1, 2), (1, 3), (2, 3)}
 
 
 def test_star_contraction_duplicate_and_selfloop_input(spark):

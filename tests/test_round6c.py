@@ -184,66 +184,11 @@ def test_compaction_reduces_files_and_is_shuffle_free(spark, cat, sf_dir):
     assert "Coalesce" in plan
 
 
-# ------------------------------------------------------------------ graph
-
-
-def test_triangle_count_on_known_graph(spark):
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    # K4 plus a pendant vertex: C(4,3)=4 triangles, 7 edges
-    edges = spark.createDataFrame(
-        [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5)],
-        "src long, dst long",
-    )
-    row = G.triangle_count(edges).head()
-    assert (row["n_edges"], row["n_triangles"]) == (7, 4)
-
-
-def test_pagerank_fixedpoint_mass_and_order(spark):
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    # star graph: center 1 linked to 2..5 — center must outrank leaves,
-    # leaves tie exactly (identical integer arithmetic)
-    edges = spark.createDataFrame(
-        [(1, 2), (1, 3), (1, 4), (1, 5)], "src long, dst long"
-    )
-    r = {
-        row["v"]: row["rank_fp"]
-        for row in G.pagerank_fixedpoint(edges, iterations=3).collect()
-    }
-    assert len(r) == 5
-    leaves = {r[v] for v in (2, 3, 4, 5)}
-    assert len(leaves) == 1  # exact tie, not approximately equal
-    assert r[1] > r[2]
-    # total fixed-point mass stays within floor-division slack of 1.0
-    assert abs(sum(r.values()) - G.RANK_SCALE) < 100 * len(r)
-
-
-def test_graph_gates_single_scan_shapes(spark, cat, sf_dir):
-    # triangle plan: no CartesianProduct (wedge join is keyed)
-    plan = physical_plan(cat["q_graph_triangles"].fn(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-
-
 def test_cms_fact_scanned_once_via_cached_aggregate(spark, cat, sf_dir):
     # the sketch is derived from the persisted per-user aggregate, so
     # the plan reuses the cached frame instead of re-scanning the fact
     plan = physical_plan(cat["q_heavy_hitters_cms"].fn(spark, sf_dir))
     assert "InMemoryTableScan" in plan
-
-
-def test_triangle_count_empty_and_triangle_free(spark):
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    empty = spark.createDataFrame([], "src long, dst long")
-    row = G.triangle_count(empty).head()
-    assert (row["n_edges"], row["n_triangles"]) == (0, 0)
-    # path graph 1-2-3-4: 3 edges, no triangle
-    path = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4)], "src long, dst long"
-    )
-    row = G.triangle_count(path).head()
-    assert (row["n_edges"], row["n_triangles"]) == (3, 0)
 
 
 def _lev(a: str, b: str) -> int:
@@ -291,79 +236,3 @@ def test_editdist_pairs_matches_bruteforce_property(spark):
                 if d <= 2:
                     want.add((a, b, d))
     assert got == want
-
-
-def test_pagerank_fixedpoint_tracks_float_reference(spark):
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    # small deterministic graph; fixed-point ranks must match a float
-    # power-iteration reference to ~1e-9 relative (fixed-point floor
-    # loss only)
-    import random
-
-    rng = random.Random(7)
-    edges = sorted({tuple(sorted(rng.sample(range(12), 2))) for _ in range(30)})
-    edf = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r["v"]: r["rank_fp"] / G.RANK_SCALE
-        for r in G.pagerank_fixedpoint(edf, iterations=3).collect()
-    }
-    # float reference
-    adj = {}
-    for s, d in edges:
-        adj.setdefault(s, []).append(d)
-        adj.setdefault(d, []).append(s)
-    n = len(adj)
-    r = {v: 1.0 / n for v in adj}
-    for _ in range(3):
-        nxt = {v: 0.15 / n for v in adj}
-        for u, nbrs in adj.items():
-            share = r[u] / len(nbrs)
-            for v in nbrs:
-                nxt[v] += 0.85 * share
-        r = nxt
-    assert set(got) == set(r)
-    for v in r:
-        assert abs(got[v] - r[v]) < 1e-6
-
-
-def test_triangle_count_matches_bruteforce_property(spark):
-    from itertools import combinations
-    import random
-
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    rng = random.Random(11)
-    for trial in range(3):
-        nodes = list(range(13))
-        edges = sorted(
-            {tuple(sorted(rng.sample(nodes, 2))) for _ in range(28 + trial * 7)}
-        )
-        eset = set(edges)
-        want = sum(
-            1
-            for a, b, c in combinations(nodes, 3)
-            if (a, b) in eset and (a, c) in eset and (b, c) in eset
-        )
-        edf = spark.createDataFrame(edges, "src long, dst long")
-        row = G.triangle_count(edf).head()
-        assert (row["n_edges"], row["n_triangles"]) == (len(edges), want)
-
-
-def test_edge_support_on_known_graph(spark):
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    # K4 + pendant: every K4 edge sits in exactly 2 triangles; the
-    # pendant edge (4,5) in none (absent from the output)
-    edges = spark.createDataFrame(
-        [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5)],
-        "src long, dst long",
-    )
-    got = {
-        (r["src"], r["dst"]): r["support"]
-        for r in G.edge_triangle_support(edges).collect()
-    }
-    assert got == {
-        (1, 2): 2, (1, 3): 2, (1, 4): 2,
-        (2, 3): 2, (2, 4): 2, (3, 4): 2,
-    }

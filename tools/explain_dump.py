@@ -9,8 +9,8 @@ evidence a change to a query's physical plan cites. The plan is
 captured at $SPARK_GRAFT_SF_DIR (default sf0.1) on the package's
 session factory (`session.get_spark`), so PushedFilters / join
 strategies / exchange counts match what the catalog runs. NOTE:
-iterative operators (peeling loops, CC rounds) execute eagerly while
-the query function builds; the dumped plan is the FINAL assembled
+iterative operators (the star-contraction CC rounds) execute eagerly
+while the query function builds; the dumped plan is the FINAL assembled
 plan. `--midloop` instead arms caching.snap_plan's sink while the
 query builds, capturing each round frame's plan BEFORE its checkpoint
 truncates lineage, and writes the ROUND-2 plan per label (round 1 when

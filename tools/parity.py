@@ -78,7 +78,7 @@ def main() -> int:
             continue
         sdf = entry.fn(spark, sf_dir)
         spark_pdf = sdf.toPandas()
-        # correctness-device persists (ranking/graph) are per-query;
+        # correctness-device persists (ranking/dedup) are per-query;
         # release them so a full run doesn't accumulate caches
         release_all()
         if entry.sql is None:

@@ -4,9 +4,11 @@ Some operators persist an intermediate frame as a correctness device,
 not a performance hint: scalable_row_number (operators/ranking.py)
 materializes the range-partitioned enumeration once so its counts
 branch and data branch read the SAME nondeterministic boundary sample,
-and entity resolution (operators/dedup.py) pins its record and edge
+entity resolution (operators/dedup.py) pins its record and edge
 frames so the connected-components probe and every contraction round
-read one invariant edge set. Those frames cannot be unpersisted inside
+read one invariant edge set, and PageRank and the link predictors
+(operators/graph.py) pin the edge frame so every iteration reads one
+invariant adjacency. Those frames cannot be unpersisted inside
 the operator — the cache must outlive the caller's action — so in a
 long-running driver that executes many catalog queries the
 InMemoryRelations would accumulate for the session lifetime.

@@ -29,6 +29,9 @@ from cyborgdb_encrypted_vector_search_spark.functions import hashing as H
 from cyborgdb_encrypted_vector_search_spark.functions import text as X
 from cyborgdb_encrypted_vector_search_spark.functions import vector as V
 from cyborgdb_encrypted_vector_search_spark.operators import dedup, knn
+from cyborgdb_encrypted_vector_search_spark.operators.graph import (
+    LINKPRED_SCALE,
+)
 from cyborgdb_encrypted_vector_search_spark.sources.registry import load
 
 
@@ -8725,6 +8728,111 @@ def q_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     return t.groupBy("event_type").agg(*_events_fingerprint_cols())
 
 
+# Both graph gates derive the same co-purchase graph: users purchasing
+# in the same HOUR (day granularity is near-complete at sf0.1 — hour
+# keeps contexts bounded, the same context-sizing discipline dedup
+# applies to band buckets).
+_GRAPH_EDGES_SQL = """
+      WITH pur AS (
+        SELECT DISTINCT date_trunc('hour', ts) AS d, user_id AS u
+        FROM events
+        WHERE event_type = 'purchase' AND user_id IS NOT NULL
+      )
+      SELECT DISTINCT a.u AS src, b.u AS dst
+      FROM pur a JOIN pur b ON a.d = b.d AND a.u < b.u
+"""
+
+
+def _graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
+
+    pur = (
+        load(spark, "events", sf_dir)
+        .filter(
+            (F.col("event_type") == "purchase")
+            & F.col("user_id").isNotNull()
+        )
+        .select(
+            F.date_trunc("hour", "ts").alias("hour_ctx"), "user_id"
+        )
+    )
+    return G.cooccurrence_edges(pur, "user_id", "hour_ctx")
+
+
+@query(
+    "q_graph_pagerank",
+    f"""
+    WITH edges AS ({_GRAPH_EDGES_SQL}),
+    sym AS (
+      SELECT src, dst FROM edges
+      UNION ALL
+      SELECT dst AS src, src AS dst FROM edges
+    ),
+    deg AS (
+      SELECT src, CAST(count(*) AS BIGINT) AS deg FROM sym GROUP BY 1
+    ),
+    nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM deg),
+    r0 AS (
+      SELECT d.src AS v,
+             CAST(1000000000000 // n AS BIGINT) AS rank_fp
+      FROM deg d, nn
+    ),
+    t1 AS (
+      SELECT s.dst AS v, sum(r.rank_fp // d.deg) AS in_sum
+      FROM sym s JOIN r0 r ON r.v = s.src JOIN deg d ON d.src = s.src
+      GROUP BY 1
+    ),
+    r1 AS (
+      SELECT v, CAST((15 * 1000000000000) // (100 * n)
+                 + (85 * in_sum) // 100 AS BIGINT) AS rank_fp
+      FROM t1, nn
+    ),
+    t2 AS (
+      SELECT s.dst AS v, sum(r.rank_fp // d.deg) AS in_sum
+      FROM sym s JOIN r1 r ON r.v = s.src JOIN deg d ON d.src = s.src
+      GROUP BY 1
+    ),
+    r2 AS (
+      SELECT v, CAST((15 * 1000000000000) // (100 * n)
+                 + (85 * in_sum) // 100 AS BIGINT) AS rank_fp
+      FROM t2, nn
+    ),
+    t3 AS (
+      SELECT s.dst AS v, sum(r.rank_fp // d.deg) AS in_sum
+      FROM sym s JOIN r2 r ON r.v = s.src JOIN deg d ON d.src = s.src
+      GROUP BY 1
+    ),
+    r3 AS (
+      SELECT v, CAST((15 * 1000000000000) // (100 * n)
+                 + (85 * in_sum) // 100 AS BIGINT) AS rank_fp
+      FROM t3, nn
+    )
+    SELECT v AS user_id, rank_fp
+    FROM r3 ORDER BY rank_fp DESC, v LIMIT 10
+    """,
+)
+def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Iterative PageRank (operators/graph.pagerank_fixedpoint), 3
+    rounds, damping 0.85, over the hourly co-purchase graph — the
+    entity-importance signal sampling mixtures weight by. Iterative
+    float algorithms normally can't be value-hashed cross-engine
+    (summation order drifts); here ALL arithmetic is fixed-point on
+    positive BIGINTs (10^12 scale, floor division), so Spark's 3
+    join+agg message-passing rounds and the oracle's unrolled CTEs
+    must produce IDENTICAL integers — an exact gate on an iterative
+    distributed algorithm. Top-10 users by rank, ties broken by id."""
+    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
+
+    ranks = G.pagerank_fixedpoint(
+        _graph_edges(spark, sf_dir), iterations=3, damping_pct=85
+    )
+    return (
+        ranks.select(F.col("v").alias("user_id"), "rank_fp")
+        .orderBy(F.desc("rank_fp"), F.asc("user_id"))
+        .limit(10)
+    )
+
+
 @query(
     "q_stats_regression_lineitem",
     """
@@ -8813,8 +8921,122 @@ def q_stats_regression_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
+# Link prediction on the co-purchase graph: common-neighbor counts
+# and the degree-weighted Adamic-Adar / resource-allocation scores.
+# ----------------------------------------------------------------------
+
+
+_LINKPRED_MIN_CN, _LINKPRED_TOPK = 2, 20
+
+
+@query(
+    "q_graph_link_prediction",
+    f"""
+    WITH edges AS MATERIALIZED ({_GRAPH_EDGES_SQL}),
+    sym AS (
+      SELECT src AS w, dst AS n FROM edges
+      UNION ALL
+      SELECT dst AS w, src AS n FROM edges
+    ),
+    cn AS (
+      SELECT a.n AS u, b.n AS v, CAST(count(*) AS BIGINT) AS cn
+      FROM sym a JOIN sym b ON a.w = b.w AND a.n < b.n
+      GROUP BY 1, 2
+    )
+    SELECT u, v, cn FROM cn
+    WHERE cn >= {_LINKPRED_MIN_CN}
+      AND NOT EXISTS (
+        SELECT 1 FROM edges e WHERE e.src = cn.u AND e.dst = cn.v)
+    ORDER BY cn DESC, u, v LIMIT {_LINKPRED_TOPK}
+    """,
+)
+def q_graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Common-neighbor link prediction
+    (operators/graph.common_neighbor_candidates): the top-{_LINKPRED_TOPK}
+    NON-adjacent user pairs of the co-purchase graph by shared-neighbor
+    count — friend-of-friend candidate generation, the simplest
+    Liben-Nowell/Kleinberg link-prediction score kept INTEGER so the
+    ranking gates exactly (ties broken by the id pair). Spark
+    enumerates pairs at the shared apex (one adjacency self-join +
+    anti-join against the edge set); the oracle runs the identical
+    wedge join in SQL."""
+    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
+
+    cand = G.common_neighbor_candidates(
+        _graph_edges(spark, sf_dir), min_common=_LINKPRED_MIN_CN
+    )
+    return cand.orderBy(
+        F.desc("cn"), F.asc("u"), F.asc("v")
+    ).limit(_LINKPRED_TOPK)
+
+
+q_graph_link_prediction.__doc__ = q_graph_link_prediction.__doc__.format(
+    _LINKPRED_TOPK=_LINKPRED_TOPK
+)
+
+
+@query(
+    "q_graph_adamic_adar",
+    f"""
+    WITH edges AS MATERIALIZED ({_GRAPH_EDGES_SQL}),
+    sym AS (
+      SELECT src AS w, dst AS n FROM edges
+      UNION ALL
+      SELECT dst AS w, src AS n FROM edges
+    ),
+    wdeg AS (
+      SELECT w, CAST(count(*) AS BIGINT) AS dw FROM sym GROUP BY 1
+    ),
+    scored AS (
+      SELECT a.n AS u, b.n AS v,
+             CAST(count(*) AS BIGINT) AS cn,
+             CAST(sum({LINKPRED_SCALE} // d.dw) AS BIGINT) AS ra_fp,
+             CAST(sum({LINKPRED_SCALE}
+                      // length(printf('%b', d.dw))) AS BIGINT) AS aa_fp
+      FROM sym a
+      JOIN sym b ON a.w = b.w AND a.n < b.n
+      JOIN wdeg d ON d.w = a.w
+      GROUP BY 1, 2
+    )
+    SELECT u, v, cn, ra_fp, aa_fp FROM scored
+    WHERE cn >= {_LINKPRED_MIN_CN}
+      AND NOT EXISTS (
+        SELECT 1 FROM edges e WHERE e.src = scored.u AND e.dst = scored.v)
+    ORDER BY aa_fp DESC, u, v LIMIT {_LINKPRED_TOPK}
+    """,
+)
+def q_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Degree-weighted link prediction
+    (operators/graph.weighted_link_scores): the ranking a recommender
+    actually uses on top of q_graph_link_prediction's raw candidate
+    counts — Adamic-Adar (Σ 1/log d(w)) and resource allocation
+    (Σ 1/d(w)) down-weight common neighbors that are promiscuous hubs.
+    Both scores are FIXED-POINT integers so the ranking gates exactly
+    cross-engine: RA sums 10^12 div d(w); AA takes the log as the
+    integer staircase 1 + floor(log2 d) = bit length of d (Spark
+    length(bin(d)), DuckDB length(printf('%b', d)) — float ln() is a
+    last-ulp portability hazard a value hash cannot tolerate). One
+    extra projection on the same single-shuffle wedge join; top-
+    {_LINKPRED_TOPK} by aa_fp, ties broken by the id pair."""
+    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
+
+    scored = G.weighted_link_scores(
+        _graph_edges(spark, sf_dir), min_common=_LINKPRED_MIN_CN
+    )
+    return scored.orderBy(
+        F.desc("aa_fp"), F.asc("u"), F.asc("v")
+    ).limit(_LINKPRED_TOPK)
+
+
+q_graph_adamic_adar.__doc__ = q_graph_adamic_adar.__doc__.format(
+    _LINKPRED_TOPK=_LINKPRED_TOPK
+)
+
+
+# ----------------------------------------------------------------------
 # Round-7 addition: approx-vs-exact quantile error-bound cross-gate.
 # ----------------------------------------------------------------------
+
 
 _QB_QS = [0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
 _QB_ACCURACY = 1000  # Spark GK sketch: rank error <= N/accuracy

@@ -1,6 +1,6 @@
 """Round-10 pins: the real RIFF/AVI demux (last stub closed), the
-loud-NULL media contract, the DecimalType(p,0) CC probe widening, the
-wedge-width conf derivation, and the greedy restart parallelism plan.
+loud-NULL media contract, the DecimalType(p,0) CC probe widening, and
+the greedy restart parallelism plan.
 """
 
 from __future__ import annotations
@@ -311,63 +311,6 @@ def test_min_label_wide_decimal_ids_use_changed_row_probe(spark, cc_placements):
         assert got == {lo + i: lo for i in range(5)}, placement
 
 
-def test_wedge_width_follows_shuffle_partitions(spark):
-    """Advisory (r9): explicit wedge repartitions size from
-    spark.sql.shuffle.partitions (the user-tuned reduce width), not
-    defaultParallelism (plan-time executor count under dynamic
-    allocation)."""
-    from cyborgdb_encrypted_vector_search_spark.operators.graph import (
-        _wedge_width,
-    )
-
-    df = spark.range(1)
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "17")
-        assert _wedge_width(df) == 17
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
-
-
-def test_scan_members_oriented_branch_matches_fulladj(spark):
-    """Coverage hole (r10): every SCAN test and gate rides the AUTO
-    probe, which routes small/near-regular graphs to the fulladj
-    branch of _scan_members — the oriented branch (the 100 TB
-    power-law path: edge_triangle_support(kernel='oriented') + the
-    left-join-support + degree-join derivation) was never forced.
-    Both branches must produce identical members on the same graph."""
-    from cyborgdb_encrypted_vector_search_spark.caching import (
-        release_all,
-        track,
-    )
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    # two 4-cliques + bridge + a pendant: cores, borders, an excluded
-    # vertex — every member class exercised
-    clique_a = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
-    clique_b = [(a, b) for a in range(11, 15) for b in range(a + 1, 15)]
-    raw = clique_a + clique_b + [(4, 11), (1, 7)]
-    edges = track(
-        spark.createDataFrame(sorted(raw), "src long, dst long").persist()
-    )
-    deg = track(G._degree_table(edges).persist())
-    stats = G._support_stats(edges, deg)
-    assert stats["kernel"] == "fulladj"  # AUTO would never go oriented
-
-    def members(kernel):
-        forced = dict(stats, kernel=kernel)
-        return sorted(
-            (r["v"], r["cluster"], r["is_core"])
-            for r in G._scan_members(
-                edges, deg, forced, 7, 10, 3
-            ).collect()
-        )
-
-    assert members("oriented") == members("fulladj")
-    assert len(members("fulladj")) == 8  # the two cliques' cores
-    release_all()
-
-
 def test_greedy_restarts_actually_parallelize(spark):
     """Pin that the restarts fan out: one job whose single stage (no
     exchange) runs min(restarts, defaultParallelism) tasks, so the
@@ -388,3 +331,21 @@ def test_greedy_restarts_actually_parallelize(spark):
     (stage,) = tracker.getJobInfo(job).stageIds  # one stage: no exchange
     tasks = tracker.getStageInfo(stage).numTasks
     assert tasks == min(8, sc.defaultParallelism) > 1
+
+
+def test_wedge_width_follows_shuffle_partitions(spark):
+    """Advisory (r9): explicit wedge repartitions size from
+    spark.sql.shuffle.partitions (the user-tuned reduce width), not
+    defaultParallelism (plan-time executor count under dynamic
+    allocation)."""
+    from cyborgdb_encrypted_vector_search_spark.operators.graph import (
+        _wedge_width,
+    )
+
+    df = spark.range(1)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "17")
+        assert _wedge_width(df) == 17
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)

@@ -1,14 +1,9 @@
-"""Round-13 optimization pins.
-
-- The truss peeler's decrement-delta broadcast is now gated on the
-  computable bound 3 * Σ support(dropped) (VERDICT r12 "what's wrong"
-  #1): a forced-over-bound round must route the decrement attach
-  through the shuffled join and still restore the exact support
-  invariant.
-- The wedge link predictors' packed (u << 32 | v) group key: exact
-  equality to the two-column key on graphs that allow it, and the
-  probe must refuse it for ids outside [0, 2^31).
-"""
+"""Round-13 optimization pins: the connected-components driver
+closure (labels equal to the star contraction, one job under the cap),
+entity resolution's over-cap distributed route, and the wedge link
+predictors' packed (u << 32 | v) group key (exact equality to the
+two-column key on graphs that allow it; refused for ids outside
+[0, 2^31))."""
 
 from __future__ import annotations
 
@@ -18,94 +13,6 @@ from pyspark.sql import functions as F
 
 from cyborgdb_encrypted_vector_search_spark.operators import dedup as D
 from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-
-def _py_support(es):
-    adj = {}
-    for a, b in es:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    return {(a, b): len(adj[a] & adj[b]) for (a, b) in es}
-
-
-def _py_tris(es):
-    """Each triangle once as its three canonical (a<b) sides."""
-    adj = {}
-    for a, b in es:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    out = []
-    for a, b in es:
-        for c in sorted(adj[a] & adj[b]):
-            if c > b:
-                out.append((a, b, a, c, b, c))
-    return out
-
-
-def _k7_plus_spokes():
-    """K7 (21 edges, support 5 each) plus vertex 8 joined to 1..5
-    (5 edges, support 4 each). peel(thr=5) drops exactly the 5 spoke
-    edges: n_drop=5, sup_drop=20 -> the delta bound 3*20=60 exceeds a
-    cap of 10 while n_keep=21 > n_drop (no shell collapse) and
-    n_removed + n_drop = 5 <= 10 (no compaction) — the round is
-    decremental with a SHUFFLED delta join."""
-    k7 = [(a, b) for a in range(1, 8) for b in range(a + 1, 8)]
-    spokes = [(i, 8) for i in range(1, 6)]
-    return k7 + spokes
-
-
-def _peel_once(spark, edges, thr):
-    df = spark.createDataFrame(edges, "src long, dst long").localCheckpoint()
-    tris = spark.createDataFrame(
-        _py_tris(edges), "a1 long, b1 long, a2 long, b2 long, a3 long, b3 long"
-    ).localCheckpoint()
-    peeler = G._TrussPeeler(df, tris)
-    peeler.peel(thr)
-    return peeler
-
-
-def _py_peel_once(edges, thr):
-    sup = _py_support(edges)
-    keep = {e for e in edges if sup[e] >= thr}
-    return _py_support(sorted(keep)) if keep else {}
-
-
-def test_peeler_over_bound_delta_routes_shuffled_and_matches(
-    spark, monkeypatch
-):
-    edges = _k7_plus_spokes()
-    monkeypatch.setattr(G, "_REMOVED_BROADCAST_CAP", 10)
-    peeler = _peel_once(spark, edges, thr=5)
-    # the round took the DECREMENTAL branch (not compaction/collapse):
-    assert peeler.removed is not None and peeler.n_removed == 5
-    got = {(r["src"], r["dst"]): r["support"] for r in peeler.sup.collect()}
-    assert got == _py_peel_once(edges, 5)
-
-
-def test_peeler_in_bound_delta_same_result(spark):
-    edges = _k7_plus_spokes()
-    peeler = _peel_once(spark, edges, thr=5)  # default cap: broadcast
-    assert peeler.removed is not None and peeler.n_removed == 5
-    got = {(r["src"], r["dst"]): r["support"] for r in peeler.sup.collect()}
-    assert got == _py_peel_once(edges, 5)
-
-
-def test_packed_key_refused_for_oversized_and_negative_ids(spark):
-    assert G._ids_pack(0, 2**31 - 1)
-    assert not G._ids_pack(-1, 10)
-    assert not G._ids_pack(0, 2**31)
-    assert not G._ids_pack("a", "z")
-    # negative ids: the two-column fallback still yields exact counts
-    edges = [(-5, 1), (-5, 2), (1, 7), (2, 7)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        (r["u"], r["v"]): r["cn"]
-        for r in G.common_neighbor_candidates(df, min_common=1).collect()
-    }
-    assert got == {(1, 2): 2, (-5, 7): 2}
-    from cyborgdb_encrypted_vector_search_spark.caching import release_all
-
-    release_all()
 
 
 def test_driver_closure_matches_star_contraction(spark):
@@ -225,6 +132,24 @@ def test_resolve_incremental_over_cap_matches_rebuild(spark, monkeypatch):
     release_all()
     monkeypatch.setattr(D, "_DRIVER_CLOSURE_CAP", 0)
     assert absorb() == want  # over-cap: shuffle joins + distributed CC
+    release_all()
+
+
+def test_packed_key_refused_for_oversized_and_negative_ids(spark):
+    assert G._ids_pack(0, 2**31 - 1)
+    assert not G._ids_pack(-1, 10)
+    assert not G._ids_pack(0, 2**31)
+    assert not G._ids_pack("a", "z")
+    # negative ids: the two-column fallback still yields exact counts
+    edges = [(-5, 1), (-5, 2), (1, 7), (2, 7)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = {
+        (r["u"], r["v"]): r["cn"]
+        for r in G.common_neighbor_candidates(df, min_common=1).collect()
+    }
+    assert got == {(1, 2): 2, (-5, 7): 2}
+    from cyborgdb_encrypted_vector_search_spark.caching import release_all
+
     release_all()
 
 

@@ -1,13 +1,11 @@
 """Round-8 additions: star-contraction connected components (the
-O(log n)-round CC the r7 verdict asked to ship as executed code), the
-support-kernel cost split, and the trussness histogram gate pieces."""
+O(log n)-round CC the r7 verdict asked to ship as executed code) and
+common-neighbor link prediction."""
 
 from __future__ import annotations
 
 import pytest
 from hypothesis import given, settings, strategies as st
-
-from pyspark.sql import functions as F
 
 from cyborgdb_encrypted_vector_search_spark import caching
 from cyborgdb_encrypted_vector_search_spark.operators import graph as G
@@ -122,98 +120,41 @@ def test_minlabel_cc_empty_short_circuit(spark, cc_placements):
     caching.release_all()
 
 
-def test_support_kernels_agree(spark):
-    """fulladj and oriented support kernels are physical alternatives
-    for one logical operator — identical (src, dst, support) output,
-    including the inner semantics (no row for support-0 edges)."""
-    edges = spark.createDataFrame(
-        [(1, 2), (1, 3), (2, 3), (3, 4), (4, 5), (3, 5), (1, 9)],
-        "src long, dst long",
-    )
-    a = sorted(
-        (r["src"], r["dst"], r["support"])
-        for r in G.edge_triangle_support(edges, kernel="fulladj").collect()
-    )
-    b = sorted(
-        (r["src"], r["dst"], r["support"])
-        for r in G.edge_triangle_support(edges, kernel="oriented").collect()
-    )
-    assert a == b
-    assert all(s >= 1 for _, _, s in a)
-    assert (1, 9) not in {(x, y) for x, y, _ in a}  # support-0 edge absent
-    with pytest.raises(ValueError):
-        G.edge_triangle_support(edges, kernel="bogus").collect()
-    # triangle_count: both kernels, same exact count
-    ca = G.triangle_count(edges, kernel="fulladj").head()
-    cb = G.triangle_count(edges, kernel="oriented").head()
-    assert (ca["n_edges"], ca["n_triangles"]) == (
-        cb["n_edges"],
-        cb["n_triangles"],
-    )
-    with pytest.raises(ValueError):
-        G.triangle_count(edges, kernel="bogus").collect()
+def test_star_cc_self_loop_only_node(spark):
+    """A node whose only incidences are self-pairs must still be
+    labeled with itself — the driver closure's contract. (Regression:
+    the first cut derived nodes from the self-loop-filtered union.)"""
+    pairs = _pairs(spark, [(5, 5), (1, 2)])
+    got = {
+        r["node"]: r["component"]
+        for r in connected_components_star(pairs).collect()
+    }
+    want = {
+        r["node"]: r["component"]
+        for r in connected_components(pairs).collect()
+    }
+    assert got == want == {1: 1, 2: 1, 5: 5}
     caching.release_all()
 
 
-def test_support_kernel_auto_routes_by_skew(spark):
-    """The one-agg cost rule: near-regular graphs take the fulladj
-    kernel, star graphs (Σd² = n² vs the O(m^1.5) oriented bound)
-    take the oriented kernel."""
-    clique = spark.createDataFrame(
-        [(a, b) for a in range(1, 7) for b in range(a + 1, 7)],
-        "src long, dst long",
+def test_star_cc_warns_when_not_converged(spark, caplog):
+    import logging
+
+    from cyborgdb_encrypted_vector_search_spark.operators import dedup as D
+
+    chain = _pairs(spark, [(i, i + 1) for i in range(32)])
+    with caplog.at_level(logging.WARNING, logger=D.__name__):
+        connected_components_star(chain, max_iter=1).collect()
+    assert any(
+        "not converged" in rec.getMessage() for rec in caplog.records
     )
-    assert G._support_kernel_auto(clique) == "fulladj"
-    star = spark.createDataFrame(
-        [(0, i) for i in range(1, 800)], "src long, dst long"
-    )
-    assert G._support_kernel_auto(star) == "oriented"
     caching.release_all()
-
-
-def test_scan_eps_test_survives_huge_support(spark):
-    """The r8 DECIMAL fix: (cn+2)²·eps_den² in 64-bit longs wraps once
-    support tops ~3e7. Pin the decimal arithmetic with a synthetic
-    frame pushed through the same expressions scan_clusters builds."""
-    cn = 40_000_000  # (cn+2)² ≈ 1.6e15; ×eps_den²=1e4 ≈ 1.6e19 > 2^63
-    df = spark.createDataFrame(
-        [(cn, 50_000_000, 50_000_000)], "cn long, ds long, dd long"
-    )
-    eps_num, eps_den = 45, 100
-    cnp = (F.col("cn") + F.lit(2)).cast("decimal(19,0)")
-    lhs = cnp * cnp * F.lit(eps_den * eps_den).cast("decimal(19,0)")
-    rhs = (
-        F.lit(eps_num * eps_num).cast("decimal(19,0)")
-        * (F.col("ds") + 1).cast("decimal(19,0)")
-        * (F.col("dd") + 1).cast("decimal(19,0)")
-    )
-    row = df.select(
-        lhs.alias("lhs"), rhs.alias("rhs"), (lhs >= rhs).alias("strong")
-    ).head()
-    assert int(row["lhs"]) == (cn + 2) ** 2 * eps_den**2
-    assert int(row["rhs"]) == eps_num**2 * 50_000_001**2
-    assert bool(row["strong"]) == (
-        (cn + 2) ** 2 * eps_den**2 >= eps_num**2 * 50_000_001**2
-    )
 
 
 def _edges_df(spark, edges):
     return spark.createDataFrame(
         sorted((int(a), int(b)) for a, b in edges), "src long, dst long"
     )
-
-
-def _py_kcore(edges, k):
-    cur = set(edges)
-    while True:
-        deg: dict[int, int] = {}
-        for a, b in cur:
-            deg[a] = deg.get(a, 0) + 1
-            deg[b] = deg.get(b, 0) + 1
-        nxt = {(a, b) for a, b in cur if deg[a] >= k and deg[b] >= k}
-        if nxt == cur:
-            return cur
-        cur = nxt
 
 
 graph_sets = st.sets(
@@ -223,38 +164,6 @@ graph_sets = st.sets(
     min_size=3,
     max_size=20,
 )
-
-
-@settings(max_examples=10, deadline=None)
-@given(edges=graph_sets, k=st.integers(1, 4))
-def test_kcore_matches_python_peeler(spark, edges, k):
-    got = sorted(
-        (r["src"], r["dst"])
-        for r in G.kcore_edges(_edges_df(spark, edges), k=k).collect()
-    )
-    assert got == sorted(_py_kcore(edges, k))
-    caching.release_all()
-
-
-def test_kcore_cascade_and_bounds(spark):
-    """A chain hanging off a 4-clique peels one link per round for
-    k=2 — peeling must cascade; the clique itself is the 3-core."""
-    clique = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
-    chain = [(4, 5), (5, 6), (6, 7)]
-    df = _edges_df(spark, clique + chain)
-    assert sorted(
-        (r["src"], r["dst"]) for r in G.kcore_edges(df, k=3).collect()
-    ) == sorted(clique)
-    # one bounded round of k=2 removes only the chain's free end
-    one = sorted(
-        (r["src"], r["dst"])
-        for r in G.kcore_edges(df, k=2, rounds=1).collect()
-    )
-    assert one == sorted(clique + [(4, 5), (5, 6)])
-    assert G.kcore_edges(df, k=5).count() == 0
-    with pytest.raises(ValueError):
-        G.kcore_edges(df, k=0)
-    caching.release_all()
 
 
 def _py_common_neighbors(edges, min_common):
@@ -310,63 +219,4 @@ def test_link_prediction_hub_cap(spark, caplog):
         G.common_neighbor_candidates(df, min_common=0)
     with pytest.raises(ValueError):
         G.common_neighbor_candidates(df, max_apex_degree=1)
-    caching.release_all()
-
-
-def test_support_auto_kernel_string_ids(spark):
-    """Vertex ids may be any orderable type (string doc ids): the
-    auto cost model must not assume integers — the int32 narrowing
-    simply stays off. (Regression: r8's first cut compared a Python
-    int bound against string min/max and raised TypeError.)"""
-    edges = spark.createDataFrame(
-        [("a", "b"), ("a", "c"), ("b", "c"), ("c", "d")],
-        "src string, dst string",
-    )
-    row = G.triangle_count(edges).head()
-    assert (row["n_edges"], row["n_triangles"]) == (4, 1)
-    sup = {
-        (r["src"], r["dst"]): r["support"]
-        for r in G.edge_triangle_support(edges).collect()
-    }
-    assert sup == {("a", "b"): 1, ("a", "c"): 1, ("b", "c"): 1}
-    caching.release_all()
-
-
-def test_star_cc_self_loop_only_node(spark):
-    """A node whose only incidences are self-pairs must still be
-    labeled with itself — the driver closure's contract. (Regression:
-    the first cut derived nodes from the self-loop-filtered union.)"""
-    pairs = _pairs(spark, [(5, 5), (1, 2)])
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components_star(pairs).collect()
-    }
-    want = {
-        r["node"]: r["component"]
-        for r in connected_components(pairs).collect()
-    }
-    assert got == want == {1: 1, 2: 1, 5: 5}
-    caching.release_all()
-
-
-def test_star_cc_warns_when_not_converged(spark, caplog):
-    import logging
-
-    from cyborgdb_encrypted_vector_search_spark.operators import dedup as D
-
-    chain = _pairs(spark, [(i, i + 1) for i in range(32)])
-    with caplog.at_level(logging.WARNING, logger=D.__name__):
-        connected_components_star(chain, max_iter=1).collect()
-    assert any(
-        "not converged" in rec.getMessage() for rec in caplog.records
-    )
-    caching.release_all()
-
-
-def test_ktruss_rejects_unknown_kernel(spark):
-    edges = spark.createDataFrame(
-        [(1, 2), (1, 3), (2, 3)], "src long, dst long"
-    )
-    with pytest.raises(ValueError):
-        G.ktruss_edges(edges, k=3, kernel="fulladk")
     caching.release_all()

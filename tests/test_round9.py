@@ -7,7 +7,6 @@ from __future__ import annotations
 import logging
 
 import pytest
-from pyspark.sql import functions as F
 
 from cyborgdb_encrypted_vector_search_spark.operators.dedup import (
     connected_components,
@@ -95,191 +94,6 @@ class TestStarConvergedWarning:
         assert [
             r for r in caplog.records if "not converged" in r.message
         ]
-
-
-class TestTrussOracleConvergenceGuard:
-    """The trussness oracle's per-level round constants are now proven
-    inside the SQL: the level CTE yields zero rows unless the last two
-    unrolled rounds are count-identical (monotone peeling => identical
-    sets). Under-unrolling must therefore fail LOUDLY (empty level),
-    never silently diverge."""
-
-    # triangle strip 1..8: edges (i,i+1) support 2 inside, (i,i+2)
-    # support 1 -- at k=4 (thr=2) the strip unravels over several
-    # cascading rounds before emptying.
-    STRIP = ", ".join(
-        f"({i}, {i + 1})" for i in range(1, 8)
-    ) + ", " + ", ".join(f"({i}, {i + 2})" for i in range(1, 7))
-
-    def _run(self, rounds: int):
-        import duckdb
-
-        from cyborgdb_encrypted_vector_search_spark.plans import catalog as C
-
-        old = dict(C._TRUSS_HIST_ROUNDS)
-        C._TRUSS_HIST_ROUNDS[4] = rounds
-        try:
-            sql_blocks, final = C._truss_level_sql("edges", 4)
-        finally:
-            C._TRUSS_HIST_ROUNDS.clear()
-            C._TRUSS_HIST_ROUNDS.update(old)
-        q = (
-            f"WITH edges(src, dst) AS (VALUES {self.STRIP}),\n"
-            + sql_blocks
-            + f"\nSELECT count(*) FROM {final}"
-        )
-        return duckdb.connect().execute(q).fetchone()[0]
-
-    def test_under_unroll_empties_the_level(self):
-        # the strip needs >2 rounds to reach its (empty) fixed point;
-        # 2 unrolled rounds are not yet converged -> guard yields 0 by
-        # CONSTRUCTION of the guard, and the pre-guard rounds disagree
-        assert self._run(rounds=2) == 0
-
-    def test_sufficient_unroll_passes_through(self):
-        # plenty of rounds: fixed point (empty set here) is reached and
-        # the guard passes it through -- 0 edges is the CORRECT answer,
-        # so distinguish via a level that survives: use a clique
-        import duckdb
-
-        from cyborgdb_encrypted_vector_search_spark.plans import catalog as C
-
-        old = dict(C._TRUSS_HIST_ROUNDS)
-        C._TRUSS_HIST_ROUNDS[4] = 3
-        try:
-            sql_blocks, final = C._truss_level_sql("edges", 4)
-        finally:
-            C._TRUSS_HIST_ROUNDS.clear()
-            C._TRUSS_HIST_ROUNDS.update(old)
-        # K5 clique: every edge has support 3 >= thr=2 -> 4-truss is the
-        # whole clique, converged in round 1; guard must pass all 10
-        clique = ", ".join(
-            f"({a}, {b})" for a in range(1, 6) for b in range(a + 1, 6)
-        )
-        q = (
-            f"WITH edges(src, dst) AS (VALUES {clique}),\n"
-            + sql_blocks
-            + f"\nSELECT count(*) FROM {final}"
-        )
-        assert duckdb.connect().execute(q).fetchone()[0] == 10
-
-
-class TestWeightedLinkScores:
-    def test_matches_bruteforce_on_random_graph(self, spark):
-        import itertools
-        import random
-
-        rng = random.Random(97)
-        n = 24
-        edges = sorted(
-            {
-                (min(a, b), max(a, b))
-                for a, b in (
-                    (rng.randrange(n), rng.randrange(n)) for _ in range(70)
-                )
-                if a != b
-            }
-        )
-        from cyborgdb_encrypted_vector_search_spark.operators.graph import (
-            LINKPRED_SCALE,
-            weighted_link_scores,
-        )
-
-        adj: dict[int, set[int]] = {}
-        for a, b in edges:
-            adj.setdefault(a, set()).add(b)
-            adj.setdefault(b, set()).add(a)
-        expected = {}
-        for u, v in itertools.combinations(sorted(adj), 2):
-            if v in adj[u]:
-                continue
-            common = adj[u] & adj[v]
-            if not common:
-                continue
-            cn = len(common)
-            ra = sum(LINKPRED_SCALE // len(adj[w]) for w in common)
-            aa = sum(
-                LINKPRED_SCALE // (len(adj[w]).bit_length())
-                for w in common
-            )
-            expected[(u, v)] = (cn, ra, aa)
-        df = spark.createDataFrame(edges, "src long, dst long")
-        got = {
-            (r["u"], r["v"]): (r["cn"], r["ra_fp"], r["aa_fp"])
-            for r in weighted_link_scores(df, min_common=1).collect()
-        }
-        assert got == expected
-
-    def test_hub_cap_drops_apex_wedges(self, spark, caplog):
-        from cyborgdb_encrypted_vector_search_spark.operators.graph import (
-            weighted_link_scores,
-        )
-
-        # star: hub 0 with 6 spokes; every spoke pair's only common
-        # neighbor is the hub -> capping at degree 5 kills all pairs
-        edges = [(0, i) for i in range(1, 7)]
-        df = spark.createDataFrame(edges, "src long, dst long")
-        with caplog.at_level(
-            logging.WARNING,
-            logger="cyborgdb_encrypted_vector_search_spark.operators.graph",
-        ):
-            rows = weighted_link_scores(
-                df, min_common=1, max_apex_degree=5
-            ).collect()
-        assert rows == []
-        assert any("dropped 1 apex" in r.message for r in caplog.records)
-
-
-class TestSkewFixtureOrientedRoute:
-    """The skew gates exist to put driver CORRECTNESS rows on the
-    oriented kernel's AUTO route — so the route itself is pinned here:
-    the cost probe must pick 'oriented' on the gate fixture at the
-    gated scale factor."""
-
-    def test_skew_fixture_routes_oriented(self, spark):
-        from cyborgdb_encrypted_vector_search_spark.operators.graph import (
-            _support_stats,
-        )
-        from cyborgdb_encrypted_vector_search_spark.plans.catalog import (
-            _skew_edges,
-        )
-
-        edges = _skew_edges(spark, "/root/testdata/sf0.01")
-        stats = _support_stats(edges)
-        assert stats["kernel"] == "oriented"
-        assert stats["int_ids"] is True
-
-    def test_copurchase_graph_routes_fulladj(self, spark):
-        # the contrast that makes the probe a real decision: the
-        # near-regular co-purchase gate graph stays on fulladj
-        from cyborgdb_encrypted_vector_search_spark.operators.graph import (
-            _support_stats,
-        )
-        from cyborgdb_encrypted_vector_search_spark.plans.catalog import (
-            _graph_edges,
-        )
-
-        edges = _graph_edges(spark, "/root/testdata/sf0.01")
-        assert _support_stats(edges)["kernel"] == "fulladj"
-
-    def test_skew_ktruss_fixed_point_is_k32(self, spark):
-        # the surviving 5-truss of the fixture is the K32 completion
-        # (hub + orderkeys 1..31, all pairs): 32 nodes, 496 edges —
-        # structurally non-trivial, pinned independent of the oracle
-        from cyborgdb_encrypted_vector_search_spark.operators.graph import (
-            ktruss_edges,
-        )
-        from cyborgdb_encrypted_vector_search_spark.plans.catalog import (
-            _skew_edges,
-        )
-
-        kept = ktruss_edges(
-            _skew_edges(spark, "/root/testdata/sf0.01"), k=5, rounds=4
-        )
-        rows = kept.collect()
-        nodes = {r["src"] for r in rows} | {r["dst"] for r in rows}
-        assert len(rows) == 32 * 31 // 2
-        assert nodes == set(range(32))
 
 
 class TestBmpCodec:
@@ -392,65 +206,6 @@ class TestBmpCodec:
                 assert row[k] == v, (mid, k)
 
 
-def test_skew_fixture_survives_fulladj_selfjoin(spark):
-    """Regression (r9): the skew fixture at SMALL sf routes the AUTO
-    cost model to the fulladj kernel, whose adjacency self-join of the
-    localCheckpoint-ed edge frame crashed Spark 4.1's
-    UnionBase.rewriteConstraints when the spokes branch aliased a
-    LITERAL hub id (`key not found: src#...`). The fixture now derives
-    the hub id arithmetically (k*0); the k-truss peel over it must run
-    at every sf, whichever kernel the probe picks."""
-    from cyborgdb_encrypted_vector_search_spark.operators.graph import (
-        ktruss_edges,
-    )
-    from cyborgdb_encrypted_vector_search_spark.plans.catalog import (
-        _skew_edges,
-    )
-
-    kept = ktruss_edges(
-        _skew_edges(spark, "/root/testdata/sf0.001"), k=5, rounds=4
-    )
-    assert kept.count() >= 0  # completing the plan IS the assertion
-
-
-class TestSmallAdjBroadcast:
-    """r9 perf fix: the stats probe prices the full adjacency and the
-    fulladj kernel hash-broadcasts it when it fits — same results,
-    parallel intersect stage (AQE's byte-based coalesce otherwise
-    serialized it)."""
-
-    def test_probe_reports_small_adj_on_gate_graph(self, spark):
-        from cyborgdb_encrypted_vector_search_spark.operators.graph import (
-            _support_stats,
-        )
-        from cyborgdb_encrypted_vector_search_spark.plans.catalog import (
-            _graph_edges,
-        )
-
-        stats = _support_stats(_graph_edges(spark, "/root/testdata/sf0.01"))
-        assert stats["kernel"] == "fulladj"
-        assert stats["small_adj"] is True
-
-    def test_broadcast_kernel_matches_shuffle_kernel(self, spark):
-        from cyborgdb_encrypted_vector_search_spark.operators.graph import (
-            _support_fulladj,
-        )
-
-        edges = spark.createDataFrame(
-            [(1, 2), (1, 3), (2, 3), (2, 4), (3, 4), (4, 5), (1, 5)],
-            "src long, dst long",
-        )
-        plain = {
-            (r["src"], r["dst"]): r["support"]
-            for r in _support_fulladj(edges).collect()
-        }
-        bcast = {
-            (r["src"], r["dst"]): r["support"]
-            for r in _support_fulladj(edges, broadcast_adj=True).collect()
-        }
-        assert plain == bcast and len(plain) == 7
-
-
 def test_min_label_fractional_ids_use_changed_row_probe(spark, cc_placements):
     """Fractional (double) ids, which no integer rounding may merge:
     along a 2-hop chain every node must reach the minimum, in both
@@ -478,3 +233,69 @@ def test_bmp_rejects_data_offset_inside_headers():
     struct.pack_into("<I", bad, 10, 10)  # offset inside the file header
     with pytest.raises(ValueError, match="inside the headers"):
         decode_image(bytes(bad))
+
+
+class TestWeightedLinkScores:
+    def test_matches_bruteforce_on_random_graph(self, spark):
+        import itertools
+        import random
+
+        rng = random.Random(97)
+        n = 24
+        edges = sorted(
+            {
+                (min(a, b), max(a, b))
+                for a, b in (
+                    (rng.randrange(n), rng.randrange(n)) for _ in range(70)
+                )
+                if a != b
+            }
+        )
+        from cyborgdb_encrypted_vector_search_spark.operators.graph import (
+            LINKPRED_SCALE,
+            weighted_link_scores,
+        )
+
+        adj: dict[int, set[int]] = {}
+        for a, b in edges:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+        expected = {}
+        for u, v in itertools.combinations(sorted(adj), 2):
+            if v in adj[u]:
+                continue
+            common = adj[u] & adj[v]
+            if not common:
+                continue
+            cn = len(common)
+            ra = sum(LINKPRED_SCALE // len(adj[w]) for w in common)
+            aa = sum(
+                LINKPRED_SCALE // (len(adj[w]).bit_length())
+                for w in common
+            )
+            expected[(u, v)] = (cn, ra, aa)
+        df = spark.createDataFrame(edges, "src long, dst long")
+        got = {
+            (r["u"], r["v"]): (r["cn"], r["ra_fp"], r["aa_fp"])
+            for r in weighted_link_scores(df, min_common=1).collect()
+        }
+        assert got == expected
+
+    def test_hub_cap_drops_apex_wedges(self, spark, caplog):
+        from cyborgdb_encrypted_vector_search_spark.operators.graph import (
+            weighted_link_scores,
+        )
+
+        # star: hub 0 with 6 spokes; every spoke pair's only common
+        # neighbor is the hub -> capping at degree 5 kills all pairs
+        edges = [(0, i) for i in range(1, 7)]
+        df = spark.createDataFrame(edges, "src long, dst long")
+        with caplog.at_level(
+            logging.WARNING,
+            logger="cyborgdb_encrypted_vector_search_spark.operators.graph",
+        ):
+            rows = weighted_link_scores(
+                df, min_common=1, max_apex_degree=5
+            ).collect()
+        assert rows == []
+        assert any("dropped 1 apex" in r.message for r in caplog.records)

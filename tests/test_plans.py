@@ -63,13 +63,6 @@ def test_stratified_sample_uses_window_group_limit(spark, sf_dir, cat):
     assert "WindowGroupLimit" in plan
 
 
-def test_grouping_sets_single_expand_one_shuffle(spark, sf_dir, cat):
-    plan = X.physical_plan(cat["q_grouping_sets_orders"].fn(spark, sf_dir))
-    # three grouping sets = one Expand feeding one agg, not three scans
-    assert plan.count("Expand") >= 1
-    assert plan.count("Scan parquet") == 1
-
-
 def test_incremental_dedup_broadcasts_batch_side(spark, sf_dir, cat):
     plan = X.physical_plan(cat["dedup_incremental_minhash"].fn(spark, sf_dir))
     # corpus signatures never shuffle: the batch side is broadcast
@@ -306,31 +299,6 @@ def test_ann_search_plan_shape(spark, ann_index, kernel_frames, name):
         assert "embedding" in X.scan_columns(rerank)
 
 
-def test_sketch_gate_predicates_recomputed_from_raw_frame(spark, sf_dir):
-    """The q_approx_sketches booleans must equal the tolerance
-    predicates recomputed in Python from the raw sketch-vs-exact frame
-    — so a trivially-true Spark-side expression can't hide behind the
-    oracle's own independently-computed booleans."""
-    from cyborgdb_encrypted_vector_search_spark.plans import catalog as C
-
-    raw = {
-        r["event_type"]: r
-        for r in C.sketch_accuracy_frame(spark, sf_dir).collect()
-    }
-    gate = {
-        r["event_type"]: r
-        for r in C.q_approx_sketches(spark, sf_dir).collect()
-    }
-    assert set(raw) == set(gate) and raw
-    for et, r in raw.items():
-        want_hll = abs(r["hll_users"] - r["n_users"]) <= 0.15 * r["n_users"]
-        want_p50 = r["p40_exact"] <= r["p50_approx"] <= r["p60_exact"]
-        assert gate[et]["hll_ok"] == want_hll, et
-        assert gate[et]["p50_ok"] == want_p50, et
-        # and the sketches genuinely meet the contract on testdata
-        assert want_hll and want_p50, et
-
-
 def test_ivf_layout_scan_prunes_to_probed_partitions(
     spark, sf_dir, cat, kernel_frames
 ):
@@ -363,89 +331,6 @@ def test_ivf_layout_scan_prunes_to_probed_partitions(
     layout = os.path.join(tempfile.gettempdir(), f"ivf_layout_{tag}")
     n_parts = len(glob.glob(os.path.join(layout, "centroid_id=*")))
     assert n_parts == 8
-
-
-def test_time_partitioned_scan_prunes_to_window(spark, sf_dir, cat):
-    """The date-partitioned events layout must prune: the 3-day window
-    appears as a PartitionFilter on event_date (directories outside the
-    window are never read), while the layout on disk holds ~30 daily
-    partitions."""
-    import glob
-    import hashlib
-    import os
-    import re
-    import tempfile
-
-    from cyborgdb_encrypted_vector_search_spark.plans.catalog import (
-        _content_tag,
-    )
-
-    plan = X.physical_plan(cat["q_time_partitioned_events"].fn(spark, sf_dir))
-    assert re.search(r"PartitionFilters: \[[^\]]*event_date[^\]]*\]", plan), plan
-    ctag = _content_tag(spark, sf_dir, "events", "event_id")
-    tag = hashlib.md5(f"{sf_dir}:tpart_v1:{ctag}".encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"events_bydate_{tag}")
-    n_parts = len(glob.glob(os.path.join(path, "event_date=*")))
-    assert n_parts >= 28  # ~one directory per January day
-
-
-def test_zorder_layout_files_skip_outside_box(spark, sf_dir, cat):
-    """The Z-ordered lineitem copy must make BOTH box predicates
-    effective data skipping: each file's footer min/max over (ship_day,
-    l_partkey) covers a tight rectangle, so most files' stats ranges
-    don't intersect the gate's query box at all — the parquet reader
-    rejects them without decoding a page. Pinned from the footers
-    directly (the same stats the reader consults)."""
-    import datetime
-    import glob
-    import hashlib
-    import os
-    import tempfile
-
-    import pyarrow.parquet as pq
-
-    from cyborgdb_encrypted_vector_search_spark.plans.catalog import (
-        _content_tag,
-    )
-
-    df = cat["q_zorder_pruned_scan"].fn(spark, sf_dir)
-    df.collect()  # builds the layout on first run
-    plan = X.physical_plan(df)
-    assert "PushedFilters" in plan and "ship_day" in plan, plan
-
-    ctag = _content_tag(spark, sf_dir, "lineitem", "l_orderkey")
-    tag = hashlib.md5(f"{sf_dir}:zorder_v1:{ctag}".encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"lineitem_zorder_{tag}")
-    files = glob.glob(os.path.join(path, "*.parquet"))
-    assert len(files) >= 16
-
-    epoch = datetime.date(1970, 1, 1)
-    x_lo = (datetime.date(1994, 1, 1) - epoch).days
-    x_hi = (datetime.date(1994, 3, 31) - epoch).days
-    y_lo, y_hi = 100, 600
-
-    def ranges(md, col):
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            for ci in range(g.num_columns):
-                c = g.column(ci)
-                if c.path_in_schema == col:
-                    mins.append(c.statistics.min)
-                    maxs.append(c.statistics.max)
-        return min(mins), max(maxs)
-
-    hit = 0
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        xmn, xmx = ranges(md, "ship_day")
-        ymn, ymx = ranges(md, "l_partkey")
-        if xmx >= x_lo and xmn <= x_hi and ymx >= y_lo and ymn <= y_hi:
-            hit += 1
-    # the box covers a few % of the (day, part) area; a linear layout
-    # leaves every file intersecting on the unsorted dimension, the
-    # z-layout leaves only the files whose rectangle the box touches
-    assert hit / len(files) <= 0.5, (hit, len(files))
 
 
 def test_bm25_probe_broadcasts_query_terms(spark, sf_dir, cat):
@@ -494,128 +379,6 @@ def test_hll_rollup_merge_is_lossless(spark, sf_dir):
         assert r["d"] == r["m"], r
 
 
-def test_scalable_rank_range_partitions_no_global_sort(spark, sf_dir, cat):
-    """q_rank_scalable_orders (operators/ranking.py): the global
-    ranking family over raw rows must range-partition the data and
-    enumerate partitions in parallel — never plan a single-partition
-    Sort over the data rows (the q_rank_family_orders shape that only
-    an aggregate's output can afford)."""
-    df = cat["q_rank_scalable_orders"].fn(spark, sf_dir)
-    plan = X.physical_plan(df)
-    assert "rangepartitioning" in plan, plan
-    # the Arrow enumerator: partition-local row numbers, no shuffle
-    assert "MapInPandas" in plan or "InMemoryTableScan" in plan, plan
-    # rank/dense join stages are keyed or broadcast, never sort-merge
-    assert "SortMergeJoin" not in plan, plan
-    # every Window here is hash-partitioned by the rank key or runs
-    # over P counter rows / tie-group reps; the raw-row branch's first
-    # exchange must be the range exchange, never SinglePartition
-    scan_pos = plan.find("orders")
-    sp = plan.find("Exchange SinglePartition")
-    rp = plan.find("rangepartitioning")
-    assert rp != -1 and (sp == -1 or rp < sp or scan_pos == -1), plan
-
-
-def test_scalable_row_number_matches_window(spark):
-    """scalable_row_number == row_number() over the same total order,
-    on a frame with heavy ties and enough rows to cross many range
-    partitions."""
-    from pyspark.sql import Window
-
-    from cyborgdb_encrypted_vector_search_spark.operators import ranking as R
-
-    df = spark.range(0, 5000).select(
-        (F.col("id") % 37).alias("g"), F.col("id").alias("k")
-    )
-    got = R.scalable_row_number(df, [("g", False), ("k", True)], out_col="rn")
-    w = Window.orderBy(F.desc("g"), F.asc("k"))
-    want = df.withColumn("rn", F.row_number().over(w))
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-
-
-def test_scalable_rank_family_matches_sql_windows(spark):
-    """rank/dense_rank/percent_rank/ntile from the scalable operator
-    equal the SQL window functions on a ties-heavy frame."""
-    from pyspark.sql import Window
-
-    from cyborgdb_encrypted_vector_search_spark.operators import ranking as R
-
-    df = spark.range(0, 3000).select(
-        (F.col("id") % 17).alias("g"), F.col("id").alias("k")
-    )
-    got = R.scalable_rank_family(
-        df, rank_order=[("g", True)], tiebreak=[("k", True)], ntile_buckets=7
-    )
-    wo = Window.orderBy(F.asc("g"), F.asc("k"))
-    wk = Window.orderBy(F.asc("g"))
-    want = df.select(
-        "g",
-        "k",
-        F.row_number().over(wo).cast("long").alias("rn"),
-        F.rank().over(wk).cast("long").alias("rnk"),
-        F.dense_rank().over(wk).cast("long").alias("drnk"),
-        F.round(F.percent_rank().over(wk), 7).alias("prk"),
-        F.ntile(7).over(wo).cast("int").alias("ntile_7"),
-    )
-    got = got.select("g", "k", "rn", "rnk", "drnk", "prk", "ntile_7")
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-
-
-def test_dpp_star_join_prunes_partitions_dynamically(spark, sf_dir, cat):
-    """The fact scan must carry a dynamicpruningexpression in
-    PartitionFilters: the busy-day dim is only known at runtime, so
-    without DPP the partitioned fact would be read in full."""
-    from cyborgdb_encrypted_vector_search_spark.plans import explain as X
-
-    df = cat["q_dpp_star_join"].fn(spark, sf_dir)
-    plan = X.physical_plan(df)
-    assert "dynamicpruning" in plan
-    # the pruning filter sits on the partition column of the fact scan
-    import re
-
-    scans = [
-        line for line in plan.splitlines()
-        if "PartitionFilters" in line and "dynamicpruning" in line
-    ]
-    assert scans, plan[:3000]
-    assert re.search(r"PartitionFilters: \[[^\]]*event_date", scans[0])
-
-
-def test_bloom_filtered_join_injects_runtime_filter(spark, sf_dir, cat):
-    """InjectRuntimeFilter must plant a bloom_filter_agg over the dim
-    keys and a might_contain probe on the fact side, and the
-    conf-scoped planning must not leak settings into the session."""
-    from cyborgdb_encrypted_vector_search_spark.plans import explain as X
-
-    before = {
-        k: spark.conf.get(k)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        )
-    }
-    df = cat["q_bloom_filtered_join"].fn(spark, sf_dir)
-    plan = X.physical_plan(df)
-    assert "bloom_filter_agg" in plan
-    assert "might_contain" in plan
-    # confs restored: the shared session must be untouched after planning
-    after = {k: spark.conf.get(k) for k in before}
-    assert after == before
-    # and a FRESH identical join planned now (under restored confs)
-    # must NOT carry the bloom filter — proof the scope didn't leak
-    from cyborgdb_encrypted_vector_search_spark.sources.registry import load
-    from pyspark.sql import functions as F
-
-    li = load(spark, "lineitem", sf_dir)
-    o = load(spark, "orders", sf_dir).filter(F.col("o_totalprice") > 400000)
-    fresh = li.join(o, li["l_orderkey"] == o["o_orderkey"]).groupBy(
-        "l_returnflag"
-    ).count()
-    assert "bloom_filter_agg" not in X.physical_plan(fresh)
-
-
 @pytest.mark.parametrize(
     "name",
     [
@@ -623,7 +386,6 @@ def test_bloom_filtered_join_injects_runtime_filter(spark, sf_dir, cat):
         "dedup_simhash",
         "dedup_winnow_overlap",
         "pipeline_corpus_curation",
-        "q_heavy_hitters_cms",
     ],
 )
 def test_gate_persists_are_released(spark, sf_dir, cat, monkeypatch, name):

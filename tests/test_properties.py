@@ -108,37 +108,6 @@ def test_simhash_blocking_recall_matches_brute_force(spark, fps):
 
 @settings(max_examples=6, deadline=None)
 @given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=(1 << 14) - 1),
-            st.integers(min_value=0, max_value=(1 << 14) - 1),
-        ),
-        min_size=1,
-        max_size=12,
-    )
-)
-def test_zvalue_matches_reference_interleave(spark, pts):
-    """Property: zvalue == the textbook bit-interleave for arbitrary
-    14-bit inputs (the z-order layout's skipping guarantee rests on
-    this being exact, not approximate)."""
-    from cyborgdb_encrypted_vector_search_spark.operators import layout as L
-
-    def ref(x, y, bits=14):
-        z = 0
-        for i in range(bits):
-            z |= ((x >> i) & 1) << (2 * i)
-            z |= ((y >> i) & 1) << (2 * i + 1)
-        return z
-
-    df = spark.createDataFrame(
-        [(i, x, y) for i, (x, y) in enumerate(pts)], "i long, x int, y int"
-    ).select("i", "x", "y", L.zvalue(F.col("x"), F.col("y"), 14).alias("z"))
-    for r in df.collect():
-        assert r["z"] == ref(r["x"], r["y"]), (r["x"], r["y"])
-
-
-@settings(max_examples=6, deadline=None)
-@given(
     st.lists(st.text(alphabet="abc xyz", min_size=0, max_size=30), min_size=2, max_size=6)
 )
 def test_cross_score_is_bounded_symmetric_jaccard(spark, texts):

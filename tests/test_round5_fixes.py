@@ -3,7 +3,6 @@
 1. foreachBatch replay idempotency (commit markers).
 2. _publish_dir re-raises non-race OSErrors.
 3. rotate_key carries plaintext metadata through rotation.
-4. read_time_range day-inclusive bounds on hour-partitioned layouts.
 """
 
 from __future__ import annotations
@@ -11,7 +10,6 @@ from __future__ import annotations
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from cyborgdb_encrypted_vector_search_spark.sources.collections import Collection
 
@@ -122,33 +120,3 @@ def test_rotate_key_carries_plaintext_metadata(spark, tmp_path):
     old_ct = {r["id"]: r["embedding_ct"] for r in src.extract_encrypted().collect()}
     new_ct = {r["id"]: r["embedding_ct"] for r in rot.extract_encrypted().collect()}
     assert all(old_ct[k] != new_ct[k] for k in old_ct)
-
-
-def test_read_time_range_hour_granularity_day_inclusive(spark, tmp_path):
-    from cyborgdb_encrypted_vector_search_spark.operators import layout as L
-
-    df = spark.createDataFrame(
-        [
-            (1, "2024-01-10 03:00:00"),
-            (2, "2024-01-11 23:30:00"),
-            (3, "2024-01-12 01:00:00"),
-            (4, "2024-01-12 22:00:00"),  # end-day LATE hour: must be kept
-            (5, "2024-01-13 00:30:00"),  # past the end day: dropped
-        ],
-        "event_id long, ts string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-
-    path = str(tmp_path / "hourly")
-    L.build_time_partitioned(df, "ts", path, granularity="hour")
-    got = L.read_time_range(spark, path, "2024-01-11", "2024-01-12")
-    ids = sorted(r["event_id"] for r in got.collect())
-    assert ids == [2, 3, 4]
-    # the bound predicate still prunes partitions (stays in PartitionFilters)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-
-    # day granularity unchanged
-    path2 = str(tmp_path / "daily")
-    L.build_time_partitioned(df, "ts", path2, granularity="day")
-    got2 = L.read_time_range(spark, path2, "2024-01-11", "2024-01-12")
-    assert sorted(r["event_id"] for r in got2.collect()) == [2, 3, 4]

@@ -1,49 +1,24 @@
-"""Round-7 additions: co-occurrence hub cap, quantile error-bound gate, cache release valve,
-and the StubChatModel whitespace round-trip."""
+"""Round-7 additions: the cache release valve and the StubChatModel
+whitespace round-trip."""
 
 from __future__ import annotations
 
-import logging
-
-import pytest
-from pyspark.sql import functions as F
-
 from cyborgdb_encrypted_vector_search_spark import caching
 from cyborgdb_encrypted_vector_search_spark.functions import llm as L
-from cyborgdb_encrypted_vector_search_spark.operators import graph as G
-from cyborgdb_encrypted_vector_search_spark.operators import ranking as R
-
-SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def cat():
-    from cyborgdb_encrypted_vector_search_spark.plans.catalog import entries
-
-    return entries()
-
-
-def test_quantile_bounds_gate_smoke(spark, cat):
-    """The approx-vs-exact cross-gate holds at sf0.001: every quantile's
-    sketch answer is within its documented rank tolerance of the exact
-    row-number answer."""
-    rows = cat["q_quantile_bounds_orders"].fn(spark, SF).collect()
-    assert len(rows) == 6
-    assert all(r["bound_ok"] for r in rows), rows
-    assert all(r["exact_value"] is not None for r in rows)
-    caching.release_all()
-
+from cyborgdb_encrypted_vector_search_spark.operators import dedup
 
 def test_release_all_unpersists_tracked_frames(spark):
-    """The cache release valve: scalable_row_number's correctness
+    """The cache release valve: lsh_candidate_pairs' banded-frame
     persist stays alive through the caller's action, then release_all
     drops it (and is safe to call twice / after no tracking)."""
     caching.release_all()  # clean slate
-    df = spark.range(100).select(
-        F.col("id"), (F.col("id") % 7).alias("g")
+    text = "the quick brown fox jumps over the lazy dog"
+    df = spark.createDataFrame(
+        [(1, text), (2, text), (3, "lorem ipsum dolor sit amet consectetur")],
+        "doc_id long, text string",
     )
-    out = R.scalable_row_number(df, [("g", True), ("id", True)])
-    assert out.count() == 100
+    out = dedup.lsh_candidate_pairs(df)
+    assert out.count() == 1  # only the identical pair (1, 2)
     assert len(caching._LIVE) >= 1
     tracked = list(caching._LIVE)
     released = caching.release_all()
@@ -62,23 +37,3 @@ def test_stub_chat_model_preserves_whitespace():
         + L.PROMPT_FOOTER
     )
     assert L.StubChatModel().invoke(prompt) == "  padded text "
-
-
-def test_cooccurrence_hub_cap(spark, caplog):
-    """max_context_size drops oversized contexts entirely (never a
-    partial sample) and logs WHAT was dropped — the dedup max_df
-    discipline applied to the co-occurrence self-join."""
-    rows = [("big", e) for e in range(1, 6)] + [("small", 10), ("small", 11)]
-    df = spark.createDataFrame(rows, "ctx string, ent long")
-    with caplog.at_level(logging.WARNING, logger=G.__name__):
-        capped = G.cooccurrence_edges(
-            df, "ent", "ctx", max_context_size=3
-        ).collect()
-    assert sorted((r["src"], r["dst"]) for r in capped) == [(10, 11)]
-    assert any(
-        "dropped 1 context" in rec.getMessage() for rec in caplog.records
-    )
-    # uncapped: the big context contributes C(5,2) = 10 pairs
-    assert G.cooccurrence_edges(df, "ent", "ctx").count() == 11
-    with pytest.raises(ValueError):
-        G.cooccurrence_edges(df, "ent", "ctx", max_context_size=0)

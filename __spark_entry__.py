@@ -4,7 +4,7 @@ A caller runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row count + schema +
 order-insensitive values). ``tests/test_spark_entry.py`` does exactly
-that for all 115 entries; ``tools/parity.py`` is the same check as a
+that for all 123 entries; ``tools/parity.py`` is the same check as a
 script. docs/CATALOG_PRUNE.md names the paper feature each entry
 serves.
 

@@ -5,8 +5,9 @@ call. Entity resolution (operators/dedup.py) pins its record and edge
 frames as a correctness device, so the connected-components probe and
 every contraction round read one invariant edge set; MinHash banding
 (dedup.lsh_candidate_pairs) pins its banded frame so the two sides of
-its self-join do not each recompute the shingle and MinHash lineage.
-Those frames cannot be unpersisted inside the operator — the cache
+its self-join do not each recompute the shingle and MinHash lineage;
+PageRank and the link predictors (operators/graph.py) pin the edge
+frame so every iteration reads one invariant adjacency. Those frames cannot be unpersisted inside the operator — the cache
 must outlive the caller's action — so in a long-running driver that
 executes many catalog queries the InMemoryRelations would accumulate
 for the session lifetime.

@@ -26,7 +26,8 @@ itself exact.
 Overflow headroom: |q| ≤ ~2.5e3 for unit-scale embeddings, so a Gram
 entry per row is ≤ ~6e6 and int64 holds the sum past 1e12 rows; the
 catalog gates cast the final sums to BIGINT on both engines so the
-compare layer never sees engine-specific wide types.
+compare layer never sees engine-specific wide types (the
+q_table_fingerprint lesson).
 """
 
 from __future__ import annotations

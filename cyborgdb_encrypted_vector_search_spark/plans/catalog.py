@@ -29,6 +29,9 @@ from cyborgdb_encrypted_vector_search_spark.functions import hashing as H
 from cyborgdb_encrypted_vector_search_spark.functions import text as X
 from cyborgdb_encrypted_vector_search_spark.functions import vector as V
 from cyborgdb_encrypted_vector_search_spark.operators import dedup, knn
+from cyborgdb_encrypted_vector_search_spark.operators.graph import (
+    LINKPRED_SCALE,
+)
 from cyborgdb_encrypted_vector_search_spark.sources.registry import load
 
 
@@ -2637,7 +2640,7 @@ def collection_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _recall_oracle_sql(method: str, k: int = 10, num_q: int = 5) -> str:
-    """Oracle for an ANN recall gate, two-sided:
+    """Oracle for an ANN recall gate, two-sided like q_approx_sketches:
     DuckDB independently brute-forces the exact top-k ground truth for
     the same deterministic query set and pins its checksum, and then —
     instead of a literal TRUE — computes `recall_ok` from its OWN
@@ -2650,7 +2653,7 @@ def _recall_oracle_sql(method: str, k: int = 10, num_q: int = 5) -> str:
     hash to match — no trivially-true boolean on either side. (The
     methods differ by necessity: k-means/PQ codebooks aren't
     SQL-expressible, so DuckDB checks the CONTRACT SHAPE with its own
-    method.)
+    method, exactly as it does for HLL/t-digest in q_approx_sketches.)
     """
     cos = V.sql_unit_cosine("c.unit", "q.unit", "c.nrm", "q.nrm")
     half, oversample, floor = 48, 8, 0.6
@@ -2869,6 +2872,63 @@ def streaming_stateful_user_counts(spark: SparkSession, sf_dir: str) -> DataFram
     return (
         result.groupBy("user_id")
         .agg(F.max("n_events").alias("n_events"))
+    )
+
+
+def sketch_accuracy_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Raw sketch-vs-exact frame behind q_approx_sketches: per
+    event_type, the exact distinct count, the HLL++ estimate, the
+    approx p50 and the exact p40/p60 band. Exposed separately so tests
+    can recompute the gate's tolerance predicates from these columns
+    independently of the gate's own boolean expressions."""
+    ev = load(spark, "events", sf_dir)
+    return ev.groupBy("event_type").agg(
+        F.countDistinct("user_id").cast("bigint").alias("n_users"),
+        F.approx_count_distinct("user_id").alias("hll_users"),
+        F.percentile_approx("value", F.lit(0.5)).alias("p50_approx"),
+        F.expr("percentile(value, 0.4)").alias("p40_exact"),
+        F.expr("percentile(value, 0.6)").alias("p60_exact"),
+    )
+
+
+@query(
+    "q_approx_sketches",
+    """
+    SELECT event_type,
+           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
+           abs(approx_count_distinct(user_id) - count(DISTINCT user_id))
+             <= 0.15 * count(DISTINCT user_id) AS hll_ok,
+           approx_quantile(value, 0.5)
+             BETWEEN quantile_cont(value, 0.4) AND quantile_cont(value, 0.6)
+             AS p50_ok
+    FROM events GROUP BY event_type
+    """,
+)
+def q_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The 100 TB sketch path: approx_count_distinct (HLL++) and
+    percentile_approx (t-digest-like) per event_type. Sketch VALUES are
+    implementation-specific, so the gate is error-bound-shaped (like
+    the ANN recall gates): the exact distinct count is value-hashed
+    against DuckDB, and the booleans — HLL within 15% of exact
+    (default rsd is 5%), approx p50 inside the exact p40–p60 band —
+    are only TRUE when the sketches actually deliver their accuracy
+    contract. The oracle computes the SAME tolerance predicates over
+    DuckDB's own sketches (approx_count_distinct / approx_quantile vs
+    its exact values) — both engines' sketches must independently meet
+    the contract for the hash to match; tests/test_plans.py recomputes
+    the Spark predicates from sketch_accuracy_frame's raw columns."""
+    agg = sketch_accuracy_frame(spark, sf_dir)
+    return agg.select(
+        "event_type",
+        "n_users",
+        (
+            F.abs(F.col("hll_users") - F.col("n_users"))
+            <= 0.15 * F.col("n_users")
+        ).alias("hll_ok"),
+        (
+            (F.col("p50_approx") >= F.col("p40_exact"))
+            & (F.col("p50_approx") <= F.col("p60_exact"))
+        ).alias("p50_ok"),
     )
 
 
@@ -3546,6 +3606,51 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = S.run_stream_to_batch(spark, pairs, output_mode="append")
     return res.select(
         F.col("batch_id").cast("bigint"), F.col("base_id").cast("bigint")
+    )
+
+
+@query(
+    "q_grouping_sets_orders",
+    """
+    SELECT coalesce(o_orderstatus, 'ALL') AS o_orderstatus,
+           coalesce(o_orderpriority, 'ALL') AS o_orderpriority,
+           CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT) AS gid,
+           CAST(count(*) AS BIGINT) AS n_orders,
+           CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
+             AS total_price
+    FROM orders
+    GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
+                            (o_orderstatus), ())
+    """,
+)
+def q_grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Explicit GROUPING SETS (beyond ROLLUP/CUBE): three chosen
+    grouping combinations in one shuffle, disambiguated by the standard
+    grouping_id bitmask (bit set = column aggregated away). Spark
+    expands the sets map-side (one Expand node feeding a single hash
+    aggregate) — the same one-pass plan a hand-written union of three
+    groupBys would need three scans for."""
+    o = load(spark, "orders", sf_dir)
+    return (
+        o.groupingSets(
+            [["o_orderstatus", "o_orderpriority"], ["o_orderstatus"], []],
+            "o_orderstatus",
+            "o_orderpriority",
+        )
+        .agg(
+            F.grouping_id().cast("bigint").alias("gid"),
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
+            .cast("double")
+            .alias("total_price"),
+        )
+        .select(
+            F.coalesce("o_orderstatus", F.lit("ALL")).alias("o_orderstatus"),
+            F.coalesce("o_orderpriority", F.lit("ALL")).alias("o_orderpriority"),
+            "gid",
+            "n_orders",
+            "total_price",
+        )
     )
 
 
@@ -6090,6 +6195,57 @@ def collection_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return snapshot_diff(old, new, id_col="id")
 
 
+@query(
+    "q_incremental_rollup",
+    """
+    SELECT strftime(o_orderdate, '%Y-%m') AS month, o_orderstatus,
+           CAST(count(*) AS BIGINT) AS n_orders,
+           CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
+             AS revenue
+    FROM orders GROUP BY 1, 2
+    """,
+)
+def q_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental materialized-aggregate maintenance: the monthly
+    revenue rollup is NOT recomputed from scratch — the orders table is
+    split into a resident base (90%) and a late-arriving delta batch
+    (hash-designated 10%), each side partially aggregated, and the
+    partials MERGED (counts and DECIMAL sums are commutative monoids,
+    so merge order cannot change a bit). The gate's claim: the merged
+    maintenance path equals the oracle's full recompute exactly.
+
+    Scale: refreshing a rollup over an appended batch costs O(delta) +
+    O(affected groups) — the base table is never re-read; in production
+    the base partials ARE the stored rollup rows. Same maintenance
+    algebra as text_bm25_incremental's mergeable corpus stats, applied
+    to the relational side."""
+    o = load(spark, "orders", sf_dir)
+    is_delta = F.pmod(F.xxhash64(F.col("o_orderkey")), F.lit(10)) == 0
+
+    def partial(df: DataFrame) -> DataFrame:
+        return (
+            df.groupBy(
+                F.date_format("o_orderdate", "yyyy-MM").alias("month"),
+                "o_orderstatus",
+            )
+            .agg(
+                F.count(F.lit(1)).alias("pn"),
+                F.sum(F.col("o_totalprice").cast("decimal(18,4)")).alias("pr"),
+            )
+        )
+
+    merged = (
+        partial(o.filter(~is_delta))
+        .unionByName(partial(o.filter(is_delta)))
+        .groupBy("month", "o_orderstatus")
+        .agg(
+            F.sum("pn").cast("bigint").alias("n_orders"),
+            F.sum("pr").cast("double").alias("revenue"),
+        )
+    )
+    return merged
+
+
 # ----------------------------------------------------------------------
 # Round-5 additions, second wave: data-derived sampling quotas, kNN
 # classification + retrieval eval metrics, binary payload dedup,
@@ -6406,6 +6562,57 @@ def text_keyword_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("kw_rank", F.row_number().over(w).cast("int"))
         .filter(F.col("kw_rank") <= 3)
         .select("doc_id", "kw_rank", "term", "score")
+    )
+
+
+@query(
+    "q_table_fingerprint",
+    """
+    SELECT o_orderstatus,
+           CAST(count(*) AS BIGINT) AS n_rows,
+           CAST(sum(CAST(('0x' || substr(md5(
+             coalesce(CAST(o_orderkey AS VARCHAR), '<null>') || '|' ||
+             coalesce(CAST(o_custkey AS VARCHAR), '<null>') || '|' ||
+             coalesce(o_orderstatus, '<null>') || '|' ||
+             coalesce(CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS VARCHAR),
+                      '<null>') || '|' ||
+             coalesce(strftime(o_orderdate, '%Y-%m-%d'), '<null>')
+           ), 1, 8)) AS BIGINT)) AS BIGINT) AS fingerprint
+    FROM orders GROUP BY 1
+    """,
+)
+def q_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Order-insensitive table content fingerprint, per partition key:
+    each row is canonicalized to one string, hashed (md5 prefix → 32-bit
+    int), and SUMMED — sum is commutative, so the checksum is invariant
+    to row order, partitioning, and engine, and it MERGES (the grand
+    fingerprint is the sum of per-status fingerprints). This is the
+    replication / CDC-validation primitive: after a 100 TB copy, each
+    side computes its fingerprint map-side (one shuffle of K partial
+    sums per status) and a mismatched status pinpoints where to
+    re-diff — no row-by-row compare. Doubles are canonicalized through
+    DECIMAL(12,2) and timestamps through a date string so both engines
+    hash identical bytes; every field is coalesce()'d to a sentinel on
+    BOTH sides so NULL handling cannot diverge (concat_ws skips NULLs,
+    '||' propagates them). The 32-bit prefix keeps the sum exactly
+    representable in int64 through sf>100 (2^32 x rows << 2^63), so
+    the oracle comparison is exact — no float round-trip."""
+    o = load(spark, "orders", sf_dir)
+    nul = F.lit("<null>")
+    canon = F.concat_ws(
+        "|",
+        F.coalesce(F.col("o_orderkey").cast("string"), nul),
+        F.coalesce(F.col("o_custkey").cast("string"), nul),
+        F.coalesce(F.col("o_orderstatus"), nul),
+        F.coalesce(
+            F.col("o_totalprice").cast("decimal(12,2)").cast("string"), nul
+        ),
+        F.coalesce(F.date_format("o_orderdate", "yyyy-MM-dd"), nul),
+    )
+    h = F.conv(F.substring(F.md5(canon), 1, 8), 16, 10).cast("bigint")
+    return o.groupBy("o_orderstatus").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+        F.sum(h).cast("bigint").alias("fingerprint"),
     )
 
 
@@ -6913,7 +7120,8 @@ CATALOG["knn_mmr_rerank"].sql = _mk_mmr_sql()
 
 
 # ----------------------------------------------------------------------
-# Round-6 additions (second wave): edit-distance similarity join.
+# Round-6 additions (second wave): edit-distance similarity join,
+# count-min-sketch heavy hitters.
 # ----------------------------------------------------------------------
 
 # Both engines restrict to ASCII texts: DuckDB's levenshtein counts
@@ -6979,6 +7187,328 @@ def dedup_editdist_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_b").cast("bigint"),
         "dist",
     )
+
+
+_CMS_DEPTH = 4
+_CMS_WIDTH = 512
+
+
+@query(
+    "q_heavy_hitters_cms",
+    f"""
+    WITH ex AS (
+      SELECT user_id, CAST(count(*) AS BIGINT) AS exact_n
+      FROM events WHERE user_id IS NOT NULL GROUP BY 1
+    ),
+    js AS (SELECT unnest(range({_CMS_DEPTH})) AS j),
+    keyed AS (
+      SELECT e.user_id, e.exact_n, js.j,
+             CAST(('0x' || substr(md5(CAST(js.j AS VARCHAR) || ':' ||
+                  CAST(e.user_id AS VARCHAR)), 1, 12)) AS BIGINT)
+               % {_CMS_WIDTH} AS bucket
+      FROM ex e CROSS JOIN js
+    ),
+    cells AS (
+      SELECT j, bucket, CAST(sum(exact_n) AS BIGINT) AS c
+      FROM keyed GROUP BY 1, 2
+    ),
+    est AS (
+      SELECT k.user_id, k.exact_n, CAST(min(c.c) AS BIGINT) AS cms_estimate
+      FROM keyed k JOIN cells c ON c.j = k.j AND c.bucket = k.bucket
+      GROUP BY 1, 2
+    )
+    SELECT user_id, exact_n, cms_estimate,
+           cms_estimate >= exact_n AS overest
+    FROM est
+    ORDER BY exact_n DESC, user_id
+    LIMIT 20
+    """,
+)
+def q_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Count-min-sketch heavy hitters: top-20 users by event count,
+    each carrying its CMS frequency estimate (depth 4 × width 512,
+    md5-derived row hashes). Unlike Misra-Gries the CMS is
+    DETERMINISTIC and order/partition-independent (counters are
+    additive), so the DuckDB oracle computes the *identical* sketch
+    and the estimate column is value-hashed cross-engine — a
+    two-sided gate on an approximate structure; `overest` pins the
+    CMS one-sided-error guarantee (estimate >= truth, always) as a
+    computed column on both engines. Scale shape: the sketch is built
+    from the per-user AGGREGATE (counter[j][b] = Σ counts — identical
+    by additivity), so the fact table is scanned once and the
+    explode-by-depth touches only the distinct-user frame; the 2048
+    counter cells are a broadcast-joined sidecar, the persisted
+    artifact a 100 TB deployment would keep per partition and merge by
+    cell-wise sum (mergeable, like an HLL rollup)."""
+    ev = load(spark, "events", sf_dir).filter(F.col("user_id").isNotNull())
+    # persisted: the per-user aggregate feeds BOTH the sketch cells and
+    # the estimate probe — one fact-table scan, not two
+    ex = track(ev.groupBy("user_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("exact_n")
+    ).persist())
+    keyed = ex.select(
+        "user_id",
+        "exact_n",
+        F.explode(
+            F.array(*[F.lit(i) for i in range(_CMS_DEPTH)])
+        ).alias("j"),
+    ).withColumn(
+        "bucket",
+        F.pmod(
+            F.conv(
+                F.substring(
+                    F.md5(
+                        F.concat(
+                            F.col("j").cast("string"),
+                            F.lit(":"),
+                            F.col("user_id").cast("string"),
+                        )
+                    ),
+                    1,
+                    12,
+                ),
+                16,
+                10,
+            ).cast("bigint"),
+            F.lit(_CMS_WIDTH),
+        ),
+    )
+    cells = keyed.groupBy("j", "bucket").agg(
+        F.sum("exact_n").cast("bigint").alias("c")
+    )
+    est = (
+        keyed.join(F.broadcast(cells), ["j", "bucket"])
+        .groupBy("user_id", "exact_n")
+        .agg(F.min("c").cast("bigint").alias("cms_estimate"))
+    )
+    return (
+        est.select(
+            "user_id",
+            "exact_n",
+            "cms_estimate",
+            (F.col("cms_estimate") >= F.col("exact_n")).alias("overest"),
+        )
+        .orderBy(F.desc("exact_n"), F.asc("user_id"))
+        .limit(20)
+    )
+
+
+# Both graph gates derive the same co-purchase graph: users purchasing
+# in the same HOUR (day granularity is near-complete at sf0.1 — hour
+# keeps contexts bounded, the same context-sizing discipline dedup
+# applies to band buckets).
+_GRAPH_EDGES_SQL = """
+      WITH pur AS (
+        SELECT DISTINCT date_trunc('hour', ts) AS d, user_id AS u
+        FROM events
+        WHERE event_type = 'purchase' AND user_id IS NOT NULL
+      )
+      SELECT DISTINCT a.u AS src, b.u AS dst
+      FROM pur a JOIN pur b ON a.d = b.d AND a.u < b.u
+"""
+
+
+def _graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
+
+    pur = (
+        load(spark, "events", sf_dir)
+        .filter(
+            (F.col("event_type") == "purchase")
+            & F.col("user_id").isNotNull()
+        )
+        .select(
+            F.date_trunc("hour", "ts").alias("hour_ctx"), "user_id"
+        )
+    )
+    return G.cooccurrence_edges(pur, "user_id", "hour_ctx")
+
+
+@query(
+    "q_graph_pagerank",
+    f"""
+    WITH edges AS ({_GRAPH_EDGES_SQL}),
+    sym AS (
+      SELECT src, dst FROM edges
+      UNION ALL
+      SELECT dst AS src, src AS dst FROM edges
+    ),
+    deg AS (
+      SELECT src, CAST(count(*) AS BIGINT) AS deg FROM sym GROUP BY 1
+    ),
+    nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM deg),
+    r0 AS (
+      SELECT d.src AS v,
+             CAST(1000000000000 // n AS BIGINT) AS rank_fp
+      FROM deg d, nn
+    ),
+    t1 AS (
+      SELECT s.dst AS v, sum(r.rank_fp // d.deg) AS in_sum
+      FROM sym s JOIN r0 r ON r.v = s.src JOIN deg d ON d.src = s.src
+      GROUP BY 1
+    ),
+    r1 AS (
+      SELECT v, CAST((15 * 1000000000000) // (100 * n)
+                 + (85 * in_sum) // 100 AS BIGINT) AS rank_fp
+      FROM t1, nn
+    ),
+    t2 AS (
+      SELECT s.dst AS v, sum(r.rank_fp // d.deg) AS in_sum
+      FROM sym s JOIN r1 r ON r.v = s.src JOIN deg d ON d.src = s.src
+      GROUP BY 1
+    ),
+    r2 AS (
+      SELECT v, CAST((15 * 1000000000000) // (100 * n)
+                 + (85 * in_sum) // 100 AS BIGINT) AS rank_fp
+      FROM t2, nn
+    ),
+    t3 AS (
+      SELECT s.dst AS v, sum(r.rank_fp // d.deg) AS in_sum
+      FROM sym s JOIN r2 r ON r.v = s.src JOIN deg d ON d.src = s.src
+      GROUP BY 1
+    ),
+    r3 AS (
+      SELECT v, CAST((15 * 1000000000000) // (100 * n)
+                 + (85 * in_sum) // 100 AS BIGINT) AS rank_fp
+      FROM t3, nn
+    )
+    SELECT v AS user_id, rank_fp
+    FROM r3 ORDER BY rank_fp DESC, v LIMIT 10
+    """,
+)
+def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Iterative PageRank (operators/graph.pagerank_fixedpoint), 3
+    rounds, damping 0.85, over the hourly co-purchase graph — the
+    entity-importance signal sampling mixtures weight by. Iterative
+    float algorithms normally can't be value-hashed cross-engine
+    (summation order drifts); here ALL arithmetic is fixed-point on
+    positive BIGINTs (10^12 scale, floor division), so Spark's 3
+    join+agg message-passing rounds and the oracle's unrolled CTEs
+    must produce IDENTICAL integers — an exact gate on an iterative
+    distributed algorithm. Top-10 users by rank, ties broken by id."""
+    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
+
+    ranks = G.pagerank_fixedpoint(
+        _graph_edges(spark, sf_dir), iterations=3, damping_pct=85
+    )
+    return (
+        ranks.select(F.col("v").alias("user_id"), "rank_fp")
+        .orderBy(F.desc("rank_fp"), F.asc("user_id"))
+        .limit(10)
+    )
+
+
+# ----------------------------------------------------------------------
+# Link prediction on the co-purchase graph: common-neighbor counts
+# and the degree-weighted Adamic-Adar / resource-allocation scores.
+# ----------------------------------------------------------------------
+
+
+_LINKPRED_MIN_CN, _LINKPRED_TOPK = 2, 20
+
+
+@query(
+    "q_graph_link_prediction",
+    f"""
+    WITH edges AS MATERIALIZED ({_GRAPH_EDGES_SQL}),
+    sym AS (
+      SELECT src AS w, dst AS n FROM edges
+      UNION ALL
+      SELECT dst AS w, src AS n FROM edges
+    ),
+    cn AS (
+      SELECT a.n AS u, b.n AS v, CAST(count(*) AS BIGINT) AS cn
+      FROM sym a JOIN sym b ON a.w = b.w AND a.n < b.n
+      GROUP BY 1, 2
+    )
+    SELECT u, v, cn FROM cn
+    WHERE cn >= {_LINKPRED_MIN_CN}
+      AND NOT EXISTS (
+        SELECT 1 FROM edges e WHERE e.src = cn.u AND e.dst = cn.v)
+    ORDER BY cn DESC, u, v LIMIT {_LINKPRED_TOPK}
+    """,
+)
+def q_graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Common-neighbor link prediction
+    (operators/graph.common_neighbor_candidates): the top-{_LINKPRED_TOPK}
+    NON-adjacent user pairs of the co-purchase graph by shared-neighbor
+    count — friend-of-friend candidate generation, the simplest
+    Liben-Nowell/Kleinberg link-prediction score kept INTEGER so the
+    ranking gates exactly (ties broken by the id pair). Spark
+    enumerates pairs at the shared apex (one adjacency self-join +
+    anti-join against the edge set); the oracle runs the identical
+    wedge join in SQL."""
+    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
+
+    cand = G.common_neighbor_candidates(
+        _graph_edges(spark, sf_dir), min_common=_LINKPRED_MIN_CN
+    )
+    return cand.orderBy(
+        F.desc("cn"), F.asc("u"), F.asc("v")
+    ).limit(_LINKPRED_TOPK)
+
+
+q_graph_link_prediction.__doc__ = q_graph_link_prediction.__doc__.format(
+    _LINKPRED_TOPK=_LINKPRED_TOPK
+)
+
+
+@query(
+    "q_graph_adamic_adar",
+    f"""
+    WITH edges AS MATERIALIZED ({_GRAPH_EDGES_SQL}),
+    sym AS (
+      SELECT src AS w, dst AS n FROM edges
+      UNION ALL
+      SELECT dst AS w, src AS n FROM edges
+    ),
+    wdeg AS (
+      SELECT w, CAST(count(*) AS BIGINT) AS dw FROM sym GROUP BY 1
+    ),
+    scored AS (
+      SELECT a.n AS u, b.n AS v,
+             CAST(count(*) AS BIGINT) AS cn,
+             CAST(sum({LINKPRED_SCALE} // d.dw) AS BIGINT) AS ra_fp,
+             CAST(sum({LINKPRED_SCALE}
+                      // length(printf('%b', d.dw))) AS BIGINT) AS aa_fp
+      FROM sym a
+      JOIN sym b ON a.w = b.w AND a.n < b.n
+      JOIN wdeg d ON d.w = a.w
+      GROUP BY 1, 2
+    )
+    SELECT u, v, cn, ra_fp, aa_fp FROM scored
+    WHERE cn >= {_LINKPRED_MIN_CN}
+      AND NOT EXISTS (
+        SELECT 1 FROM edges e WHERE e.src = scored.u AND e.dst = scored.v)
+    ORDER BY aa_fp DESC, u, v LIMIT {_LINKPRED_TOPK}
+    """,
+)
+def q_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Degree-weighted link prediction
+    (operators/graph.weighted_link_scores): the ranking a recommender
+    actually uses on top of q_graph_link_prediction's raw candidate
+    counts — Adamic-Adar (Σ 1/log d(w)) and resource allocation
+    (Σ 1/d(w)) down-weight common neighbors that are promiscuous hubs.
+    Both scores are FIXED-POINT integers so the ranking gates exactly
+    cross-engine: RA sums 10^12 div d(w); AA takes the log as the
+    integer staircase 1 + floor(log2 d) = bit length of d (Spark
+    length(bin(d)), DuckDB length(printf('%b', d)) — float ln() is a
+    last-ulp portability hazard a value hash cannot tolerate). One
+    extra projection on the same single-shuffle wedge join; top-
+    {_LINKPRED_TOPK} by aa_fp, ties broken by the id pair."""
+    from cyborgdb_encrypted_vector_search_spark.operators import graph as G
+
+    scored = G.weighted_link_scores(
+        _graph_edges(spark, sf_dir), min_common=_LINKPRED_MIN_CN
+    )
+    return scored.orderBy(
+        F.desc("aa_fp"), F.asc("u"), F.asc("v")
+    ).limit(_LINKPRED_TOPK)
+
+
+q_graph_adamic_adar.__doc__ = q_graph_adamic_adar.__doc__.format(
+    _LINKPRED_TOPK=_LINKPRED_TOPK
+)
 
 
 def entries() -> dict[str, CatalogEntry]:

@@ -63,6 +63,13 @@ def test_stratified_sample_uses_window_group_limit(spark, sf_dir, cat):
     assert "WindowGroupLimit" in plan
 
 
+def test_grouping_sets_single_expand_one_shuffle(spark, sf_dir, cat):
+    plan = X.physical_plan(cat["q_grouping_sets_orders"].fn(spark, sf_dir))
+    # three grouping sets = one Expand feeding one agg, not three scans
+    assert plan.count("Expand") >= 1
+    assert plan.count("Scan parquet") == 1
+
+
 def test_incremental_dedup_broadcasts_batch_side(spark, sf_dir, cat):
     plan = X.physical_plan(cat["dedup_incremental_minhash"].fn(spark, sf_dir))
     # corpus signatures never shuffle: the batch side is broadcast
@@ -299,6 +306,31 @@ def test_ann_search_plan_shape(spark, ann_index, kernel_frames, name):
         assert "embedding" in X.scan_columns(rerank)
 
 
+def test_sketch_gate_predicates_recomputed_from_raw_frame(spark, sf_dir):
+    """The q_approx_sketches booleans must equal the tolerance
+    predicates recomputed in Python from the raw sketch-vs-exact frame
+    — so a trivially-true Spark-side expression can't hide behind the
+    oracle's own independently-computed booleans."""
+    from cyborgdb_encrypted_vector_search_spark.plans import catalog as C
+
+    raw = {
+        r["event_type"]: r
+        for r in C.sketch_accuracy_frame(spark, sf_dir).collect()
+    }
+    gate = {
+        r["event_type"]: r
+        for r in C.q_approx_sketches(spark, sf_dir).collect()
+    }
+    assert set(raw) == set(gate) and raw
+    for et, r in raw.items():
+        want_hll = abs(r["hll_users"] - r["n_users"]) <= 0.15 * r["n_users"]
+        want_p50 = r["p40_exact"] <= r["p50_approx"] <= r["p60_exact"]
+        assert gate[et]["hll_ok"] == want_hll, et
+        assert gate[et]["p50_ok"] == want_p50, et
+        # and the sketches genuinely meet the contract on testdata
+        assert want_hll and want_p50, et
+
+
 def test_ivf_layout_scan_prunes_to_probed_partitions(
     spark, sf_dir, cat, kernel_frames
 ):
@@ -386,6 +418,7 @@ def test_hll_rollup_merge_is_lossless(spark, sf_dir):
         "dedup_simhash",
         "dedup_winnow_overlap",
         "pipeline_corpus_curation",
+        "q_heavy_hitters_cms",
     ],
 )
 def test_gate_persists_are_released(spark, sf_dir, cat, monkeypatch, name):

@@ -331,3 +331,21 @@ def test_greedy_restarts_actually_parallelize(spark):
     (stage,) = tracker.getJobInfo(job).stageIds  # one stage: no exchange
     tasks = tracker.getStageInfo(stage).numTasks
     assert tasks == min(8, sc.defaultParallelism) > 1
+
+
+def test_wedge_width_follows_shuffle_partitions(spark):
+    """Advisory (r9): explicit wedge repartitions size from
+    spark.sql.shuffle.partitions (the user-tuned reduce width), not
+    defaultParallelism (plan-time executor count under dynamic
+    allocation)."""
+    from cyborgdb_encrypted_vector_search_spark.operators.graph import (
+        _wedge_width,
+    )
+
+    df = spark.range(1)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "17")
+        assert _wedge_width(df) == 17
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)

@@ -1,6 +1,9 @@
 """Round-13 optimization pins: the connected-components driver
-closure (labels equal to the star contraction, one job under the cap)
-and entity resolution's over-cap distributed route."""
+closure (labels equal to the star contraction, one job under the cap),
+entity resolution's over-cap distributed route, and the wedge link
+predictors' packed (u << 32 | v) group key (exact equality to the
+two-column key on graphs that allow it; refused for ids outside
+[0, 2^31))."""
 
 from __future__ import annotations
 
@@ -9,6 +12,7 @@ import random
 from pyspark.sql import functions as F
 
 from cyborgdb_encrypted_vector_search_spark.operators import dedup as D
+from cyborgdb_encrypted_vector_search_spark.operators import graph as G
 
 
 def test_driver_closure_matches_star_contraction(spark):
@@ -128,4 +132,78 @@ def test_resolve_incremental_over_cap_matches_rebuild(spark, monkeypatch):
     release_all()
     monkeypatch.setattr(D, "_DRIVER_CLOSURE_CAP", 0)
     assert absorb() == want  # over-cap: shuffle joins + distributed CC
+    release_all()
+
+
+def test_packed_key_refused_for_oversized_and_negative_ids(spark):
+    assert G._ids_pack(0, 2**31 - 1)
+    assert not G._ids_pack(-1, 10)
+    assert not G._ids_pack(0, 2**31)
+    assert not G._ids_pack("a", "z")
+    # negative ids: the two-column fallback still yields exact counts
+    edges = [(-5, 1), (-5, 2), (1, 7), (2, 7)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = {
+        (r["u"], r["v"]): r["cn"]
+        for r in G.common_neighbor_candidates(df, min_common=1).collect()
+    }
+    assert got == {(1, 2): 2, (-5, 7): 2}
+    from cyborgdb_encrypted_vector_search_spark.caching import release_all
+
+    release_all()
+
+
+def test_packed_key_boundary_ids_roundtrip(spark):
+    """Ids at the extremes of the packable range survive the
+    shift/mask roundtrip: the largest packable id 2^31 - 1 and 0."""
+    m = 2**31 - 1
+    edges = [(0, 1), (0, m), (1, 2), (2, m)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = {
+        (r["u"], r["v"]): r["cn"]
+        for r in G.common_neighbor_candidates(df, min_common=1).collect()
+    }
+    assert got == {(1, m): 2, (0, 2): 2}
+    scores = {
+        (r["u"], r["v"]): (r["cn"], r["ra_fp"], r["aa_fp"])
+        for r in G.weighted_link_scores(df, min_common=1).collect()
+    }
+    S = G.LINKPRED_SCALE
+    # apexes 0 and 2 (degree 2 each) witness (1, m); apexes 1 and m
+    # witness (0, 2)
+    term = (S // 2, S // 2)
+    assert scores == {
+        (1, m): (2, 2 * term[0], 2 * term[1]),
+        (0, 2): (2, 2 * term[0], 2 * term[1]),
+    }
+    from cyborgdb_encrypted_vector_search_spark.caching import release_all
+
+    release_all()
+
+
+def test_dropped_hub_id_outside_packable_range_keeps_two_column_key(spark):
+    """A hub dropped by max_apex_degree is no apex, but it is still a
+    neighbor of the apexes that survive: its id (>= 2^32 here) must
+    keep the packed key off, or (7, hub) would unpack as (7, 7)."""
+    hub = 2**32 + 7
+    edges = [(i, hub) for i in range(1, 7)]
+    edges += [(7, 100), (100, hub), (7, 101), (101, hub)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = {
+        (r["u"], r["v"]): (r["cn"], r["ra_fp"], r["aa_fp"])
+        for r in G.weighted_link_scores(
+            df, min_common=1, max_apex_degree=5
+        ).collect()
+    }
+    h = G.LINKPRED_SCALE // 2  # every surviving apex here has degree 2
+    assert got == {(7, hub): (2, 2 * h, 2 * h), (100, 101): (1, h, h)}
+    cn = {
+        (r["u"], r["v"]): r["cn"]
+        for r in G.common_neighbor_candidates(
+            df, min_common=1, max_apex_degree=5
+        ).collect()
+    }
+    assert cn == {(7, hub): 2, (100, 101): 1}
+    from cyborgdb_encrypted_vector_search_spark.caching import release_all
+
     release_all()

@@ -1,6 +1,7 @@
 """Unit/property coverage for the round-5 continuation operators:
 semantic pruning (SemDeDup), shingle containment, CDC snapshot diff,
-robust outliers."""
+incremental rollup maintenance, last-touch attribution, robust
+outliers."""
 
 from __future__ import annotations
 
@@ -150,6 +151,34 @@ def test_snapshot_diff_co_bucketed_is_shuffle_free(spark, sf_dir):
         assert {r["change"] for r in diff.collect()} == {"D"}
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+# -------------------------------------------------------- incremental rollup
+
+
+def test_incremental_rollup_merge_equals_direct(spark, sf_dir):
+    """The maintenance identity: base-partials + delta-partials merged
+    == direct full aggregation, bit-for-bit (counts and DECIMAL sums
+    are commutative monoids)."""
+    from cyborgdb_encrypted_vector_search_spark.plans.catalog import CATALOG
+    from cyborgdb_encrypted_vector_search_spark.sources.registry import load
+
+    merged = CATALOG["q_incremental_rollup"].fn(spark, sf_dir)
+    o = load(spark, "orders", sf_dir)
+    direct = (
+        o.groupBy(
+            F.date_format("o_orderdate", "yyyy-MM").alias("month"),
+            "o_orderstatus",
+        )
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+            F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
+            .cast("double")
+            .alias("revenue"),
+        )
+    )
+    assert merged.exceptAll(direct).count() == 0
+    assert direct.exceptAll(merged).count() == 0
 
 
 # ----------------------------------------------------------------- outliers

@@ -1,5 +1,6 @@
 """Round-8 additions: star-contraction connected components (the
-O(log n)-round CC the r7 verdict asked to ship as executed code)."""
+O(log n)-round CC the r7 verdict asked to ship as executed code) and
+common-neighbor link prediction."""
 
 from __future__ import annotations
 
@@ -7,6 +8,7 @@ import pytest
 from hypothesis import given, settings, strategies as st
 
 from cyborgdb_encrypted_vector_search_spark import caching
+from cyborgdb_encrypted_vector_search_spark.operators import graph as G
 from cyborgdb_encrypted_vector_search_spark.operators.dedup import (
     connected_components,
     connected_components_star,
@@ -146,4 +148,75 @@ def test_star_cc_warns_when_not_converged(spark, caplog):
     assert any(
         "not converged" in rec.getMessage() for rec in caplog.records
     )
+    caching.release_all()
+
+
+def _edges_df(spark, edges):
+    return spark.createDataFrame(
+        sorted((int(a), int(b)) for a, b in edges), "src long, dst long"
+    )
+
+
+graph_sets = st.sets(
+    st.tuples(st.integers(1, 10), st.integers(1, 10)).map(
+        lambda p: (min(p), max(p))
+    ).filter(lambda p: p[0] < p[1]),
+    min_size=3,
+    max_size=20,
+)
+
+
+def _py_common_neighbors(edges, min_common):
+    adj: dict[int, set[int]] = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    out = {}
+    for w, nb in adj.items():
+        nbs = sorted(nb)
+        for i, u in enumerate(nbs):
+            for v in nbs[i + 1:]:
+                if v not in adj[u]:
+                    out[(u, v)] = out.get((u, v), 0) + 1
+    return {p: c for p, c in out.items() if c >= min_common}
+
+
+@settings(max_examples=10, deadline=None)
+@given(edges=graph_sets, min_common=st.integers(1, 3))
+def test_link_prediction_matches_bruteforce(spark, edges, min_common):
+    got = {
+        (r["u"], r["v"]): r["cn"]
+        for r in G.common_neighbor_candidates(
+            _edges_df(spark, edges), min_common=min_common
+        ).collect()
+    }
+    assert got == _py_common_neighbors(edges, min_common)
+    caching.release_all()
+
+
+def test_link_prediction_hub_cap(spark, caplog):
+    """max_apex_degree drops oversized apexes whole (their wedge pairs
+    vanish) and logs the drop — the cooccurrence hub-cap discipline."""
+    import logging
+
+    hub = [(1, i) for i in range(2, 8)]       # apex 1, degree 6
+    small = [(10, 20), (10, 30)]              # apex 10, degree 2
+    df = _edges_df(spark, hub + small)
+    with caplog.at_level(logging.WARNING, logger=G.__name__):
+        got = {
+            (r["u"], r["v"]): r["cn"]
+            for r in G.common_neighbor_candidates(
+                df, min_common=1, max_apex_degree=3
+            ).collect()
+        }
+    assert got == {(20, 30): 1}
+    assert any("dropped 1 apex" in rec.getMessage() for rec in caplog.records)
+    # uncapped, apex 1 contributes C(6,2) = 15 non-edge pairs
+    assert (
+        G.common_neighbor_candidates(df, min_common=1).count() == 16
+    )
+    with pytest.raises(ValueError):
+        G.common_neighbor_candidates(df, min_common=0)
+    with pytest.raises(ValueError):
+        G.common_neighbor_candidates(df, max_apex_degree=1)
     caching.release_all()

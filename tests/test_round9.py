@@ -233,3 +233,69 @@ def test_bmp_rejects_data_offset_inside_headers():
     struct.pack_into("<I", bad, 10, 10)  # offset inside the file header
     with pytest.raises(ValueError, match="inside the headers"):
         decode_image(bytes(bad))
+
+
+class TestWeightedLinkScores:
+    def test_matches_bruteforce_on_random_graph(self, spark):
+        import itertools
+        import random
+
+        rng = random.Random(97)
+        n = 24
+        edges = sorted(
+            {
+                (min(a, b), max(a, b))
+                for a, b in (
+                    (rng.randrange(n), rng.randrange(n)) for _ in range(70)
+                )
+                if a != b
+            }
+        )
+        from cyborgdb_encrypted_vector_search_spark.operators.graph import (
+            LINKPRED_SCALE,
+            weighted_link_scores,
+        )
+
+        adj: dict[int, set[int]] = {}
+        for a, b in edges:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+        expected = {}
+        for u, v in itertools.combinations(sorted(adj), 2):
+            if v in adj[u]:
+                continue
+            common = adj[u] & adj[v]
+            if not common:
+                continue
+            cn = len(common)
+            ra = sum(LINKPRED_SCALE // len(adj[w]) for w in common)
+            aa = sum(
+                LINKPRED_SCALE // (len(adj[w]).bit_length())
+                for w in common
+            )
+            expected[(u, v)] = (cn, ra, aa)
+        df = spark.createDataFrame(edges, "src long, dst long")
+        got = {
+            (r["u"], r["v"]): (r["cn"], r["ra_fp"], r["aa_fp"])
+            for r in weighted_link_scores(df, min_common=1).collect()
+        }
+        assert got == expected
+
+    def test_hub_cap_drops_apex_wedges(self, spark, caplog):
+        from cyborgdb_encrypted_vector_search_spark.operators.graph import (
+            weighted_link_scores,
+        )
+
+        # star: hub 0 with 6 spokes; every spoke pair's only common
+        # neighbor is the hub -> capping at degree 5 kills all pairs
+        edges = [(0, i) for i in range(1, 7)]
+        df = spark.createDataFrame(edges, "src long, dst long")
+        with caplog.at_level(
+            logging.WARNING,
+            logger="cyborgdb_encrypted_vector_search_spark.operators.graph",
+        ):
+            rows = weighted_link_scores(
+                df, min_common=1, max_apex_degree=5
+            ).collect()
+        assert rows == []
+        assert any("dropped 1 apex" in r.message for r in caplog.records)

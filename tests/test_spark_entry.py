@@ -31,10 +31,10 @@ def test_entry_returns_rows(spark):
 
 
 def test_every_query_has_an_oracle():
-    """115 queries, each with a non-blank DuckDB oracle. A rows-only
+    """123 queries, each with a non-blank DuckDB oracle. A rows-only
     entry (sql=None) drops out of oracle_sql() and fails here, so adding
     one is a visible decision."""
-    assert len(QUERIES) == 115
+    assert len(QUERIES) == 123
     with_sql = [n for n, sql in ORACLES.items() if sql.strip()]
     assert sorted(with_sql) == sorted(QUERIES)
 
